@@ -27,7 +27,7 @@ from operator import add
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nhl_data_warehouse_spark.operators.caching import pin
+from nhl_data_warehouse_spark.operators.caching import checkpoint, pin
 
 
 def normalized_text(col="text") -> F.Column:
@@ -113,9 +113,6 @@ def scale_out(df: DataFrame) -> DataFrame:
     if len(df.inputFiles()) < target:
         return df.repartition(target)
     return df
-
-
-_scale_out = scale_out  # backwards-compat alias
 
 
 def _shingle_array(text_col: str | F.Column, k: int) -> F.Column:
@@ -285,7 +282,6 @@ def minhash_band_candidates(
     n_hashes: int = 8,
     band_size: int = 2,
     star_cap: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """LSH banding: hash each band of the signature to a bucket key,
     self-join on (band index, bucket) — candidate pairs are docs
@@ -329,7 +325,7 @@ def minhash_band_candidates(
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     # both sides of the self-join read `bands`; persist so the
     # signature computation upstream runs once, not twice
-    bands = pin(bands, cache_registry)
+    bands = pin(bands)
     if star_cap is not None:
         # bucket stats via aggregate + join, not a window: the window
         # form sort-shuffles every band row, while the partial-agg
@@ -372,7 +368,6 @@ def jaccard_pairs(
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
     metric: str = "jaccard",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for near-dup verification.
 
@@ -445,7 +440,7 @@ def jaccard_pairs(
         # aggregate and the join probe) — persist so shingling runs
         # once; without it `sh` is read exactly once (by the docsets
         # aggregate below) and the pin belongs on docsets instead
-        sh = pin(sh, cache_registry)
+        sh = pin(sh)
     # verify via per-doc shingle SETS: reduce shingles to one
     # sorted-set array per doc, join each candidate pair to its
     # two arrays (two equi-joins on doc id, one array per row),
@@ -454,9 +449,9 @@ def jaccard_pairs(
     # (~100M shuffled rows at sf0.1 for 265k candidates x 283
     # shingles/doc) with |candidates| rows of O(n_a+n_b) codegen
     # array ops — the per-row doc-bounded payload is the same
-    # assumption the minhash fold already makes. Shingles are
-    # distinct per doc (char_shingles does a local distinct), so
-    # size(set) == shingle count and the intersect is exact.
+    # assumption the minhash fold already makes. The intersect is
+    # exact because collect_set dedupes each doc's shingles: the
+    # arrays are true sets whatever the input multiplicity.
     # shuffle_hash hint: sort-merge would SORT the array payloads
     # (expensive, pure overhead — the join key is just the doc id);
     # hash join partitions by id and never orders the arrays.
@@ -470,8 +465,7 @@ def jaccard_pairs(
     # pinning docsets runs shingling + the set aggregate exactly once
     # and caches one row per doc instead of one per shingle (§2.4/§5).
     docsets = pin(
-        sh.groupBy(id_col).agg(F.collect_set("shingle").alias("__set")),
-        cache_registry,
+        sh.groupBy(id_col).agg(F.collect_set("shingle").alias("__set"))
     )
     scored = (
         candidates.join(
@@ -532,7 +526,6 @@ def prefix_filter_jaccard_pairs(
     shingles: DataFrame,
     threshold: float = 0.5,
     id_col: str = "doc_id",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """EXACT Jaccard >= ``threshold`` pairs via prefix filtering
     (SSJoin/PPJoin candidate generation) — the subquadratic path to
@@ -607,7 +600,7 @@ def prefix_filter_jaccard_pairs(
     )
     # feeds BOTH sides of the candidate join — persist so the
     # window pipeline runs once, not per branch
-    index_pref = pin(index_pref, cache_registry)
+    index_pref = pin(index_pref)
     # probe prefix (role: SMALLER of a pair) is tighter: with the
     # length filter in force (|larger| partners only), overlap >=
     # ceil(2t/(1+t) * n), so the probe side keeps only
@@ -695,18 +688,17 @@ def connected_components(
     # materialize the edge list ONCE up front: its lineage is typically a
     # whole LSH+verify pipeline, and every branch below (both union sides,
     # the node seed, every iteration) would otherwise re-derive it
-    edges = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint()
+    edges = checkpoint(edges.select(F.col(src).alias("s"), F.col(dst).alias("d")))
     sym = edges.union(edges.select(F.col("d"), F.col("s")))
     # seed with the FIRST ROUND fused into the init: with identity
     # labels, round 1's nbr_min is simply min(neighbor id), so
     # least(self, min(nbr)) IS the round-1 label — one groupBy replaces
     # the identity seed plus a full join+aggregate+checkpoint+count
     # iteration (same fixpoint, one round fewer)
-    labels = (
+    labels = checkpoint(
         sym.groupBy("s")
         .agg(F.least(F.col("s"), F.min("d")).alias("label"))
         .select(F.col("s").alias("node"), "label")
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         nbr_min = (
@@ -714,16 +706,14 @@ def connected_components(
             .groupBy("s")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["s"], "left")
-            .select(
+        new_labels = checkpoint(
+            labels.join(nbr_min, labels["node"] == nbr_min["s"], "left").select(
                 "node",
                 F.least(
                     F.col("label"), F.coalesce("nbr_label", "label")
                 ).alias("label"),
                 (F.coalesce("nbr_label", "label") < F.col("label")).alias("_moved"),
             )
-            .localCheckpoint()
         )
         moved = new_labels.filter("_moved").count()
         labels = new_labels.drop("_moved")
@@ -764,14 +754,13 @@ def connected_components_kiveris(
     ``localCheckpoint``. Convergence is detected exactly (edge set
     unchanged via count + exceptAll probe), costing one extra
     edge-scale pass per round."""
-    e = (
+    e = checkpoint(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
             F.least(F.col(src), F.col(dst)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
 
     def _large_star(cur: DataFrame) -> DataFrame:
@@ -805,7 +794,7 @@ def connected_components_kiveris(
 
     prev_count = e.count()
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(e)).localCheckpoint()
+        nxt = checkpoint(_small_star(_large_star(e)))
         nxt_count = nxt.count()
         if nxt_count == prev_count and nxt.exceptAll(e).limit(1).count() == 0:
             e = nxt
@@ -941,7 +930,6 @@ def paragraph_dedup_stats(
     text_col: str = "text",
     delim: str = "\n\n",
     min_chars: int = 1,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Paragraph-grain exact dedup scorecard — the CCNet paragraph-hash
     step (Wenzek et al., "CCNet", LREC'20 §3; the sub-document grain
@@ -970,7 +958,7 @@ def paragraph_dedup_stats(
     cannot share them — without the pin the corpus-scale
     split/trim/md5 projection executes twice (code-review r12; the
     fuzzyjoin/_canonical_deg_tri convention). Released by the
-    session's ``release_cached`` caller contract.
+    caller's ``cache_scope`` or ``session.release_cached``.
     """
     seg = F.trim(F.col("_p"))
     paras = (
@@ -986,7 +974,7 @@ def paragraph_dedup_stats(
             F.length(seg).cast("long").alias("_len"),
         )
     )
-    paras = pin(paras, cache_registry)
+    paras = pin(paras)
     freq = paras.groupBy("_h").agg(F.count(F.lit(1)).alias("_n"))
     return (
         paras.join(freq, on="_h")
@@ -1244,7 +1232,6 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     chunk_tokens: int = 8,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Exact duplicated-span REMOVAL (the ExactSubstr rewrite of Lee
     et al., "Deduplicating Training Data Makes Language Models
@@ -1281,9 +1268,9 @@ def remove_duplicate_spans(
     )
     # base feeds the chunk explode AND the final stitch; chunks feeds
     # three joins (occurrence stats, canonical index, keep filter) —
-    # persist both so tokenization/hashing runs once (caller clears
-    # via session.release_cached, the suite-wide contract)
-    base = pin(base, cache_registry)
+    # persist both so tokenization/hashing runs once (released by the
+    # caller's cache_scope or session.release_cached)
+    base = pin(base)
     chunks = base.select(
         F.col(id_col),
         F.posexplode(
@@ -1295,7 +1282,7 @@ def remove_duplicate_spans(
             )
         ).alias("_i", "_h"),
     )
-    chunks = pin(chunks, cache_registry)
+    chunks = pin(chunks)
     occ = chunks.groupBy("_h").agg(
         F.count_distinct(F.col(id_col)).alias("_nd"),
         F.min(id_col).alias("_mdoc"),
@@ -1348,7 +1335,6 @@ def source_overlap_matrix(
     group_col: str = "source",
     text_col: str = "text",
     chunk_tokens: int = 8,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Cross-source duplication matrix: for every source pair, how
     many distinct ``chunk_tokens``-token chunks they share, with the
@@ -1383,9 +1369,9 @@ def source_overlap_matrix(
             )
         ).alias("chunk_hash"),
     ).distinct()
-    # read 3x (sizes + both self-join sides); callers reclaim via
-    # session.release_cached or the per-call cache_registry
-    sc = pin(sc, cache_registry)
+    # read 3x (sizes + both self-join sides); released by the
+    # caller's cache_scope or session.release_cached
+    sc = pin(sc)
     sizes = sc.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_chunks"))
     a = sc.select(F.col(group_col).alias("src_a"), "chunk_hash")
     b = sc.select(F.col(group_col).alias("src_b"), "chunk_hash")

@@ -32,7 +32,6 @@ def blocked_edit_distance_pairs(
     max_dist: int = 1,
     prefix_len: int = 1,
     length_band: int = 1,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Distinct unordered string pairs within ``max_dist`` edits,
     candidate-limited to pairs sharing the first ``prefix_len`` chars
@@ -49,7 +48,7 @@ def blocked_edit_distance_pairs(
         F.substring("v", 1, prefix_len).alias("_blk"),
         F.length("v").alias("_len"),
     )
-    blocked = pin(blocked, cache_registry)  # both self-join sides
+    blocked = pin(blocked)  # both self-join sides
     a = blocked.select(
         F.col("v").alias("a"), F.col("_blk"), F.col("_len").alias("_la")
     )

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nhl_data_warehouse_spark.operators.caching import pin
+from nhl_data_warehouse_spark.operators.caching import checkpoint, pin
 
 
 def pagerank(
@@ -50,7 +50,7 @@ def pagerank(
             "__p"
         ),
     )
-    trans = trans.localCheckpoint()  # pin: reused every iteration
+    trans = checkpoint(trans)  # reused every iteration
     init = round(1.0 / n_nodes, 6)
     # rank is carried as double (6dp-rounded each iteration): exactness
     # lives in the per-edge DECIMAL partial sums below; a double final
@@ -95,7 +95,6 @@ def triangle_counts(
     edges: DataFrame,
     a: str = "a",
     b: str = "b",
-    cache_registry: list | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Per-node triangle participation counts on an undirected graph,
@@ -121,19 +120,16 @@ def triangle_counts(
     broadcast ceiling (dimension-scale node sets). For billion-node
     graphs remove the hints and let AQE choose shuffle joins.
 
-    ``cache_registry`` (ADVICE r11, the prefix_sum_cells pattern):
-    the shared core persists two relations; library callers pass a
-    list and unpersist its entries when done, instead of stranding
-    two cache entries per call.
+    The shared core pins two relations; a library caller releases
+    them with ``cache_scope`` (``operators/caching.py``).
     """
-    return _canonical_deg_tri(edges, a, b, cache_registry, assume_canonical)[1]
+    return _canonical_deg_tri(edges, a, b, assume_canonical)[1]
 
 
 def _canonical_deg_tri(
     edges: DataFrame,
     a: str,
     b: str,
-    cache_registry: list | None = None,
     assume_canonical: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared core of ``triangle_counts`` / ``clustering_coefficients``:
@@ -160,9 +156,7 @@ def _canonical_deg_tri(
             .filter(F.col("_a") < F.col("_b"))
             .distinct()
         )
-    e = e.persist()  # read 3x: two degree projections + the orient join
-    if cache_registry is not None:
-        cache_registry.append(e)
+    e = pin(e)  # read 3x: two degree projections + the orient join
     deg = (
         e.select(F.col("_a").alias("_n"))
         .unionAll(e.select(F.col("_b").alias("_n")))
@@ -212,9 +206,7 @@ def _canonical_deg_tri(
     # (guide §2.5: size heuristics misjudge fan-out stages).
     from nhl_data_warehouse_spark.operators.dedup import scale_out
 
-    o = scale_out(o).persist()
-    if cache_registry is not None:
-        cache_registry.append(o)
+    o = pin(scale_out(o))
     o1, o2 = o.alias("o1"), o.alias("o2")
     lt = (F.col("o1.dst_deg") < F.col("o2.dst_deg")) | (
         (F.col("o1.dst_deg") == F.col("o2.dst_deg"))
@@ -264,7 +256,6 @@ def bfs_hops(
     dst: str = "dst",
     node_col: str = "node",
     max_hops: int = 4,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Minimum hop distance from a seed set over a directed edge list,
     bounded breadth-first expansion (<= ``max_hops`` levels).
@@ -287,19 +278,18 @@ def bfs_hops(
     # pin the edge list: every level's join + isEmpty() is an action,
     # and an unpinned edge DataFrame re-runs its whole derivation
     # (often a multi-join aggregate) once per level
-    edges = pin(edges, cache_registry)
+    edges = pin(edges)
     visited = seeds.select(
         F.col(node_col).alias("node"), F.lit(0).alias("hop")
     ).distinct()  # duplicate seed rows must not duplicate hop-0 output
-    frontier = visited.localCheckpoint()
+    frontier = checkpoint(visited)
     for h in range(1, max_hops + 1):
         fr = F.broadcast(frontier.select(F.col("node").alias("_fn")))
-        nxt = (
+        nxt = checkpoint(
             fr.join(edges, fr["_fn"] == edges[src])
             .select(F.col(dst).alias("node"), F.lit(h).alias("hop"))
             .distinct()
             .join(visited.select("node"), on="node", how="left_anti")
-            .localCheckpoint()
         )
         if nxt.isEmpty():
             break
@@ -538,10 +528,8 @@ def kcore_peel(
     unpinned loop re-executes the whole upstream projection
     ~2^rounds times — measured 235 s -> 9 s at sf0.01 on the
     co-purchase graph when the checkpoint was added. The checkpoint
-    blocks are reclaimed by the session's ``release_cached`` caller
-    contract (the connected-components/packing convention — its RDD
-    sweep exists precisely because localCheckpoint output is not in
-    the catalog).
+    blocks are released by the caller's ``cache_scope`` or the
+    session's ``release_cached`` sweep.
     """
     e = (
         edges.select(
@@ -560,14 +548,14 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("_deg"))
         )
 
-    e = e.localCheckpoint()
+    e = checkpoint(e)
     for _ in range(rounds):
         keep = _deg(e).where(F.col("_deg") >= k).select("_n")
-        e = e.join(
-            F.broadcast(keep.select(F.col("_n").alias("_a"))), on="_a"
-        ).join(
-            F.broadcast(keep.select(F.col("_n").alias("_b"))), on="_b"
-        ).localCheckpoint()
+        e = checkpoint(
+            e.join(
+                F.broadcast(keep.select(F.col("_n").alias("_a"))), on="_a"
+            ).join(F.broadcast(keep.select(F.col("_n").alias("_b"))), on="_b")
+        )
     return _deg(e).select(
         F.col("_n").alias("node"), F.col("_deg").cast("long").alias("core_degree")
     )
@@ -579,7 +567,6 @@ def association_rules(
     item_col: str,
     min_pair_count: int = 3,
     top_k: int = 30,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Association-rule mining over the co-occurrence projection:
     support, directional confidence and lift per item pair — the
@@ -598,7 +585,7 @@ def association_rules(
     items = df.select(
         F.col(group_col).alias("_g"), F.col(item_col).alias("_i")
     ).distinct()
-    items = pin(items, cache_registry)  # pair join (both sides) + item counts + N
+    items = pin(items)  # pair join (both sides) + item counts + N
     item_counts = items.groupBy("_i").agg(F.count(F.lit(1)).alias("_n_item"))
     total = items.select("_g").distinct().agg(
         F.count(F.lit(1)).alias("_n_groups")
@@ -714,7 +701,6 @@ def clustering_coefficients(
     edges: DataFrame,
     a: str = "a",
     b: str = "b",
-    cache_registry: list | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Per-node LOCAL clustering coefficient cc(v) = 2*T(v) /
@@ -738,9 +724,8 @@ def clustering_coefficients(
     degree pass would execute the expensive upstream edge projection
     (the co-supply self-join) a second time (measured 6.9 -> 5.2-6.1 s
     warm at sf0.1, parity with triangle_cosupply's 5.3 s).
-    ``cache_registry``: see ``triangle_counts`` (ADVICE r11).
     """
-    deg, tri = _canonical_deg_tri(edges, a, b, cache_registry, assume_canonical)
+    deg, tri = _canonical_deg_tri(edges, a, b, assume_canonical)
     return (
         deg.join(tri, on="node", how="left")
         .select(

@@ -129,7 +129,6 @@ def rfm_segments(
     date_col: str = "o_orderdate",
     amount_col: str = "o_totalprice",
     n_tiles: int = 5,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """RFM customer segmentation: recency (days since the customer's
     last order, measured from the corpus's latest order date),
@@ -160,9 +159,9 @@ def rfm_segments(
         .withColumn("recency_days", F.datediff("_cmax", "_last").cast("long"))
         .drop("_last", "_cmax")
     )
-    # per feeds the melt AND the final join — persist; callers
-    # reclaim via session.release_cached or the per-call registry
-    per = pin(per, cache_registry)
+    # per feeds the melt AND the final join — persist; released by
+    # the caller's cache_scope or session.release_cached
+    per = pin(per)
     tiles = grouped_ntile(
         per,
         id_col=cust_col,

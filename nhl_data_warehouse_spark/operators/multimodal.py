@@ -347,10 +347,6 @@ def resize_media(media: DataFrame, max_dim: int = 256) -> DataFrame:
     return media.mapInPandas(run, out_schema)
 
 
-# backwards-compatible alias (pre-round-2 name)
-resize_stub = resize_media
-
-
 BYTE_CLASS_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

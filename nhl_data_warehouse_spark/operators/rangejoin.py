@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nhl_data_warehouse_spark.operators.caching import cache_scope
+
 
 def range_join_pairs(
     events: DataFrame,
@@ -166,16 +168,13 @@ def derive_cell_minutes(
         .groupBy("m")
         .agg(F.count(F.lit(1)).alias("nv"))
     )
-    # cache_registry + try/finally (ADVICE r10): prefix_sum_cells
-    # lazily persists its bucketed frame; after the .first() scalar
-    # read below the frame is never referenced again, so without the
-    # explicit unpersist every overlap-join cell derivation would
-    # strand a cache entry for library callers that never run the
-    # harness's release_cached.
-    cached: list = []
-    cum = prefix_sum_cells(hist, "m", "nv", cache_registry=cached)
-    total = hist.agg(F.sum("nv").alias("n"))
-    try:
+    # prefix_sum_cells lazily pins its bucketed frame, and nothing
+    # reads it after the .first() scalar below: the scope releases it
+    # so a cell derivation never strands a cache entry for library
+    # callers that never run the harness's release_cached.
+    with cache_scope():
+        cum = prefix_sum_cells(hist, "m", "nv")
+        total = hist.agg(F.sum("nv").alias("n"))
         row = (
             cum.join(F.broadcast(total), how="cross")
             .where(
@@ -184,9 +183,6 @@ def derive_cell_minutes(
             .agg(F.min("m").alias("m"))
             .first()
         )
-    finally:
-        for frame in cached:
-            frame.unpersist()
     m = row["m"] if row is not None else None
     return max(1, int(m)) if m is not None else 1
 

@@ -124,7 +124,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: candidate pairs share a
     hyperplane-LSH bucket (never all pairs), then exact cosine filters
@@ -140,7 +139,7 @@ def embedding_near_dup_pairs(
     # per-row norm folded once before the self-join (per-pair folds
     # would redo two 64-element folds per candidate)
     bucketed = bucketed.withColumn("_nv", _norm(F.col(vec_col)))
-    bucketed = pin(bucketed, cache_registry)  # both join sides read it
+    bucketed = pin(bucketed)  # both join sides read it
     a = bucketed.select(
         F.col(id_col).alias("a_id"),
         F.col(vec_col).alias("_va"),
@@ -210,7 +209,6 @@ def _bucketed_cosine_pairs(
     dim: int,
     id_col: str,
     vec_col: str,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Directed candidate pairs inside shared LSH buckets with their
     exact 6dp cosine — the common core of the kNN join and hard-negative
@@ -219,7 +217,7 @@ def _bucketed_cosine_pairs(
     # norms are per-vector: fold once per row BEFORE the self-join —
     # per-pair norm folds would redo two 64-element folds per candidate
     bucketed = bucketed.withColumn("_nv", _norm(F.col(vec_col)))
-    bucketed = pin(bucketed, cache_registry)  # both self-join sides read it
+    bucketed = pin(bucketed)  # both self-join sides read it
     a = bucketed.select(
         F.col(id_col).alias("a_id"),
         F.col(vec_col).alias("_va"),
@@ -247,7 +245,6 @@ def knn_join_bucketed(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Batch approximate kNN JOIN: for EVERY vector, its top-k cosine
     neighbors among vectors sharing its LSH bucket — the kNN-graph
@@ -262,9 +259,7 @@ def knn_join_bucketed(
     alone in their bucket yield no rows — recall repair is the same
     multi-probe dial as ``ann_multiprobe_topk``.
     """
-    scored = _bucketed_cosine_pairs(
-        embeddings, n_planes, dim, id_col, vec_col, cache_registry
-    )
+    scored = _bucketed_cosine_pairs(embeddings, n_planes, dim, id_col, vec_col)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("a_id").orderBy(
@@ -285,7 +280,6 @@ def hard_negative_pairs(
     k: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Contrastive-training hard-negative mining: per anchor, the most
     similar bucket-mates BELOW the positive threshold — candidates
@@ -298,9 +292,7 @@ def hard_negative_pairs(
     window input shrinks with the positive set rather than growing
     with it.
     """
-    scored = _bucketed_cosine_pairs(
-        embeddings, n_planes, dim, id_col, vec_col, cache_registry
-    )
+    scored = _bucketed_cosine_pairs(embeddings, n_planes, dim, id_col, vec_col)
     negatives = scored.filter(F.col("cosine") < pos_threshold)
     from pyspark.sql.window import Window
 
@@ -340,7 +332,7 @@ def semantic_dedup(
     """
     assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
     assigned = assigned.withColumn("_nv", _norm(F.col(vec_col)))
-    assigned = assigned.persist()  # pair build (2 sides) + final anti-join
+    assigned = pin(assigned)  # pair build (2 sides) + final anti-join
     a = assigned.select(
         F.col(id_col).alias("a_id"),
         F.col(vec_col).alias("_va"),
@@ -437,7 +429,7 @@ def ivf_topk(
     scan still prunes to the probed cells' partitions.
     """
     assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
-    assigned = assigned.persist()  # probe lookup + candidate scan share it
+    assigned = pin(assigned)  # probe lookup + candidate scan share it
     if nprobe <= 1:
         qcells = assigned.filter(F.col(id_col) == query_id).select("cell_id")
     else:
@@ -639,7 +631,7 @@ def ivfpq_topk(
     cell's partitions and shuffles only the k winners.
     """
     assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
-    assigned = assigned.persist()  # query-cell lookup + candidate scan
+    assigned = pin(assigned)  # query-cell lookup + candidate scan
     qcell = assigned.filter(F.col(id_col) == query_id).select("cell_id")
     cand_ids = assigned.join(F.broadcast(qcell), on="cell_id").select(id_col)
     codes = pq_encode(embeddings, dim, m, n_codes, id_col, vec_col).select(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nhl_data_warehouse_spark.operators.caching import pin
+
 # depth-4 hash family: salted md5, first 2 hex chars = 256 buckets/row
 CMS_SALTS: list[str] = ["cms0", "cms1", "cms2", "cms3"]
 CMS_BUCKET_HEX = 2
@@ -52,7 +54,7 @@ def countmin_estimates(items: DataFrame, term_col: str = "term") -> DataFrame:
     min over hash rows of that row's bucket counter. Returns
     (term, true_count, cms_estimate) so over-estimates from bucket
     collisions are visible; CMS guarantees estimate >= true."""
-    items = items.persist()  # counters + truth + probe all read it
+    items = pin(items)  # counters + truth + probe all read it
     counters = countmin_counters(items, term_col)
     truth = items.groupBy(term_col).agg(F.count(F.lit(1)).alias("true_count"))
     probes = truth.select(

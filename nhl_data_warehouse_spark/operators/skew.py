@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nhl_data_warehouse_spark.operators.caching import pin
+
 
 def salted_agg(
     df: DataFrame,
@@ -98,7 +100,7 @@ def key_skew_report(df: DataFrame, key_col: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt"))
-    counts = counts.persist()
+    counts = pin(counts)
     counts.count()  # histogram + totals + hot-key share one pass
     tot = counts.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),

@@ -744,7 +744,7 @@ def spearman_rho(
     yield explicit NULL on both engines.
     """
     joint = _joint_histogram(df, x_col, y_col, x_scale, y_scale)
-    joint = joint.persist()
+    joint = pin(joint)
     joint.count()  # two marginal consumers + the final join share it
 
     def marginal(cell: str, out: str) -> DataFrame:
@@ -813,7 +813,7 @@ def kendall_tau_b(
     inside BIGINT exactness.
     """
     joint = _joint_histogram(df, x_col, y_col, x_scale, y_scale)
-    joint = joint.persist()
+    joint = pin(joint)
     joint.count()
     a = joint.select(
         F.col("cx").alias("x1"), F.col("cy").alias("y1"), F.col("nxy").alias("n1v")
@@ -890,7 +890,6 @@ def prefix_sum_cells(
     num_ranges: int = 32,
     out_col: str = "cum",
     pin_input: bool = False,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Exclusive prefix sum over ordered cells WITHOUT an
     unpartitioned window — the range-partitioned two-pass form
@@ -968,19 +967,14 @@ def prefix_sum_cells(
     # Unlike the r9 eager pin this is a pure perf hint — correctness
     # never depends on the cache because _pid is value-derived — and
     # plan CONSTRUCTION stays job-free by default (ADVICE r9; pinned
-    # by the zero-jobs test). Callers reclaim via
+    # by the zero-jobs test). Released by the caller's cache_scope or
     # session.release_cached. `pin_input=True` opts back into the
     # eager barrier for callers whose `hist` is an EXPENSIVE shared
     # subplan (theil_sen's 2.9M-slope pair join): the count runs the
     # upstream exactly once before the three consumer stages fan out,
     # trading one construction-time job for never recomputing it
     # (measured 8.7 s -> 4.8 s warm on theil_sen at sf0.1).
-    parts = parts.persist()
-    if cache_registry is not None:
-        # ADVICE r10: library callers that read a scalar off the result
-        # (derive_cell_minutes) would otherwise strand this cache entry
-        # — the harness's release_cached only covers suite queries.
-        cache_registry.append(parts)
+    parts = pin(parts)
     if pin_input:
         parts.count()
     wl = (
@@ -1888,7 +1882,6 @@ def quantile_bucket_report(
     weight_col: str | None = None,
     n_buckets: int = 3,
     scale: int = 1_000_000,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Per-group quantile bucketing of a score with doc/weight mass
     per bucket — the CCNet head/middle/tail split (Wenzek et al.,
@@ -1918,8 +1911,8 @@ def quantile_bucket_report(
     (cumulative window, boundary aggregate, final report) would
     otherwise re-execute the row-scale upstream — e.g. the LM scoring
     join feeding the perplexity gate — once each (plan audit r13: 46
-    unique Exchanges unpinned vs 24 pinned); released via
-    ``cache_registry`` or the session sweep.
+    unique Exchanges unpinned vs 24 pinned); released by the
+    caller's ``cache_scope`` or the session sweep.
     """
     wexpr = (
         F.col(weight_col).cast("long")
@@ -1940,7 +1933,7 @@ def quantile_bucket_report(
     )
     # bounded (group, cell) grain read by THREE consumers — pin so
     # the row-scale upstream runs once
-    hist = pin(hist, cache_registry)
+    hist = pin(hist)
     w = Window.partitionBy("_g").orderBy("_c").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -2241,7 +2234,6 @@ def partition_agreement_ari(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Adjusted Rand Index (Hubert & Arabie 1985) between two
     partitions of the same rows — the permutation-invariant agreement
@@ -2264,7 +2256,8 @@ def partition_agreement_ari(
     three single-row totals broadcast-crossjoin. The contingency
     relation is pinned (three consumers — cell, A-marginal and
     B-marginal pair sums — would re-execute the row-scale upstream
-    once each); released via ``cache_registry`` or the session sweep.
+    once each); released by the caller's ``cache_scope`` or the
+    session sweep.
     Output doubles are exact below 2^53 (pair sums at any tested
     scale); beyond, both engines round-to-nearest identically.
     """
@@ -2274,7 +2267,7 @@ def partition_agreement_ari(
         .groupBy("_a", "_b")
         .agg(F.count(F.lit(1)).alias("nij"))
     )
-    cells = pin(cells, cache_registry)
+    cells = pin(cells)
     pair2 = lambda c: F.sum(dec(F.col(c)) * (F.col(c) - 1)).cast(  # noqa: E731
         "decimal(38,0)"
     )

@@ -203,7 +203,7 @@ def remove_boilerplate(
         .filter(F.col("sent") != "")
         .withColumn("fp", F.md5("sent"))
     )
-    sents = sents.persist()  # feeds the frequency agg AND the keep-join
+    sents = pin(sents)  # feeds the frequency agg AND the keep-join
     freq_ok = (
         sents.groupBy("fp")
         .agg(F.count_distinct(id_col).alias("df_"))
@@ -249,7 +249,7 @@ def tfidf_top_terms(
     """
     toks = df.select(F.col(id_col), F.explode(_ws_tokens(text_col)).alias("term"))
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.persist()  # feeds df-counts AND the scored join
+    tf = pin(tf)  # feeds df-counts AND the scored join
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_docs"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     idf = F.round(
@@ -320,7 +320,7 @@ def contamination_check(
     then one aggregate keyed on the doc.
     """
     grams = word_ngrams(df, id_col, text_col, n)
-    grams = grams.persist()  # bench subset + corpus subset both read it
+    grams = pin(grams)  # bench subset + corpus subset both read it
     bench = (
         grams.filter(F.col(id_col) % benchmark_every == 0).select("gram").distinct()
     )
@@ -740,7 +740,6 @@ def unigram_logprob_score(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Perplexity-style quality score from a unigram LM trained on the
     corpus itself (the CCNet idea with the KenLM swapped for the
@@ -765,7 +764,7 @@ def unigram_logprob_score(
             "tok"
         ),
     )
-    toks = pin(toks, cache_registry)  # feeds vocab counts AND the score join
+    toks = pin(toks)  # feeds vocab counts AND the score join
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("n"))
     logp = vocab.join(F.broadcast(total)).select(
@@ -858,7 +857,7 @@ def bm25_scores(
     """
     arr = _ws_tokens(text_col)
     base = df.select(F.col(id_col), arr.alias("toks"))
-    base = base.persist()  # corpus stats + per-doc tf both read it
+    base = pin(base)  # corpus stats + per-doc tf both read it
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("toks")).alias("sum_dl"),
@@ -935,9 +934,9 @@ def pmi_bigrams(
     1-row broadcast. Nothing shuffles raw text.
     """
     uni = df.select(F.explode(_ws_tokens(text_col)).alias("w"))
-    uni = uni.persist()  # total count + per-term counts
+    uni = pin(uni)  # total count + per-term counts
     bi = df.select(F.explode(_word_bigrams(text_col)).alias("gram"))
-    bi = bi.persist()  # per-gram counts + corpus total (one tokenize pass)
+    bi = pin(bi)  # per-gram counts + corpus total (one tokenize pass)
     c_uni = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c_w"))
     c_bi = (
         bi.groupBy("gram")
@@ -1277,7 +1276,6 @@ def bigram_logprob_score(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Per-doc average negative log-probability under an add-one-
     smoothed bigram LM trained on the corpus itself — one model order
@@ -1300,7 +1298,7 @@ def bigram_logprob_score(
     bi = df.select(
         F.col(id_col), F.explode(_word_bigrams(text_col)).alias("gram")
     )
-    bi = pin(bi, cache_registry)  # corpus counts AND the score join
+    bi = pin(bi)  # corpus counts AND the score join
     c_bi = bi.groupBy("gram").agg(F.count(F.lit(1)).alias("c_ab"))
     c_left = (
         c_bi.groupBy(F.split("gram", " ").getItem(0).alias("w1"))
@@ -1426,7 +1424,7 @@ def dsir_logratio_weights(
         F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("long")
         % b_total,
     )
-    toks = toks.persist()  # feeds the bucket counts AND the score join
+    toks = pin(toks)  # feeds the bucket counts AND the score join
     counts = toks.groupBy("_b").agg(
         F.count(F.lit(1)).alias("_cs"),
         F.sum(F.when(F.col("_is_t"), 1).otherwise(0)).alias("_ct"),
@@ -1736,7 +1734,6 @@ def heldout_unigram_nll(
     id_col: str = "doc_id",
     text_col: str = "text",
     add_k: int = 1,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Per-doc mean negative log-likelihood under an add-k-smoothed
     unigram LM trained on a HELD-OUT reference corpus — the CCNet
@@ -1776,7 +1773,7 @@ def heldout_unigram_nll(
     )
     # feeds the (N, V) totals AND the score join — persist so the
     # reference corpus is scanned once, not twice
-    vocab = pin(vocab, cache_registry)
+    vocab = pin(vocab)
     totals = vocab.agg(
         F.sum("c").cast("long").alias("n_ref"),
         F.count(F.lit(1)).cast("long").alias("v_ref"),
@@ -1822,7 +1819,6 @@ def heldout_interp_bigram_nll(
     text_col: str = "text",
     lam: float = 0.75,
     add_k: int = 1,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Per-doc mean NLL under a Jelinek-Mercer INTERPOLATED bigram LM
     trained on a held-out reference — one model order beyond
@@ -1857,7 +1853,7 @@ def heldout_interp_bigram_nll(
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    vocab = pin(vocab, cache_registry)  # totals + the w2 join
+    vocab = pin(vocab)  # totals + the w2 join
     totals = vocab.agg(
         F.sum("c").cast("long").alias("n_ref"),
         F.count(F.lit(1)).cast("long").alias("v_ref"),
@@ -1867,7 +1863,7 @@ def heldout_interp_bigram_nll(
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("c_ab"))
     )
-    cb = pin(cb, cache_registry)  # left-context derivation + gram join
+    cb = pin(cb)  # left-context derivation + gram join
     cl = cb.groupBy(
         F.split("gram", " ").getItem(0).alias("w1")
     ).agg(F.sum("c_ab").alias("c_w1"))

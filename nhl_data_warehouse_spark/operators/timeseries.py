@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from nhl_data_warehouse_spark.operators.caching import pin
+
 
 def gap_fill(
     daily: DataFrame,
@@ -708,8 +710,9 @@ def theil_sen_trend(
         .agg(F.count(F.lit(1)).alias("nv"))
     )
     # two consumers (total + prefix sums) — persist so the pair join
-    # runs once; the caller harness reclaims via release_cached
-    cells = cells.persist()
+    # runs once; released by the caller's cache_scope or
+    # session.release_cached
+    cells = pin(cells)
     tot = cells.agg(F.sum("nv").cast("long").alias("n_pairs"))
     # pin_input: cells is the EXPENSIVE pair-join subplan with three
     # consumer stages (bounds, cumsum window, totals) — the eager

@@ -15,6 +15,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -84,6 +85,8 @@ class PipelineRunner:
                     results[name] = df
                     last_err = None
                     break
+                except AnalysisException:
+                    raise  # a plan error fails the same way on every retry
                 except Exception as e:  # retry per reference policy
                     last_err = e
                     if attempt < self.retries:

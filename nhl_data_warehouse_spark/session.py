@@ -73,18 +73,18 @@ def get_spark(
 
 
 def release_cached(spark: SparkSession) -> None:
-    """Drop every cached block the last query pinned.
+    """Drop every cached block in the session: the harness half of the
+    cache contract in ``operators/caching.py``.
 
-    Several operators ``persist()`` an intermediate their plan reads
-    more than once (LSH bands, capped shingles, oriented edge lists,
-    tokenized corpora). The operators return LAZY DataFrames, so they
-    cannot unpersist before the caller has run its action — instead
-    the caller contract is: a long-lived session serving many queries
-    calls ``release_cached(spark)`` between them (as ``bench.py`` and
-    ``tools/check_oracle.py`` do). Covers both catalog-cached plans
-    and directly-persisted RDD blocks (``localCheckpoint`` output
-    from connected components / packing is NOT in the catalog and
-    leaks without the RDD sweep).
+    A long-lived session serving many suite queries calls
+    ``release_cached(spark)`` between them (as ``bench.py`` and
+    ``tools/check_oracle.py`` do); suite queries persist outside the
+    operators too, so only a session-wide sweep covers them. A library
+    caller that must keep its own caches uses
+    ``operators.caching.cache_scope`` instead, which releases exactly
+    what the operators pinned inside it. Covers both catalog-cached
+    plans and directly-persisted RDD blocks (``localCheckpoint``
+    output is NOT in the catalog and leaks without the RDD sweep).
     """
     spark.catalog.clearCache()
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():

@@ -54,7 +54,7 @@ def test_frame_sample_fanout_and_determinism(media):
 
 
 def test_resize_stub_keeps_media_shape(media):
-    out = multimodal.resize_stub(media, max_dim=128)
+    out = multimodal.resize_media(media, max_dim=128)
     assert out.schema == multimodal.MEDIA_SCHEMA
     rows = {r.media_id: r for r in out.collect()}
     assert rows[1].meta.n_bytes == 150  # stub halves the payload

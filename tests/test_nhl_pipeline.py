@@ -230,6 +230,31 @@ class TestRunner:
         assert runner.run()["flaky"].count() == 3
         assert len(attempts) == 2
 
+    @pytest.mark.parametrize(
+        "plan_error, calls", [(True, 1), (False, 2)], ids=["analysis", "runtime"]
+    )
+    def test_runner_retries_only_transient_errors(self, spark, plan_error, calls):
+        """An AnalysisException (bad column, missing table) fails the
+        same way on every attempt, so it is raised at once; any other
+        error gets the reference retry."""
+        from pyspark.errors import AnalysisException
+
+        from nhl_data_warehouse_spark.plans.runner import Model, PipelineRunner
+
+        attempts = []
+
+        def failing(s):
+            attempts.append(1)
+            if plan_error:
+                return s.range(3).select("no_such_column")
+            raise RuntimeError("transient")
+
+        runner = PipelineRunner(spark, retries=1, retry_delay_s=0)
+        runner.register(Model("failing", failing))
+        with pytest.raises(AnalysisException if plan_error else RuntimeError):
+            runner.run()
+        assert len(attempts) == calls
+
 
 class TestCatalogContext:
     def test_database_context_and_parameterized_read(self, spark, tmp_path):

@@ -12,10 +12,10 @@
    ``embedding_robust_profile``'s pandas_udf hints).
 3. ``dedup_savings_report`` no longer takes the never-used
    ``id_col`` parameter.
-4. ``triangle_counts`` / ``clustering_coefficients`` thread an
-   optional ``cache_registry`` (the ``prefix_sum_cells`` pattern) so
-   library callers can release the two persisted relations of
-   ``_canonical_deg_tri`` instead of stranding them.
+4. ``triangle_counts`` / ``clustering_coefficients``: a library
+   caller releases the two persisted relations of
+   ``_canonical_deg_tri`` with ``cache_scope`` instead of stranding
+   them.
 """
 
 import inspect
@@ -134,6 +134,7 @@ class TestGraphCacheRegistry:
     ]
 
     def test_clustering_coefficients_releases_caches(self, spark):
+        from nhl_data_warehouse_spark.operators.caching import cache_scope
         from nhl_data_warehouse_spark.operators.graph import (
             clustering_coefficients,
         )
@@ -145,18 +146,18 @@ class TestGraphCacheRegistry:
         # (observed flaking when run right after the hypothesis CC
         # property test's localCheckpoint churn)
         before = set(jsc.getPersistentRDDs().keySet().toString()[1:-1].split(", "))
-        reg: list = []
         df = spark.createDataFrame(self.EDGES, "a string, b string")
-        out = {
-            r["node"]: r["clustering_coeff"]
-            for r in clustering_coefficients(
-                df, cache_registry=reg
-            ).collect()
-        }
+        with cache_scope():
+            out = {
+                r["node"]: r["clustering_coeff"]
+                for r in clustering_coefficients(df).collect()
+            }
+            pinned = (
+                set(jsc.getPersistentRDDs().keySet().toString()[1:-1].split(", "))
+                - before
+            )
+            assert len(pinned) == 2, "expected the e and o persisted relations"
         assert out["a"] == 1.0 and out["d"] == 0.0
-        assert len(reg) == 2, "expected the e and o persisted relations"
-        for frame in reg:
-            frame.unpersist()
         after = set(jsc.getPersistentRDDs().keySet().toString()[1:-1].split(", "))
         stranded = after - before
         assert not stranded, (
@@ -164,14 +165,13 @@ class TestGraphCacheRegistry:
         )
 
     def test_triangle_counts_registry(self, spark):
+        from nhl_data_warehouse_spark.operators.caching import cache_scope
         from nhl_data_warehouse_spark.operators.graph import triangle_counts
 
         jsc = spark.sparkContext._jsc.sc()
         before = jsc.getPersistentRDDs().size()
-        reg: list = []
         df = spark.createDataFrame(self.EDGES, "a string, b string")
-        rows = triangle_counts(df, cache_registry=reg).collect()
+        with cache_scope():
+            rows = triangle_counts(df).collect()
         assert {r["node"] for r in rows} == {"a", "b", "c"}
-        for frame in reg:
-            frame.unpersist()
         assert jsc.getPersistentRDDs().size() == before

@@ -191,15 +191,19 @@ class TestHeldoutUnigramNll:
         got = {r.doc_id: r.avg_nll for r in heldout_unigram_nll(tgt, ref).collect()}
         assert got[2] > got[1]
 
-    def test_cache_registry_release(self, spark):
+    def test_cache_scope_release(self, spark):
+        from nhl_data_warehouse_spark.operators.caching import cache_scope
         from nhl_data_warehouse_spark.operators.text import heldout_unigram_nll
 
+        jsc = spark.sparkContext._jsc
         ref = spark.createDataFrame(self.REF, "doc_id long, text string")
         tgt = spark.createDataFrame(self.TGT, "doc_id long, text string")
-        reg: list = []
-        heldout_unigram_nll(tgt, ref, cache_registry=reg).collect()
-        assert len(reg) == 1 and reg[0].is_cached
-        reg[0].unpersist(blocking=True)
+        before = set(jsc.getPersistentRDDs().keySet())
+        with cache_scope():
+            heldout_unigram_nll(tgt, ref).collect()
+            pinned = set(jsc.getPersistentRDDs().keySet()) - before
+            assert len(pinned) == 1  # the reference vocab
+        assert not pinned & set(jsc.getPersistentRDDs().keySet())
 
 
 def _bucket_ref(rows, n_buckets=3, scale=1_000_000):
@@ -512,15 +516,18 @@ class TestHeldoutInterpBigram:
         assert math.isfinite(row.avg_interp_nll)
         assert row.unseen_bigrams == row.n_bigrams == 2
 
-    def test_cache_registry_two_pins(self, spark):
+    def test_cache_scope_two_pins(self, spark):
+        from nhl_data_warehouse_spark.operators.caching import cache_scope
         from nhl_data_warehouse_spark.operators.text import (
             heldout_interp_bigram_nll,
         )
 
+        jsc = spark.sparkContext._jsc
         ref = spark.createDataFrame(self.REF, "doc_id long, text string")
         tgt = spark.createDataFrame(self.TGT, "doc_id long, text string")
-        reg: list = []
-        heldout_interp_bigram_nll(tgt, ref, cache_registry=reg).collect()
-        assert len(reg) == 2 and all(fr.is_cached for fr in reg)
-        for fr in reg:
-            fr.unpersist(blocking=True)
+        before = set(jsc.getPersistentRDDs().keySet())
+        with cache_scope():
+            heldout_interp_bigram_nll(tgt, ref).collect()
+            pinned = set(jsc.getPersistentRDDs().keySet()) - before
+            assert len(pinned) == 2  # the vocab and the bigram counts
+        assert not pinned & set(jsc.getPersistentRDDs().keySet())

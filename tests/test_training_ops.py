@@ -412,7 +412,7 @@ class TestMultimodal:
 
     def test_resize_stub_halves_payload(self, docs):
         media = multimodal.as_media_table(docs, source_col="text")
-        out = multimodal.resize_stub(media)
+        out = multimodal.resize_media(media)
         r = out.filter(F.col("media_id") == 0).first()
         assert r.meta.mime == "text/plain;resized"
         assert len(r.payload) == len(BASE.encode()) // 2

@@ -1,6 +1,15 @@
 """Job/stage profiler: run registry queries with the bench methodology
 (noop sink, release_cached between queries) and report how many Spark
-jobs, stages and tasks each one launches, via the statusTracker.
+jobs, stages and tasks each one launches.
+
+Jobs and stages are the deltas of the DAG scheduler's next job and
+stage ids across the query (the counters ``perfbench/probes.py``
+reads), so the UI's job retention (``spark.ui.retainedJobs``) can no
+longer evict a query's jobs from its count; ``stages`` includes
+stages the scheduler created and then skipped (reused shuffle output).
+``tasks`` sums completed tasks per stage id from the status tracker;
+``missing_stages`` counts stage ids it no longer retains, whose tasks
+are therefore not in ``tasks``.
 
 At tiny SFs (sf0.001) data work is nil, so job/stage counts isolate
 plan/driver overhead — the r13 finding that heavy queries run 13-38
@@ -35,38 +44,39 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    jsc = sc._jsc.sc()
+    dag = jsc.dagScheduler()
 
-    def job_ids() -> set[int]:
-        return set(tracker.getJobIdsForGroup(None) or [])
+    def next_ids() -> tuple[int, int]:
+        return int(dag.nextJobId()), int(dag.nextStageId())
 
     for name in args.names:
         spec = REGISTRY[name]
-        before = job_ids()
+        job0, stage0 = next_ids()
         sc.setJobDescription(name)
         t0 = time.time()
         df = spec.fn(spark, args.sf)
         df.write.format("noop").mode("overwrite").save()
         dt = round(time.time() - t0, 3)
-        new_jobs = sorted(job_ids() - before)
-        n_stages = 0
+        job1, stage1 = next_ids()
+        jsc.listenerBus().waitUntilEmpty()  # stage infos are final
         n_tasks = 0
-        for j in new_jobs:
-            info = tracker.getJobInfo(j)
-            if info is None:
-                continue
-            for sid in info.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
+        missing = 0
+        for sid in range(stage0, stage1):
+            si = tracker.getStageInfo(sid)
+            if si is None:
+                missing += 1
+            else:
+                n_tasks += si.numCompletedTasks
         print(
             json.dumps(
                 {
                     "query": name,
                     "sec": dt,
-                    "jobs": len(new_jobs),
-                    "stages": n_stages,
+                    "jobs": job1 - job0,
+                    "stages": stage1 - stage0,
                     "tasks": n_tasks,
+                    "missing_stages": missing,
                 }
             ),
             flush=True,
