@@ -75,10 +75,13 @@ class PipelineRunner:
             for attempt in range(self.retries + 1):
                 try:
                     df = model.fn(self.spark, **inputs)
+                    # gates and dependents read what a table landed
+                    # (dbt ref/test semantics), not its lineage again
                     if model.materialization == "view":
                         write.as_view(df, name)
                     elif model.materialization == "table":
                         write.overwrite_table(df, name)
+                        df = self.spark.table(name)
                     elif model.materialization == "incremental":
                         write.incremental_insert(self.spark, df, name, key=model.key)
                         df = self.spark.table(name)

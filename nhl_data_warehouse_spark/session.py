@@ -29,6 +29,14 @@ def get_spark(
       (not 200); on a real cluster callers pass ~2-3x total cores.
     - Arrow enabled for the few pandas-UDF operators (similarity /
       multimodal); everything else stays JVM-side.
+    - Generated-class cache of 1000 entries, not Spark's 100. Measured
+      at sf0.001 on ``local[4]``: the benchmark's seven-query sample
+      generates 110 classes in a cold pass, so at 100 a warm pass
+      recompiled 79 of them; at 1000 it recompiles 0-4. A two-scale
+      oracle sweep of the whole registry still compiles ~9,100 classes
+      (12,500 at 100), so the cache holds a few dozen recent queries,
+      not the suite; Metaspace at the end of that sweep was 227 MiB
+      (221 MiB at 100).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if master is None:
@@ -46,6 +54,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # static: read once when the JVM first generates code
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no
         # nanos timestamp — read as long, normalized in suite loading
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -110,12 +120,9 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
         "documents",
         "embeddings",
     )
-    from nhl_data_warehouse_spark.suite.registry import normalize_timestamps
+    from nhl_data_warehouse_spark.suite.registry import load
 
-    out = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df = normalize_timestamps(df, name)
+    out = dict(zip(names, load(spark, sf_dir, *names)))
+    for name, df in out.items():
         df.createOrReplaceTempView(name)
-        out[name] = df
     return out

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nhl_data_warehouse_spark.suite.registry import load, register
+from nhl_data_warehouse_spark.suite.registry import load, read_parquet, register
 
 # scratch dirs / memory-sink views from PRIOR invocations of the same
 # query, reclaimed on the next invocation (their results have been
@@ -439,7 +439,7 @@ def streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_hourly_", os.path.basename(ckpt).split("_")[-1]
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = spark.readStream.schema(batch_schema).parquet(src_dir)
     stream = normalize_timestamps(stream, "events").withColumn(
         "value", F.col("value").cast("decimal(18,2)")
@@ -496,7 +496,7 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_totals_", os.path.basename(ckpt).split("_")[-1]
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = spark.readStream.schema(batch_schema).parquet(src_dir)
     # exact integer cents through the double-typed state slot: pandas
     # int64 sums are exact and floats are exact integers below 2^53,
@@ -561,7 +561,7 @@ def _streaming_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_tws_", os.path.basename(ckpt).split("_")[-1]
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = spark.readStream.schema(batch_schema).parquet(src_dir)
     # exact integer cents through the double-typed state slot (same
     # convention as streaming_user_totals: int64 pandas sums are
@@ -649,7 +649,7 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_dedup_", os.path.basename(ckpt).split("_")[-1]
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # Correctness here must not depend on how the file source batches
     # the two deliveries (ADVICE r2): (a) maxFilesPerTrigger pins both
     # symlinks into one micro-batch even if a future option changes
@@ -721,7 +721,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left",
     ).select("user_id", "nation_name")
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = spark.readStream.schema(batch_schema).parquet(src_dir)
     stream = normalize_timestamps(stream, "events").select("event_id", "user_id")
     enriched = enrich_stream(stream, dim, on="user_id")
@@ -778,7 +778,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     shutil.rmtree(f"{wh}/nhl_suite_stream.db/fbu_events", ignore_errors=True)
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # one file per trigger forces the duplicate delivery into a LATER
     # micro-batch, so the second upsert exercises the anti-join against
     # already-committed table state (not intra-batch dedup)
@@ -855,7 +855,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_sess_", os.path.basename(ckpt).split("_")[-1]
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = spark.readStream.schema(batch_schema).parquet(src_dir)
     stream = normalize_timestamps(stream, "events").withColumn(
         "value", F.col("value").cast("decimal(18,2)")
@@ -923,7 +923,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_ssj_", os.path.basename(ckpt).split("_")[-1]
     )
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # maxFilesPerTrigger pins each side's single file into one
     # micro-batch so no match can race a watermark-driven eviction;
     # the watermark itself (30 min >= the 5-min interval upper bound)
@@ -1391,7 +1391,7 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its mtime orders it into a second micro-batch after the data
     # file; it advances both sources' watermarks past every real
     # interval, flushing the buffered unmatched rows
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_parquet(spark, f"{sf_dir}/events.parquet")
     dtypes = dict(raw.dtypes)
     max_ts = raw.agg(F.max("ts")).first()[0]
     if dtypes["ts"] == "bigint":  # TIMESTAMP(NANOS) as long

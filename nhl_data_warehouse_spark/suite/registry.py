@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import os
+import stat
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -75,9 +78,43 @@ def load(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     """
     pin_session_defaults(spark)
     return [
-        normalize_timestamps(spark.read.parquet(f"{sf_dir}/{n}.parquet"), n)
+        normalize_timestamps(read_parquet(spark, f"{sf_dir}/{n}.parquet"), n)
         for n in names
     ]
+
+
+# inferred schema per parquet file version: (abspath, size, mtime_ns).
+# Process-wide on purpose: a file version has one schema under the
+# session defaults ``pin_session_defaults`` sets, whichever session
+# reads it; one small entry per file version ever read.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once.
+
+    Schema inference runs a Spark job that reads the file footer; a
+    long-lived session reads each sf table many times, so the first
+    read of a file version memoizes its schema and later reads pass it
+    to ``.schema(...)`` and start no job. Only regular local files are
+    memoized, keyed on path, size and ``st_mtime_ns``, so a file
+    rewritten in place is inferred again; directories and non-local
+    paths always infer.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:  # a URI or a missing path: let Spark resolve it
+        st = None
+    key = None
+    if st is not None and stat.S_ISREG(st.st_mode):
+        key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def pin_session_defaults(spark: SparkSession) -> None:

@@ -255,6 +255,48 @@ class TestRunner:
             runner.run()
         assert len(attempts) == calls
 
+    def test_table_gates_and_dependents_read_what_landed(self, spark, tmp_path):
+        """A ``table`` model's gates and dependents read the landed
+        table, not its lineage: once the first gate deletes the source
+        files, the second gate and the dependent model still work."""
+        import shutil
+
+        from nhl_data_warehouse_spark.plans.quality import row_count_check
+        from nhl_data_warehouse_spark.plans.runner import Model, PipelineRunner
+
+        src = str(tmp_path / "src")
+        spark.range(5).write.parquet(src)
+        runner = PipelineRunner(spark, retries=0)
+        runner.register(
+            Model(
+                "landed_src",
+                lambda s: s.read.parquet(src),
+                materialization="table",
+                checks=[
+                    lambda df: shutil.rmtree(src),
+                    lambda df: row_count_check(df, at_least=5),
+                ],
+            )
+        )
+        runner.register(
+            Model(
+                "landed_dep",
+                lambda s, landed_src: landed_src.filter("id >= 3"),
+                deps=["landed_src"],
+                materialization="table",
+            )
+        )
+        # a database under tmp_path: no table location outlives the run
+        spark.sql("DROP DATABASE IF EXISTS runner_landed CASCADE")
+        spark.sql(f"CREATE DATABASE runner_landed LOCATION '{tmp_path / 'db'}'")
+        spark.catalog.setCurrentDatabase("runner_landed")
+        try:
+            results = runner.run()
+            assert sorted(r.id for r in results["landed_dep"].collect()) == [3, 4]
+        finally:
+            spark.catalog.setCurrentDatabase("default")
+            spark.sql("DROP DATABASE runner_landed CASCADE")
+
 
 class TestCatalogContext:
     def test_database_context_and_parameterized_read(self, spark, tmp_path):
