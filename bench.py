@@ -2,21 +2,37 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
 ONE JSON line with total + per-query wall-clock seconds.
 
-Execution is forced with the ``noop`` sink — full computation, no
-driver-side collect, so timings measure the engine, not result
-transfer.
+Each query runs through ``tools/harness.run_query``: execution is
+forced with the ``noop`` sink — full computation, no driver-side
+collect, so timings measure the engine, not result transfer — and
+the query's caches are released before the next one.
 """
 
 from __future__ import annotations
 
-import gc
+import functools
 import json
 import os
 import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [REPO_DIR, os.path.join(REPO_DIR, "tools")]
+
+from harness import run_query, warm_up  # noqa: E402
+
+
+def _this_round() -> int:
+    """1 + the highest BENCH_r{K}.json present: round K's artifact is
+    recorded at the END of round K, so during round N exactly rounds
+    1..N-1 exist."""
+    rounds = [
+        int(m.group(1))
+        for fn in os.listdir(REPO_DIR)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", fn))
+    ]
+    return max(rounds, default=0) + 1
 
 
 def main() -> None:
@@ -28,94 +44,18 @@ def main() -> None:
     from nhl_data_warehouse_spark.suite import REGISTRY
 
     spark = get_spark(app_name="bench")
-    # Warm the paths every query shares so the first queries aren't
-    # charged for infrastructure startup: JVM codegen, the parquet
-    # reader, and the Python (Arrow) worker pool.
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    (
-        spark.read.parquet(f"{sf_dir}/region.parquet")
-        .selectExpr("sum(cast(r_regionkey as decimal(18,2)))")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    # join/window/explode on the 2 tiny dims: JIT-compiles the shuffle,
-    # broadcast-join, and window machinery so the first real query
-    # isn't charged for it (registry order puts TPC-H Q3 first)
-    from pyspark.sql import functions as F
-
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    (
-        nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .selectExpr(
-            "r_name", "row_number() over (order by n desc, r_name) as rk"
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    (
-        nation.select(F.explode(F.split("n_name", "")).alias("c"))
-        .groupBy("c")
-        .count()
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    # md5/collect_set/array_intersect/localCheckpoint: the hashing and
-    # set-verify machinery half the dedup family leans on — JIT-compile
-    # it here so the first LSH/shingle query isn't charged for it
-    # (same infrastructure-warm rationale as the join/window block
-    # above; still runs on the 25-row nation dim, untimed)
-    ws = (
-        nation.select(
-            F.col("n_nationkey").alias("k"),
-            F.explode(F.split(F.md5(F.col("n_name")), "")).alias("c"),
-        )
-        .groupBy("k")
-        .agg(F.collect_set("c").alias("s"))
-    )
-    (
-        ws.alias("x")
-        .join(ws.alias("y"), F.col("x.k") < F.col("y.k"))
-        .select(F.size(F.array_intersect("x.s", "y.s")).alias("n"))
-        .groupBy("n")
-        .count()
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    nation.select("n_nationkey").localCheckpoint().count()
-    spark.range(10).toPandas()  # spins up Arrow/Python workers
+    warm_up(spark, sf_dir)
 
     def run_suite() -> tuple[dict[str, float], dict[str, str], float]:
         timings: dict[str, float] = {}
         errors: dict[str, str] = {}
         t_total = time.time()
         for name, spec in REGISTRY.items():
-            t0 = time.time()
-            # Per-query fault isolation: one broken query must never
-            # cost the timings of the rest (r1's bench died at #30).
-            try:
-                df = spec.fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                timings[name] = round(time.time() - t0, 3)
-            except Exception as e:  # noqa: BLE001
-                df = None
-                errors[name] = f"{type(e).__name__}: {str(e)[:200]}"
-            # queries persist reused intermediates (LSH bands, capped
-            # shingles); drop them so measurements stay independent
-            # and localCheckpoint blocks don't accumulate heap
-            # pressure across the 200+ queries (the release_cached
-            # caller contract)
-            from nhl_data_warehouse_spark.session import release_cached
-
-            release_cached(spark)
-            del df
-            gc.collect()
+            r = run_query(spark, functools.partial(spec.fn, spark, sf_dir))
+            if r["error"]:
+                errors[name] = r["error"]
+            else:
+                timings[name] = r["sec"]
         return timings, errors, round(time.time() - t_total, 3)
 
     if "--record-floor" in sys.argv:
@@ -136,15 +76,9 @@ def main() -> None:
         }
         if e1 or e2:
             floor["errors"] = {**e1, **e2}
-        repo_dir = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for fn in os.listdir(repo_dir)
-            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-        ]
-        frozen = f"BENCH_FLOOR_r{(max(rounds, default=0) + 1):02d}.json"
+        frozen = f"BENCH_FLOOR_r{_this_round():02d}.json"
         for fn in ("BENCH_FLOOR.json", frozen):
-            with open(os.path.join(repo_dir, fn), "w") as f:
+            with open(os.path.join(REPO_DIR, fn), "w") as f:
                 json.dump(floor, f)
                 f.write("\n")
         print(json.dumps({**floor, "queries": frozen}))
@@ -169,9 +103,7 @@ def main() -> None:
     # --record-floor` run (two passes, per-query min); it is attached
     # only when it covers the exact same query set at the same sf, so
     # a stale floor can never masquerade as current.
-    floor_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FLOOR.json"
-    )
+    floor_path = os.path.join(REPO_DIR, "BENCH_FLOOR.json")
     try:
         with open(floor_path) as f:
             floor = json.load(f)
@@ -191,24 +123,15 @@ def main() -> None:
     # 2. the full payload on stdout (complete-capture consumers);
     # 3. a compact one-line summary (total + slowest-10 + error count)
     #    printed last, itself a valid single-JSON-line artifact.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    full_path = os.path.join(repo_dir, "BENCH_FULL.json")
+    full_path = os.path.join(REPO_DIR, "BENCH_FULL.json")
     # Per-round FROZEN artifact (VERDICT r6 item 2): BENCH_r05's
     # queries_full pointed at mutable BENCH_FULL.json and round 6's
     # run destroyed round-5 per-query history. Each run now ALSO
-    # writes BENCH_FULL_r{N}.json where N = current round, inferred
-    # as 1 + the highest driver-written BENCH_r{K}.json present
-    # (the driver records round K's artifact at the END of round K,
-    # so during round N exactly rounds 1..N-1 exist). Re-runs within
-    # a round overwrite that round's own file only; past rounds'
-    # frozen files are never touched.
-    rounds = [
-        int(m.group(1))
-        for fn in os.listdir(repo_dir)
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-    ]
-    frozen_name = f"BENCH_FULL_r{(max(rounds, default=0) + 1):02d}.json"
-    for path in (full_path, os.path.join(repo_dir, frozen_name)):
+    # writes BENCH_FULL_r{N}.json for the current round N. Re-runs
+    # within a round overwrite that round's own file only; past
+    # rounds' frozen files are never touched.
+    frozen_name = f"BENCH_FULL_r{_this_round():02d}.json"
+    for path in (full_path, os.path.join(REPO_DIR, frozen_name)):
         try:
             with open(path, "w") as f:
                 json.dump(payload, f)

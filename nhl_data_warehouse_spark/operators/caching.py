@@ -13,10 +13,11 @@ frames before the caller has run its action. One rule covers it:
     >>> with cache_scope():
     ...     some_operator(df).write.parquet(path)
 
-- **Harnesses running suite queries** (``bench.py``,
-  ``tools/check_oracle.py``, ``perfbench``) call
+- **Harnesses running suite queries** call
   ``session.release_cached(spark)`` between queries instead — a
-  session-wide sweep.
+  session-wide sweep. ``tools/harness.run_query`` does it after every
+  query for ``bench.py`` and the profiling tools;
+  ``tools/check_oracle.py`` and ``perfbench`` call it directly.
 
 Every persist and checkpoint under ``operators/`` goes through
 ``pin`` and ``checkpoint`` (a static test enforces it). Outside a

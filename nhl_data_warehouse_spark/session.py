@@ -87,8 +87,9 @@ def release_cached(spark: SparkSession) -> None:
     cache contract in ``operators/caching.py``.
 
     A long-lived session serving many suite queries calls
-    ``release_cached(spark)`` between them (as ``bench.py`` and
-    ``tools/check_oracle.py`` do); suite queries persist outside the
+    ``release_cached(spark)`` between them (``tools/harness.run_query``
+    does it after every query it runs, and ``tools/check_oracle.py``
+    before each check); suite queries persist outside the
     operators too, so only a session-wide sweep covers them. A library
     caller that must keep its own caches uses
     ``operators.caching.cache_scope`` instead, which releases exactly

@@ -1053,6 +1053,39 @@ _COSUPPLY_EDGES_SQL = """
 """
 
 
+def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark side of ``_COSUPPLY_EDGES_SQL``: supplier pairs (a < b)
+    sharing more parts than 1.1x the mean over all co-supplying
+    pairs."""
+    (lineitem,) = load(spark, sf_dir, "lineitem")
+    ps = lineitem.select("l_partkey", "l_suppkey").distinct()
+    shared = (
+        ps.alias("p1")
+        .join(
+            ps.alias("p2"),
+            (F.col("p1.l_partkey") == F.col("p2.l_partkey"))
+            & (F.col("p1.l_suppkey") < F.col("p2.l_suppkey")),
+        )
+        .groupBy(
+            F.col("p1.l_suppkey").alias("a"), F.col("p2.l_suppkey").alias("b")
+        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    # two consumers (the mean broadcast's build job and the edge
+    # filter) would otherwise each execute the full distinct +
+    # self-join + aggregate pipeline — persist halves the upstream
+    # cost (harness.run_query reclaims it with release_cached)
+    shared = shared.persist()
+    mean_shared = shared.agg(
+        (F.sum("n_shared").cast("double") / F.count(F.lit(1))).alias("m")
+    )
+    return (
+        shared.join(F.broadcast(mean_shared))
+        .filter(F.col("n_shared").cast("double") > 1.1 * F.col("m"))
+        .select("a", "b")
+    )
+
+
 @register(
     "cosupply_clustering_coeff",
     op_ids="beyond-reference per-node LOCAL clustering coefficient "
@@ -1100,33 +1133,7 @@ def cosupply_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         clustering_coefficients,
     )
 
-    (lineitem,) = load(spark, sf_dir, "lineitem")
-    ps = lineitem.select("l_partkey", "l_suppkey").distinct()
-    shared = (
-        ps.alias("p1")
-        .join(
-            ps.alias("p2"),
-            (F.col("p1.l_partkey") == F.col("p2.l_partkey"))
-            & (F.col("p1.l_suppkey") < F.col("p2.l_suppkey")),
-        )
-        .groupBy(
-            F.col("p1.l_suppkey").alias("a"), F.col("p2.l_suppkey").alias("b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    # two consumers (the mean broadcast's build job and the edge
-    # filter) would otherwise each execute the full distinct +
-    # self-join + aggregate pipeline — persist halves the upstream
-    # cost (the bench harness reclaims via release_cached)
-    shared = shared.persist()
-    mean_shared = shared.agg(
-        (F.sum("n_shared").cast("double") / F.count(F.lit(1))).alias("m")
-    )
-    edges = (
-        shared.join(F.broadcast(mean_shared))
-        .filter(F.col("n_shared").cast("double") > 1.1 * F.col("m"))
-        .select("a", "b")
-    )
+    edges = _cosupply_edges(spark, sf_dir)
     # edges come from a groupBy(a, b) over an a < b self-join — already
     # canonical, so the operator skips its distinct (one exchange fewer)
     return clustering_coefficients(edges, "a", "b", assume_canonical=True)
@@ -1158,33 +1165,7 @@ def cosupply_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def triangle_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.graph import triangle_counts
 
-    (lineitem,) = load(spark, sf_dir, "lineitem")
-    ps = lineitem.select("l_partkey", "l_suppkey").distinct()
-    shared = (
-        ps.alias("p1")
-        .join(
-            ps.alias("p2"),
-            (F.col("p1.l_partkey") == F.col("p2.l_partkey"))
-            & (F.col("p1.l_suppkey") < F.col("p2.l_suppkey")),
-        )
-        .groupBy(
-            F.col("p1.l_suppkey").alias("a"), F.col("p2.l_suppkey").alias("b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    # two consumers (the mean broadcast's build job and the edge
-    # filter) would otherwise each execute the full distinct +
-    # self-join + aggregate pipeline — persist halves the upstream
-    # cost (the bench harness reclaims via release_cached)
-    shared = shared.persist()
-    mean_shared = shared.agg(
-        (F.sum("n_shared").cast("double") / F.count(F.lit(1))).alias("m")
-    )
-    edges = (
-        shared.join(F.broadcast(mean_shared))
-        .filter(F.col("n_shared").cast("double") > 1.1 * F.col("m"))
-        .select("a", "b")
-    )
+    edges = _cosupply_edges(spark, sf_dir)
     # same canonical-by-construction argument as the coefficient query
     return triangle_counts(edges, assume_canonical=True)
 

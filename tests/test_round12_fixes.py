@@ -139,26 +139,26 @@ class TestGraphCacheRegistry:
             clustering_coefficients,
         )
 
-        jsc = spark.sparkContext._jsc.sc()
+        jsc = spark.sparkContext._jsc
         # compare RDD-id SETS, not global counts: the ContextCleaner
         # asynchronously unpersists frames earlier tests dropped, so a
         # global count can shrink mid-test and flip a count equality
         # (observed flaking when run right after the hypothesis CC
-        # property test's localCheckpoint churn)
-        before = set(jsc.getPersistentRDDs().keySet().toString()[1:-1].split(", "))
+        # property test's localCheckpoint churn). Read the ids from the
+        # Java map, not by parsing the Scala set's toString: that
+        # mangles whichever id prints first, and the first id changes
+        # as the set grows.
+        before = set(jsc.getPersistentRDDs().keySet())
         df = spark.createDataFrame(self.EDGES, "a string, b string")
         with cache_scope():
             out = {
                 r["node"]: r["clustering_coeff"]
                 for r in clustering_coefficients(df).collect()
             }
-            pinned = (
-                set(jsc.getPersistentRDDs().keySet().toString()[1:-1].split(", "))
-                - before
-            )
+            pinned = set(jsc.getPersistentRDDs().keySet()) - before
             assert len(pinned) == 2, "expected the e and o persisted relations"
         assert out["a"] == 1.0 and out["d"] == 0.0
-        after = set(jsc.getPersistentRDDs().keySet().toString()[1:-1].split(", "))
+        after = set(jsc.getPersistentRDDs().keySet())
         stranded = after - before
         assert not stranded, (
             f"clustering_coefficients stranded caches: {stranded}"

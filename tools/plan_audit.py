@@ -14,14 +14,22 @@ wrong here is the one to `.explain("formatted")` first.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from harness import ROOT, run_query, warm_up
 
 SF_DIR = os.environ.get("PLAN_AUDIT_SF", "/root/testdata/sf0.001")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+OUT = os.path.join(ROOT, "PLANS.md")
+
+
+def executed_plan(df) -> str:
+    """Sink: run the query and return its executed plan. collect()
+    finalizes THIS df's QueryExecution (count() would plan a different
+    query and leave this one un-finalized)."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def main() -> None:
@@ -29,17 +37,14 @@ def main() -> None:
     from nhl_data_warehouse_spark.suite import REGISTRY
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
+    warm_up(spark, SF_DIR)
     rows = []
     for name, spec in REGISTRY.items():
-        try:
-            df = spec.fn(spark, SF_DIR)
-            # collect() finalizes THIS df's QueryExecution (count() would
-            # plan a different query and leave this one un-finalized)
-            df.collect()
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # pragma: no cover - audit robustness
-            rows.append((name, "-", "-", "-", "-", f"ERROR {type(e).__name__}"))
+        r = run_query(spark, functools.partial(spec.fn, spark, SF_DIR), executed_plan)
+        if r["error"]:
+            rows.append((name, "-", "-", "-", "-", f"ERROR {r['error'].split(':')[0]}"))
             continue
+        plan = r["result"]
         # count UNIQUE Exchange nodes: a persisted subtree's plan text
         # is reprinted verbatim at every InMemoryTableScan site, so a
         # raw substring count multiplies cached-branch exchanges by
@@ -87,7 +92,6 @@ def main() -> None:
             else ("py" if "BatchEvalPython" in plan else "-")
         )
         rows.append((name, str(n_ex), joins, pushed, codegen, python_side))
-        spark.catalog.clearCache()
 
     lines = [
         "# PLANS — physical-plan audit (generated by tools/plan_audit.py)",

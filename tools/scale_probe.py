@@ -15,13 +15,14 @@ Usage: python tools/scale_probe.py [--factors 1 4 10]
 from __future__ import annotations
 
 import argparse
+import functools
+import math
 import os
 import shutil
-import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from harness import ROOT, run_query, warm_up
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -443,6 +444,7 @@ def main() -> None:
     from nhl_data_warehouse_spark.operators import similarity
 
     spark = get_spark(app_name="scale_probe")
+    warm_up(spark, SRC)
     root = tempfile.mkdtemp(prefix="scale_probe_")
     dirs = {}
     for f in args.factors:
@@ -450,24 +452,26 @@ def main() -> None:
         dirs[f] = build_dir(spark, f, root)
         print(f"built x{f} in {time.time() - t0:.1f}s", flush=True)
 
+    def sweep(build_at, factors) -> dict[int, float]:
+        """Seconds per factor of the frame ``build_at(f)`` returns;
+        failed runs are printed and left out ('-' in the table).
+        run_query's driver GC lets the ContextCleaner delete finished
+        shuffle files — without it the probe's ~70 jobs accumulate
+        spill in /tmp and the x10 runs die with "No space left on
+        device"."""
+        out = {}
+        for f in factors:
+            r = run_query(spark, functools.partial(build_at, f))
+            if r["error"]:
+                print(f"  x{f}: {r['error']}", flush=True)
+            else:
+                out[f] = round(r["sec"], 2)
+        return out
+
     results: dict[str, dict[int, float]] = {}
     for name in PROBES:
         spec = REGISTRY[name]
-        results[name] = {}
-        for f in args.factors:
-            t0 = time.time()
-            spec.fn(spark, dirs[f]).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            results[name][f] = round(time.time() - t0, 2)
-            spark.catalog.clearCache()
-            # drop DataFrame refs and force a driver GC so the
-            # ContextCleaner deletes finished shuffle files — without
-            # this the probe's ~70 jobs accumulate spill in /tmp and
-            # the x10 runs die with "No space left on device"
-            import gc
-
-            gc.collect()
+        results[name] = sweep(lambda f: spec.fn(spark, dirs[f]), args.factors)
         print(f"{name}: {results[name]}", flush=True)
 
     # duplicate-cluster blow-up, measured: replication makes every
@@ -483,23 +487,18 @@ def main() -> None:
         SHINGLE_K,
     )
 
-    results["near_dup_verify_starcap32"] = {}
-    for f in args.factors:
-        docs = spark.read.parquet(f"{dirs[f]}/documents.parquet")
-        t0 = time.time()
-        sh = dedup_ops.char_shingles(docs, k=SHINGLE_K).persist()
+    docs = {f: spark.read.parquet(f"{dirs[f]}/documents.parquet") for f in args.factors}
+    emb = {f: spark.read.parquet(f"{dirs[f]}/embeddings.parquet") for f in args.factors}
+
+    def starcap_pairs(f):
+        sh = dedup_ops.char_shingles(docs[f], k=SHINGLE_K).persist()
         sig = dedup_ops.minhash_signatures(sh, n_hashes=N_HASHES)
         cand = dedup_ops.minhash_band_candidates(
             sig, n_hashes=N_HASHES, band_size=BAND_SIZE, star_cap=32
         )
-        dedup_ops.jaccard_pairs(sh, candidates=cand, threshold=0.5).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        results["near_dup_verify_starcap32"][f] = round(time.time() - t0, 2)
-        spark.catalog.clearCache()
-        import gc
+        return dedup_ops.jaccard_pairs(sh, candidates=cand, threshold=0.5)
 
-        gc.collect()
+    results["near_dup_verify_starcap32"] = sweep(starcap_pairs, args.factors)
     print(f"near_dup_verify_starcap32: {results['near_dup_verify_starcap32']}", flush=True)
 
     # the semantic-dedup cost model, measured: within-cell pairs cost
@@ -511,38 +510,20 @@ def main() -> None:
     # linear. That is why the suite's dense near-dup scale twin
     # (embedding_near_dup_pairs) buckets by LSH, with IVF kept for
     # probe-style search where the centroid set stays fixed.
-    import math
-
-    sem: dict[str, dict[int, float]] = {
-        "semdedup_ivf_fixed_cells": {},
-        "semdedup_ivf_scaled_cells": {},
-        "semdedup_lsh_buckets": {},
+    sem = {
+        "semdedup_ivf_fixed_cells": lambda f: similarity.semantic_dedup(
+            emb[f], n_centroids=8, threshold=0.35
+        ),
+        "semdedup_ivf_scaled_cells": lambda f: similarity.semantic_dedup(
+            emb[f], n_centroids=8 * f, threshold=0.35
+        ),
+        "semdedup_lsh_buckets": lambda f: similarity.embedding_near_dup_pairs(
+            emb[f], n_planes=3 + math.ceil(math.log2(f)), dim=64, threshold=0.35
+        ),
     }
-    for f in args.factors:
-        emb = spark.read.parquet(f"{dirs[f]}/embeddings.parquet")
-        for label, cells in (
-            ("semdedup_ivf_fixed_cells", 8),
-            ("semdedup_ivf_scaled_cells", 8 * f),
-        ):
-            t0 = time.time()
-            similarity.semantic_dedup(
-                emb, n_centroids=cells, threshold=0.35
-            ).write.format("noop").mode("overwrite").save()
-            sem[label][f] = round(time.time() - t0, 2)
-            spark.catalog.clearCache()
-        planes = 3 + math.ceil(math.log2(f)) if f > 1 else 3
-        t0 = time.time()
-        similarity.embedding_near_dup_pairs(
-            emb, n_planes=planes, dim=64, threshold=0.35
-        ).write.format("noop").mode("overwrite").save()
-        sem["semdedup_lsh_buckets"][f] = round(time.time() - t0, 2)
-        spark.catalog.clearCache()
-        print(
-            f"semdedup x{f}: ivf_fixed={sem['semdedup_ivf_fixed_cells'][f]} "
-            f"ivf_scaled={sem['semdedup_ivf_scaled_cells'][f]} "
-            f"lsh(p={planes})={sem['semdedup_lsh_buckets'][f]}",
-            flush=True,
-        )
+    for label, build_at in sem.items():
+        sem[label] = sweep(build_at, args.factors)
+        print(f"{label}: {sem[label]}", flush=True)
 
     # PPJoin exact set-similarity join, probed at factors <= 4 only:
     # replication multiplies every planted dup cluster by k, and the
@@ -553,17 +534,10 @@ def main() -> None:
     # which exceeds this box's disk at x10). The production remedy at
     # that scale is the star-capped LSH family above; the PPJoin row
     # exists to show the x1->x4 growth of the exact path.
-    results["prefix_jaccard_exact_ssjoin"] = {}
-    import gc as _gc
-
-    for f in [x for x in args.factors if x <= 4]:
-        t0 = time.time()
-        REGISTRY["prefix_jaccard_near_dups"].fn(spark, dirs[f]).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        results["prefix_jaccard_exact_ssjoin"][f] = round(time.time() - t0, 2)
-        spark.catalog.clearCache()
-        _gc.collect()
+    prefix = REGISTRY["prefix_jaccard_near_dups"]
+    results["prefix_jaccard_exact_ssjoin"] = sweep(
+        lambda f: prefix.fn(spark, dirs[f]), [x for x in args.factors if x <= 4]
+    )
     print(
         f"prefix_jaccard_exact_ssjoin: {results['prefix_jaccard_exact_ssjoin']}",
         flush=True,
@@ -651,9 +625,7 @@ def main() -> None:
         "fixed at B rows, and the ratio join is a broadcast at every factor.",
         "",
     ]
-    out_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"
-    )
+    out_path = os.path.join(ROOT, "SCALING.md")
     with open(out_path, "w") as fh:
         fh.write("\n".join(lines))
     print(f"wrote {out_path}")
