@@ -111,8 +111,14 @@ def triangle_counts(
     O(sum deg_out^2) = O(m^1.5) instead of the last reducer drowning
     in a celebrity node's O(deg^2).
 
-    Input may contain duplicates / both directions / self-loops; it is
-    canonicalized first. Output: (node, n_triangles) for nodes in >= 1
+    By default the input may contain duplicates / both directions /
+    self-loops; it is canonicalized first. ``assume_canonical=True``
+    skips that step (the least/greatest orientation, the self-loop
+    filter and the distinct): the caller must pass each undirected
+    edge once, with a < b and no self-loops. Nothing checks this — a
+    duplicate, reversed copy or self-loop counts as one more edge,
+    silently inflating the degree and wedge counts and so the
+    triangle counts. Output: (node, n_triangles) for nodes in >= 1
     triangle.
 
     Broadcast-size assumption: the degree table is |V|-sized and is
@@ -724,6 +730,14 @@ def clustering_coefficients(
     degree pass would execute the expensive upstream edge projection
     (the co-supply self-join) a second time (measured 6.9 -> 5.2-6.1 s
     warm at sf0.1, parity with triangle_cosupply's 5.3 s).
+
+    ``assume_canonical=True`` skips the canonicalize step as in
+    ``triangle_counts``: the caller must pass each undirected edge
+    once, with a < b and no self-loops. Nothing checks this — with
+    duplicates, reversed copies or self-loops the degree and wedge
+    counts are silently inflated, so the coefficients are wrong (a
+    triangle plus one reversed and one repeated edge gives 4 triangles
+    per node and coefficients of 2/3 and 4/3).
     """
     deg, tri = _canonical_deg_tri(edges, a, b, assume_canonical)
     return (

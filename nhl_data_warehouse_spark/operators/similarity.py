@@ -19,6 +19,8 @@ Two tiers, mirroring how ANN systems scale:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -900,6 +902,98 @@ def gram_matrix(
     )
 
 
+def _rounded_cos(a: str, b: str, na: str, nb: str) -> Column:
+    """6dp cosine of array columns ``a``/``b`` from their folded norms."""
+    return (
+        F.round(_dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6) + F.lit(0.0)
+    ).alias("_cos")
+
+
+def _recall_at_k(
+    embeddings: DataFrame,
+    approx_pairs: Callable[[DataFrame, DataFrame], DataFrame],
+    k: int,
+    sample_mod: int,
+    id_col: str,
+    vec_col: str,
+    prefix_dim: int | None = None,
+) -> DataFrame:
+    """Recall@k per sampled query (``id % sample_mod == 0``) of an
+    approximate top-k arm against the exact cosine scan — the body of
+    the ``*_recall_at_k`` evals.
+
+    ``approx_pairs(corpus, qs)`` returns the approx arm's candidate
+    (query, vector) rows: corpus columns plus the query's ``query_id``,
+    ``_qe`` and ``_nq``. The exact arm broadcasts only the query
+    sample against the corpus (map-side only). Both arms rank by the
+    6dp cosine with id tie-break; with ``prefix_dim`` the approx arm
+    ranks by the cosine of the first ``prefix_dim`` coordinates.
+    """
+    import pyspark.sql.window as W
+
+    # norms are per-VECTOR quantities: fold them once per row on each
+    # side before the pair join — folding them per PAIR (the naive
+    # form) re-runs two 64-element folds for every candidate, ~3x the
+    # expression work at eval scale
+    corpus = embeddings.withColumn("_nv", _norm(F.col(vec_col)))
+    q_cols = [
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("_qe"),
+        F.col("_nv").alias("_nq"),
+    ]
+    approx_cos = _rounded_cos(vec_col, "_qe", "_nv", "_nq")
+    if prefix_dim is not None:
+        pre = F.slice(F.col(vec_col), 1, prefix_dim)
+        corpus = corpus.withColumn("_pv", pre).withColumn("_np", _norm(pre))
+        q_cols += [F.col("_pv").alias("_qp"), F.col("_np").alias("_nqp")]
+        approx_cos = _rounded_cos("_pv", "_qp", "_np", "_nqp")
+    qs = corpus.filter((F.col(id_col) % sample_mod) == 0).select(*q_cols)
+    w = W.Window.partitionBy("query_id").orderBy(
+        F.col("_cos").desc(), F.col(id_col).asc()
+    )
+
+    def top_k(pairs: DataFrame, cos: Column) -> DataFrame:
+        return (
+            pairs.select("query_id", id_col, cos)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k)
+        )
+
+    exact_top = top_k(
+        corpus.join(F.broadcast(qs), F.col(id_col) != F.col("query_id")),
+        _rounded_cos(vec_col, "_qe", "_nv", "_nq"),
+    ).select("query_id", id_col)
+    # alias BOTH output columns: the exact and approx arms share
+    # lineage from the corpus frame, so joining on a same-named
+    # query_id would lean on Spark's ambiguous-self-join rewrite (it
+    # logs "trivially true equals predicate"); distinct names make the
+    # join condition unambiguous by construction
+    approx_top = top_k(approx_pairs(corpus, qs), approx_cos).select(
+        F.col("query_id").alias("_q2"), F.col(id_col).alias("_hit_id")
+    )
+    return (
+        exact_top.join(
+            approx_top,
+            (F.col("query_id") == F.col("_q2"))
+            & (F.col(id_col) == F.col("_hit_id")),
+            "left",
+        )
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_exact"),
+            F.count("_hit_id").alias("n_hit"),
+        )
+        .select(
+            "query_id",
+            "n_exact",
+            "n_hit",
+            (F.round(F.col("n_hit") / F.col("n_exact"), 6) + F.lit(0.0)).alias(
+                "recall_at_k"
+            ),
+        )
+    )
+
+
 def ann_recall_at_k(
     embeddings: DataFrame,
     n_planes: int = 8,
@@ -927,81 +1021,23 @@ def ann_recall_at_k(
     sample (not all queries) is what keeps this runnable at 100 TB —
     grow ``sample_mod`` with the corpus.
     """
-    import pyspark.sql.window as W
 
-    # norms are per-VECTOR quantities: fold them once per row on each
-    # side before the pair join — folding them per PAIR (the naive
-    # form) re-runs two 64-element folds for every candidate, ~3x the
-    # expression work at eval scale
-    corpus = embeddings.withColumn("_nv", _norm(F.col(vec_col)))
-    qs = corpus.filter((F.col(id_col) % sample_mod) == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qe"),
-        F.col("_nv").alias("_nq"),
-    )
-    rounded_cos = (
-        F.round(
-            _dot(F.col(vec_col), F.col("_qe"))
-            / (F.col("_nv") * F.col("_nq")),
-            6,
+    def approx_pairs(corpus: DataFrame, qs: DataFrame) -> DataFrame:
+        buckets = lsh_hyperplane_buckets(
+            corpus, n_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col
+        ).join(corpus.select(id_col, "_nv"), on=id_col)
+        qb = (
+            buckets.join(
+                F.broadcast(qs.select("query_id", "_nq")),
+                F.col(id_col) == F.col("query_id"),
+            )
+            .select("query_id", F.col(vec_col).alias("_qe"), "_nq", F.col("bucket"))
         )
-        + F.lit(0.0)
-    ).alias("_cos")
-    w = (
-        W.Window.partitionBy("query_id")
-        .orderBy(F.col("_cos").desc(), F.col(id_col).asc())
-    )
-    exact_top = (
-        corpus.join(F.broadcast(qs), F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, rounded_cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", id_col)
-    )
-    buckets = lsh_hyperplane_buckets(
-        corpus, n_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col
-    ).join(corpus.select(id_col, "_nv"), on=id_col)
-    qb = (
-        buckets.join(
-            F.broadcast(qs.select("query_id", "_nq")),
-            F.col(id_col) == F.col("query_id"),
+        return buckets.join(F.broadcast(qb), "bucket").filter(
+            F.col(id_col) != F.col("query_id")
         )
-        .select("query_id", F.col(vec_col).alias("_qe"), "_nq", F.col("bucket"))
-    )
-    approx_top = (
-        buckets.join(F.broadcast(qb), "bucket")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, rounded_cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        # alias BOTH output columns: the exact and approx arms share
-        # lineage from the corpus frame, so joining on a same-named
-        # query_id would lean on Spark's ambiguous-self-join rewrite
-        # (it logs "trivially true equals predicate"); distinct names
-        # make the join condition unambiguous by construction
-        .select(F.col("query_id").alias("_q2"), F.col(id_col).alias("_hit_id"))
-    )
-    return (
-        exact_top.join(
-            approx_top,
-            (F.col("query_id") == F.col("_q2"))
-            & (F.col(id_col) == F.col("_hit_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("_hit_id").alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            (F.round(F.col("n_hit") / F.col("n_exact"), 6) + F.lit(0.0)).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+
+    return _recall_at_k(embeddings, approx_pairs, k, sample_mod, id_col, vec_col)
 
 
 def standardize_embeddings(
@@ -1076,75 +1112,20 @@ def ivf_recall_at_k(
     only); the approx arm joins inside the query's assigned cell
     exactly like the production probe.
     """
-    import pyspark.sql.window as W
 
-    # per-row norms folded once per side, not per pair (see
-    # ann_recall_at_k)
-    corpus = embeddings.withColumn("_nv", _norm(F.col(vec_col)))
-    qs = corpus.filter((F.col(id_col) % sample_mod) == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qe"),
-        F.col("_nv").alias("_nq"),
-    )
-    rounded_cos = (
-        F.round(
-            _dot(F.col(vec_col), F.col("_qe"))
-            / (F.col("_nv") * F.col("_nq")),
-            6,
+    def approx_pairs(corpus: DataFrame, qs: DataFrame) -> DataFrame:
+        assigned = ivf_assign(
+            embeddings, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
+        ).join(corpus.select(id_col, "_nv"), on=id_col)
+        qc = assigned.join(
+            F.broadcast(qs.select("query_id", "_nq")),
+            F.col(id_col) == F.col("query_id"),
+        ).select("query_id", F.col(vec_col).alias("_qe"), "_nq", F.col("cell_id"))
+        return assigned.join(F.broadcast(qc), "cell_id").filter(
+            F.col(id_col) != F.col("query_id")
         )
-        + F.lit(0.0)
-    ).alias("_cos")
-    w = (
-        W.Window.partitionBy("query_id")
-        .orderBy(F.col("_cos").desc(), F.col(id_col).asc())
-    )
-    exact_top = (
-        corpus.join(F.broadcast(qs), F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, rounded_cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", id_col)
-    )
-    assigned = ivf_assign(
-        embeddings, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-    ).join(corpus.select(id_col, "_nv"), on=id_col)
-    qc = assigned.join(
-        F.broadcast(qs.select("query_id", "_nq")), F.col(id_col) == F.col("query_id")
-    ).select("query_id", F.col(vec_col).alias("_qe"), "_nq", F.col("cell_id"))
-    approx_top = (
-        assigned.join(F.broadcast(qc), "cell_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, rounded_cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        # alias BOTH output columns: the exact and approx arms share
-        # lineage from the corpus frame, so joining on a same-named
-        # query_id would lean on Spark's ambiguous-self-join rewrite
-        # (it logs "trivially true equals predicate"); distinct names
-        # make the join condition unambiguous by construction
-        .select(F.col("query_id").alias("_q2"), F.col(id_col).alias("_hit_id"))
-    )
-    return (
-        exact_top.join(
-            approx_top,
-            (F.col("query_id") == F.col("_q2"))
-            & (F.col(id_col) == F.col("_hit_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("_hit_id").alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            (F.round(F.col("n_hit") / F.col("n_exact"), 6) + F.lit(0.0)).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+
+    return _recall_at_k(embeddings, approx_pairs, k, sample_mod, id_col, vec_col)
 
 
 def matryoshka_recall_at_k(
@@ -1174,76 +1155,16 @@ def matryoshka_recall_at_k(
     baseline: the brute-force arms are the measurement, the
     production path is the bucketed/IVF family.
     """
-    import pyspark.sql.window as W
-
-    pre = F.slice(F.col(vec_col), 1, prefix_dim)
-    corpus = (
-        embeddings.withColumn("_nv", _norm(F.col(vec_col)))
-        .withColumn("_pv", pre)
-        .withColumn("_np", _norm(pre))
-    )
-    qs = corpus.filter((F.col(id_col) % sample_mod) == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qe"),
-        F.col("_nv").alias("_nq"),
-        F.col("_pv").alias("_qp"),
-        F.col("_np").alias("_nqp"),
-    )
-    full_cos = (
-        F.round(
-            _dot(F.col(vec_col), F.col("_qe")) / (F.col("_nv") * F.col("_nq")),
-            6,
-        )
-        + F.lit(0.0)
-    ).alias("_cos")
-    pre_cos = (
-        F.round(
-            _dot(F.col("_pv"), F.col("_qp")) / (F.col("_np") * F.col("_nqp")),
-            6,
-        )
-        + F.lit(0.0)
-    ).alias("_cos")
-    w = W.Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    exact_top = (
-        corpus.join(F.broadcast(qs), F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, full_cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", id_col)
-    )
-    trunc_top = (
-        corpus.join(F.broadcast(qs), F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, pre_cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        # distinct names keep the arm join unambiguous (both arms
-        # share corpus lineage — the ivf_recall_at_k note)
-        .select(
-            F.col("query_id").alias("_q2"), F.col(id_col).alias("_hit_id")
-        )
-    )
-    return (
-        exact_top.join(
-            trunc_top,
-            (F.col("query_id") == F.col("_q2"))
-            & (F.col(id_col) == F.col("_hit_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("_hit_id").alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            (F.round(F.col("n_hit") / F.col("n_exact"), 6) + F.lit(0.0)).alias(
-                "recall_at_k"
-            ),
-        )
+    return _recall_at_k(
+        embeddings,
+        lambda corpus, qs: corpus.join(
+            F.broadcast(qs), F.col(id_col) != F.col("query_id")
+        ),
+        k,
+        sample_mod,
+        id_col,
+        vec_col,
+        prefix_dim=prefix_dim,
     )
 
 

@@ -16,6 +16,11 @@ distributed aggregation and DuckDB's sequential one agree bit-for-bit):
 - Every computed column is aliased identically in Spark and SQL.
 - Order-dependent ops (windows, as-of, top-k) always carry a unique
   tie-break column.
+- An oracle fragment used by two or more queries is defined once, as
+  a ``_*_CTE`` constant or an ``_*_sql()`` helper (a non-CTE piece,
+  such as an expression or a select tail, as a ``_*_SQL`` constant)
+  in the suite module of its query family;
+  ``tests/test_oracle_fragments.py`` fails on a copied fragment.
 """
 
 from nhl_data_warehouse_spark.suite.registry import REGISTRY, QuerySpec, register

@@ -16,6 +16,11 @@ from pyspark.sql import functions as F
 
 from nhl_data_warehouse_spark.operators import layout, sketches, timeseries
 from nhl_data_warehouse_spark.suite.registry import load, register
+from nhl_data_warehouse_spark.suite.training import (
+    _OLS_SUMS_SQL,
+    _hex_int_sql,
+    _ols_fit_sql,
+)
 
 DEC = "decimal(18,2)"
 
@@ -58,6 +63,20 @@ def unpivot_monthly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# every (priority seen in the ``daily`` CTE, day of 1995Q1) cell
+_Q1_PRIORITY_GRID_CTES = """spine AS (
+        SELECT CAST(unnest(generate_series(DATE '1995-01-01',
+                                           DATE '1995-03-31',
+                                           INTERVAL 1 DAY)) AS DATE)
+                   AS order_day
+    ),
+    grid AS (
+        SELECT k.o_orderpriority, s.order_day
+        FROM (SELECT DISTINCT o_orderpriority FROM daily) k
+        CROSS JOIN spine s
+    )"""
+
+
 @register(
     "gapfill_priority_revenue",
     op_ids="beyond-reference time-series densification: date spine + "
@@ -66,7 +85,7 @@ def unpivot_monthly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "daily spine; missing days get 0 orders and the last observed "
     "revenue (NULL before first observation), is_gap marks synthesized "
     "rows",
-    oracle="""
+    oracle=f"""
         WITH daily AS (
             SELECT o_orderpriority, CAST(o_orderdate AS DATE) AS order_day,
                    COUNT(*) AS n_orders,
@@ -76,17 +95,7 @@ def unpivot_monthly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
               AND o_orderdate < TIMESTAMP '1995-04-01'
             GROUP BY 1, 2
         ),
-        spine AS (
-            SELECT CAST(unnest(generate_series(DATE '1995-01-01',
-                                               DATE '1995-03-31',
-                                               INTERVAL 1 DAY)) AS DATE)
-                       AS order_day
-        ),
-        grid AS (
-            SELECT k.o_orderpriority, s.order_day
-            FROM (SELECT DISTINCT o_orderpriority FROM daily) k
-            CROSS JOIN spine s
-        ),
+        {_Q1_PRIORITY_GRID_CTES},
         j AS (
             SELECT g.o_orderpriority, g.order_day, d.n_orders, d.revenue,
                    CASE WHEN d.n_orders IS NULL THEN 1 ELSE 0 END AS is_gap
@@ -389,6 +398,19 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# orders on a 16-bit (custkey, order day) grid with their Z-value
+_ORDERS_ZXY_SQL = f"""(
+    SELECT o_orderkey,
+           o_custkey & 65535 AS x,
+           date_diff('day', DATE '1992-01-01',
+                     CAST(o_orderdate AS DATE)) & 65535 AS y,
+           {layout.z_value_sql('o_custkey & 65535',
+                               "date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) & 65535")}
+               AS z_key
+    FROM orders
+)"""
+
+
 @register(
     "zorder_file_assignment",
     op_ids="beyond-reference data layout: Z-order (Morton) interleave "
@@ -399,16 +421,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         SELECT o_orderkey, x, y, z_key,
                NTILE(32) OVER (ORDER BY z_key, o_orderkey) AS file_id
-        FROM (
-            SELECT o_orderkey,
-                   o_custkey & 65535 AS x,
-                   date_diff('day', DATE '1992-01-01',
-                             CAST(o_orderdate AS DATE)) & 65535 AS y,
-                   {layout.z_value_sql('o_custkey & 65535',
-                                       "date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) & 65535")}
-                       AS z_key
-            FROM orders
-        )
+        FROM {_ORDERS_ZXY_SQL}
     """,
 )
 def zorder_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -439,16 +452,7 @@ def zorder_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH assigned AS (
             SELECT o_orderkey, x, y,
                    NTILE(32) OVER (ORDER BY z_key, o_orderkey) AS file_id
-            FROM (
-                SELECT o_orderkey,
-                       o_custkey & 65535 AS x,
-                       date_diff('day', DATE '1992-01-01',
-                                 CAST(o_orderdate AS DATE)) & 65535 AS y,
-                       {layout.z_value_sql('o_custkey & 65535',
-                                           "date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) & 65535")}
-                           AS z_key
-                FROM orders
-            )
+            FROM {_ORDERS_ZXY_SQL}
         )
         SELECT file_id, COUNT(*) AS n_rows,
                MIN(x) AS min_x, MAX(x) AS max_x,
@@ -511,6 +515,16 @@ def countmin_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.countmin_estimates(toks, "term")
 
 
+# lineitem count per (customer nation, supplier nation) trade edge
+_NATION_TRADE_SQL = """SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+           COUNT(*) AS weight
+    FROM lineitem l
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    GROUP BY 1, 2"""
+
+
 def _pagerank_oracle(n_iter: int = 3) -> str:
     # unrolled iterations, mirroring operators/graph.py round-for-round
     its = []
@@ -532,13 +546,7 @@ def _pagerank_oracle(n_iter: int = 3) -> str:
         prev = f"r{i}"
     return f"""
         WITH edges AS (
-            SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                   COUNT(*) AS weight
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY 1, 2
+            {_NATION_TRADE_SQL}
         ),
         outw AS (SELECT src, SUM(weight) AS w FROM edges GROUP BY src),
         trans AS (
@@ -753,6 +761,24 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# part pairs co-purchased in >= 2 orders (the ``items`` CTE holds
+# the distinct (order, part) rows), and both directions of each edge
+_COPURCHASE_PAIRS_SQL = """SELECT a.l_partkey AS i, b.l_partkey AS j
+    FROM items a JOIN items b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    GROUP BY 1, 2
+    HAVING COUNT(*) >= 2"""
+
+_COPURCHASE_DIRECTED_CTES = f"""items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    edges AS (
+        {_COPURCHASE_PAIRS_SQL}
+    ),
+    directed AS (
+        SELECT i, j FROM edges
+        UNION ALL SELECT j AS i, i AS j FROM edges
+    )"""
+
+
 @register(
     "copurchase_assortativity",
     op_ids="beyond-reference graph topology gate: Newman degree "
@@ -765,19 +791,8 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one final division, NULL on degenerate graphs",
     description="degree assortativity of the part co-purchase graph "
     "(>= 2 shared orders): node count, edge count, Newman r",
-    oracle="""
-        WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS (
-            SELECT a.l_partkey AS i, b.l_partkey AS j
-            FROM items a JOIN items b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            GROUP BY 1, 2
-            HAVING COUNT(*) >= 2
-        ),
-        directed AS (
-            SELECT i, j FROM edges
-            UNION ALL SELECT j AS i, i AS j FROM edges
-        ),
+    oracle=f"""
+        WITH {_COPURCHASE_DIRECTED_CTES},
         deg AS (SELECT i AS n, CAST(COUNT(*) AS BIGINT) AS d
                 FROM directed GROUP BY 1),
         m AS (
@@ -823,19 +838,8 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-node window",
     description="community label per part after 3 synchronous LPA "
     "rounds on the >= 2-shared-orders co-purchase graph",
-    oracle="""
-        WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS (
-            SELECT a.l_partkey AS i, b.l_partkey AS j
-            FROM items a JOIN items b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            GROUP BY 1, 2
-            HAVING COUNT(*) >= 2
-        ),
-        directed AS (
-            SELECT i, j FROM edges
-            UNION ALL SELECT j AS i, i AS j FROM edges
-        ),
+    oracle=f"""
+        WITH {_COPURCHASE_DIRECTED_CTES},
         l0 AS (SELECT DISTINCT i AS n, i AS lbl FROM directed),
         r1 AS (SELECT d.i AS v, l0.lbl, COUNT(*) AS cnt
                FROM directed d JOIN l0 ON l0.n = d.j GROUP BY 1, 2),
@@ -882,14 +886,10 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     description="2-core of the >= 2-shared-orders co-purchase graph "
     "after 4 synchronous peel rounds: surviving parts with their "
     "in-core degree",
-    oracle="""
+    oracle=f"""
         WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         e0 AS MATERIALIZED (
-            SELECT a.l_partkey AS i, b.l_partkey AS j
-            FROM items a JOIN items b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            GROUP BY 1, 2
-            HAVING COUNT(*) >= 2
+            {_COPURCHASE_PAIRS_SQL}
         ),
         d1 AS (SELECT n, COUNT(*) AS deg FROM (
                    SELECT i AS n FROM e0 UNION ALL SELECT j FROM e0)
@@ -1035,6 +1035,14 @@ def equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# co-supply triangles, each once: x < y < z along the a < b edges
+_COSUPPLY_TRI_CTE = """tri AS (
+        SELECT e1.a AS x, e1.b AS y, e2.b AS z
+        FROM edges e1
+        JOIN edges e2 ON e2.a = e1.a AND e2.b > e1.b
+        JOIN edges e3 ON e3.a = e1.b AND e3.b = e2.b
+    )"""
+
 _COSUPPLY_EDGES_SQL = """
         shared AS (
             SELECT s_a, s_b, COUNT(*) AS n_shared FROM (
@@ -1106,12 +1114,7 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 UNION ALL SELECT b FROM edges
             ) GROUP BY node
         ),
-        tri AS (
-            SELECT e1.a AS x, e1.b AS y, e2.b AS z
-            FROM edges e1
-            JOIN edges e2 ON e2.a = e1.a AND e2.b > e1.b
-            JOIN edges e3 ON e3.a = e1.b AND e3.b = e2.b
-        ),
+        {_COSUPPLY_TRI_CTE},
         tcount AS (
             SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
             FROM (SELECT x AS node FROM tri UNION ALL
@@ -1149,12 +1152,7 @@ def cosupply_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "primitive",
     oracle=f"""
         WITH {_COSUPPLY_EDGES_SQL},
-        tri AS (
-            SELECT e1.a AS x, e1.b AS y, e2.b AS z
-            FROM edges e1
-            JOIN edges e2 ON e2.a = e1.a AND e2.b > e1.b
-            JOIN edges e3 ON e3.a = e1.b AND e3.b = e2.b
-        )
+        {_COSUPPLY_TRI_CTE}
         SELECT node, COUNT(*) AS n_triangles
         FROM (SELECT x AS node FROM tri UNION ALL
               SELECT y FROM tri UNION ALL
@@ -1177,15 +1175,9 @@ def triangle_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="directed nation trade graph (customer nation -> supplier "
     "nation, edges above 1.1x mean lineitem weight); minimum hop distance "
     "from nation 0 within 4 hops",
-    oracle="""
+    oracle=f"""
         WITH RECURSIVE w AS (
-            SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                   COUNT(*) AS weight
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY 1, 2
+            {_NATION_TRADE_SQL}
         ),
         edges AS (
             SELECT src, dst FROM w
@@ -1320,7 +1312,7 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="per-customer OLS slope/intercept of order price "
     "(cents) over order date (epoch days): the 'is this entity's "
     "spend trending up' fit, exact across engines",
-    oracle="""
+    oracle=f"""
         WITH pts AS (
             SELECT o_custkey,
                    epoch_us(o_orderdate) // 86400000000 AS x,
@@ -1329,24 +1321,10 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         stats AS (
             SELECT o_custkey,
-                   CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(x) AS BIGINT) AS sx,
-                   CAST(SUM(y) AS BIGINT) AS sy,
-                   CAST(SUM(x * y) AS BIGINT) AS sxy,
-                   CAST(SUM(x * x) AS BIGINT) AS sxx
+                   {_OLS_SUMS_SQL}
             FROM pts GROUP BY o_custkey
         )
-        SELECT o_custkey, n,
-               CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                    ELSE CAST(n * sxy - sx * sy AS DOUBLE)
-                         / CAST(n * sxx - sx * sx AS DOUBLE)
-               END AS slope,
-               CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                    ELSE (CAST(sy AS DOUBLE)
-                          - CAST(n * sxy - sx * sy AS DOUBLE)
-                            / CAST(n * sxx - sx * sx AS DOUBLE)
-                            * CAST(sx AS DOUBLE)) / n
-               END AS intercept
+        SELECT o_custkey, n, {_ols_fit_sql("slope", "intercept")}
         FROM stats
     """,
 )
@@ -1542,6 +1520,19 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# order prices in cents, ranked within each priority (ties by key)
+_PRICE_RANKED_CTE = """ranked AS (
+        SELECT o_orderpriority,
+               CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents,
+               ROW_NUMBER() OVER (
+                   PARTITION BY o_orderpriority
+                   ORDER BY CAST(ROUND(o_totalprice * 100, 0) AS BIGINT),
+                            o_orderkey) AS rn,
+               COUNT(*) OVER (PARTITION BY o_orderpriority) AS n
+        FROM orders
+    )"""
+
+
 @register(
     "winsorized_mean_revenue",
     op_ids="beyond-reference robust aggregate (rank-based winsorized "
@@ -1554,17 +1545,8 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="per-priority 5%-winsorized mean order price: tails "
     "clamped to the p5/p95 rank values, n_orders unchanged — with "
     "the clamp bounds reported",
-    oracle="""
-        WITH ranked AS (
-            SELECT o_orderpriority,
-                   CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY o_orderpriority
-                       ORDER BY CAST(ROUND(o_totalprice * 100, 0) AS BIGINT),
-                                o_orderkey) AS rn,
-                   COUNT(*) OVER (PARTITION BY o_orderpriority) AS n
-            FROM orders
-        ),
+    oracle=f"""
+        WITH {_PRICE_RANKED_CTE},
         agg AS (
             SELECT o_orderpriority,
                    CAST(MAX(n) AS BIGINT) AS n_orders,
@@ -1644,17 +1626,8 @@ def winsorized_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="per-priority 5%-trimmed mean order price: the "
     "outlier-robust revenue center a dashboard should quote when "
     "whale orders distort the plain mean",
-    oracle="""
-        WITH ranked AS (
-            SELECT o_orderpriority,
-                   CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY o_orderpriority
-                       ORDER BY CAST(ROUND(o_totalprice * 100, 0) AS BIGINT),
-                                o_orderkey) AS rn,
-                   COUNT(*) OVER (PARTITION BY o_orderpriority) AS n
-            FROM orders
-        )
+    oracle=f"""
+        WITH {_PRICE_RANKED_CTE}
         SELECT o_orderpriority,
                CAST(MAX(n) AS BIGINT) AS n_orders,
                CAST(COUNT(*) AS BIGINT) AS n_kept,
@@ -2045,6 +2018,13 @@ def cumulative_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# 1-based ranks of the order statistics bracketing quantile p of c
+# values and the interpolation fraction (percentile_cont)
+_INTERP_RANKS_SQL = """CAST(floor((c - 1) * p) AS BIGINT) + 1 AS klo,
+       LEAST(CAST(floor((c - 1) * p) AS BIGINT) + 2, c) AS khi,
+       (c - 1) * p - floor((c - 1) * p) AS f"""
+
+
 @register(
     "hybrid_exact_quantiles",
     op_ids="beyond-reference EXACT global percentile_cont at scale "
@@ -2055,15 +2035,13 @@ def cumulative_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="exact interpolated p50/p90/p99 of lineitem extended "
     "price via sketch-bracketed band selection (bit-equal to a full "
     "sort's percentile_cont)",
-    oracle="""
+    oracle=f"""
         WITH n AS (SELECT COUNT(*) AS c FROM lineitem),
         params AS (SELECT CAST(p AS DOUBLE) AS p
                    FROM (VALUES (0.5), (0.9), (0.99)) t(p)),
         k AS (
             SELECT p,
-                   CAST(floor((c - 1) * p) AS BIGINT) + 1 AS klo,
-                   LEAST(CAST(floor((c - 1) * p) AS BIGINT) + 2, c) AS khi,
-                   (c - 1) * p - floor((c - 1) * p) AS f
+                   {_INTERP_RANKS_SQL}
             FROM params, n
         ),
         o AS (SELECT l_extendedprice AS v,
@@ -2325,16 +2303,14 @@ def cusum_revenue_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "percentile on skewed groups)",
     description="exact interpolated p50/p90 of order price per order "
     "priority via grouped sketch-bracketed band selection",
-    oracle="""
+    oracle=f"""
         WITH n AS (SELECT o_orderpriority AS grp, COUNT(*) AS c
                    FROM orders GROUP BY o_orderpriority),
         params AS (SELECT CAST(p AS DOUBLE) AS p
                    FROM (VALUES (0.5), (0.9)) t(p)),
         k AS (
             SELECT grp, p,
-                   CAST(floor((c - 1) * p) AS BIGINT) + 1 AS klo,
-                   LEAST(CAST(floor((c - 1) * p) AS BIGINT) + 2, c) AS khi,
-                   (c - 1) * p - floor((c - 1) * p) AS f
+                   {_INTERP_RANKS_SQL}
             FROM params, n
         ),
         o AS (SELECT o_orderpriority AS grp, o_totalprice AS v,
@@ -2473,9 +2449,6 @@ def logrank_segment_gap_survival(
 from nhl_data_warehouse_spark.operators import privacy  # noqa: E402
 from nhl_data_warehouse_spark.operators.privacy import (  # noqa: E402
     laplace_noise_expr as _laplace_expr,
-)
-from nhl_data_warehouse_spark.suite.training import (  # noqa: E402
-    _hex_int_sql,
 )
 
 

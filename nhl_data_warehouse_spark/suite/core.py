@@ -16,6 +16,7 @@ from nhl_data_warehouse_spark.functions.cleaning import md5_key, null_out_like
 from nhl_data_warehouse_spark.operators.asof import as_of_join
 from nhl_data_warehouse_spark.operators.rangejoin import range_join_pairs
 from nhl_data_warehouse_spark.operators.sessions import sessionize_batch
+from nhl_data_warehouse_spark.suite.ingest import _RANGE_JOIN_5MIN_ORACLE
 from nhl_data_warehouse_spark.suite.registry import load, register
 
 DEC = "decimal(18,2)"
@@ -746,39 +747,36 @@ def asof_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "range_join_pairs",
     op_ids="beyond-reference range join (bucketed equi-join, O(matches))",
     description="pairs of same-user events within a 5-minute window",
-    oracle="""
-        SELECT e1.user_id AS user_id, e1.event_id AS a_id, e2.event_id AS b_id,
-               CAST(epoch_us(e2.ts) - epoch_us(e1.ts) AS DOUBLE) / 1000000.0 AS gap_seconds
-        FROM events e1
-        JOIN events e2
-          ON e1.user_id = e2.user_id
-         AND e2.ts > e1.ts
-         AND epoch_us(e2.ts) <= epoch_us(e1.ts) + 300000000
-    """,
+    oracle=_RANGE_JOIN_5MIN_ORACLE,
 )
 def range_join_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load(spark, sf_dir, "events")
     return range_join_pairs(events, key="user_id", gap_minutes=5)
 
 
+# 30-minute-gap sessions of each user's events; ``numbered`` carries
+# (user_id, ts, session_id), session ids counting from 1
+_SESSION_IDS_CTES = """flagged AS (
+        SELECT user_id, ts, event_id,
+               CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 1800000000
+                    THEN 1 ELSE 0 END AS is_break
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), numbered AS (
+        SELECT user_id, ts,
+               SUM(is_break) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1 AS session_id
+        FROM flagged
+    )"""
+
+
 @register(
     "sessionize_events",
     op_ids="beyond-reference sessionization (batch twin of session_window)",
     description="gap-based sessions per user: 30-minute inactivity threshold",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 1800000000
-                        THEN 1 ELSE 0 END AS is_break
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-            SELECT user_id, ts,
-                   SUM(is_break) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1 AS session_id
-            FROM flagged
-        )
+    oracle=f"""
+        WITH {_SESSION_IDS_CTES}
         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
                COUNT(*) AS n_events,
                MIN(ts) AS session_start, MAX(ts) AS session_end
@@ -803,21 +801,16 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     return regional_revenue(spark, sf_dir)
 
 
-@register(
-    "sql_api_top_nations",
-    op_ids="§2 SQL surface parity: the same engine via spark.sql over "
-    "registered views (CTE + window + join in one SQL string)",
-    description="per-region top-2 nations by revenue, written as pure "
-    "SQL against temp views — proof the full suite's semantics are "
-    "reachable through the SQL API, not just the DataFrame DSL",
-    oracle="""
+# per-region top-2 nations by revenue; ``v`` prefixes the table names
+# (the Spark side reads temp views, the oracle the tables themselves)
+_TOP_NATIONS_SQL = """
         WITH rev AS (
             SELECT r.r_name AS region_name, n.n_name AS nation_name,
                    SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS revenue
-            FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey
+            FROM {v}orders o
+            JOIN {v}customer c ON o.o_custkey = c.c_custkey
+            JOIN {v}nation n ON c.c_nationkey = n.n_nationkey
+            JOIN {v}region r ON n.n_regionkey = r.r_regionkey
             GROUP BY 1, 2
         )
         SELECT region_name, nation_name,
@@ -827,7 +820,17 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ORDER BY revenue DESC, nation_name) AS rk
               FROM rev)
         WHERE rk <= 2
-    """,
+    """
+
+
+@register(
+    "sql_api_top_nations",
+    op_ids="§2 SQL surface parity: the same engine via spark.sql over "
+    "registered views (CTE + window + join in one SQL string)",
+    description="per-region top-2 nations by revenue, written as pure "
+    "SQL against temp views — proof the full suite's semantics are "
+    "reachable through the SQL API, not just the DataFrame DSL",
+    oracle=_TOP_NATIONS_SQL.format(v=""),
 )
 def sql_api_top_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders, customer, nation, region = load(
@@ -837,24 +840,7 @@ def sql_api_top_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer.createOrReplaceTempView("v_sql_customer")
     nation.createOrReplaceTempView("v_sql_nation")
     region.createOrReplaceTempView("v_sql_region")
-    return spark.sql("""
-        WITH rev AS (
-            SELECT r.r_name AS region_name, n.n_name AS nation_name,
-                   SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS revenue
-            FROM v_sql_orders o
-            JOIN v_sql_customer c ON o.o_custkey = c.c_custkey
-            JOIN v_sql_nation n ON c.c_nationkey = n.n_nationkey
-            JOIN v_sql_region r ON n.n_regionkey = r.r_regionkey
-            GROUP BY 1, 2
-        )
-        SELECT region_name, nation_name,
-               CAST(revenue AS DOUBLE) AS revenue, rk
-        FROM (SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY region_name
-                  ORDER BY revenue DESC, nation_name) AS rk
-              FROM rev)
-        WHERE rk <= 2
-    """)
+    return spark.sql(_TOP_NATIONS_SQL.format(v="v_sql_"))
 
 
 @register(

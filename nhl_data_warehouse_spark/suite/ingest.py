@@ -804,6 +804,25 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark.table(table)
 
 
+def _value_sessions_sql(gap_us: int) -> str:
+    """Gaps-and-islands sessions of each user's events: a gap above
+    ``gap_us`` microseconds opens a session. ``numbered`` carries
+    (user_id, ts, value, session_id), session ids counting from 0."""
+    return f"""flagged AS (
+        SELECT user_id, ts, value, event_id,
+               CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w) > {gap_us}
+                    THEN 1 ELSE 0 END AS is_break
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), numbered AS (
+        SELECT user_id, ts, value,
+               SUM(is_break) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+        FROM flagged
+    )"""
+
+
 @register(
     "streaming_sessionize",
     op_ids="§2.7 session-window streaming EXECUTION: gap-based "
@@ -815,20 +834,8 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     "session_window merges events at most 30 minutes apart and ends "
     "each session at last_ts + gap, so the oracle is the batch "
     "gaps-and-islands form with session_end = MAX(ts) + 30 minutes",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, value, event_id,
-                   CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 1800000000
-                        THEN 1 ELSE 0 END AS is_break
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-            SELECT user_id, ts, value,
-                   SUM(is_break) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-            FROM flagged
-        )
+    oracle=f"""
+        WITH {_value_sessions_sql(1800000000)}
         SELECT MIN(ts) AS session_start,
                MAX(ts) + INTERVAL 30 MINUTE AS session_end,
                user_id,
@@ -883,6 +890,19 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# same-user event pairs at most 5 minutes apart, later event second:
+# the oracle of this streaming join and of core's batch range join
+_RANGE_JOIN_5MIN_ORACLE = """
+    SELECT e1.user_id AS user_id, e1.event_id AS a_id, e2.event_id AS b_id,
+           CAST(epoch_us(e2.ts) - epoch_us(e1.ts) AS DOUBLE) / 1000000.0 AS gap_seconds
+    FROM events e1
+    JOIN events e2
+      ON e1.user_id = e2.user_id
+     AND e2.ts > e1.ts
+     AND epoch_us(e2.ts) <= epoch_us(e1.ts) + 300000000
+"""
+
+
 @register(
     "streaming_interval_join",
     op_ids="§2.7 stream-stream interval join EXECUTION: two live file "
@@ -894,15 +914,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "computed by an actual stream-stream inner join: both sides are "
     "the events file consumed as independent streams; inner matches "
     "emit as they pair, watermarks bound the buffered state",
-    oracle="""
-        SELECT e1.user_id AS user_id, e1.event_id AS a_id, e2.event_id AS b_id,
-               CAST(epoch_us(e2.ts) - epoch_us(e1.ts) AS DOUBLE) / 1000000.0 AS gap_seconds
-        FROM events e1
-        JOIN events e2
-          ON e1.user_id = e2.user_id
-         AND e2.ts > e1.ts
-         AND epoch_us(e2.ts) <= epoch_us(e1.ts) + 300000000
-    """,
+    oracle=_RANGE_JOIN_5MIN_ORACLE,
 )
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os

@@ -42,6 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from nhl_data_warehouse_spark.suite.analytics import _Q1_PRIORITY_GRID_CTES
+from nhl_data_warehouse_spark.suite.core import _SESSION_IDS_CTES
+from nhl_data_warehouse_spark.suite.ingest import _value_sessions_sql
 from nhl_data_warehouse_spark.suite.registry import load, register
 
 # ---------------------------------------------------------------------------
@@ -161,6 +164,21 @@ def tablesample_hash_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# nations per market of an inline region -> market mapping; ``v``
+# prefixes the table names (Spark reads temp views, the oracle tables)
+_MARKET_NATIONS_SQL = """
+        SELECT m.market, COUNT(*) AS n_nations,
+               MIN(n.n_name) AS first_nation
+        FROM {v}nation n
+        JOIN {v}region r ON n.n_regionkey = r.r_regionkey
+        JOIN (VALUES ('AFRICA', 'EMEA'), ('EUROPE', 'EMEA'),
+                     ('MIDDLE EAST', 'EMEA'), ('AMERICA', 'AMER'),
+                     ('ASIA', 'APAC')) AS m(r_name, market)
+          ON r.r_name = m.r_name
+        GROUP BY m.market
+    """
+
+
 @register(
     "values_inline_enrich",
     op_ids="inline VALUES table surface: a literal constant relation "
@@ -168,33 +186,13 @@ def tablesample_hash_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hand-maintained mapping-table idiom warehouses embed in SQL",
     description="nations per market segment, the segment coming from "
     "an inline VALUES mapping of region names",
-    oracle="""
-        SELECT m.market, COUNT(*) AS n_nations,
-               MIN(n.n_name) AS first_nation
-        FROM nation n
-        JOIN region r ON n.n_regionkey = r.r_regionkey
-        JOIN (VALUES ('AFRICA', 'EMEA'), ('EUROPE', 'EMEA'),
-                     ('MIDDLE EAST', 'EMEA'), ('AMERICA', 'AMER'),
-                     ('ASIA', 'APAC')) AS m(r_name, market)
-          ON r.r_name = m.r_name
-        GROUP BY m.market
-    """,
+    oracle=_MARKET_NATIONS_SQL.format(v=""),
 )
 def values_inline_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation, region = load(spark, sf_dir, "nation", "region")
     nation.createOrReplaceTempView("v_vi_nation")
     region.createOrReplaceTempView("v_vi_region")
-    return spark.sql("""
-        SELECT m.market, COUNT(*) AS n_nations,
-               MIN(n.n_name) AS first_nation
-        FROM v_vi_nation n
-        JOIN v_vi_region r ON n.n_regionkey = r.r_regionkey
-        JOIN (VALUES ('AFRICA', 'EMEA'), ('EUROPE', 'EMEA'),
-                     ('MIDDLE EAST', 'EMEA'), ('AMERICA', 'AMER'),
-                     ('ASIA', 'APAC')) AS m(r_name, market)
-          ON r.r_name = m.r_name
-        GROUP BY m.market
-    """)
+    return spark.sql(_MARKET_NATIONS_SQL.format(v="v_vi_"))
 
 
 @register(
@@ -324,22 +322,8 @@ def max_by_min_by_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="4-hour-gap sessions per user via F.session_window in "
     "a plain batch aggregation: start, end (= last event + gap), "
     "event count and exact value sum per session",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, value, event_id,
-                   CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-                             > 14400000000
-                        THEN 1 ELSE 0 END AS is_break
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-            SELECT user_id, ts, value,
-                   SUM(is_break) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS session_id
-            FROM flagged
-        )
+    oracle=f"""
+        WITH {_value_sessions_sql(14400000000)}
         SELECT user_id,
                MIN(ts) AS session_start,
                MAX(ts) + INTERVAL 4 HOUR AS session_end,
@@ -389,6 +373,29 @@ from nhl_data_warehouse_spark.operators.stats import (  # noqa: E402
 )
 
 
+# event values in cents, flagged click (1) or view (0); their
+# per-cent histogram; and both samples' running ECDF counts over it
+_CLICK_VIEW_VALS_CTE = """vals AS (
+        SELECT CAST(round(value * 100) AS BIGINT) AS c,
+               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is1
+        FROM events
+        WHERE event_type IN ('click', 'view') AND value IS NOT NULL
+    )"""
+
+_CLICK_VIEW_HIST_CTES = f"""{_CLICK_VIEW_VALS_CTE},
+    hist AS (
+        SELECT c, SUM(is1) AS n1v, COUNT(*) - SUM(is1) AS n2v
+        FROM vals GROUP BY c
+    )"""
+
+_ECDF_SUMS_SQL = """SUM(n1v) OVER (ORDER BY c
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+       ) AS cum1,
+       SUM(n2v) OVER (ORDER BY c
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+       ) AS cum2"""
+
+
 @register(
     "mann_whitney_order_values",
     op_ids="beyond-reference nonparametric two-sample test: "
@@ -401,12 +408,7 @@ from nhl_data_warehouse_spark.operators.stats import (  # noqa: E402
     "distributions are skewed (complements the parametric "
     "ab_value_ztest)",
     oracle=f"""
-        WITH vals AS (
-            SELECT CAST(round(value * 100) AS BIGINT) AS c,
-                   CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is1
-            FROM events
-            WHERE event_type IN ('click', 'view') AND value IS NOT NULL
-        ),
+        WITH {_CLICK_VIEW_VALS_CTE},
         hist AS (
             SELECT c, SUM(is1) AS n1v, COUNT(*) AS nv
             FROM vals GROUP BY c
@@ -459,24 +461,10 @@ def mann_whitney_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     "— the drift gate run between corpus snapshots before retraining",
     description="click-vs-view event value distributions: exact KS D "
     "statistic over the cents histogram",
-    oracle="""
-        WITH vals AS (
-            SELECT CAST(round(value * 100) AS BIGINT) AS c,
-                   CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is1
-            FROM events
-            WHERE event_type IN ('click', 'view') AND value IS NOT NULL
-        ),
-        hist AS (
-            SELECT c, SUM(is1) AS n1v, COUNT(*) - SUM(is1) AS n2v
-            FROM vals GROUP BY c
-        ),
+    oracle=f"""
+        WITH {_CLICK_VIEW_HIST_CTES},
         cum AS (
-            SELECT SUM(n1v) OVER (ORDER BY c
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS cum1,
-                   SUM(n2v) OVER (ORDER BY c
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS cum2
+            SELECT {_ECDF_SUMS_SQL}
             FROM hist
         ),
         tot AS (
@@ -505,6 +493,13 @@ def ks_test_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# md5(event_id) split of the valued events: first hex digit 0-7 is
+# the calibration half
+_CONFORMAL_SPLIT_SQL = """substring(md5(CAST(event_id AS VARCHAR)), 1, 1)
+               IN ('0','1','2','3','4','5','6','7') AS is_cal
+    FROM events WHERE value IS NOT NULL"""
+
+
 @register(
     "conformal_value_coverage",
     op_ids="beyond-reference distribution-free calibration gate: "
@@ -519,12 +514,10 @@ def ks_test_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="90% split-conformal interval on event values "
     "(md5(event_id) split): calibration/eval sizes, rank k, interval "
     "half-width q, and realized eval coverage",
-    oracle="""
+    oracle=f"""
         WITH base AS (
             SELECT CAST(round(value * 100) AS BIGINT) AS c,
-                   substring(md5(CAST(event_id AS VARCHAR)), 1, 1)
-                       IN ('0','1','2','3','4','5','6','7') AS is_cal
-            FROM events WHERE value IS NOT NULL
+                   {_CONFORMAL_SPLIT_SQL}
         ),
         calh AS (SELECT c, COUNT(*) AS nv FROM base WHERE is_cal GROUP BY 1),
         evh AS (SELECT c, COUNT(*) AS nv FROM base WHERE NOT is_cal
@@ -598,13 +591,11 @@ def conformal_value_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="per-event-type 90% split-conformal interval "
     "(md5(event_id) split): calibration/eval sizes, rank k, interval "
     "half-width, realized coverage",
-    oracle="""
+    oracle=f"""
         WITH base AS (
             SELECT event_type AS g,
                    CAST(round(value * 100) AS BIGINT) AS c,
-                   substring(md5(CAST(event_id AS VARCHAR)), 1, 1)
-                       IN ('0','1','2','3','4','5','6','7') AS is_cal
-            FROM events WHERE value IS NOT NULL
+                   {_CONFORMAL_SPLIT_SQL}
         ),
         calh AS (SELECT g, c, COUNT(*) AS nv FROM base WHERE is_cal
                  GROUP BY 1, 2),
@@ -686,25 +677,11 @@ def conformal_coverage_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "min, one 9-row join — the derive_cell_minutes recipe per decile",
     description="click-vs-view event value deciles side by side "
     "with exact differences — which part of the distribution moved",
-    oracle="""
-        WITH vals AS (
-            SELECT CAST(round(value * 100) AS BIGINT) AS c,
-                   CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is1
-            FROM events
-            WHERE event_type IN ('click', 'view') AND value IS NOT NULL
-        ),
-        hist AS (
-            SELECT c, SUM(is1) AS n1v, COUNT(*) - SUM(is1) AS n2v
-            FROM vals GROUP BY c
-        ),
+    oracle=f"""
+        WITH {_CLICK_VIEW_HIST_CTES},
         cum AS (
             SELECT c,
-                   SUM(n1v) OVER (ORDER BY c
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS cum1,
-                   SUM(n2v) OVER (ORDER BY c
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS cum2
+                   {_ECDF_SUMS_SQL}
             FROM hist
         ),
         tot AS (
@@ -752,25 +729,11 @@ def qq_drift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded cell-grain window shared by cum and lead",
     description="click-vs-view event value distributions: exact W1 "
     "(earth-mover) distance in value units over the cents histogram",
-    oracle="""
-        WITH vals AS (
-            SELECT CAST(round(value * 100) AS BIGINT) AS c,
-                   CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is1
-            FROM events
-            WHERE event_type IN ('click', 'view') AND value IS NOT NULL
-        ),
-        hist AS (
-            SELECT c, SUM(is1) AS n1v, COUNT(*) - SUM(is1) AS n2v
-            FROM vals GROUP BY c
-        ),
+    oracle=f"""
+        WITH {_CLICK_VIEW_HIST_CTES},
         cum AS (
             SELECT c,
-                   SUM(n1v) OVER (ORDER BY c
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS cum1,
-                   SUM(n2v) OVER (ORDER BY c
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS cum2,
+                   {_ECDF_SUMS_SQL},
                    LEAD(c) OVER (ORDER BY c) AS cnext
             FROM hist
         ),
@@ -931,7 +894,7 @@ def bitmap_retention_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "daily spine; gap days get the linear interpolation between the "
     "bracketing observed days (NULL outside the first/last "
     "observation), is_gap marks synthesized rows",
-    oracle="""
+    oracle=f"""
         WITH daily AS (
             SELECT o_orderpriority, CAST(o_orderdate AS DATE) AS order_day,
                    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -941,17 +904,7 @@ def bitmap_retention_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
               AND o_orderdate < TIMESTAMP '1995-04-01'
             GROUP BY 1, 2
         ),
-        spine AS (
-            SELECT CAST(unnest(generate_series(DATE '1995-01-01',
-                                               DATE '1995-03-31',
-                                               INTERVAL 1 DAY)) AS DATE)
-                       AS order_day
-        ),
-        grid AS (
-            SELECT k.o_orderpriority, s.order_day
-            FROM (SELECT DISTINCT o_orderpriority FROM daily) k
-            CROSS JOIN spine s
-        ),
+        {_Q1_PRIORITY_GRID_CTES},
         j AS (
             SELECT g.o_orderpriority, g.order_day, d.revenue,
                    CASE WHEN d.revenue IS NULL THEN 1 ELSE 0 END AS is_gap
@@ -1709,6 +1662,16 @@ def kendall_tau_quantity_discount(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _daily_cents_sql(day: str, col: str) -> str:
+    """``daily``: exact order revenue in cents (``col``) per ``day``."""
+    return f"""daily AS (
+        SELECT {day} AS d,
+               CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
+                    AS BIGINT) AS {col}
+        FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
+    )"""
+
+
 @register(
     "gini_order_revenue",
     op_ids="beyond-reference inequality statistic: exact Gini "
@@ -1776,12 +1739,7 @@ def _acf_oracle(max_lag: int = 7) -> str:
         for k in range(1, max_lag + 1)
     )
     return f"""
-        WITH daily AS (
-            SELECT o_orderdate AS d,
-                   CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS x
-            FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-        ),
+        WITH {_daily_cents_sql("o_orderdate", "x")},
         ser AS (SELECT x, row_number() OVER (ORDER BY d) AS t FROM daily),
         led AS (
             SELECT x,
@@ -1843,13 +1801,8 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "day of max |CUSUM|, its signed magnitude, and the daily mean — "
     "the source-mix-shift gate run on time-ordered corpora before "
     "trusting a chronological split",
-    oracle="""
-        WITH daily AS (
-            SELECT o_orderdate AS d,
-                   CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS x
-            FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-        ),
+    oracle=f"""
+        WITH {_daily_cents_sql("o_orderdate", "x")},
         cum AS (
             SELECT d,
                    SUM(CAST(x AS HUGEINT)) OVER (ORDER BY d
@@ -2046,13 +1999,8 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="days whose revenue is >1.5 population standard "
     "deviations from their day-of-week mean: date, dow (0=Sunday), "
     "day total, z-score",
-    oracle="""
-        WITH daily AS (
-            SELECT CAST(o_orderdate AS DATE) AS d,
-                   CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS v
-            FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-        ),
+    oracle=f"""
+        WITH {_daily_cents_sql("CAST(o_orderdate AS DATE)", "v")},
         dw AS (
             SELECT d, v, CAST(dayofweek(d) AS BIGINT) AS dow FROM daily
         ),
@@ -2107,13 +2055,8 @@ def dow_revenue_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="per day: revenue, 7-day centered trend (NULL at the "
     "3-day edges), zero-sum weekly seasonal, and the residual that "
     "separates cycle from genuinely unexplained movement",
-    oracle="""
-        WITH daily AS (
-            SELECT CAST(o_orderdate AS DATE) AS d,
-                   CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS v
-            FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1
-        ),
+    oracle=f"""
+        WITH {_daily_cents_sql("CAST(o_orderdate AS DATE)", "v")},
         st AS (
             SELECT d, CAST(dayofweek(d) AS BIGINT) AS dow, v,
                    CASE WHEN COUNT(v) OVER w7 = 7
@@ -2507,21 +2450,8 @@ def ranking_ndcg_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SESS_CTE = """
-    flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 1800000000
-                    THEN 1 ELSE 0 END AS is_break
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-        SELECT user_id, ts,
-               SUM(is_break) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1
-                   AS session_id
-        FROM flagged
-    ), sess AS (
+_SESS_CTE = f"""
+    {_SESSION_IDS_CTES}, sess AS (
         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
                MIN(ts) AS session_start, MAX(ts) AS session_end
         FROM numbered GROUP BY user_id, session_id

@@ -64,6 +64,75 @@ _SIG_CTE = f"""
     )
 """
 
+# one (doc, band, bucket) row per LSH band of every signature
+_BANDS_SQL = " UNION ALL ".join(
+    f"SELECT doc_id, {b} AS band, "
+    f"MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
+    for b in range(N_HASHES // BAND_SIZE)
+)
+
+_BANDS_CTE = f"""bands AS (
+        {_BANDS_SQL}
+    )"""
+
+# LSH candidates: doc pairs sharing a band bucket
+_CAND_CTE = """cand AS (
+        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+    )"""
+
+# shingle-set sizes and the shared-shingle counts of the candidates
+_CAND_INTER_CTE = """sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
+    inter AS (
+        SELECT c.a_id, c.b_id, COUNT(*) AS n_common
+        FROM cand c
+        JOIN shingles a ON a.doc_id = c.a_id
+        JOIN shingles b ON b.doc_id = c.b_id AND b.shingle = a.shingle
+        GROUP BY 1, 2
+    )"""
+
+
+def _all_pairs_inter_sql(rel: str) -> str:
+    """Set sizes and shared-shingle counts of every doc pair of ``rel``."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS n FROM {rel} GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
+        FROM {rel} a JOIN {rel} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )"""
+
+
+# inter pairs whose exact Jaccard reaches 0.5
+_JACCARD_HALF_SQL = """
+    FROM inter
+    JOIN sizes sa ON sa.doc_id = a_id
+    JOIN sizes sb ON sb.doc_id = b_id
+    WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= 0.5
+"""
+
+_JACCARD_SELECT_SQL = f"""
+    SELECT a_id, b_id,
+           n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard
+    {_JACCARD_HALF_SQL}
+"""
+
+# connected components of the verified pairs: cluster id = min
+# reachable doc id (recursive min-label propagation)
+_COMPONENTS_SQL = """
+    sym AS (SELECT a_id AS s, b_id AS d FROM pairs
+            UNION ALL
+            SELECT b_id, a_id FROM pairs),
+    reach(node, lab) AS (
+        SELECT DISTINCT s, s FROM sym
+        UNION
+        SELECT sym.s, reach.lab FROM sym JOIN reach ON sym.d = reach.node
+    )
+    SELECT node AS doc_id, MIN(lab) AS cluster_id,
+           (node = MIN(lab)) AS is_representative
+    FROM reach GROUP BY node
+"""
+
 
 # ---------------------------------------------------------------------------
 # deduplication
@@ -152,13 +221,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     op_ids="beyond-reference MinHash+LSH banding (bucket-join candidates)",
     description="near-dup candidate pairs agreeing on a full minhash band",
     oracle=f"""
-        WITH {_SHINGLES_CTE}, {_SIG_CTE},
-        bands AS (
-            {" UNION ALL ".join(
-                f"SELECT doc_id, {b} AS band, MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
-                for b in range(N_HASHES // BAND_SIZE)
-            )}
-        )
+        WITH {_SHINGLES_CTE}, {_SIG_CTE}, {_BANDS_CTE}
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
@@ -179,18 +242,8 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH {_SHINGLES_CTE},
         freq_ok AS (SELECT shingle FROM shingles GROUP BY shingle HAVING COUNT(*) <= 50),
         sh AS (SELECT s.* FROM shingles s JOIN freq_ok USING (shingle)),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT a_id, b_id,
-               n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = a_id
-        JOIN sizes sb ON sb.doc_id = b_id
-        WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= 0.5
+        {_all_pairs_inter_sql("sh")}
+        {_JACCARD_SELECT_SQL}
     """,
 )
 def jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,31 +258,9 @@ def jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="the production near-dup shape: banded candidates, then exact Jaccard >= 0.5 on candidates only",
     oracle=f"""
         WITH {_SHINGLES_CTE}, {_SIG_CTE},
-        bands AS (
-            {" UNION ALL ".join(
-                f"SELECT doc_id, {b} AS band, MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
-                for b in range(N_HASHES // BAND_SIZE)
-            )}
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-        inter AS (
-            SELECT c.a_id, c.b_id, COUNT(*) AS n_common
-            FROM cand c
-            JOIN shingles a ON a.doc_id = c.a_id
-            JOIN shingles b ON b.doc_id = c.b_id AND b.shingle = a.shingle
-            GROUP BY 1, 2
-        )
-        SELECT a_id, b_id,
-               n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = a_id
-        JOIN sizes sb ON sb.doc_id = b_id
-        WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= 0.5
+        {_BANDS_CTE},
+        {_CAND_CTE}, {_CAND_INTER_CTE}
+        {_JACCARD_SELECT_SQL}
     """,
 )
 def lsh_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,19 +285,8 @@ def lsh_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stop-shingle cap)",
     oracle=f"""
         WITH {_SHINGLES_CTE},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-            FROM shingles a
-            JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT a_id, b_id,
-               n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = a_id
-        JOIN sizes sb ON sb.doc_id = b_id
-        WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= 0.5
+        {_all_pairs_inter_sql("shingles")}
+        {_JACCARD_SELECT_SQL}
     """,
 )
 def prefix_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,42 +309,12 @@ def prefix_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reachable doc id; representatives are what survives dedup",
     oracle=(_NEAR_DUP_CLUSTERS_ORACLE := f"""
         WITH RECURSIVE {_SHINGLES_CTE}, {_SIG_CTE},
-        bands AS (
-            {" UNION ALL ".join(
-                f"SELECT doc_id, {b} AS band, MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
-                for b in range(N_HASHES // BAND_SIZE)
-            )}
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-        inter AS (
-            SELECT c.a_id, c.b_id, COUNT(*) AS n_common
-            FROM cand c
-            JOIN shingles a ON a.doc_id = c.a_id
-            JOIN shingles b ON b.doc_id = c.b_id AND b.shingle = a.shingle
-            GROUP BY 1, 2
-        ),
+        {_BANDS_CTE},
+        {_CAND_CTE}, {_CAND_INTER_CTE},
         pairs AS (
-            SELECT a_id, b_id FROM inter
-            JOIN sizes sa ON sa.doc_id = a_id
-            JOIN sizes sb ON sb.doc_id = b_id
-            WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= 0.5
+            SELECT a_id, b_id {_JACCARD_HALF_SQL}
         ),
-        sym AS (SELECT a_id AS s, b_id AS d FROM pairs
-                UNION ALL
-                SELECT b_id, a_id FROM pairs),
-        reach(node, lab) AS (
-            SELECT DISTINCT s, s FROM sym
-            UNION
-            SELECT sym.s, reach.lab FROM sym JOIN reach ON sym.d = reach.node
-        )
-        SELECT node AS doc_id, MIN(lab) AS cluster_id,
-               (node = MIN(lab)) AS is_representative
-        FROM reach GROUP BY node
+        {_COMPONENTS_SQL}
     """),
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,12 +370,7 @@ def near_dup_clusters_kiveris(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact-equal case) is what hash-matches",
     oracle=f"""
         WITH RECURSIVE {_SHINGLES_CTE}, {_SIG_CTE},
-        bands AS (
-            {" UNION ALL ".join(
-                f"SELECT doc_id, {b} AS band, MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
-                for b in range(N_HASHES // BAND_SIZE)
-            )}
-        ),
+        {_BANDS_CTE},
         sized AS (
             SELECT doc_id, band, bucket,
                    COUNT(*) OVER (PARTITION BY band, bucket) AS bsz,
@@ -404,31 +389,11 @@ def near_dup_clusters_kiveris(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHERE bsz > 2 AND doc_id <> bmin
             )
         ),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-        inter AS (
-            SELECT c.a_id, c.b_id, COUNT(*) AS n_common
-            FROM cand c
-            JOIN shingles a ON a.doc_id = c.a_id
-            JOIN shingles b ON b.doc_id = c.b_id AND b.shingle = a.shingle
-            GROUP BY 1, 2
-        ),
+        {_CAND_INTER_CTE},
         pairs AS (
-            SELECT a_id, b_id FROM inter
-            JOIN sizes sa ON sa.doc_id = a_id
-            JOIN sizes sb ON sb.doc_id = b_id
-            WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= 0.5
+            SELECT a_id, b_id {_JACCARD_HALF_SQL}
         ),
-        sym AS (SELECT a_id AS s, b_id AS d FROM pairs
-                UNION ALL
-                SELECT b_id, a_id FROM pairs),
-        reach(node, lab) AS (
-            SELECT DISTINCT s, s FROM sym
-            UNION
-            SELECT sym.s, reach.lab FROM sym JOIN reach ON sym.d = reach.node
-        )
-        SELECT node AS doc_id, MIN(lab) AS cluster_id,
-               (node = MIN(lab)) AS is_representative
-        FROM reach GROUP BY node
+        {_COMPONENTS_SQL}
     """,
 )
 def near_dup_clusters_starcap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,22 +415,28 @@ def near_dup_clusters_starcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _simhash_sums_sql(bits: int) -> str:
+    """Per (doc, bit) SimHash vote sums: each whitespace token votes +1
+    on bit b iff hex digit b of its md5 is >= 8."""
+    return f"""tokens AS (
+        SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+        FROM documents
+    ),
+    votes AS (
+        SELECT doc_id, b.bit,
+               CASE WHEN strpos('89abcdef', substring(md5(tok), b.bit + 1, 1)) > 0
+                    THEN 1 ELSE -1 END AS vote
+        FROM tokens, (SELECT unnest(generate_series(0, {bits - 1})) AS bit) b
+    ),
+    sums AS (SELECT doc_id, bit, SUM(vote) AS s FROM votes GROUP BY 1, 2)"""
+
+
 @register(
     "simhash_sketch",
     op_ids="beyond-reference SimHash sketch",
     description="16-bit simhash per document from token-hash bit votes",
-    oracle="""
-        WITH tokens AS (
-            SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-            FROM documents
-        ),
-        votes AS (
-            SELECT doc_id, b.bit,
-                   CASE WHEN strpos('89abcdef', substring(md5(tok), b.bit + 1, 1)) > 0
-                        THEN 1 ELSE -1 END AS vote
-            FROM tokens, (SELECT unnest(generate_series(0, 15)) AS bit) b
-        ),
-        sums AS (SELECT doc_id, bit, SUM(vote) AS s FROM votes GROUP BY 1, 2)
+    oracle=f"""
+        WITH {_simhash_sums_sql(16)}
         SELECT doc_id,
                CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << bit ELSE 0 END)
                     AS BIGINT) AS simhash
@@ -597,20 +568,8 @@ def partname_edit_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="document pairs whose 32-bit simhash fingerprints "
     "differ in at most 3 bits — banded candidate generation + exact "
     "Hamming verify",
-    oracle="""
-        WITH tokens AS (
-            SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-                                              x -> x <> '')) AS tok
-            FROM documents
-        ),
-        votes AS (
-            SELECT doc_id, b.bit,
-                   CASE WHEN strpos('89abcdef',
-                                    substring(md5(tok), b.bit + 1, 1)) > 0
-                        THEN 1 ELSE -1 END AS vote
-            FROM tokens, (SELECT unnest(generate_series(0, 31)) AS bit) b
-        ),
-        sums AS (SELECT doc_id, bit, SUM(vote) AS s FROM votes GROUP BY 1, 2),
+    oracle=f"""
+        WITH {_simhash_sums_sql(32)},
         sk AS (
             SELECT doc_id,
                    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << bit ELSE 0 END)
@@ -641,30 +600,6 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
     return F.array(*[F.lit(float(v)) for v in row.embedding])
 
 
-@register(
-    "cosine_topk_bruteforce",
-    op_ids="beyond-reference ANN baseline (exact cosine top-k scan)",
-    description="top-10 cosine neighbors of vec 0, exact full scan",
-    oracle="""
-        WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        dots AS (
-            SELECT vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT e.vec_id, unnest(e.embedding) AS x, unnest(q.qe) AS y
-                  FROM embeddings e, q)
-            GROUP BY vec_id
-        )
-        SELECT vec_id, ROUND(dot / (sqrt(na) * sqrt(nq)), 6) + 0.0 AS cosine
-        FROM dots ORDER BY cosine DESC, vec_id ASC LIMIT 10
-    """,
-)
-def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (embeddings,) = load(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(embeddings, _query_vec(spark, sf_dir), k=10)
-
-
 def _planes_sql_values(n_planes: int = 8, dim: int = 64) -> str:
     planes = similarity.plane_signs(n_planes, dim)
     rows = ", ".join(
@@ -673,23 +608,101 @@ def _planes_sql_values(n_planes: int = 8, dim: int = 64) -> str:
     return f"planes(p, s) AS (VALUES {rows})"
 
 
+# hyperplane-LSH bucket per vector: bit p set iff the dot with plane p > 0
+_LSH_COMPS_CTE = """comps AS (
+        SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
+        FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x, unnest(pl.s) AS sv
+              FROM embeddings e, planes pl)
+        GROUP BY vec_id, p
+    ),
+    buckets AS (
+        SELECT vec_id,
+               SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
+        FROM comps GROUP BY vec_id
+    )"""
+
+_LSH_BUCKETS_CTE = f"{_planes_sql_values()}, {_LSH_COMPS_CTE}"
+
+# component rows (x from a, y from b) of every candidate pair
+_PAIR_XY_SQL = """(SELECT p.a_id, p.b_id, unnest(ea.embedding) AS x,
+                 unnest(eb.embedding) AS y
+          FROM pairs p
+          JOIN embeddings ea ON ea.vec_id = p.a_id
+          JOIN embeddings eb ON eb.vec_id = p.b_id)"""
+
+# dot product and both squared norms of every candidate pair
+_PAIR_DOTS_CTE = f"""scored AS (
+        SELECT a_id, b_id,
+               SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
+               SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
+               SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nb
+        FROM {_PAIR_XY_SQL}
+        GROUP BY a_id, b_id
+    )"""
+
+
+def _query_topk_sql(rel: str = "cand c") -> str:
+    """``dots`` CTE and final select: the 6dp-cosine top-10 of the
+    query vector ``q`` over ``rel`` (a relation and its alias)."""
+    a = rel.split()[-1]
+    return f"""dots AS (
+        SELECT vec_id,
+               SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
+               SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
+               SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
+        FROM (SELECT {a}.vec_id, unnest({a}.embedding) AS x, unnest(q.qe) AS y
+              FROM {rel}, q)
+        GROUP BY vec_id
+    )
+    SELECT vec_id, ROUND(dot / (sqrt(na) * sqrt(nq)), 6) + 0.0 AS cosine
+    FROM dots ORDER BY cosine DESC, vec_id ASC LIMIT 10"""
+
+
+def _bucket_mates_topk_sql(scored: str, k: int) -> str:
+    """Rank each vector's LSH bucket-mates by 6dp cosine; keep the top
+    ``k`` rows of ``scored`` (the CTE, optionally with a WHERE)."""
+    return f"""pairs AS (
+        SELECT a.vec_id AS a_id, b.vec_id AS b_id
+        FROM buckets a JOIN buckets b
+          ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
+    ),
+    scored AS (
+        SELECT a_id, b_id,
+               ROUND(SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
+                     / (sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
+                        * sqrt(SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6)
+                   + 0.0 AS cosine
+        FROM {_PAIR_XY_SQL}
+        GROUP BY a_id, b_id
+    )
+    SELECT a_id, b_id, cosine, CAST(rank AS INTEGER) AS rank
+    FROM (SELECT a_id, b_id, cosine,
+                 ROW_NUMBER() OVER (PARTITION BY a_id
+                                    ORDER BY cosine DESC, b_id ASC) AS rank
+          FROM {scored})
+    WHERE rank <= {k}"""
+
+
+@register(
+    "cosine_topk_bruteforce",
+    op_ids="beyond-reference ANN baseline (exact cosine top-k scan)",
+    description="top-10 cosine neighbors of vec 0, exact full scan",
+    oracle=f"""
+        WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+        {_query_topk_sql("embeddings e")}
+    """,
+)
+def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    (embeddings,) = load(spark, sf_dir, "embeddings")
+    return similarity.cosine_topk(embeddings, _query_vec(spark, sf_dir), k=10)
+
+
 @register(
     "ann_lsh_buckets",
     op_ids="beyond-reference ANN scale path (hyperplane LSH bucketing)",
     description="LSH bucket occupancy: 8 deterministic ±1 hyperplanes -> 256 buckets",
     oracle=f"""
-        WITH {_planes_sql_values()},
-        comps AS (
-            SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
-            FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x, unnest(pl.s) AS sv
-                  FROM embeddings e, planes pl)
-            GROUP BY vec_id, p
-        ),
-        buckets AS (
-            SELECT vec_id,
-                   SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-            FROM comps GROUP BY vec_id
-        )
+        WITH {_LSH_BUCKETS_CTE}
         SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n_vectors
         FROM buckets GROUP BY bucket
     """,
@@ -708,34 +721,13 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     op_ids="beyond-reference ANN probe (bucket-pruned cosine top-k)",
     description="top-10 neighbors of vec 0 scored only within its LSH bucket",
     oracle=f"""
-        WITH {_planes_sql_values()},
-        comps AS (
-            SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
-            FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x, unnest(pl.s) AS sv
-                  FROM embeddings e, planes pl)
-            GROUP BY vec_id, p
-        ),
-        buckets AS (
-            SELECT vec_id,
-                   SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-            FROM comps GROUP BY vec_id
-        ),
+        WITH {_LSH_BUCKETS_CTE},
         qb AS (SELECT bucket FROM buckets WHERE vec_id = 0),
         cand AS (SELECT e.* FROM embeddings e
                  JOIN buckets b ON e.vec_id = b.vec_id
                  JOIN qb ON b.bucket = qb.bucket),
         q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        dots AS (
-            SELECT vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT c.vec_id, unnest(c.embedding) AS x, unnest(q.qe) AS y
-                  FROM cand c, q)
-            GROUP BY vec_id
-        )
-        SELECT vec_id, ROUND(dot / (sqrt(na) * sqrt(nq)), 6) + 0.0 AS cosine
-        FROM dots ORDER BY cosine DESC, vec_id ASC LIMIT 10
+        {_query_topk_sql()}
     """,
 )
 def ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -754,42 +746,8 @@ def ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bucket-mates: the all-queries-at-once ANN shape curation and "
     "graph-clustering pipelines run over the whole corpus",
     oracle=f"""
-        WITH {_planes_sql_values()},
-        comps AS (
-            SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
-            FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x, unnest(pl.s) AS sv
-                  FROM embeddings e, planes pl)
-            GROUP BY vec_id, p
-        ),
-        buckets AS (
-            SELECT vec_id,
-                   SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-            FROM comps GROUP BY vec_id
-        ),
-        pairs AS (
-            SELECT a.vec_id AS a_id, b.vec_id AS b_id
-            FROM buckets a JOIN buckets b
-              ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-        ),
-        scored AS (
-            SELECT a_id, b_id,
-                   ROUND(SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-                         / (sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                            * sqrt(SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6)
-                       + 0.0 AS cosine
-            FROM (SELECT p.a_id, p.b_id, unnest(ea.embedding) AS x,
-                         unnest(eb.embedding) AS y
-                  FROM pairs p
-                  JOIN embeddings ea ON ea.vec_id = p.a_id
-                  JOIN embeddings eb ON eb.vec_id = p.b_id)
-            GROUP BY a_id, b_id
-        )
-        SELECT a_id, b_id, cosine, CAST(rank AS INTEGER) AS rank
-        FROM (SELECT a_id, b_id, cosine,
-                     ROW_NUMBER() OVER (PARTITION BY a_id
-                                        ORDER BY cosine DESC, b_id ASC) AS rank
-              FROM scored)
-        WHERE rank <= 3
+        WITH {_LSH_BUCKETS_CTE},
+        {_bucket_mates_topk_sql("scored", 3)}
     """,
 )
 def knn_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -807,42 +765,8 @@ def knn_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cosine < 0.4, ranked by cosine descending — same bucketed plan as "
     "the kNN join, opposite side of the threshold",
     oracle=f"""
-        WITH {_planes_sql_values()},
-        comps AS (
-            SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
-            FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x, unnest(pl.s) AS sv
-                  FROM embeddings e, planes pl)
-            GROUP BY vec_id, p
-        ),
-        buckets AS (
-            SELECT vec_id,
-                   SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-            FROM comps GROUP BY vec_id
-        ),
-        pairs AS (
-            SELECT a.vec_id AS a_id, b.vec_id AS b_id
-            FROM buckets a JOIN buckets b
-              ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-        ),
-        scored AS (
-            SELECT a_id, b_id,
-                   ROUND(SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-                         / (sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                            * sqrt(SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))), 6)
-                       + 0.0 AS cosine
-            FROM (SELECT p.a_id, p.b_id, unnest(ea.embedding) AS x,
-                         unnest(eb.embedding) AS y
-                  FROM pairs p
-                  JOIN embeddings ea ON ea.vec_id = p.a_id
-                  JOIN embeddings eb ON eb.vec_id = p.b_id)
-            GROUP BY a_id, b_id
-        )
-        SELECT a_id, b_id, cosine, CAST(rank AS INTEGER) AS rank
-        FROM (SELECT a_id, b_id, cosine,
-                     ROW_NUMBER() OVER (PARTITION BY a_id
-                                        ORDER BY cosine DESC, b_id ASC) AS rank
-              FROM scored WHERE cosine < 0.4)
-        WHERE rank <= 2
+        WITH {_LSH_BUCKETS_CTE},
+        {_bucket_mates_topk_sql("scored WHERE cosine < 0.4", 2)}
     """,
 )
 def hard_negative_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -861,34 +785,13 @@ def hard_negative_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and all Hamming-distance-1 buckets (9 of 256); candidate filter is "
     "pure bit arithmetic, ranking is exact cosine",
     oracle=f"""
-        WITH {_planes_sql_values()},
-        comps AS (
-            SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
-            FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x, unnest(pl.s) AS sv
-                  FROM embeddings e, planes pl)
-            GROUP BY vec_id, p
-        ),
-        buckets AS (
-            SELECT vec_id,
-                   SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-            FROM comps GROUP BY vec_id
-        ),
+        WITH {_LSH_BUCKETS_CTE},
         qb AS (SELECT bucket FROM buckets WHERE vec_id = 0),
         cand AS (SELECT e.* FROM embeddings e
                  JOIN buckets b ON e.vec_id = b.vec_id
                  JOIN qb ON bit_count(xor(b.bucket, qb.bucket)) <= 1),
         q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        dots AS (
-            SELECT vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT c.vec_id, unnest(c.embedding) AS x, unnest(q.qe) AS y
-                  FROM cand c, q)
-            GROUP BY vec_id
-        )
-        SELECT vec_id, ROUND(dot / (sqrt(na) * sqrt(nq)), 6) + 0.0 AS cosine
-        FROM dots ORDER BY cosine DESC, vec_id ASC LIMIT 10
+        {_query_topk_sql()}
     """,
 )
 def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -903,34 +806,13 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     op_ids="beyond-reference embedding-cosine near-dup pairs (LSH candidates + exact verify)",
     description="vector pairs sharing an LSH bucket with cosine >= 0.4",
     oracle=f"""
-        WITH {_planes_sql_values()},
-        comps AS (
-            SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
-            FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x, unnest(pl.s) AS sv
-                  FROM embeddings e, planes pl)
-            GROUP BY vec_id, p
-        ),
-        buckets AS (
-            SELECT vec_id,
-                   SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-            FROM comps GROUP BY vec_id
-        ),
+        WITH {_LSH_BUCKETS_CTE},
         pairs AS (
             SELECT a.vec_id AS a_id, b.vec_id AS b_id
             FROM buckets a JOIN buckets b
               ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         ),
-        scored AS (
-            SELECT a_id, b_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nb
-            FROM (SELECT p.a_id, p.b_id, unnest(ea.embedding) AS x, unnest(eb.embedding) AS y
-                  FROM pairs p
-                  JOIN embeddings ea ON ea.vec_id = p.a_id
-                  JOIN embeddings eb ON eb.vec_id = p.b_id)
-            GROUP BY a_id, b_id
-        )
+        {_PAIR_DOTS_CTE}
         SELECT a_id, b_id, ROUND(dot / (sqrt(na) * sqrt(nb)), 6) AS cosine
         FROM scored
         WHERE ROUND(dot / (sqrt(na) * sqrt(nb)), 6) >= 0.4
@@ -991,17 +873,7 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
                  JOIN assign a ON e.vec_id = a.vec_id
                  JOIN qcell ON a.cell_id = qcell.cell_id),
         q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        dots AS (
-            SELECT vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT c.vec_id, unnest(c.embedding) AS x, unnest(q.qe) AS y
-                  FROM cand c, q)
-            GROUP BY vec_id
-        )
-        SELECT vec_id, ROUND(dot / (sqrt(na) * sqrt(nq)), 6) + 0.0 AS cosine
-        FROM dots ORDER BY cosine DESC, vec_id ASC LIMIT 10
+        {_query_topk_sql()}
     """,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1060,18 +932,7 @@ def embedding_group_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM assign a JOIN assign b
               ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
         ),
-        scored AS (
-            SELECT a_id, b_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nb
-            FROM (SELECT p.a_id, p.b_id, unnest(ea.embedding) AS x,
-                         unnest(eb.embedding) AS y
-                  FROM pairs p
-                  JOIN embeddings ea ON ea.vec_id = p.a_id
-                  JOIN embeddings eb ON eb.vec_id = p.b_id)
-            GROUP BY a_id, b_id
-        ),
+        {_PAIR_DOTS_CTE},
         dups AS (
             SELECT DISTINCT b_id FROM scored
             WHERE ROUND(dot / (sqrt(na) * sqrt(nb)), 6) >= 0.35
@@ -1089,6 +950,28 @@ def semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # text analysis
 # ---------------------------------------------------------------------------
+
+
+# heuristic quality features per document and their 0-10 point score
+# (operators/text.py::quality_score)
+_QUALITY_FEATS_CTE = r"""feats AS (
+        SELECT doc_id,
+               length(text) AS n_chars,
+               len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens,
+               length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
+               len(list_filter(string_split_regex(text, '\s+'),
+                               x -> list_contains(['the','a','of','and','is'], lower(x)))) AS n_stop,
+               COALESCE(list_sum(list_transform(
+                   list_filter(string_split_regex(text, '\s+'), x -> x <> ''),
+                   x -> length(x))), 0) AS sum_tok_len
+        FROM documents
+    )"""
+
+_QUALITY_POINTS_SQL = """CASE WHEN n_chars BETWEEN 100 AND 20000 THEN 4 ELSE 0 END
+    + CASE WHEN n_punct * 10 < n_chars THEN 2 ELSE 0 END
+    + CASE WHEN n_stop > 0 THEN 2 ELSE 0 END
+    + CASE WHEN sum_tok_len >= 3 * n_tokens AND sum_tok_len <= 10 * n_tokens
+           THEN 2 ELSE 0 END"""
 
 
 @register(
@@ -1111,26 +994,11 @@ def token_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_scores",
     op_ids="beyond-reference quality scoring (integer-exact heuristics)",
     description="length/punct/stopword/token-length quality features + 0-10 score",
-    oracle=r"""
-        WITH feats AS (
-            SELECT doc_id,
-                   length(text) AS n_chars,
-                   len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens,
-                   length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
-                   len(list_filter(string_split_regex(text, '\s+'),
-                                   x -> list_contains(['the','a','of','and','is'], lower(x)))) AS n_stop,
-                   COALESCE(list_sum(list_transform(
-                       list_filter(string_split_regex(text, '\s+'), x -> x <> ''),
-                       x -> length(x))), 0) AS sum_tok_len
-            FROM documents
-        )
+    oracle=f"""
+        WITH {_QUALITY_FEATS_CTE}
         SELECT doc_id, n_chars, n_tokens, n_punct, n_stop,
                CAST(sum_tok_len AS BIGINT) AS sum_tok_len,
-               (CASE WHEN n_chars BETWEEN 100 AND 20000 THEN 4 ELSE 0 END
-                + CASE WHEN n_punct * 10 < n_chars THEN 2 ELSE 0 END
-                + CASE WHEN n_stop > 0 THEN 2 ELSE 0 END
-                + CASE WHEN sum_tok_len >= 3 * n_tokens AND sum_tok_len <= 10 * n_tokens
-                       THEN 2 ELSE 0 END) AS quality_decile
+               ({_QUALITY_POINTS_SQL}) AS quality_decile
         FROM feats
     """,
 )
@@ -1240,6 +1108,30 @@ def type_token_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.type_token_ratio(documents)
 
 
+# hashed-linear quality classifier: per-doc sum and count of the
+# hash-derived token weights (operators/text.py::hashed_linear_quality)
+_HLQ_AGG_CTES = f"""toks AS (
+        SELECT doc_id,
+               unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+        FROM documents
+    ),
+    b AS (
+        SELECT doc_id,
+               {_hex_int_sql("md5('hlq-v1|' || tok)", 4)} % 256 AS bucket
+        FROM toks
+    ),
+    w AS (
+        SELECT doc_id,
+               CAST(round(CAST({_hex_int_sql("md5('hlq-v1|w|' || CAST(bucket AS VARCHAR))", 6)} AS DOUBLE)
+                          / 16777216.0 * 2 - 1, 6) AS DECIMAL(12,6)) AS w
+        FROM b
+    ),
+    agg AS (
+        SELECT doc_id, SUM(w) AS sw, COUNT(*) AS n_tokens
+        FROM w GROUP BY doc_id
+    )"""
+
+
 @register(
     "model_quality_classifier",
     op_ids="beyond-reference model-based quality filtering (fastText/"
@@ -1250,26 +1142,7 @@ def type_token_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "256 feature buckets, deterministic stand-in weight vector, "
     "decimal-exact margin sum, 9dp-rounded margin through the sigmoid",
     oracle=f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-            FROM documents
-        ),
-        b AS (
-            SELECT doc_id,
-                   {_hex_int_sql("md5('hlq-v1|' || tok)", 4)} % 256 AS bucket
-            FROM toks
-        ),
-        w AS (
-            SELECT doc_id,
-                   CAST(round(CAST({_hex_int_sql("md5('hlq-v1|w|' || CAST(bucket AS VARCHAR))", 6)} AS DOUBLE)
-                              / 16777216.0 * 2 - 1, 6) AS DECIMAL(12,6)) AS w
-            FROM b
-        ),
-        agg AS (
-            SELECT doc_id, SUM(w) AS sw, COUNT(*) AS n_tokens
-            FROM w GROUP BY doc_id
-        ),
+        WITH {_HLQ_AGG_CTES},
         m AS (
             SELECT d.doc_id,
                    COALESCE(a.n_tokens, 0) AS n_tokens,
@@ -2209,6 +2082,21 @@ def ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _long_doc_grams_sql(n: int) -> str:
+    """md5 of every whitespace-token ``n``-gram (start ``i``) of the
+    ``docs`` CTE's documents with at least ``n`` tokens."""
+    return f"""long_docs AS (
+        SELECT doc_id, arr, len(arr) AS n_tokens
+        FROM docs WHERE len(arr) >= {n}
+    ),
+    grams AS (
+        SELECT doc_id, n_tokens, i,
+               md5(array_to_string(list_slice(arr, i, i + {n - 1}), ' ')) AS g
+        FROM long_docs,
+             LATERAL (SELECT unnest(generate_series(1, len(arr) - {n - 1})) AS i)
+    )"""
+
+
 @register(
     "substring_span_contamination_50g",
     op_ids="beyond-reference exact substring decontamination at the "
@@ -2222,22 +2110,13 @@ def ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="eval docs (odd doc_id) scored by the fraction of "
     "their tokens covered by some 50-gram appearing verbatim in the "
     "even-doc_id benchmark half; flag at 20% token coverage",
-    oracle="""
+    oracle=f"""
         WITH docs AS (
             SELECT doc_id,
                    list_filter(string_split(text, ' '), x -> x <> '') AS arr
             FROM documents
         ),
-        long_docs AS (
-            SELECT doc_id, arr, len(arr) AS n_tokens
-            FROM docs WHERE len(arr) >= 50
-        ),
-        grams AS (
-            SELECT doc_id, n_tokens, i,
-                   md5(array_to_string(list_slice(arr, i, i + 49), ' ')) AS g
-            FROM long_docs,
-                 LATERAL (SELECT unnest(generate_series(1, len(arr) - 49)) AS i)
-        ),
+        {_long_doc_grams_sql(50)},
         bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 2 = 0),
         ev AS (SELECT * FROM grams WHERE doc_id % 2 <> 0),
         counts AS (
@@ -2294,22 +2173,13 @@ def substring_span_contamination_50g(
     "their tokens covered by some 13-gram appearing verbatim in the "
     "even-doc_id history half — Bloom prefilter, exact verdicts; "
     "flag at 20% token coverage",
-    oracle="""
+    oracle=f"""
         WITH docs AS (
             SELECT doc_id,
                    list_filter(string_split(text, ' '), x -> x <> '') AS arr
             FROM documents
         ),
-        long_docs AS (
-            SELECT doc_id, arr, len(arr) AS n_tokens
-            FROM docs WHERE len(arr) >= 13
-        ),
-        grams AS (
-            SELECT doc_id, n_tokens, i,
-                   md5(array_to_string(list_slice(arr, i, i + 12), ' ')) AS g
-            FROM long_docs,
-                 LATERAL (SELECT unnest(generate_series(1, len(arr) - 12)) AS i)
-        ),
+        {_long_doc_grams_sql(13)},
         hist AS (SELECT DISTINCT g FROM grams WHERE doc_id % 2 = 0),
         batch AS (SELECT * FROM grams WHERE doc_id % 2 <> 0),
         counts AS (
@@ -2874,17 +2744,7 @@ def containment_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             JOIN assign a ON e.vec_id = a.vec_id
             JOIN probed p ON a.cell_id = p.cell_id
         ),
-        dots AS (
-            SELECT vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT c.vec_id, unnest(c.embedding) AS x, unnest(q.qe) AS y
-                  FROM cand c, q)
-            GROUP BY vec_id
-        )
-        SELECT vec_id, ROUND(dot / (sqrt(na) * sqrt(nq)), 6) + 0.0 AS cosine
-        FROM dots ORDER BY cosine DESC, vec_id ASC LIMIT 10
+        {_query_topk_sql()}
     """,
 )
 def ann_ivf_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2917,6 +2777,44 @@ def embedding_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.vector_stats_pandas(embeddings)
 
 
+def _pq_dist_sql(codes: str = "codes", scored: str = "scored") -> str:
+    """Product-quantization CTEs: 4 subspaces of 16 dims, the first 8
+    vectors' subvectors as the ``codes`` codebook, and ``scored``, the
+    6dp squared L2 of every (vector, subspace, code)."""
+    return f"""subs AS (
+        SELECT vec_id, s.subspace,
+               list_slice(embedding, s.subspace * 16 + 1,
+                          s.subspace * 16 + 16) AS subvec
+        FROM embeddings,
+             LATERAL (SELECT unnest(generate_series(0, 3)) AS subspace) s
+    ),
+    {codes} AS (
+        SELECT vec_id AS code_id, subspace, subvec AS codevec
+        FROM subs WHERE vec_id < 8
+    ),
+    {scored} AS (
+        SELECT vec_id, subspace, code_id,
+               ROUND(SUM((CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
+                         * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 6)
+                   AS dist
+        FROM (SELECT v.vec_id, v.subspace, c.code_id,
+                     unnest(v.subvec) AS x, unnest(c.codevec) AS y
+              FROM subs v JOIN {codes} c USING (subspace))
+        GROUP BY 1, 2, 3
+    )"""
+
+
+# nearest code per (vector, subspace), ties to the lower code id
+_PQ_BEST_SQL = """
+    SELECT vec_id, subspace, code_id AS code, dist
+    FROM (SELECT *, ROW_NUMBER() OVER (
+              PARTITION BY vec_id, subspace
+              ORDER BY dist ASC, code_id ASC) AS rn
+          FROM scored)
+    WHERE rn = 1
+"""
+
+
 @register(
     "pq_codes",
     op_ids="beyond-reference product quantization encode (4 subspaces "
@@ -2925,34 +2823,9 @@ def embedding_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "codes (16 floats per subspace, seed codebooks = first 8 vectors' "
     "subvectors); one row per (vector, subspace) with the chosen code "
     "and its squared distance",
-    oracle="""
-        WITH subs AS (
-            SELECT vec_id, s.subspace,
-                   list_slice(embedding, s.subspace * 16 + 1,
-                              s.subspace * 16 + 16) AS subvec
-            FROM embeddings,
-                 LATERAL (SELECT unnest(generate_series(0, 3)) AS subspace) s
-        ),
-        codes AS (
-            SELECT vec_id AS code_id, subspace, subvec AS codevec
-            FROM subs WHERE vec_id < 8
-        ),
-        scored AS (
-            SELECT vec_id, subspace, code_id,
-                   ROUND(SUM((CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-                             * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 6)
-                       AS dist
-            FROM (SELECT v.vec_id, v.subspace, c.code_id,
-                         unnest(v.subvec) AS x, unnest(c.codevec) AS y
-                  FROM subs v JOIN codes c USING (subspace))
-            GROUP BY 1, 2, 3
-        )
-        SELECT vec_id, subspace, code_id AS code, dist
-        FROM (SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY vec_id, subspace
-                  ORDER BY dist ASC, code_id ASC) AS rn
-              FROM scored)
-        WHERE rn = 1
+    oracle=f"""
+        WITH {_pq_dist_sql()}
+        {_PQ_BEST_SQL}
     """,
 )
 def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2970,27 +2843,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "64-float math — the standard large-scale ANN index, end to end",
     oracle=f"""
         WITH {_IVF_ASSIGN_CTE},
-        subs AS (
-            SELECT vec_id, s.subspace,
-                   list_slice(embedding, s.subspace * 16 + 1,
-                              s.subspace * 16 + 16) AS subvec
-            FROM embeddings,
-                 LATERAL (SELECT unnest(generate_series(0, 3)) AS subspace) s
-        ),
-        cbook AS (
-            SELECT vec_id AS code_id, subspace, subvec AS codevec
-            FROM subs WHERE vec_id < 8
-        ),
-        pqscored AS (
-            SELECT vec_id, subspace, code_id,
-                   ROUND(SUM((CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-                             * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 6)
-                       AS dist
-            FROM (SELECT v.vec_id, v.subspace, c.code_id,
-                         unnest(v.subvec) AS x, unnest(c.codevec) AS y
-                  FROM subs v JOIN cbook c USING (subspace))
-            GROUP BY 1, 2, 3
-        ),
+        {_pq_dist_sql("cbook", "pqscored")},
         pqcodes AS (
             SELECT vec_id, subspace, code_id AS code
             FROM (SELECT *, ROW_NUMBER() OVER (
@@ -3041,6 +2894,31 @@ _DOCS_ARR_CTE = """
 
 _BM25_TERMS = ("spark", "join", "window", "sketch")
 
+# BM25 (k1=1.2, b=0.75) over the ``docs`` CTE: doc lengths, corpus
+# stats, query-term tf and 6dp-decimal idf
+_BM25_IDF_CTES = f"""dl AS (SELECT doc_id, len(arr) AS dl FROM docs),
+    stats AS (SELECT COUNT(*) AS n_docs, SUM(len(arr)) AS sum_dl FROM docs),
+    toks AS (SELECT doc_id, unnest(arr) AS term FROM docs),
+    tf AS (
+        SELECT doc_id, term, COUNT(*) AS tf FROM toks
+        WHERE term IN {str(_BM25_TERMS)}
+        GROUP BY 1, 2
+    ),
+    idf AS (
+        SELECT term,
+               CAST(round(ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_docs AS DOUBLE) + 0.5)
+                                    / (CAST(df_docs AS DOUBLE) + 0.5)), 6)
+                    AS DECIMAL(12,6)) AS idf
+        FROM (SELECT term, COUNT(*) AS df_docs FROM tf GROUP BY 1), stats
+    )"""
+
+# one term's 12dp-decimal BM25 contribution
+_BM25_TERM_SQL = """CAST(round((CAST(idf AS DOUBLE) * (CAST(tf AS DOUBLE) * 2.2))
+                  / (CAST(tf AS DOUBLE)
+                     + 1.2 * (0.25 + (0.75 * CAST(dl AS DOUBLE))
+                                     / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))),
+                  12) AS DECIMAL(24,12))"""
+
 
 @register(
     "bm25_doc_ranking",
@@ -3052,28 +2930,9 @@ _BM25_TERMS = ("spark", "join", "window", "sketch")
     "6dp; tokens filtered to query terms before any shuffle",
     oracle=f"""
         WITH {_DOCS_ARR_CTE},
-        dl AS (SELECT doc_id, len(arr) AS dl FROM docs),
-        stats AS (SELECT COUNT(*) AS n_docs, SUM(len(arr)) AS sum_dl FROM docs),
-        toks AS (SELECT doc_id, unnest(arr) AS term FROM docs),
-        tf AS (
-            SELECT doc_id, term, COUNT(*) AS tf FROM toks
-            WHERE term IN {str(_BM25_TERMS)}
-            GROUP BY 1, 2
-        ),
-        idf AS (
-            SELECT term,
-                   CAST(round(ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_docs AS DOUBLE) + 0.5)
-                                        / (CAST(df_docs AS DOUBLE) + 0.5)), 6)
-                        AS DECIMAL(12,6)) AS idf
-            FROM (SELECT term, COUNT(*) AS df_docs FROM tf GROUP BY 1), stats
-        ),
+        {_BM25_IDF_CTES},
         contrib AS (
-            SELECT tf.doc_id, dl.dl,
-                   CAST(round((CAST(idf AS DOUBLE) * (CAST(tf AS DOUBLE) * 2.2))
-                              / (CAST(tf AS DOUBLE)
-                                 + 1.2 * (0.25 + (0.75 * CAST(dl AS DOUBLE))
-                                                 / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))),
-                              12) AS DECIMAL(24,12)) AS c
+            SELECT tf.doc_id, dl.dl, {_BM25_TERM_SQL} AS c
             FROM tf JOIN idf USING (term) JOIN dl ON dl.doc_id = tf.doc_id, stats
         )
         SELECT doc_id, dl, COUNT(*) AS n_hit_terms,
@@ -3103,31 +2962,9 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arm ranks (NULL where an arm missed)",
     oracle=f"""
         WITH {_DOCS_ARR_CTE},
-        dl AS (SELECT doc_id, len(arr) AS dl FROM docs),
-        stats AS (SELECT COUNT(*) AS n_docs, SUM(len(arr)) AS sum_dl
-                  FROM docs),
-        toks AS (SELECT doc_id, unnest(arr) AS term FROM docs),
-        tf AS (
-            SELECT doc_id, term, COUNT(*) AS tf FROM toks
-            WHERE term IN {str(_BM25_TERMS)}
-            GROUP BY 1, 2
-        ),
-        idf AS (
-            SELECT term,
-                   CAST(round(ln(1.0 + (CAST(n_docs AS DOUBLE)
-                                        - CAST(df_docs AS DOUBLE) + 0.5)
-                                        / (CAST(df_docs AS DOUBLE) + 0.5)), 6)
-                        AS DECIMAL(12,6)) AS idf
-            FROM (SELECT term, COUNT(*) AS df_docs FROM tf GROUP BY 1), stats
-        ),
+        {_BM25_IDF_CTES},
         contrib AS (
-            SELECT tf.doc_id,
-                   CAST(round((CAST(idf AS DOUBLE) * (CAST(tf AS DOUBLE) * 2.2))
-                              / (CAST(tf AS DOUBLE)
-                                 + 1.2 * (0.25 + (0.75 * CAST(dl AS DOUBLE))
-                                                 / (CAST(sum_dl AS DOUBLE)
-                                                    / CAST(n_docs AS DOUBLE)))),
-                              12) AS DECIMAL(24,12)) AS c
+            SELECT tf.doc_id, {_BM25_TERM_SQL} AS c
             FROM tf JOIN idf USING (term)
             JOIN dl ON dl.doc_id = tf.doc_id, stats
         ),
@@ -3796,6 +3633,17 @@ def oov_rate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.oov_rate(documents, vocab_size=64)
 
 
+# 1e6-fixed-point component products of the upper-triangular Gram
+# cells (i <= j) of every embedding
+_GRAM_PRODUCTS_SQL = """SELECT CAST(r1.i AS BIGINT) AS i, CAST(r2.j AS BIGINT) AS j,
+           CAST(ROUND(CAST(e.embedding[CAST(r1.i + 1 AS INT)] AS DOUBLE)
+                      * 1000000, 0) AS BIGINT)
+           * CAST(ROUND(CAST(e.embedding[CAST(r2.j + 1 AS INT)] AS DOUBLE)
+                        * 1000000, 0) AS BIGINT) AS p
+    FROM embeddings e, range(0, 64) r1(i), range(0, 64) r2(j)
+    WHERE r2.j >= r1.i"""
+
+
 @register(
     "embedding_gram_matrix",
     op_ids="beyond-reference distributed linear algebra (X^T X in one "
@@ -3805,15 +3653,9 @@ def oov_rate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="upper-triangular Gram matrix of the embedding table "
     "on 1e6-fixed-point components: 2080 exact cells from one "
     "narrow pass + one tiny keyed agg",
-    oracle="""
+    oracle=f"""
         WITH cells AS (
-            SELECT CAST(r1.i AS BIGINT) AS i, CAST(r2.j AS BIGINT) AS j,
-                   CAST(ROUND(CAST(e.embedding[CAST(r1.i + 1 AS INT)] AS DOUBLE)
-                              * 1000000, 0) AS BIGINT)
-                   * CAST(ROUND(CAST(e.embedding[CAST(r2.j + 1 AS INT)] AS DOUBLE)
-                                * 1000000, 0) AS BIGINT) AS p
-            FROM embeddings e, range(0, 64) r1(i), range(0, 64) r2(j)
-            WHERE r2.j >= r1.i
+            {_GRAM_PRODUCTS_SQL}
         )
         SELECT i, j,
                ROUND(CAST(SUM(p) AS DOUBLE) / 1000000000000.0, 6) + 0.0 AS gram
@@ -3823,6 +3665,62 @@ def oov_rate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings,) = load(spark, sf_dir, "embeddings")
     return similarity.gram_matrix(embeddings)
+
+
+def _recall_arm_sql(arm: str, rows: str) -> str:
+    """``{arm}_dots``/``{arm}_top``: per sampled query ``qid``, the
+    6dp-cosine top-10 of the ``(qid, vec_id, x, y)`` component rows
+    that the SELECT ``rows`` yields."""
+    return f"""{arm}_dots AS (
+        SELECT qid, vec_id,
+               SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
+               SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
+               SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
+        FROM ({rows})
+        GROUP BY qid, vec_id
+    ),
+    {arm}_top AS (
+        SELECT qid, vec_id FROM (
+            SELECT qid, vec_id,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY qid
+                       ORDER BY ROUND(dot / (sqrt(na) * sqrt(nq)), 6) DESC,
+                                vec_id ASC) AS rn
+            FROM {arm}_dots) WHERE rn <= 10
+    )"""
+
+
+def _recall_select_sql(top: str, a: str) -> str:
+    """recall@10 per sampled query of the ``top`` arm (alias ``a``)
+    against the exact arm."""
+    return f"""SELECT et.qid AS query_id,
+           CAST(COUNT(*) AS BIGINT) AS n_exact,
+           CAST(SUM(CASE WHEN {a}.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_hit,
+           ROUND(SUM(CASE WHEN {a}.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+                 * 1.0 / COUNT(*), 6) + 0.0 AS recall_at_k
+    FROM exact_top et
+    LEFT JOIN {top} {a} ON {a}.qid = et.qid AND {a}.vec_id = et.vec_id
+    GROUP BY et.qid"""
+
+
+# recall-eval query sample (every 25th vector) and its exact top-10
+_RECALL_EXACT_CTE = f"""qs AS (SELECT vec_id AS qid, embedding AS qe
+           FROM embeddings WHERE vec_id % 25 = 0),
+    {_recall_arm_sql(
+        "exact",
+        "SELECT q.qid, e.vec_id, unnest(e.embedding) AS x, unnest(q.qe) AS y"
+        " FROM embeddings e, qs q WHERE e.vec_id <> q.qid",
+    )}"""
+
+# the index-probe arm over the ``cand (qid, vec_id)`` CTE, and recall
+_RECALL_APPR_SQL = f"""{_recall_arm_sql(
+        "appr",
+        "SELECT c.qid, e.vec_id, unnest(e.embedding) AS x, unnest(q.qe) AS y"
+        " FROM cand c JOIN embeddings e ON e.vec_id = c.vec_id"
+        " JOIN qs q ON q.qid = c.qid",
+    )}
+    {_recall_select_sql("appr_top", "ap")}"""
 
 
 @register(
@@ -3836,73 +3734,13 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality gate before trusting LSH at corpus scale",
     oracle=f"""
         WITH {_planes_sql_values()},
-        qs AS (SELECT vec_id AS qid, embedding AS qe
-               FROM embeddings WHERE vec_id % 25 = 0),
-        exact_dots AS (
-            SELECT qid, vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT q.qid, e.vec_id,
-                         unnest(e.embedding) AS x, unnest(q.qe) AS y
-                  FROM embeddings e, qs q WHERE e.vec_id <> q.qid)
-            GROUP BY qid, vec_id
-        ),
-        exact_top AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY qid
-                           ORDER BY ROUND(dot / (sqrt(na) * sqrt(nq)), 6) DESC,
-                                    vec_id ASC) AS rn
-                FROM exact_dots) WHERE rn <= 10
-        ),
-        comps AS (
-            SELECT vec_id, p, SUM(CAST(x AS DOUBLE) * CAST(sv AS DOUBLE)) AS dot
-            FROM (SELECT e.vec_id, pl.p, unnest(e.embedding) AS x,
-                         unnest(pl.s) AS sv
-                  FROM embeddings e, planes pl)
-            GROUP BY vec_id, p
-        ),
-        buckets AS (
-            SELECT vec_id,
-                   SUM(CASE WHEN dot > 0 THEN 1::BIGINT << p ELSE 0 END) AS bucket
-            FROM comps GROUP BY vec_id
-        ),
+        {_RECALL_EXACT_CTE},
+        {_LSH_COMPS_CTE},
         qb AS (SELECT qs.qid, b.bucket FROM buckets b
                JOIN qs ON b.vec_id = qs.qid),
         cand AS (SELECT qb.qid, b.vec_id FROM qb
                  JOIN buckets b ON b.bucket = qb.bucket AND b.vec_id <> qb.qid),
-        appr_dots AS (
-            SELECT qid, vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT c.qid, e.vec_id,
-                         unnest(e.embedding) AS x, unnest(q.qe) AS y
-                  FROM cand c
-                  JOIN embeddings e ON e.vec_id = c.vec_id
-                  JOIN qs q ON q.qid = c.qid)
-            GROUP BY qid, vec_id
-        ),
-        appr_top AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY qid
-                           ORDER BY ROUND(dot / (sqrt(na) * sqrt(nq)), 6) DESC,
-                                    vec_id ASC) AS rn
-                FROM appr_dots) WHERE rn <= 10
-        )
-        SELECT et.qid AS query_id,
-               CAST(COUNT(*) AS BIGINT) AS n_exact,
-               CAST(SUM(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hit,
-               ROUND(SUM(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                     * 1.0 / COUNT(*), 6) + 0.0 AS recall_at_k
-        FROM exact_top et
-        LEFT JOIN appr_top ap ON ap.qid = et.qid AND ap.vec_id = et.vec_id
-        GROUP BY et.qid
+        {_RECALL_APPR_SQL}
     """,
 )
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3969,26 +3807,7 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "absolute error — all raw deterministic doubles",
     oracle=f"""
         WITH {_SHINGLES_CTE}, {_SIG_CTE},
-        bands AS (
-            {" UNION ALL ".join(
-                f"SELECT doc_id, {b} AS band, MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
-                for b in range(N_HASHES // BAND_SIZE)
-            )}
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bucket = b.bucket
-             AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-        inter AS (
-            SELECT c.a_id, c.b_id, COUNT(*) AS n_common
-            FROM cand c
-            JOIN shingles a ON a.doc_id = c.a_id
-            JOIN shingles b ON b.doc_id = c.b_id AND b.shingle = a.shingle
-            GROUP BY 1, 2
-        ),
+        {_BANDS_CTE}, {_CAND_CTE}, {_CAND_INTER_CTE},
         est AS (
             SELECT c.a_id, c.b_id,
                    ({" + ".join(
@@ -4137,27 +3956,11 @@ def embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="global training order presenting higher-quality "
     "documents first, md5-shuffled within each quality tier — the "
     "curriculum dataloader feed",
-    oracle=r"""
-        WITH feats AS (
-            SELECT doc_id,
-                   length(text) AS n_chars,
-                   len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens,
-                   length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
-                   len(list_filter(string_split_regex(text, '\s+'),
-                                   x -> list_contains(['the','a','of','and','is'], lower(x)))) AS n_stop,
-                   COALESCE(list_sum(list_transform(
-                       list_filter(string_split_regex(text, '\s+'), x -> x <> ''),
-                       x -> length(x))), 0) AS sum_tok_len
-            FROM documents
-        ),
+    oracle=f"""
+        WITH {_QUALITY_FEATS_CTE},
         scored AS (
             SELECT doc_id,
-                   (CASE WHEN n_chars BETWEEN 100 AND 20000 THEN 4 ELSE 0 END
-                    + CASE WHEN n_punct * 10 < n_chars THEN 2 ELSE 0 END
-                    + CASE WHEN n_stop > 0 THEN 2 ELSE 0 END
-                    + CASE WHEN sum_tok_len >= 3 * n_tokens
-                            AND sum_tok_len <= 10 * n_tokens
-                           THEN 2 ELSE 0 END) AS quality_decile
+                   ({_QUALITY_POINTS_SQL}) AS quality_decile
             FROM feats
         )
         SELECT doc_id, quality_decile,
@@ -4303,6 +4106,30 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_rate_by_group(documents, group_col="source")
 
 
+# exact least squares from integer sufficient statistics of (x, y)
+# (the operators/regression.py recipe); analytics.py shares it
+_OLS_SUMS_SQL = """CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM(x) AS BIGINT) AS sx,
+       CAST(SUM(y) AS BIGINT) AS sy,
+       CAST(SUM(x * y) AS BIGINT) AS sxy,
+       CAST(SUM(x * x) AS BIGINT) AS sxx"""
+
+
+def _ols_fit_sql(slope: str, intercept: str) -> str:
+    """Slope and intercept columns (NULL when x is constant) from the
+    ``_OLS_SUMS_SQL`` columns."""
+    return f"""CASE WHEN n * sxx - sx * sx = 0 THEN NULL
+                ELSE CAST(n * sxy - sx * sy AS DOUBLE)
+                     / CAST(n * sxx - sx * sx AS DOUBLE)
+           END AS {slope},
+           CASE WHEN n * sxx - sx * sx = 0 THEN NULL
+                ELSE (CAST(sy AS DOUBLE)
+                      - CAST(n * sxy - sx * sy AS DOUBLE)
+                        / CAST(n * sxx - sx * sx AS DOUBLE)
+                        * CAST(sx AS DOUBLE)) / n
+           END AS {intercept}"""
+
+
 @register(
     "zipf_corpus_fit",
     op_ids="beyond-reference corpus-shape diagnostic (Zipf slope: "
@@ -4311,7 +4138,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="OLS slope of ln(freq) on ln(rank) for the top-128 "
     "terms — natural corpora sit near -1; the one-number health "
     "metric per ingest batch",
-    oracle="""
+    oracle=f"""
         WITH counts AS (
             SELECT term, COUNT(*) AS c FROM (
                 SELECT unnest(list_filter(string_split(text, ' '),
@@ -4328,23 +4155,10 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM counts
         ),
         stats AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-                   CAST(SUM(x * y) AS BIGINT) AS sxy,
-                   CAST(SUM(x * x) AS BIGINT) AS sxx
+            SELECT {_OLS_SUMS_SQL}
             FROM pts
         )
-        SELECT n AS n_terms,
-               CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                    ELSE CAST(n * sxy - sx * sy AS DOUBLE)
-                         / CAST(n * sxx - sx * sx AS DOUBLE)
-               END AS zipf_slope,
-               CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                    ELSE (CAST(sy AS DOUBLE)
-                          - CAST(n * sxy - sx * sy AS DOUBLE)
-                            / CAST(n * sxx - sx * sx AS DOUBLE)
-                            * CAST(sx AS DOUBLE)) / n
-               END AS zipf_intercept
+        SELECT n AS n_terms, {_ols_fit_sql("zipf_slope", "zipf_intercept")}
         FROM stats
     """,
 )
@@ -4363,62 +4177,13 @@ def zipf_corpus_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the IVF single-cell probe against exact cosine top-10",
     oracle=f"""
         WITH {_IVF_ASSIGN_CTE},
-        qs AS (SELECT vec_id AS qid, embedding AS qe
-               FROM embeddings WHERE vec_id % 25 = 0),
-        exact_dots AS (
-            SELECT qid, vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT q.qid, e.vec_id,
-                         unnest(e.embedding) AS x, unnest(q.qe) AS y
-                  FROM embeddings e, qs q WHERE e.vec_id <> q.qid)
-            GROUP BY qid, vec_id
-        ),
-        exact_top AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY qid
-                           ORDER BY ROUND(dot / (sqrt(na) * sqrt(nq)), 6) DESC,
-                                    vec_id ASC) AS rn
-                FROM exact_dots) WHERE rn <= 10
-        ),
+        {_RECALL_EXACT_CTE},
         qcell AS (SELECT qs.qid, a.cell_id FROM assign a
                   JOIN qs ON a.vec_id = qs.qid),
         cand AS (SELECT qc.qid, a.vec_id FROM qcell qc
                  JOIN assign a ON a.cell_id = qc.cell_id
                                 AND a.vec_id <> qc.qid),
-        appr_dots AS (
-            SELECT qid, vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT c.qid, e.vec_id,
-                         unnest(e.embedding) AS x, unnest(q.qe) AS y
-                  FROM cand c
-                  JOIN embeddings e ON e.vec_id = c.vec_id
-                  JOIN qs q ON q.qid = c.qid)
-            GROUP BY qid, vec_id
-        ),
-        appr_top AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY qid
-                           ORDER BY ROUND(dot / (sqrt(na) * sqrt(nq)), 6) DESC,
-                                    vec_id ASC) AS rn
-                FROM appr_dots) WHERE rn <= 10
-        )
-        SELECT et.qid AS query_id,
-               CAST(COUNT(*) AS BIGINT) AS n_exact,
-               CAST(SUM(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hit,
-               ROUND(SUM(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                     * 1.0 / COUNT(*), 6) + 0.0 AS recall_at_k
-        FROM exact_top et
-        LEFT JOIN appr_top ap ON ap.qid = et.qid AND ap.vec_id = et.vec_id
-        GROUP BY et.qid
+        {_RECALL_APPR_SQL}
     """,
 )
 def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4440,57 +4205,15 @@ def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="recall@10 per sampled query (vec_id % 25 == 0) of "
     "cosine search on the first 16 of 64 embedding dims vs exact "
     "full-dimension top-10",
-    oracle="""
-        WITH qs AS (SELECT vec_id AS qid, embedding AS qe
-                    FROM embeddings WHERE vec_id % 25 = 0),
-        exact_dots AS (
-            SELECT qid, vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT q.qid, e.vec_id,
-                         unnest(e.embedding) AS x, unnest(q.qe) AS y
-                  FROM embeddings e, qs q WHERE e.vec_id <> q.qid)
-            GROUP BY qid, vec_id
-        ),
-        exact_top AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY qid
-                           ORDER BY ROUND(dot / (sqrt(na) * sqrt(nq)), 6) DESC,
-                                    vec_id ASC) AS rn
-                FROM exact_dots) WHERE rn <= 10
-        ),
-        pre_dots AS (
-            SELECT qid, vec_id,
-                   SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot,
-                   SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS na,
-                   SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS nq
-            FROM (SELECT q.qid, e.vec_id,
-                         unnest(list_slice(e.embedding, 1, 16)) AS x,
-                         unnest(list_slice(q.qe, 1, 16)) AS y
-                  FROM embeddings e, qs q WHERE e.vec_id <> q.qid)
-            GROUP BY qid, vec_id
-        ),
-        pre_top AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY qid
-                           ORDER BY ROUND(dot / (sqrt(na) * sqrt(nq)), 6) DESC,
-                                    vec_id ASC) AS rn
-                FROM pre_dots) WHERE rn <= 10
-        )
-        SELECT et.qid AS query_id,
-               CAST(COUNT(*) AS BIGINT) AS n_exact,
-               CAST(SUM(CASE WHEN pt.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hit,
-               ROUND(SUM(CASE WHEN pt.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                     * 1.0 / COUNT(*), 6) + 0.0 AS recall_at_k
-        FROM exact_top et
-        LEFT JOIN pre_top pt ON pt.qid = et.qid AND pt.vec_id = et.vec_id
-        GROUP BY et.qid
+    oracle=f"""
+        WITH {_RECALL_EXACT_CTE},
+        {_recall_arm_sql(
+            "pre",
+            "SELECT q.qid, e.vec_id, unnest(list_slice(e.embedding, 1, 16)) AS x,"
+            " unnest(list_slice(q.qe, 1, 16)) AS y"
+            " FROM embeddings e, qs q WHERE e.vec_id <> q.qid",
+        )}
+        {_recall_select_sql("pre_top", "pt")}
     """,
 )
 def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4509,36 +4232,9 @@ def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="per PQ subspace: vectors encoded, mean/max squared "
     "reconstruction error, distinct codes used of the 8 available — "
     "a subspace with high distortion or dead codes needs retraining",
-    oracle="""
-        WITH subs AS (
-            SELECT vec_id, s.subspace,
-                   list_slice(embedding, s.subspace * 16 + 1,
-                              s.subspace * 16 + 16) AS subvec
-            FROM embeddings,
-                 LATERAL (SELECT unnest(generate_series(0, 3)) AS subspace) s
-        ),
-        codes AS (
-            SELECT vec_id AS code_id, subspace, subvec AS codevec
-            FROM subs WHERE vec_id < 8
-        ),
-        scored AS (
-            SELECT vec_id, subspace, code_id,
-                   ROUND(SUM((CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-                             * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 6)
-                       AS dist
-            FROM (SELECT v.vec_id, v.subspace, c.code_id,
-                         unnest(v.subvec) AS x, unnest(c.codevec) AS y
-                  FROM subs v JOIN codes c USING (subspace))
-            GROUP BY 1, 2, 3
-        ),
-        best AS (
-            SELECT vec_id, subspace, code_id AS code, dist
-            FROM (SELECT *, ROW_NUMBER() OVER (
-                      PARTITION BY vec_id, subspace
-                      ORDER BY dist ASC, code_id ASC) AS rn
-                  FROM scored)
-            WHERE rn = 1
-        )
+    oracle=f"""
+        WITH {_pq_dist_sql()},
+        best AS ({_PQ_BEST_SQL})
         SELECT CAST(subspace AS BIGINT) AS subspace,
                CAST(COUNT(*) AS BIGINT) AS n_vectors,
                CAST(SUM(CAST(dist AS DECIMAL(24,6))) AS DOUBLE) / COUNT(*)
@@ -4574,15 +4270,9 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="one power-iteration step v = G*1/||G*1|| on the "
     "embedding Gram matrix — the normalized dominant-direction "
     "estimate PCA/whitening starts from",
-    oracle="""
+    oracle=f"""
         WITH cells0 AS (
-            SELECT CAST(r1.i AS BIGINT) AS i, CAST(r2.j AS BIGINT) AS j,
-                   CAST(ROUND(CAST(e.embedding[CAST(r1.i + 1 AS INT)] AS DOUBLE)
-                              * 1000000, 0) AS BIGINT)
-                   * CAST(ROUND(CAST(e.embedding[CAST(r2.j + 1 AS INT)] AS DOUBLE)
-                                * 1000000, 0) AS BIGINT) AS p
-            FROM embeddings e, range(0, 64) r1(i), range(0, 64) r2(j)
-            WHERE r2.j >= r1.i
+            {_GRAM_PRODUCTS_SQL}
         ),
         cells AS (
             SELECT i, j,
@@ -4774,12 +4464,7 @@ def training_manifest_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
                              < 'cccccccc' THEN 'train' ELSE 'heldout' END AS split
             FROM documents
         ),
-        bands AS (
-            {" UNION ALL ".join(
-                f"SELECT doc_id, {b} AS band, MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
-                for b in range(N_HASHES // BAND_SIZE)
-            )}
-        ),
+        {_BANDS_CTE},
         cand AS (
             SELECT DISTINCT tr.doc_id AS train_id, te.doc_id AS test_id
             FROM bands a JOIN bands b
@@ -4846,23 +4531,16 @@ def cross_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "jaccard",
     )
 
-def _lang_confusion_oracle() -> str:
-    return f"""
-        WITH preds AS ({_lang_id_oracle()}),
-        joined AS (
-            SELECT d.lang AS true_lang, p.pred_lang
-            FROM documents d JOIN preds p USING (doc_id)
-        ),
-        cells AS (
-            SELECT true_lang, pred_lang, COUNT(*) AS n
-            FROM joined GROUP BY 1, 2
-        ),
-        tot AS (SELECT true_lang, SUM(n) AS n_true FROM cells GROUP BY 1)
-        SELECT c.true_lang, c.pred_lang, CAST(c.n AS BIGINT) AS n,
-               CAST(t.n_true AS BIGINT) AS n_true,
-               c.n / CAST(t.n_true AS DOUBLE) AS recall_share
-        FROM cells c JOIN tot t USING (true_lang)
-    """
+# (gold lang, predicted lang) counts of the language-ID heuristic
+_LANG_CELLS_CTES = f"""preds AS ({_lang_id_oracle()}),
+    joined AS (
+        SELECT d.lang AS true_lang, p.pred_lang
+        FROM documents d JOIN preds p USING (doc_id)
+    ),
+    cells AS (
+        SELECT true_lang, pred_lang, COUNT(*) AS n
+        FROM joined GROUP BY 1, 2
+    )"""
 
 
 @register(
@@ -4875,7 +4553,14 @@ def _lang_confusion_oracle() -> str:
     "share of the true class — the error-analysis matrix showing "
     "WHICH languages the classifier confuses, not just how often it "
     "is wrong",
-    oracle=_lang_confusion_oracle(),
+    oracle=f"""
+        WITH {_LANG_CELLS_CTES},
+        tot AS (SELECT true_lang, SUM(n) AS n_true FROM cells GROUP BY 1)
+        SELECT c.true_lang, c.pred_lang, CAST(c.n AS BIGINT) AS n,
+               CAST(t.n_true AS BIGINT) AS n_true,
+               c.n / CAST(t.n_true AS DOUBLE) AS recall_share
+        FROM cells c JOIN tot t USING (true_lang)
+    """,
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
@@ -4944,27 +4629,11 @@ def stratified_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "within each quality tier) while the running whitespace-token "
     "total stays within a 20k budget; cum_weight is the running "
     "total including the row",
-    oracle=r"""
-        WITH feats AS (
-            SELECT doc_id,
-                   length(text) AS n_chars,
-                   len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens,
-                   length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
-                   len(list_filter(string_split_regex(text, '\s+'),
-                                   x -> list_contains(['the','a','of','and','is'], lower(x)))) AS n_stop,
-                   COALESCE(list_sum(list_transform(
-                       list_filter(string_split_regex(text, '\s+'), x -> x <> ''),
-                       x -> length(x))), 0) AS sum_tok_len
-            FROM documents
-        ),
+    oracle=f"""
+        WITH {_QUALITY_FEATS_CTE},
         scored AS (
             SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-                   (CASE WHEN n_chars BETWEEN 100 AND 20000 THEN 4 ELSE 0 END
-                    + CASE WHEN n_punct * 10 < n_chars THEN 2 ELSE 0 END
-                    + CASE WHEN n_stop > 0 THEN 2 ELSE 0 END
-                    + CASE WHEN sum_tok_len >= 3 * n_tokens
-                            AND sum_tok_len <= 10 * n_tokens
-                           THEN 2 ELSE 0 END) AS quality_decile
+                   ({_QUALITY_POINTS_SQL}) AS quality_decile
             FROM feats
         ),
         cum AS (
@@ -5148,13 +4817,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band, "
-    f"MD5(mh{b * BAND_SIZE + 1} || mh{b * BAND_SIZE + 2}) AS bucket FROM sig"
-    for b in range(N_HASHES // BAND_SIZE)
-)
-
-
 @register(
     "lsh_candidate_quality",
     op_ids="beyond-reference index evaluation: precision/recall of "
@@ -5170,25 +4832,10 @@ _BANDS_SQL = " UNION ALL ".join(
     "arm by construction; grow the sample modulus with the corpus",
     oracle=f"""
         WITH {_SHINGLES_CTE.replace("FROM documents)", "FROM documents WHERE doc_id % 2 = 0)")}, {_SIG_CTE},
-        bands AS ({_BANDS_SQL}),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bucket = b.bucket
-             AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-            FROM shingles a JOIN shingles b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        bands AS ({_BANDS_SQL}), {_CAND_CTE},
+        {_all_pairs_inter_sql("shingles")},
         truth AS (
-            SELECT a_id, b_id FROM inter
-            JOIN sizes sa ON sa.doc_id = a_id
-            JOIN sizes sb ON sb.doc_id = b_id
-            WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= 0.5
+            SELECT a_id, b_id {_JACCARD_HALF_SQL}
         ),
         m AS (
             SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cand) AS n_candidates,
@@ -5304,26 +4951,10 @@ def media_byte_class_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
             FROM documents d LEFT JOIN clusters c USING (doc_id)
         ),
-        feats AS (
-            SELECT doc_id,
-                   length(text) AS n_chars,
-                   len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_tokens,
-                   length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct,
-                   len(list_filter(string_split_regex(text, '\\s+'),
-                                   x -> list_contains(['the','a','of','and','is'], lower(x)))) AS n_stop,
-                   COALESCE(list_sum(list_transform(
-                       list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
-                       x -> length(x))), 0) AS sum_tok_len
-            FROM documents
-        ),
+        {_QUALITY_FEATS_CTE},
         scored AS (
             SELECT doc_id,
-                   CAST(CASE WHEN n_chars BETWEEN 100 AND 20000 THEN 4 ELSE 0 END
-                        + CASE WHEN n_punct * 10 < n_chars THEN 2 ELSE 0 END
-                        + CASE WHEN n_stop > 0 THEN 2 ELSE 0 END
-                        + CASE WHEN sum_tok_len >= 3 * n_tokens
-                               AND sum_tok_len <= 10 * n_tokens
-                              THEN 2 ELSE 0 END AS BIGINT) AS quality_decile
+                   CAST({_QUALITY_POINTS_SQL} AS BIGINT) AS quality_decile
             FROM feats
         ),
         j AS (
@@ -5447,26 +5078,7 @@ def mixture_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quality_score (pred) and the heuristic-gate label (labels) — used
 # verbatim by classifier_calibration_bins AND classifier_auc_eval so
 # the two evals provably score the same model against the same labels
-_HLQ_EVAL_CTES = f"""toks AS (
-            SELECT doc_id,
-                   unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-            FROM documents
-        ),
-        b AS (
-            SELECT doc_id,
-                   {_hex_int_sql("md5('hlq-v1|' || tok)", 4)} % 256 AS bucket
-            FROM toks
-        ),
-        w AS (
-            SELECT doc_id,
-                   CAST(round(CAST({_hex_int_sql("md5('hlq-v1|w|' || CAST(bucket AS VARCHAR))", 6)} AS DOUBLE)
-                              / 16777216.0 * 2 - 1, 6) AS DECIMAL(12,6)) AS w
-            FROM b
-        ),
-        agg AS (
-            SELECT doc_id, SUM(w) AS sw, COUNT(*) AS n_tokens
-            FROM w GROUP BY doc_id
-        ),
+_HLQ_EVAL_CTES = f"""{_HLQ_AGG_CTES},
         m AS (
             SELECT d.doc_id,
                    round(COALESCE(CAST(a.sw AS DOUBLE) / a.n_tokens, 0.0), 9) AS margin
@@ -5477,26 +5089,10 @@ _HLQ_EVAL_CTES = f"""toks AS (
                    round(1.0 / (1.0 + exp(-margin)), 6) + 0.0 AS quality_score
             FROM m
         ),
-        feats AS (
-            SELECT doc_id,
-                   length(text) AS n_chars,
-                   len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_tokens,
-                   length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct,
-                   len(list_filter(string_split_regex(text, '\\s+'),
-                                   x -> list_contains(['the','a','of','and','is'], lower(x)))) AS n_stop,
-                   COALESCE(list_sum(list_transform(
-                       list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
-                       x -> length(x))), 0) AS sum_tok_len
-            FROM documents
-        ),
+        {_QUALITY_FEATS_CTE},
         labels AS (
             SELECT doc_id,
-                   (CASE WHEN n_chars BETWEEN 100 AND 20000 THEN 4 ELSE 0 END
-                    + CASE WHEN n_punct * 10 < n_chars THEN 2 ELSE 0 END
-                    + CASE WHEN n_stop > 0 THEN 2 ELSE 0 END
-                    + CASE WHEN sum_tok_len >= 3 * n_tokens
-                            AND sum_tok_len <= 10 * n_tokens
-                           THEN 2 ELSE 0 END) >= 6 AS is_good
+                   ({_QUALITY_POINTS_SQL}) >= 6 AS is_good
             FROM feats
         )"""
 
@@ -5552,6 +5148,58 @@ def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _score_bins_sql(p: str) -> str:
+    """``{p}j``: each doc's classifier score ``s``, its 1e-6 cell
+    ``pi`` and label ``y``; ``{p}b``: per score decile ``bin`` the row
+    count, exact cell sum and positive count."""
+    return f"""{p}j AS (
+        SELECT p.quality_score AS s,
+               CAST(round(p.quality_score * 1000000) AS BIGINT) AS pi,
+               CASE WHEN l.is_good THEN 1 ELSE 0 END AS y
+        FROM pred p JOIN labels l USING (doc_id)
+    ),
+    {p}b AS (
+        SELECT LEAST(CAST(floor(s * 10) AS BIGINT), 9) AS bin,
+               CAST(COUNT(*) AS BIGINT) AS nb,
+               SUM(CAST(pi AS HUGEINT)) AS spi,
+               CAST(SUM(y) AS BIGINT) AS ng
+        FROM {p}j GROUP BY 1
+    )"""
+
+
+def _score_cells_sql(p: str) -> str:
+    """``{p}j``: each doc's classifier score as a 1e-6 cell ``c`` and
+    its label ``y``; ``{p}h``: positives ``n1v`` and rows ``nv`` per
+    cell."""
+    return f"""{p}j AS (
+        SELECT CAST(round(p.quality_score * 1000000) AS BIGINT) AS c,
+               CASE WHEN l.is_good THEN 1 ELSE 0 END AS y
+        FROM pred p JOIN labels l USING (doc_id)
+    ),
+    {p}h AS (
+        SELECT c, CAST(SUM(y) AS BIGINT) AS n1v,
+               CAST(COUNT(*) AS BIGINT) AS nv
+        FROM {p}j GROUP BY 1
+    )"""
+
+
+def _class_totals_sql(p: str) -> str:
+    """``{p}t``: positive and negative totals of the ``{p}h`` cells."""
+    return f"""{p}t AS (
+        SELECT CAST(SUM(n1v) AS BIGINT) AS n_pos,
+               CAST(SUM(nv - n1v) AS BIGINT) AS n_neg
+        FROM {p}h
+    )"""
+
+
+# true/false positives at or above each cell, scanning cells down
+_CUM_TP_FP_SQL = """SUM(n1v) OVER (ORDER BY c DESC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS tp,
+       SUM(nv - n1v) OVER (ORDER BY c DESC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS fp"""
+
 @register(
     "classifier_ece_eval",
     op_ids="beyond-reference scalar calibration scorecard: "
@@ -5567,19 +5215,7 @@ def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     "thresholding a corpus on it",
     oracle=f"""
         WITH {_HLQ_EVAL_CTES},
-        ecej AS (
-            SELECT p.quality_score AS s,
-                   CAST(round(p.quality_score * 1000000) AS BIGINT) AS pi,
-                   CASE WHEN l.is_good THEN 1 ELSE 0 END AS y
-            FROM pred p JOIN labels l USING (doc_id)
-        ),
-        eceb AS (
-            SELECT LEAST(CAST(floor(s * 10) AS BIGINT), 9) AS bin,
-                   CAST(COUNT(*) AS BIGINT) AS nb,
-                   SUM(CAST(pi AS HUGEINT)) AS spi,
-                   CAST(SUM(y) AS BIGINT) AS ng
-            FROM ecej GROUP BY 1
-        ),
+        {_score_bins_sql("ece")},
         ecet AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                    SUM(CAST(pi - y * 1000000 AS HUGEINT)
@@ -5621,6 +5257,17 @@ def classifier_ece_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# classifier scores as 1e-6 cells (yj -> yh), cumulative TP/FP down
+# the descending cells (yc) and the class totals (yt)
+_YOUDEN_CELLS_CTES = f"""{_score_cells_sql("y")},
+    yc AS (
+        SELECT c,
+               {_CUM_TP_FP_SQL}
+        FROM yh
+    ),
+    {_class_totals_sql("y")}"""
+
+
 @register(
     "youden_threshold_select",
     op_ids="beyond-reference operating-point selection: Youden's J "
@@ -5633,31 +5280,7 @@ def classifier_ece_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the optimum",
     oracle=f"""
         WITH {_HLQ_EVAL_CTES},
-        yj AS (
-            SELECT CAST(round(p.quality_score * 1000000) AS BIGINT) AS c,
-                   CASE WHEN l.is_good THEN 1 ELSE 0 END AS y
-            FROM pred p JOIN labels l USING (doc_id)
-        ),
-        yh AS (
-            SELECT c, CAST(SUM(y) AS BIGINT) AS n1v,
-                   CAST(COUNT(*) AS BIGINT) AS nv
-            FROM yj GROUP BY 1
-        ),
-        yc AS (
-            SELECT c,
-                   SUM(n1v) OVER (ORDER BY c DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS tp,
-                   SUM(nv - n1v) OVER (ORDER BY c DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS fp
-            FROM yh
-        ),
-        yt AS (
-            SELECT CAST(SUM(n1v) AS BIGINT) AS n_pos,
-                   CAST(SUM(nv - n1v) AS BIGINT) AS n_neg
-            FROM yh
-        ),
+        {_YOUDEN_CELLS_CTES},
         ys AS (
             SELECT c, tp, fp, n_pos, n_neg,
                    CAST(tp * n_neg - fp * n_pos AS BIGINT) AS jint
@@ -5715,31 +5338,13 @@ def youden_threshold_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     "filtering where ROC-AUC hides negative-dominated imbalance",
     oracle=f"""
         WITH {_HLQ_EVAL_CTES},
-        apj AS (
-            SELECT CAST(round(p.quality_score * 1000000) AS BIGINT) AS c,
-                   CASE WHEN l.is_good THEN 1 ELSE 0 END AS y
-            FROM pred p JOIN labels l USING (doc_id)
-        ),
-        aph AS (
-            SELECT c, CAST(SUM(y) AS BIGINT) AS n1v,
-                   CAST(COUNT(*) AS BIGINT) AS nv
-            FROM apj GROUP BY 1
-        ),
+        {_score_cells_sql("ap")},
         apc AS (
             SELECT c, n1v,
-                   SUM(n1v) OVER (ORDER BY c DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS tp,
-                   SUM(nv - n1v) OVER (ORDER BY c DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS fp
+                   {_CUM_TP_FP_SQL}
             FROM aph
         ),
-        apt AS (
-            SELECT CAST(SUM(n1v) AS BIGINT) AS n_pos,
-                   CAST(SUM(nv - n1v) AS BIGINT) AS n_neg
-            FROM aph
-        ),
+        {_class_totals_sql("ap")},
         apterms AS (
             SELECT n_pos, n_neg,
                    CAST(round(CAST(n1v AS DOUBLE) / CAST(n_pos AS DOUBLE)
@@ -5789,31 +5394,7 @@ def classifier_pr_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "model-based filter",
     oracle=f"""
         WITH {_HLQ_EVAL_CTES},
-        yj AS (
-            SELECT CAST(round(p.quality_score * 1000000) AS BIGINT) AS c,
-                   CASE WHEN l.is_good THEN 1 ELSE 0 END AS y
-            FROM pred p JOIN labels l USING (doc_id)
-        ),
-        yh AS (
-            SELECT c, CAST(SUM(y) AS BIGINT) AS n1v,
-                   CAST(COUNT(*) AS BIGINT) AS nv
-            FROM yj GROUP BY 1
-        ),
-        yc AS (
-            SELECT c,
-                   SUM(n1v) OVER (ORDER BY c DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS tp,
-                   SUM(nv - n1v) OVER (ORDER BY c DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS fp
-            FROM yh
-        ),
-        yt AS (
-            SELECT CAST(SUM(n1v) AS BIGINT) AS n_pos,
-                   CAST(SUM(nv - n1v) AS BIGINT) AS n_neg
-            FROM yh
-        ),
+        {_YOUDEN_CELLS_CTES},
         ys AS (
             SELECT c, CAST(tp * n_neg - fp * n_pos AS BIGINT) AS jint
             FROM yc CROSS JOIN yt
@@ -5888,19 +5469,7 @@ def classifier_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "non-discriminative) before a corpus is thresholded on them",
     oracle=f"""
         WITH {_HLQ_EVAL_CTES},
-        mdj AS (
-            SELECT p.quality_score AS s,
-                   CAST(round(p.quality_score * 1000000) AS BIGINT) AS pi,
-                   CASE WHEN l.is_good THEN 1 ELSE 0 END AS y
-            FROM pred p JOIN labels l USING (doc_id)
-        ),
-        mdb AS (
-            SELECT LEAST(CAST(floor(s * 10) AS BIGINT), 9) AS bin,
-                   CAST(COUNT(*) AS BIGINT) AS nb,
-                   SUM(CAST(pi AS HUGEINT)) AS spi,
-                   CAST(SUM(y) AS BIGINT) AS ng
-            FROM mdj GROUP BY 1
-        ),
+        {_score_bins_sql("md")},
         mdt AS (
             SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                    CAST(SUM(y) AS BIGINT) AS n_pos,
@@ -6389,6 +5958,14 @@ def bloom_membership_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# word-bigram counts over the ``docs`` CTE
+_BIGRAM_COUNTS_CTES = """bi AS (
+        SELECT array_to_string(list_slice(arr, i, i + 1), ' ') AS gram
+        FROM docs, LATERAL (SELECT unnest(generate_series(1, len(arr) - 1)) AS i)
+    ),
+    c AS (SELECT gram, COUNT(*) AS c FROM bi GROUP BY 1)"""
+
+
 @register(
     "approx_topk_heavy_hitters",
     op_ids="beyond-reference heavy-hitters sketch (Spark 4 "
@@ -6407,11 +5984,7 @@ def bloom_membership_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "above the k-th count is in the sketch set)",
     oracle=f"""
         WITH {_DOCS_ARR_CTE},
-        bi AS (
-            SELECT array_to_string(list_slice(arr, i, i + 1), ' ') AS gram
-            FROM docs, LATERAL (SELECT unnest(generate_series(1, len(arr) - 1)) AS i)
-        ),
-        c AS (SELECT gram, COUNT(*) AS c FROM bi GROUP BY 1),
+        {_BIGRAM_COUNTS_CTES},
         k AS (SELECT MIN(c) AS kth FROM (SELECT c FROM c ORDER BY c DESC LIMIT 10))
         SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM c) AS n_distinct_grams,
                (SELECT CAST(MAX(c) AS BIGINT) FROM c) AS max_count,
@@ -6495,6 +6068,18 @@ def approx_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Mann-Whitney rank sums over a ``cum`` histogram (nv rows, n1v
+# positives, cumn rows below each cell) and the tie-aware ROC AUC
+_AUC_SUMS_SQL = """CAST(SUM(n1v) AS BIGINT) AS n1,
+       CAST(SUM(nv) - SUM(n1v) AS BIGINT) AS n2,
+       CAST(SUM(n1v * (2 * cumn + nv + 1)) AS BIGINT) AS r2"""
+
+_AUC_SQL = """n1 AS n_pos, n2 AS n_neg,
+       CASE WHEN n1 = 0 OR n2 = 0 THEN CAST(NULL AS DOUBLE)
+            ELSE CAST(r2 - n1 * (n1 + 1) AS DOUBLE)
+                 / CAST(2 * n1 * n2 AS DOUBLE) END AS auc"""
+
+
 @register(
     "classifier_auc_eval",
     op_ids="beyond-reference model evaluation: exact ROC AUC of the "
@@ -6527,15 +6112,10 @@ def approx_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM hist
         ),
         st AS (
-            SELECT CAST(SUM(n1v) AS BIGINT) AS n1,
-                   CAST(SUM(nv) - SUM(n1v) AS BIGINT) AS n2,
-                   CAST(SUM(n1v * (2 * cumn + nv + 1)) AS BIGINT) AS r2
+            SELECT {_AUC_SUMS_SQL}
             FROM cum
         )
-        SELECT n1 AS n_pos, n2 AS n_neg,
-               CASE WHEN n1 = 0 OR n2 = 0 THEN CAST(NULL AS DOUBLE)
-                    ELSE CAST(r2 - n1 * (n1 + 1) AS DOUBLE)
-                         / CAST(2 * n1 * n2 AS DOUBLE) END AS auc
+        SELECT {_AUC_SQL}
         FROM st
     """,
 )
@@ -6566,15 +6146,7 @@ def classifier_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "for lang-ID vs gold labels — the label-quality QA number that "
     "discounts agreement expected by chance",
     oracle=f"""
-        WITH preds AS ({_lang_id_oracle()}),
-        joined AS (
-            SELECT d.lang AS true_lang, p.pred_lang
-            FROM documents d JOIN preds p USING (doc_id)
-        ),
-        cells AS (
-            SELECT true_lang, pred_lang, COUNT(*) AS n
-            FROM joined GROUP BY 1, 2
-        ),
+        WITH {_LANG_CELLS_CTES},
         st AS (
             SELECT CAST(SUM(n) AS BIGINT) AS n_docs,
                    CAST(SUM(CASE WHEN true_lang = pred_lang THEN n ELSE 0 END)
@@ -6697,11 +6269,7 @@ def bloom_prefiltered_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     "counts",
     oracle=f"""
         WITH {_DOCS_ARR_CTE},
-        bi AS (
-            SELECT array_to_string(list_slice(arr, i, i + 1), ' ') AS gram
-            FROM docs, LATERAL (SELECT unnest(generate_series(1, len(arr) - 1)) AS i)
-        ),
-        c AS (SELECT gram, COUNT(*) AS c FROM bi GROUP BY 1),
+        {_BIGRAM_COUNTS_CTES},
         top AS (SELECT c FROM c ORDER BY c DESC LIMIT 10)
         SELECT CAST(row_number() OVER (ORDER BY c DESC) AS BIGINT) AS rnk,
                CAST(c AS BIGINT) AS cnt
@@ -6770,15 +6338,10 @@ def approx_topk_sketch_production(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         st AS (
             SELECT lang,
-                   CAST(SUM(n1v) AS BIGINT) AS n1,
-                   CAST(SUM(nv) - SUM(n1v) AS BIGINT) AS n2,
-                   CAST(SUM(n1v * (2 * cumn + nv + 1)) AS BIGINT) AS r2
+                   {_AUC_SUMS_SQL}
             FROM cum GROUP BY lang
         )
-        SELECT lang, n1 AS n_pos, n2 AS n_neg,
-               CASE WHEN n1 = 0 OR n2 = 0 THEN CAST(NULL AS DOUBLE)
-                    ELSE CAST(r2 - n1 * (n1 + 1) AS DOUBLE)
-                         / CAST(2 * n1 * n2 AS DOUBLE) END AS auc
+        SELECT lang, {_AUC_SQL}
         FROM st
     """,
 )
@@ -6881,15 +6444,7 @@ def audio_ingest_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="per-gold-language tp/fp/fn, precision, recall, F1 "
     "of the lang-ID heuristic, plus the macro-F1 constant column",
     oracle=f"""
-        WITH preds AS ({_lang_id_oracle()}),
-        joined AS (
-            SELECT d.lang AS true_lang, p.pred_lang
-            FROM documents d JOIN preds p USING (doc_id)
-        ),
-        cells AS (
-            SELECT true_lang, pred_lang, COUNT(*) AS n
-            FROM joined GROUP BY 1, 2
-        ),
+        WITH {_LANG_CELLS_CTES},
         gold AS (
             SELECT true_lang AS lang, CAST(SUM(n) AS BIGINT) AS n_gold
             FROM cells GROUP BY 1
@@ -7519,19 +7074,7 @@ from nhl_data_warehouse_spark.operators.stats import (  # noqa: E402
     description="ARI between exact-content groups and simhash-16 "
     "buckets over documents, with the three raw pair sums",
     oracle=f"""
-        WITH tokens AS (
-            SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-                                              x -> x <> '')) AS tok
-            FROM documents
-        ),
-        votes AS (
-            SELECT doc_id, b.bit,
-                   CASE WHEN strpos('89abcdef',
-                                    substring(md5(tok), b.bit + 1, 1)) > 0
-                        THEN 1 ELSE -1 END AS vote
-            FROM tokens, (SELECT unnest(generate_series(0, 15)) AS bit) b
-        ),
-        sums AS (SELECT doc_id, bit, SUM(vote) AS s FROM votes GROUP BY 1, 2),
+        WITH {_simhash_sums_sql(16)},
         sk AS (
             SELECT doc_id,
                    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << bit
