@@ -30,18 +30,17 @@ def as_of_join(
     left_time: str,
     right_time: str,
     payloads: list[str],
-    strict: bool = False,
     direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the nearest right-side ``payloads`` in
     ``direction``: "backward" = most recent with ``right_time <=
-    left_time`` (``<`` when ``strict``), "forward" = earliest with
-    ``right_time >= left_time`` (``>`` when ``strict``). Left rows
-    with no match in that direction get NULL payloads (left-outer
-    as-of semantics). Same one-shuffle one-sort cost either way.
+    left_time``, "forward" = earliest with ``right_time >=
+    left_time``. Left rows with no match in that direction get NULL
+    payloads (left-outer as-of semantics). Same one-shuffle one-sort
+    cost either way.
 
-    Tie handling at equal timestamps is deterministic: right rows sort
-    before left rows (inclusive) or after (strict). If multiple right
+    Tie handling at equal timestamps is deterministic: a right row at
+    the left row's time matches (both bounds inclusive). If multiple right
     rows share the same (key, time), the propagated payload is the one
     that sorts last among them by input order of ``payloads`` values —
     callers that need full determinism under such ties should pass a
@@ -50,15 +49,10 @@ def as_of_join(
     """
     assert direction in ("backward", "forward")
     # __src orders right rows relative to left rows at EQUAL time; that
-    # relative order is what implements inclusive (<=, >=) vs strict.
-    # backward: window looks back, so visible-at-tie right rows must
-    # sort BEFORE left (0) and invisible ones after (2). forward:
-    # window looks ahead, so visible-at-tie rows sort AFTER left (2)
-    # and invisible ones before (0).
-    if direction == "backward":
-        r_src = 2 if strict else 0
-    else:
-        r_src = 0 if strict else 2
+    # relative order is what makes the bounds inclusive (<=, >=).
+    # backward: window looks back, so right rows at a tie sort BEFORE
+    # left (0). forward: window looks ahead, so they sort AFTER (2).
+    r_src = 0 if direction == "backward" else 2
     l_tagged = left.withColumn("__k", F.col(left_on)).withColumn(
         "__t", F.col(left_time)
     ).withColumn("__src", F.lit(1))

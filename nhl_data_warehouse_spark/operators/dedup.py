@@ -64,10 +64,9 @@ def dedup_against_corpus(
     history: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    normalize: bool = False,
 ) -> DataFrame:
     """Incremental-ingest dedup: keep only the new-batch documents
-    whose content fingerprint is absent from the historical corpus,
+    whose exact-text fingerprint is absent from the historical corpus,
     deduplicated within the batch (min-id representative per
     fingerprint) — the nightly-crawl shape: today's crawl lands
     against a 100 TB history and only genuinely new content survives.
@@ -81,7 +80,7 @@ def dedup_against_corpus(
     Composes with ``write.incremental_insert`` (J3/M2): this is the
     content-addressed generalization of its key-based anti-join.
     """
-    content = normalized_text(text_col) if normalize else F.col(text_col)
+    content = F.col(text_col)
     new_fp = new_batch.select(F.col(id_col), F.md5(content).alias("fingerprint"))
     hist_fp = history.select(F.md5(content).alias("fingerprint")).distinct()
     return (
@@ -1157,6 +1156,27 @@ def simhash_band_near_dups(
     ).where(F.col("hamming") <= max_hamming)
 
 
+def _token_docs(df: DataFrame, key_col: str, text_col: str) -> DataFrame:
+    """(key, _toks, _n) of each document with at least one
+    whitespace token."""
+    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    return (
+        scale_out(df)
+        .select(F.col(key_col), toks.alias("_toks"))
+        .withColumn("_n", F.size("_toks"))
+        .filter(F.col("_n") > 0)
+    )
+
+
+def _chunk_hashes(n_chunks: F.Column, c: int) -> F.Column:
+    """md5 of each of the ``n_chunks`` consecutive ``c``-token chunks
+    of ``_toks``, in order."""
+    return F.transform(
+        F.sequence(F.lit(0), (n_chunks - 1).cast("int")),
+        lambda i: F.md5(F.array_join(F.slice(F.col("_toks"), i * c + 1, c), " ")),
+    )
+
+
 def dup_chunk_stats(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1184,25 +1204,12 @@ def dup_chunk_stats(
     sub-document granularity.
     """
     c = int(chunk_tokens)
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    base = (
-        scale_out(df)
-        .select(F.col(id_col), toks.alias("_toks"))
-        .withColumn("_n", F.size("_toks"))
-        .filter(F.col("_n") > 0)
-    )
+    base = _token_docs(df, id_col, text_col)
     n_chunks = F.ceil(F.col("_n") / F.lit(float(c)))
     chunks = base.select(
         F.col(id_col),
         n_chunks.cast("long").alias("n_chunks"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), (n_chunks - 1).cast("int")),
-                lambda i: F.md5(
-                    F.array_join(F.slice(F.col("_toks"), i * c + 1, c), " ")
-                ),
-            )
-        ).alias("chunk_hash"),
+        F.explode(_chunk_hashes(n_chunks, c)).alias("chunk_hash"),
     )
     occ = chunks.groupBy("chunk_hash").agg(
         F.count_distinct(F.col(id_col)).alias("_nd")
@@ -1256,15 +1263,8 @@ def remove_duplicate_spans(
     to sub-document spans.
     """
     c = int(chunk_tokens)
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    base = (
-        scale_out(df)
-        .select(F.col(id_col), toks.alias("_toks"))
-        .withColumn("_n", F.size("_toks"))
-        .filter(F.col("_n") > 0)
-        .withColumn(
-            "n_chunks", F.ceil(F.col("_n") / F.lit(float(c))).cast("long")
-        )
+    base = _token_docs(df, id_col, text_col).withColumn(
+        "n_chunks", F.ceil(F.col("_n") / F.lit(float(c))).cast("long")
     )
     # base feeds the chunk explode AND the final stitch; chunks feeds
     # three joins (occurrence stats, canonical index, keep filter) —
@@ -1273,14 +1273,7 @@ def remove_duplicate_spans(
     base = pin(base)
     chunks = base.select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), (F.col("n_chunks") - 1).cast("int")),
-                lambda i: F.md5(
-                    F.array_join(F.slice(F.col("_toks"), i * c + 1, c), " ")
-                ),
-            )
-        ).alias("_i", "_h"),
+        F.posexplode(_chunk_hashes(F.col("n_chunks"), c)).alias("_i", "_h"),
     )
     chunks = pin(chunks)
     occ = chunks.groupBy("_h").agg(
@@ -1350,24 +1343,11 @@ def source_overlap_matrix(
     never doc-pair work. Emits only pairs sharing >= 1 chunk.
     """
     c = int(chunk_tokens)
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    base = (
-        scale_out(df)
-        .select(F.col(group_col), toks.alias("_toks"))
-        .withColumn("_n", F.size("_toks"))
-        .filter(F.col("_n") > 0)
-    )
+    base = _token_docs(df, group_col, text_col)
     n_chunks = F.ceil(F.col("_n") / F.lit(float(c)))
     sc = base.select(
         F.col(group_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), (n_chunks - 1).cast("int")),
-                lambda i: F.md5(
-                    F.array_join(F.slice(F.col("_toks"), i * c + 1, c), " ")
-                ),
-            )
-        ).alias("chunk_hash"),
+        F.explode(_chunk_hashes(n_chunks, c)).alias("chunk_hash"),
     ).distinct()
     # read 3x (sizes + both self-join sides); released by the
     # caller's cache_scope or session.release_cached
@@ -1405,11 +1385,11 @@ def dedup_rate_by_group(
     group_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    normalize: bool = True,
 ) -> DataFrame:
     """Per-group duplicate-rate report: for each group (source,
     language, crawl, ...), how many docs exist, how many are copies
-    of content that appears >= 2 times ANYWHERE in the corpus, and
+    of content (``normalized_text``) that appears >= 2 times ANYWHERE
+    in the corpus, and
     the rate — the per-source health dashboard a curation run emits
     before and after dedup. Cross-group duplicates count in every
     group holding a copy (that's the point: it surfaces mirrors).
@@ -1418,7 +1398,7 @@ def dedup_rate_by_group(
     one join back, one per-group rollup — all partial-agg friendly;
     text never shuffles.
     """
-    fp = F.md5(normalized_text(text_col)) if normalize else F.md5(F.col(text_col))
+    fp = F.md5(normalized_text(text_col))
     docs = scale_out(df).select(
         F.col(group_col), F.col(id_col), fp.alias("_fp")
     )
@@ -1579,6 +1559,24 @@ def cdc_dedup_stats(
 _TRACKING_PARAM_RE = "^(utm_[^=&]*|gclid|fbclid|ref)(=|$)"
 
 
+def _url_head(col) -> tuple[F.Column, F.Column, F.Column]:
+    """A URL trimmed and fragment-stripped, its lowercased scheme, and
+    its lowercased host with the scheme's default port removed
+    (``canonical_url`` rules 1-3)."""
+    u = F.trim(F.col(col) if isinstance(col, str) else col)
+    u = F.regexp_replace(u, "#.*$", "")
+    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
+    auth = F.lower(
+        F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
+    )
+    host = (
+        F.when(scheme == "http", F.regexp_replace(auth, ":80$", ""))
+        .when(scheme == "https", F.regexp_replace(auth, ":443$", ""))
+        .otherwise(auth)
+    )
+    return u, scheme, host
+
+
 def canonical_url(col="url") -> F.Column:
     """Canonical form of an absolute URL — the C4/CCNet *first-line*
     dedup grain: web corpora dedup by normalized URL before any
@@ -1613,17 +1611,7 @@ def canonical_url(col="url") -> F.Column:
     miss rate of those two is negligible next to tracking-param and
     slash noise.
     """
-    u = F.trim(F.col(col) if isinstance(col, str) else col)
-    u = F.regexp_replace(u, "#.*$", "")
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    auth = F.lower(
-        F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
-    )
-    host = (
-        F.when(scheme == "http", F.regexp_replace(auth, ":80$", ""))
-        .when(scheme == "https", F.regexp_replace(auth, ":443$", ""))
-        .otherwise(auth)
-    )
+    u, scheme, host = _url_head(col)
     path = F.regexp_replace(
         F.regexp_extract(
             u, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)", 1
@@ -1759,17 +1747,7 @@ def site_key(url_col="url") -> F.Column:
     (lowercase, default ports removed) cover the overwhelming share
     of same-site aliasing. NULL for URLs with no parseable host.
     """
-    u = F.trim(F.col(url_col) if isinstance(url_col, str) else url_col)
-    u = F.regexp_replace(u, "#.*$", "")
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    auth = F.lower(
-        F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
-    )
-    host = (
-        F.when(scheme == "http", F.regexp_replace(auth, ":80$", ""))
-        .when(scheme == "https", F.regexp_replace(auth, ":443$", ""))
-        .otherwise(auth)
-    )
+    _, scheme, host = _url_head(url_col)
     host = F.regexp_replace(host, r"^www\.", "")
     return F.when((scheme == "") | (host == ""), F.lit(None)).otherwise(host)
 

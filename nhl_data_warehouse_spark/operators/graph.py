@@ -132,6 +132,36 @@ def triangle_counts(
     return _canonical_deg_tri(edges, a, b, assume_canonical)[1]
 
 
+def _canonical_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Undirected edges as distinct (_a, _b) with _a < _b: reversed
+    copies fold together, self-loops drop."""
+    return (
+        edges.select(
+            F.least(F.col(a), F.col(b)).alias("_a"),
+            F.greatest(F.col(a), F.col(b)).alias("_b"),
+        )
+        .filter(F.col("_a") < F.col("_b"))
+        .distinct()
+    )
+
+
+def _shared_group_edges(
+    df: DataFrame, group_col: str, item_col: str, min_shared: int
+) -> DataFrame:
+    """Item pairs (_i < _j) that share at least ``min_shared`` groups."""
+    items = df.select(
+        F.col(group_col).alias("_g"), F.col(item_col).alias("_i")
+    ).distinct()
+    return (
+        items.join(items.select("_g", F.col("_i").alias("_j")), on="_g")
+        .filter(F.col("_i") < F.col("_j"))
+        .groupBy("_i", "_j")
+        .agg(F.count(F.lit(1)).alias("_ng"))
+        .where(F.col("_ng") >= min_shared)
+        .select("_i", "_j")
+    )
+
+
 def _canonical_deg_tri(
     edges: DataFrame,
     a: str,
@@ -154,14 +184,7 @@ def _canonical_deg_tri(
         # pure-overhead shuffle, and here it also costs a codegen stage)
         e = edges.select(F.col(a).alias("_a"), F.col(b).alias("_b"))
     else:
-        e = (
-            edges.select(
-                F.least(F.col(a), F.col(b)).alias("_a"),
-                F.greatest(F.col(a), F.col(b)).alias("_b"),
-            )
-            .filter(F.col("_a") < F.col("_b"))
-            .distinct()
-        )
+        e = _canonical_edges(edges, a, b)
     e = pin(e)  # read 3x: two degree projections + the orient join
     deg = (
         e.select(F.col("_a").alias("_n"))
@@ -375,19 +398,7 @@ def degree_assortativity(
     moment reduction is one bounded aggregate. No window, no
     all-pairs beyond the capped projection.
     """
-    items = df.select(
-        F.col(group_col).alias("_g"), F.col(item_col).alias("_i")
-    ).distinct()
-    edges = (
-        items.join(
-            items.select("_g", F.col("_i").alias("_j")), on="_g"
-        )
-        .filter(F.col("_i") < F.col("_j"))
-        .groupBy("_i", "_j")
-        .agg(F.count(F.lit(1)).alias("_ng"))
-        .where(F.col("_ng") >= min_shared)
-        .select("_i", "_j")
-    )
+    edges = _shared_group_edges(df, group_col, item_col, min_shared)
     directed = edges.unionByName(
         edges.select(F.col("_j").alias("_i"), F.col("_i").alias("_j"))
     )
@@ -461,17 +472,7 @@ def label_propagation(
     ``rounds`` such stages; for big graphs localCheckpoint between
     rounds caps lineage (the kiveris doctrine).
     """
-    items = df.select(
-        F.col(group_col).alias("_g"), F.col(item_col).alias("_i")
-    ).distinct()
-    edges = (
-        items.join(items.select("_g", F.col("_i").alias("_j")), on="_g")
-        .filter(F.col("_i") < F.col("_j"))
-        .groupBy("_i", "_j")
-        .agg(F.count(F.lit(1)).alias("_ng"))
-        .where(F.col("_ng") >= min_shared)
-        .select("_i", "_j")
-    )
+    edges = _shared_group_edges(df, group_col, item_col, min_shared)
     directed = edges.unionByName(
         edges.select(F.col("_j").alias("_i"), F.col("_i").alias("_j"))
     )
@@ -537,14 +538,7 @@ def kcore_peel(
     blocks are released by the caller's ``cache_scope`` or the
     session's ``release_cached`` sweep.
     """
-    e = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("_a"),
-            F.greatest(F.col(a), F.col(b)).alias("_b"),
-        )
-        .filter(F.col("_a") < F.col("_b"))
-        .distinct()
-    )
+    e = _canonical_edges(edges, a, b)
 
     def _deg(cur: DataFrame) -> DataFrame:
         return (

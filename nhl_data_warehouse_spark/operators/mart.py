@@ -56,15 +56,11 @@ STAT_COLS = [
 def seasonal_metrics_agg(
     regular_season: DataFrame,
     team_statistics: DataFrame,
-    dedup_on_key: bool = False,
 ) -> DataFrame:
     """visitor-join ∪ home-join denormalized mart (J1, J2, U1).
 
-    ``dedup_on_key=False`` reproduces SQL ``UNION`` exactly
-    (distinct over the full tuple, reference
-    ``seasonal_metrics_agg.sql:47``); ``True`` switches to
-    ``dropDuplicates`` on (game, team) — same result on clean data,
-    far cheaper at scale (hashes keys, not 21-col rows).
+    Reproduces SQL ``UNION`` exactly: distinct over the full tuple
+    (reference ``seasonal_metrics_agg.sql:47``).
     """
     stats = F.broadcast(team_statistics.select("team", *STAT_COLS))
     games = regular_season.select(*GAME_COLS)
@@ -76,12 +72,7 @@ def seasonal_metrics_agg(
         stats, on=games["home"] == stats["team"], how="inner"
     ).select(*GAME_COLS, *STAT_COLS)
 
-    unioned = visitor_branch.unionByName(home_branch)
-    if dedup_on_key:
-        return unioned.dropDuplicates(
-            ["game_date", "game_time", "visitor", "home", "gp", "total_points"]
-        )
-    return unioned.distinct()
+    return visitor_branch.unionByName(home_branch).distinct()
 
 
 def seasonal_team_rollup(regular_season: DataFrame) -> DataFrame:

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import pandas as pd  # module-level so pandas_udf string hints resolve
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -120,6 +120,25 @@ def mad_by_group(
     )
 
 
+def _scaled_int(op: str, value_col: str, scale_factor) -> tuple[int, Column]:
+    """``scale_factor`` as an int ``f`` and ``value_col * f`` as an
+    exact DECIMAL(20,0). The pre-scale cast must keep exactly the
+    digits ``f`` preserves: a hard-coded decimal(18,2) would round
+    1.234 to 1.23 BEFORE a x1000 scale, silently losing the precision
+    the caller asked for — so the decimal scale derives from ``f``,
+    which must be a power of ten (the only scale a decimal cast can
+    mirror); ``op`` names the caller in the error."""
+    f = int(scale_factor)
+    digits = len(str(f)) - 1
+    if f <= 0 or 10**digits != f:
+        raise ValueError(
+            f"{op}: scale_factor must be a positive power "
+            f"of 10, got {scale_factor}"
+        )
+    c = (F.col(value_col).cast(f"decimal(18,{digits})") * f).cast("decimal(20,0)")
+    return f, c
+
+
 def grouped_moments(
     df: DataFrame,
     group_col: str,
@@ -153,19 +172,7 @@ def grouped_moments(
     One keyed aggregate, map-side combined; per-group state is three
     decimals + a count regardless of group size.
     """
-    f = int(scale_factor)
-    # the pre-scale cast must keep exactly the digits scale_factor
-    # preserves: a hard-coded decimal(18,2) would round 1.234 to 1.23
-    # BEFORE a x1000 scale, silently losing the precision the caller
-    # asked for — so derive the decimal scale from scale_factor (and
-    # require a power of ten, the only scale a decimal cast can mirror)
-    digits = len(str(f)) - 1
-    if f <= 0 or 10**digits != f:
-        raise ValueError(
-            f"grouped_moments: scale_factor must be a positive power "
-            f"of 10, got {scale_factor}"
-        )
-    c = (F.col(value_col).cast(f"decimal(18,{digits})") * f).cast("decimal(20,0)")
+    f, c = _scaled_int("grouped_moments", value_col, scale_factor)
     agg = df.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(c).cast("decimal(38,0)").alias("_s1"),
@@ -260,14 +267,7 @@ def welch_ab_stats(
     reduce. ``variant_col`` must take exactly the values 'A' and 'B'
     for rows that participate.
     """
-    f = int(scale_factor)
-    digits = len(str(f)) - 1
-    if f <= 0 or 10**digits != f:
-        raise ValueError(
-            f"welch_ab_stats: scale_factor must be a positive power "
-            f"of 10, got {scale_factor}"
-        )
-    c = (F.col(value_col).cast(f"decimal(18,{digits})") * f).cast("decimal(20,0)")
+    f, c = _scaled_int("welch_ab_stats", value_col, scale_factor)
     is_a = F.col(variant_col) == "A"
     is_b = F.col(variant_col) == "B"
     agg = df.agg(

@@ -154,6 +154,14 @@ def proportional_rebalance(
             ((F.col("_scale") * F.col("_share")) / F.col("_n")).alias("_rate"),
         )
     )
+    return _keep_at_rate(df, rates, group_col, id_cols, salt)
+
+
+def _keep_at_rate(
+    df: DataFrame, rates: DataFrame, group_col: str, id_cols: list[str], salt: str
+) -> DataFrame:
+    """Keep each row whose hash bucket falls under its group's
+    ``_rate`` (per-group rates broadcast from ``rates``)."""
     bucket = hash_bucket(id_cols, salt)
     # in-engine threshold: lower/lpad(hex(floor(rate * 16^8))); the
     # bottleneck group's rate is exactly 1.0, which needs the explicit
@@ -211,17 +219,7 @@ def temperature_rebalance(
         group_col,
         F.round((scale * F.col("_share")) / F.col("_n"), 9).alias("_rate"),
     )
-    bucket = hash_bucket(id_cols, salt)
-    threshold = F.lpad(
-        F.lower(F.hex(F.floor(F.col("_rate") * F.lit(float(_HEX_SPACE))))),
-        _HEX_DIGITS,
-        "0",
-    )
-    return (
-        df.join(F.broadcast(rates), on=group_col)
-        .filter((F.col("_rate") >= 1.0) | (bucket < threshold))
-        .drop("_rate")
-    )
+    return _keep_at_rate(df, rates, group_col, id_cols, salt)
 
 
 def weighted_sample_keys(
@@ -373,6 +371,57 @@ def stratified_kfold(
     )
 
 
+def _score_buckets(
+    op: str,
+    scored: DataFrame,
+    score_col: str,
+    id_col: str,
+    salt: str,
+    max_score: int,
+    bucket_hex_digits: int,
+) -> DataFrame:
+    """``scored`` plus the content hash ``__h``, its ``__hb`` prefix
+    bucket and the composite bucket ``__cb = (max_score - score) *
+    16^d + __hb``, monotone in (score DESC, hash ASC). A score that is
+    not an integer in [0, max_score] raises (naming ``op``) at
+    execution instead of silently corrupting the order."""
+    n_hb = 16**bucket_hex_digits
+    h = F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string")))
+    s_raw = F.col(score_col)
+    s_int = s_raw.cast("long")
+    s_valid = (
+        s_raw.isNotNull()
+        & (s_int >= 0)
+        & (s_int <= max_score)
+        & (s_int.cast("double") == s_raw.cast("double"))
+    )
+    # coalesce evaluates left-to-right: valid rows never reach the
+    # raise; __cb depends on it, so it cannot be pruned
+    s_checked = F.coalesce(
+        F.when(s_valid, s_int),
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    f"{op}: {score_col} must be an integer in "
+                    f"[0, {max_score}], got "
+                ),
+                F.coalesce(s_raw.cast("string"), F.lit("NULL")),
+            )
+        ).cast("long"),
+    )
+    return (
+        scored.withColumn("__h", h)
+        .withColumn(
+            "__hb",
+            F.conv(F.substring("__h", 1, bucket_hex_digits), 16, 10).cast("long"),
+        )
+        .withColumn(
+            "__cb",
+            (F.lit(max_score) - s_checked) * n_hb + F.col("__hb"),
+        )
+    )
+
+
 def budget_select(
     scored: DataFrame,
     score_col: str,
@@ -402,41 +451,10 @@ def budget_select(
     compare, so the filter is exact and engine-stable (integer
     weights, no float accumulation).
     """
-    n_hb = 16**bucket_hex_digits
-    h = F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string")))
     w = F.col(weight_col).cast("long")
-    s_raw = F.col(score_col)
-    s_int = s_raw.cast("long")
-    s_valid = (
-        s_raw.isNotNull()
-        & (s_int >= 0)
-        & (s_int <= max_score)
-        & (s_int.cast("double") == s_raw.cast("double"))
-    )
-    # coalesce evaluates left-to-right: valid rows never reach the
-    # raise; __cb depends on it, so it cannot be pruned
-    s_checked = F.coalesce(
-        F.when(s_valid, s_int),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"budget_select: {score_col} must be an integer in "
-                    f"[0, {max_score}], got "
-                ),
-                F.coalesce(s_raw.cast("string"), F.lit("NULL")),
-            )
-        ).cast("long"),
-    )
-    out = (
-        scored.withColumn("__h", h)
-        .withColumn(
-            "__hb",
-            F.conv(F.substring("__h", 1, bucket_hex_digits), 16, 10).cast("long"),
-        )
-        .withColumn(
-            "__cb",
-            (F.lit(max_score) - s_checked) * n_hb + F.col("__hb"),
-        )
+    out = _score_buckets(
+        "budget_select", scored, score_col, id_col, salt, max_score,
+        bucket_hex_digits,
     )
     totals = out.groupBy("__cb").agg(F.sum(w).alias("__tot"))
     w_base = Window.orderBy("__cb").rowsBetween(Window.unboundedPreceding, -1)
@@ -486,40 +504,9 @@ def curriculum_order(
     """
     from nhl_data_warehouse_spark.operators.layout import two_level_rank
 
-    n_hb = 16 ** bucket_hex_digits
-    h = F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string")))
-    s_raw = F.col(score_col)
-    s_int = s_raw.cast("long")
-    s_valid = (
-        s_raw.isNotNull()
-        & (s_int >= 0)
-        & (s_int <= max_score)
-        & (s_int.cast("double") == s_raw.cast("double"))
-    )
-    # coalesce evaluates left-to-right, so valid rows never reach the
-    # raise_error branch; __cb depends on it, so it cannot be pruned
-    s_checked = F.coalesce(
-        F.when(s_valid, s_int),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"curriculum_order: {score_col} must be an integer in "
-                    f"[0, {max_score}], got "
-                ),
-                F.coalesce(s_raw.cast("string"), F.lit("NULL")),
-            )
-        ).cast("long"),
-    )
-    out = (
-        scored.withColumn("__h", h)
-        .withColumn(
-            "__hb",
-            F.conv(F.substring("__h", 1, bucket_hex_digits), 16, 10).cast("long"),
-        )
-        .withColumn(
-            "__cb",
-            (F.lit(max_score) - s_checked) * n_hb + F.col("__hb"),
-        )
+    out = _score_buckets(
+        "curriculum_order", scored, score_col, id_col, salt, max_score,
+        bucket_hex_digits,
     )
     ranked = two_level_rank(out, "__cb", [F.col("__h"), F.col(id_col)])
     return ranked.withColumn("curriculum_pos", F.col("__rn")).drop(

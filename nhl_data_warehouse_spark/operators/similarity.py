@@ -63,18 +63,15 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assume_normalized: bool = False,
 ) -> DataFrame:
     """Exact top-k by cosine to ``query_vec`` (a literal array column,
     e.g. ``F.array(*[F.lit(x) for x in vec])`` or a 1-row broadcast).
     Ties broken by id for determinism. Cosine rounded to 6 dp so
     downstream comparisons are stable across engines.
     """
-    dot = _dot(F.col(vec_col), query_vec)
-    if assume_normalized:
-        cos = dot
-    else:
-        cos = dot / (_norm(F.col(vec_col)) * _norm(query_vec))
+    cos = _dot(F.col(vec_col), query_vec) / (
+        _norm(F.col(vec_col)) * _norm(query_vec)
+    )
     # + 0.0 maps -0.0 to +0.0 (orthogonal vectors can round to negative
     # zero in DuckDB while Spark's round clamps it — the driver's repr
     # hash distinguishes the two)
@@ -110,13 +107,51 @@ def lsh_hyperplane_buckets(
     """Assign each vector an LSH bucket id in [0, 2^n_planes): bit p is
     the sign of the dot product with ±1 hyperplane p. Entirely
     JVM-side expression work — a narrow projection, no shuffle."""
-    planes = plane_signs(n_planes, dim)
-    bucket = F.lit(0)
-    for p, signs in enumerate(planes):
-        plane_col = F.array(*[F.lit(s) for s in signs])
-        d = _dot(F.col(vec_col), plane_col)
-        bucket = bucket + F.when(d > 0, F.shiftleft(F.lit(1), p)).otherwise(F.lit(0))
+    bucket = _lsh_bucket(F.col(vec_col), n_planes, dim)
     return embeddings.select(id_col, vec_col, bucket.alias("bucket"))
+
+
+def _lsh_bucket(vec: Column, n_planes: int, dim: int) -> Column:
+    """The LSH bucket id of ``vec``: bit p is the sign of its dot
+    product with ±1 hyperplane p."""
+    bucket = F.lit(0)
+    for p, signs in enumerate(plane_signs(n_planes, dim)):
+        plane_col = F.array(*[F.lit(s) for s in signs])
+        d = _dot(vec, plane_col)
+        bucket = bucket + F.when(d > 0, F.shiftleft(F.lit(1), p)).otherwise(F.lit(0))
+    return bucket
+
+
+def _normed_self_join(
+    df: DataFrame, key: str, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``df`` with each vector's norm ``_nv`` folded once per row (a
+    per-pair fold would redo two 64-element folds per candidate) and
+    pinned, and its self-join on ``key``: (key, a_id, _va, _na, b_id,
+    _vb, _nb)."""
+    df = df.withColumn("_nv", _norm(F.col(vec_col)))
+    df = pin(df)  # both self-join sides read it
+    a = df.select(
+        F.col(id_col).alias("a_id"),
+        F.col(vec_col).alias("_va"),
+        F.col("_nv").alias("_na"),
+        key,
+    )
+    b = df.select(
+        F.col(id_col).alias("b_id"),
+        F.col(vec_col).alias("_vb"),
+        F.col("_nv").alias("_nb"),
+        key,
+    )
+    return df, a.join(b, on=key)
+
+
+def _pair_cosine() -> Column:
+    """6dp cosine of a ``_normed_self_join`` pair."""
+    return F.round(
+        _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
+        6,
+    )
 
 
 def embedding_near_dup_pairs(
@@ -138,29 +173,10 @@ def embedding_near_dup_pairs(
     Cosine is computed once per surviving candidate pair.
     """
     bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
-    # per-row norm folded once before the self-join (per-pair folds
-    # would redo two 64-element folds per candidate)
-    bucketed = bucketed.withColumn("_nv", _norm(F.col(vec_col)))
-    bucketed = pin(bucketed)  # both join sides read it
-    a = bucketed.select(
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("_va"),
-        F.col("_nv").alias("_na"),
-        "bucket",
-    )
-    b = bucketed.select(
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_nv").alias("_nb"),
-        "bucket",
-    )
-    pairs = a.join(b, on="bucket").filter(F.col("a_id") < F.col("b_id"))
-    cos = F.round(
-        _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-        6,
-    )
+    _, pairs = _normed_self_join(bucketed, "bucket", id_col, vec_col)
     return (
-        pairs.select("a_id", "b_id", cos.alias("cosine"))
+        pairs.filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", _pair_cosine().alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -216,28 +232,11 @@ def _bucketed_cosine_pairs(
     exact 6dp cosine — the common core of the kNN join and hard-negative
     mining. Fan-out is sum over buckets of n_b^2 (never all-pairs)."""
     bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
-    # norms are per-vector: fold once per row BEFORE the self-join —
-    # per-pair norm folds would redo two 64-element folds per candidate
-    bucketed = bucketed.withColumn("_nv", _norm(F.col(vec_col)))
-    bucketed = pin(bucketed)  # both self-join sides read it
-    a = bucketed.select(
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("_va"),
-        F.col("_nv").alias("_na"),
-        "bucket",
+    _, pairs = _normed_self_join(bucketed, "bucket", id_col, vec_col)
+    cos = _pair_cosine() + F.lit(0.0)
+    return pairs.filter(F.col("a_id") != F.col("b_id")).select(
+        "a_id", "b_id", cos.alias("cosine")
     )
-    b = bucketed.select(
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_nv").alias("_nb"),
-        "bucket",
-    )
-    pairs = a.join(b, on="bucket").filter(F.col("a_id") != F.col("b_id"))
-    cos = F.round(
-        _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-        6,
-    ) + F.lit(0.0)
-    return pairs.select("a_id", "b_id", cos.alias("cosine"))
 
 
 def knn_join_bucketed(
@@ -333,27 +332,11 @@ def semantic_dedup(
     Returns the KEPT rows as (id, cell_id).
     """
     assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
-    assigned = assigned.withColumn("_nv", _norm(F.col(vec_col)))
-    assigned = pin(assigned)  # pair build (2 sides) + final anti-join
-    a = assigned.select(
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("_va"),
-        F.col("_nv").alias("_na"),
-        "cell_id",
-    )
-    b = assigned.select(
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_nv").alias("_nb"),
-        "cell_id",
-    )
-    pairs = a.join(b, on="cell_id").filter(F.col("a_id") < F.col("b_id"))
-    cos = F.round(
-        _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-        6,
-    )
+    # the pinned frame feeds the pair build (2 sides) + final anti-join
+    assigned, pairs = _normed_self_join(assigned, "cell_id", id_col, vec_col)
     dup_ids = (
-        pairs.select("b_id", cos.alias("_cos"))
+        pairs.filter(F.col("a_id") < F.col("b_id"))
+        .select("b_id", _pair_cosine().alias("_cos"))
         .filter(F.col("_cos") >= threshold)
         .select(F.col("b_id").alias(id_col))
         .distinct()
@@ -470,17 +453,9 @@ def ann_bucketed_topk(
     recall, more work) or multi-probe (union adjacent buckets).
     """
     bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
-    planes = plane_signs(n_planes, dim)
-    qb = F.lit(0)
-    for p, signs in enumerate(planes):
-        plane_col = F.array(*[F.lit(s) for s in signs])
-        d = _dot(query_vec, plane_col)
-        qb = qb + F.when(d > 0, F.shiftleft(F.lit(1), p)).otherwise(F.lit(0))
+    qb = _lsh_bucket(query_vec, n_planes, dim)
     candidates = bucketed.filter(F.col("bucket") == qb)
-    return cosine_topk(
-        candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col,
-        assume_normalized=False,
-    )
+    return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def vector_stats_pandas(
@@ -525,6 +500,38 @@ def vector_stats_pandas(
     )
 
 
+def _sqdist(a: Column, b: Column) -> Column:
+    """Exact squared L2 distance of two equal-length float arrays, in
+    double (sequential left fold)."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _subvectors(vec_col: str, dim: int, m: int) -> Column:
+    """Explode the vector into one ``sv`` row (subspace, subvec) per
+    each of its ``m`` equal slices."""
+    d_sub = dim // m
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(s).alias("subspace"),
+                    F.slice(F.col(vec_col), s * d_sub + 1, d_sub).alias("subvec"),
+                )
+                for s in range(m)
+            ]
+        )
+    ).alias("sv")
+
+
 def pq_encode(
     embeddings: DataFrame,
     dim: int,
@@ -548,18 +555,7 @@ def pq_encode(
     each scoring touches — together they are the standard IVFPQ index.
     """
     assert dim % m == 0
-    d_sub = dim // m
-    subs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("subspace"),
-                    F.slice(F.col(vec_col), s * d_sub + 1, d_sub).alias("subvec"),
-                )
-                for s in range(m)
-            ]
-        )
-    ).alias("sv")
+    subs = _subvectors(vec_col, dim, m)
     vec_subs = embeddings.select(F.col(id_col), subs).select(
         id_col, "sv.subspace", "sv.subvec"
     )
@@ -568,16 +564,7 @@ def pq_encode(
         .select(F.col(id_col).alias("code_id"), subs)
         .select("code_id", "sv.subspace", F.col("sv.subvec").alias("codevec"))
     )
-    sqdist = F.aggregate(
-        F.zip_with(
-            F.col("subvec"),
-            F.col("codevec"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sqdist = _sqdist(F.col("subvec"), F.col("codevec"))
     scored = vec_subs.join(F.broadcast(code_subs), on="subspace").select(
         id_col,
         "subspace",
@@ -639,18 +626,7 @@ def ivfpq_topk(
     codes = pq_encode(embeddings, dim, m, n_codes, id_col, vec_col).select(
         id_col, "subspace", "code"
     )
-    d_sub = dim // m
-    subs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("subspace"),
-                    F.slice(F.col(vec_col), s * d_sub + 1, d_sub).alias("subvec"),
-                )
-                for s in range(m)
-            ]
-        )
-    ).alias("sv")
+    subs = _subvectors(vec_col, dim, m)
     qsubs = (
         embeddings.filter(F.col(id_col) == query_id)
         .select(subs)
@@ -661,16 +637,7 @@ def ivfpq_topk(
         .select(F.col(id_col).alias("code"), subs)
         .select("code", "sv.subspace", F.col("sv.subvec").alias("codevec"))
     )
-    sqdist = F.aggregate(
-        F.zip_with(
-            F.col("qsub"),
-            F.col("codevec"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sqdist = _sqdist(F.col("qsub"), F.col("codevec"))
     adc = qsubs.join(cbook, on="subspace").select(
         "subspace",
         "code",
@@ -717,16 +684,7 @@ def kmeans_lloyd_step(
     centroids = embeddings.filter(F.col(id_col) < n_centroids).select(
         F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cv")
     )
-    sqdist = F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            F.col("_cv"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sqdist = _sqdist(F.col(vec_col), F.col("_cv"))
     scored = embeddings.crossJoin(F.broadcast(centroids)).select(
         id_col,
         vec_col,
@@ -829,12 +787,7 @@ def ann_multiprobe_topk(
     buckets' partitions; candidates then rank by exact cosine.
     """
     bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
-    planes = plane_signs(n_planes, dim)
-    qb = F.lit(0)
-    for p, signs in enumerate(planes):
-        plane_col = F.array(*[F.lit(s) for s in signs])
-        d = _dot(query_vec, plane_col)
-        qb = qb + F.when(d > 0, F.shiftleft(F.lit(1), p)).otherwise(F.lit(0))
+    qb = _lsh_bucket(query_vec, n_planes, dim)
     candidates = bucketed.filter(
         F.bit_count(F.col("bucket").bitwiseXOR(qb)) <= max_flips
     )

@@ -28,24 +28,27 @@ def _bucket(salt: str, col: F.Column | str) -> F.Column:
     return F.substring(F.md5(F.concat(F.lit(salt), F.col(col))), 1, CMS_BUCKET_HEX)
 
 
+def _cms_cells(term_col: str) -> F.Column:
+    """One ``rb`` (row_id, bucket) row per CMS hash row of a term."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("row_id"),
+                    _bucket(salt, term_col).alias("bucket"),
+                )
+                for i, salt in enumerate(CMS_SALTS)
+            ]
+        )
+    ).alias("rb")
+
+
 def countmin_counters(items: DataFrame, term_col: str = "term") -> DataFrame:
     """Build the CMS counter table (row_id, bucket, c) from one row
     per item occurrence. 4 x 256 counters regardless of input size —
     the partial aggregation collapses each partition to at most 1024
     rows before any shuffle."""
-    occ = items.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row_id"),
-                        _bucket(salt, term_col).alias("bucket"),
-                    )
-                    for i, salt in enumerate(CMS_SALTS)
-                ]
-            )
-        ).alias("rb")
-    ).select("rb.row_id", "rb.bucket")
+    occ = items.select(_cms_cells(term_col)).select("rb.row_id", "rb.bucket")
     return occ.groupBy("row_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
 
 
@@ -57,21 +60,9 @@ def countmin_estimates(items: DataFrame, term_col: str = "term") -> DataFrame:
     items = pin(items)  # counters + truth + probe all read it
     counters = countmin_counters(items, term_col)
     truth = items.groupBy(term_col).agg(F.count(F.lit(1)).alias("true_count"))
-    probes = truth.select(
-        term_col,
-        "true_count",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row_id"),
-                        _bucket(salt, term_col).alias("bucket"),
-                    )
-                    for i, salt in enumerate(CMS_SALTS)
-                ]
-            )
-        ).alias("rb"),
-    ).select(term_col, "true_count", "rb.row_id", "rb.bucket")
+    probes = truth.select(term_col, "true_count", _cms_cells(term_col)).select(
+        term_col, "true_count", "rb.row_id", "rb.bucket"
+    )
     return (
         probes.join(F.broadcast(counters), on=["row_id", "bucket"])
         .groupBy(term_col, "true_count")

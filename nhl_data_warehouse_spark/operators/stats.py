@@ -41,16 +41,82 @@ MW_SIGMA = """
 """
 
 
+def ordered_sum(order_col: str, value_col: str) -> Column:
+    """Aggregate: the double sum of ``value_col`` folded in
+    ``order_col`` order — the engine-stable twin of DuckDB's
+    ``SUM(value ORDER BY key)`` (a plain SUM of doubles adds in
+    partition order)."""
+    return F.aggregate(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct(order_col, value_col))),
+            lambda s: s[value_col],
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _cents_histogram(
-    df: DataFrame, value_col: str, is_group1: Column, scale: int
+    df: DataFrame, value_col: str, is_group1: Column, scale: int, *keys: str
 ) -> DataFrame:
-    """(cell, n1v, nv) histogram over the fixed-point grain."""
+    """(keys, cell, n1v, nv) histogram over the fixed-point grain."""
     vals = df.where(F.col(value_col).isNotNull()).select(
+        *keys,
         F.round(F.col(value_col) * scale).cast("long").alias("c"),
         F.when(is_group1, 1).otherwise(0).alias("is1"),
     )
-    return vals.groupBy("c").agg(
+    return vals.groupBy(*keys, "c").agg(
         F.sum("is1").alias("n1v"), F.count(F.lit(1)).alias("nv")
+    )
+
+
+def _with_cum_below(hist: DataFrame, *keys: str) -> DataFrame:
+    """``hist`` plus ``cumn``: the rows in cells below ``c`` (within
+    ``keys``) — the midrank base of every rank-sum statistic."""
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy("c")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return hist.withColumn("cumn", F.coalesce(F.sum("nv").over(w), F.lit(0)))
+
+
+def _two_sample_cum(
+    df: DataFrame,
+    value_col: str,
+    is_group1: Column,
+    scale: int,
+    head: tuple = (),
+    *tail: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """Per cell: the ``head`` columns, each side's inclusive
+    cumulative count (cum1, cum2) and the ``tail`` columns; and the
+    one-row side totals (n1, n2)."""
+    hist = _cents_histogram(df, value_col, is_group1, scale).select(
+        "c", "n1v", (F.col("nv") - F.col("n1v")).alias("n2v")
+    )
+    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
+    cum = hist.select(
+        *head,
+        F.sum("n1v").over(w).alias("cum1"),
+        F.sum("n2v").over(w).alias("cum2"),
+        *tail,
+    )
+    tot = cum.agg(
+        F.max("cum1").cast("long").alias("n1"),
+        F.max("cum2").cast("long").alias("n2"),
+    )
+    return cum, tot
+
+
+def _mwu_select(u: DataFrame, *keys: str) -> DataFrame:
+    """U and its tie-corrected z from twice-U ``u2``, ``n``, ``tsum``."""
+    return u.select(
+        *keys,
+        "n1",
+        "n2",
+        F.expr("CAST(u2 AS DOUBLE) / 2.0").alias("u_statistic"),
+        F.expr(f"({MW_MEAN_DIFF}) / ({MW_SIGMA})").alias("z_value"),
     )
 
 
@@ -72,9 +138,7 @@ def mann_whitney_u(
     U is a multiple of 0.5 with magnitude <= n1*n2, exactly
     representable as a double far beyond any real corpus.
     """
-    hist = _cents_histogram(df, value_col, is_group1, scale)
-    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.withColumn("cumn", F.coalesce(F.sum("nv").over(w), F.lit(0)))
+    cum = _with_cum_below(_cents_histogram(df, value_col, is_group1, scale))
     stats = cum.agg(
         F.sum("n1v").cast("long").alias("n1"),
         F.sum("nv").cast("long").alias("n"),
@@ -92,12 +156,7 @@ def mann_whitney_u(
         "tsum",
         (F.col("r2") - F.col("n1") * (F.col("n1") + 1)).alias("u2"),
     )
-    return u.select(
-        "n1",
-        "n2",
-        F.expr("CAST(u2 AS DOUBLE) / 2.0").alias("u_statistic"),
-        F.expr(f"({MW_MEAN_DIFF}) / ({MW_SIGMA})").alias("z_value"),
-    )
+    return _mwu_select(u)
 
 
 def ks_two_sample(
@@ -117,17 +176,7 @@ def ks_two_sample(
     between corpus snapshots actually runs at (ADVICE r11). One row
     out: (n1, n2, d_stat).
     """
-    hist = _cents_histogram(df, value_col, is_group1, scale).select(
-        "c", "n1v", (F.col("nv") - F.col("n1v")).alias("n2v")
-    )
-    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.select(
-        F.sum("n1v").over(w).alias("cum1"), F.sum("n2v").over(w).alias("cum2")
-    )
-    tot = cum.agg(
-        F.max("cum1").cast("long").alias("n1"),
-        F.max("cum2").cast("long").alias("n2"),
-    )
+    cum, tot = _two_sample_cum(df, value_col, is_group1, scale)
     dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
     dnum = cum.crossJoin(F.broadcast(tot)).agg(
         F.max(F.abs(dec("cum1") * dec("n2") - dec("cum2") * dec("n1")))
@@ -180,33 +229,9 @@ def split_conformal_coverage(
     ks_two_sample contract). Two map-side-combined histograms, two
     broadcast scalar joins, one bounded window.
     """
-    v_c = F.round(F.col(value_col) * scale).cast("long")
-    half = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1).isin(
-        *"01234567"
+    cal_hist, eval_hist, cal_tot, k_expr, r_num = _conformal_split(
+        df, id_col, value_col, alpha_num, alpha_den, scale
     )
-    base = df.where(F.col(value_col).isNotNull()).select(
-        v_c.alias("c"), half.alias("is_cal")
-    )
-    cal_hist = (
-        base.where("is_cal").groupBy("c").agg(F.count(F.lit(1)).alias("nv"))
-    )
-    eval_hist = (
-        base.where(~F.col("is_cal"))
-        .groupBy("c")
-        .agg(F.count(F.lit(1)).alias("nv"))
-    )
-    cal_tot = cal_hist.agg(
-        F.sum("nv").cast("long").alias("n_cal"),
-        F.sum(F.col("c") * F.col("nv")).cast("decimal(38,0)").alias("s_cal"),
-    )
-    den_minus = alpha_den - alpha_num
-    k_expr = F.expr(
-        f"CAST(({den_minus} * (n_cal + 1) + {alpha_den} - 1)"
-        f" DIV {alpha_den} AS BIGINT)"
-    )
-    r_num = F.abs(
-        F.col("c").cast("decimal(38,0)") * F.col("n_cal") - F.col("s_cal")
-    ).cast("decimal(38,0)")
     r_hist = (
         cal_hist.crossJoin(F.broadcast(cal_tot))
         .select(r_num.alias("r"), "nv")
@@ -227,33 +252,87 @@ def split_conformal_coverage(
             "nv",
             (r_num <= F.col("q_num")).alias("is_cov"),
         )
-        .agg(
-            F.sum("nv").cast("long").alias("n_eval"),
-            F.sum(F.when(F.col("is_cov"), F.col("nv")).otherwise(0))
-            .cast("long")
-            .alias("n_cov"),
-        )
+        .agg(*_coverage_counts())
     )
     return (
         cal_tot.crossJoin(F.broadcast(thr))
         .crossJoin(F.broadcast(ev))
-        .select(
-            "n_cal",
-            "n_eval",
-            k_expr.alias("k_rank"),
-            F.expr(
-                "CASE WHEN q_num IS NULL THEN CAST(NULL AS DOUBLE)"
-                " ELSE CAST(q_num AS DOUBLE)"
-                f" / (CAST(n_cal AS DOUBLE) * {float(scale)}) END"
-            ).alias("q_hat"),
-            F.expr(
-                "CASE WHEN n_eval IS NULL OR n_eval = 0"
-                " THEN CAST(NULL AS DOUBLE)"
-                " WHEN q_num IS NULL THEN 1.0"
-                " ELSE CAST(n_cov AS DOUBLE) / CAST(n_eval AS DOUBLE) END"
-            ).alias("coverage"),
-        )
+        .select("n_cal", "n_eval", *_conformal_cols(k_expr, scale))
     )
+
+
+def _conformal_split(
+    df: DataFrame,
+    id_col: str,
+    value_col: str,
+    alpha_num: int,
+    alpha_den: int,
+    scale: int,
+    *key: Column,
+) -> tuple:
+    """The split-conformal building blocks, per ``key`` slice ``g``:
+    calibration and eval value-cell histograms (``nv`` per cell
+    ``c``), calibration totals (n_cal, exact sum s_cal), the rank
+    ``k_expr`` and the residual numerator ``r_num`` of a cell."""
+    keys = ["g"] if key else []
+    v_c = F.round(F.col(value_col) * scale).cast("long")
+    half = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1).isin(
+        *"01234567"
+    )
+    base = df.where(F.col(value_col).isNotNull()).select(
+        *key, v_c.alias("c"), half.alias("is_cal")
+    )
+    cal_hist = (
+        base.where("is_cal")
+        .groupBy(*keys, "c")
+        .agg(F.count(F.lit(1)).alias("nv"))
+    )
+    eval_hist = (
+        base.where(~F.col("is_cal"))
+        .groupBy(*keys, "c")
+        .agg(F.count(F.lit(1)).alias("nv"))
+    )
+    cal_tot = cal_hist.groupBy(*keys).agg(
+        F.sum("nv").cast("long").alias("n_cal"),
+        F.sum(F.col("c") * F.col("nv")).cast("decimal(38,0)").alias("s_cal"),
+    )
+    den_minus = alpha_den - alpha_num
+    k_expr = F.expr(
+        f"CAST(({den_minus} * (n_cal + 1) + {alpha_den} - 1)"
+        f" DIV {alpha_den} AS BIGINT)"
+    )
+    r_num = F.abs(
+        F.col("c").cast("decimal(38,0)") * F.col("n_cal") - F.col("s_cal")
+    ).cast("decimal(38,0)")
+    return cal_hist, eval_hist, cal_tot, k_expr, r_num
+
+
+def _coverage_counts() -> list[Column]:
+    """Eval rows ``n_eval`` and covered rows ``n_cov``."""
+    return [
+        F.sum("nv").cast("long").alias("n_eval"),
+        F.sum(F.when(F.col("is_cov"), F.col("nv")).otherwise(0))
+        .cast("long")
+        .alias("n_cov"),
+    ]
+
+
+def _conformal_cols(k_expr: Column, scale: int) -> list[Column]:
+    """k_rank, the interval half-width q_hat and the eval coverage."""
+    return [
+        k_expr.alias("k_rank"),
+        F.expr(
+            "CASE WHEN q_num IS NULL THEN CAST(NULL AS DOUBLE)"
+            " ELSE CAST(q_num AS DOUBLE)"
+            f" / (CAST(n_cal AS DOUBLE) * {float(scale)}) END"
+        ).alias("q_hat"),
+        F.expr(
+            "CASE WHEN n_eval IS NULL OR n_eval = 0"
+            " THEN CAST(NULL AS DOUBLE)"
+            " WHEN q_num IS NULL THEN 1.0"
+            " ELSE CAST(n_cov AS DOUBLE) / CAST(n_eval AS DOUBLE) END"
+        ).alias("coverage"),
+    ]
 
 
 def grouped_split_conformal_coverage(
@@ -277,35 +356,10 @@ def grouped_split_conformal_coverage(
     rows emit no row (no interval without calibration); slices with
     no eval rows report NULL coverage.
     """
-    v_c = F.round(F.col(value_col) * scale).cast("long")
-    half = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1).isin(
-        *"01234567"
+    cal_hist, eval_hist, cal_tot, k_expr, r_num = _conformal_split(
+        df, id_col, value_col, alpha_num, alpha_den, scale,
+        F.col(group_col).alias("g"),
     )
-    base = df.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("g"), v_c.alias("c"), half.alias("is_cal")
-    )
-    cal_hist = (
-        base.where("is_cal")
-        .groupBy("g", "c")
-        .agg(F.count(F.lit(1)).alias("nv"))
-    )
-    eval_hist = (
-        base.where(~F.col("is_cal"))
-        .groupBy("g", "c")
-        .agg(F.count(F.lit(1)).alias("nv"))
-    )
-    cal_tot = cal_hist.groupBy("g").agg(
-        F.sum("nv").cast("long").alias("n_cal"),
-        F.sum(F.col("c") * F.col("nv")).cast("decimal(38,0)").alias("s_cal"),
-    )
-    den_minus = alpha_den - alpha_num
-    k_expr = F.expr(
-        f"CAST(({den_minus} * (n_cal + 1) + {alpha_den} - 1)"
-        f" DIV {alpha_den} AS BIGINT)"
-    )
-    r_num = F.abs(
-        F.col("c").cast("decimal(38,0)") * F.col("n_cal") - F.col("s_cal")
-    ).cast("decimal(38,0)")
     r_hist = (
         cal_hist.join(cal_tot, on="g")
         .select("g", r_num.alias("r"), "nv")
@@ -329,12 +383,7 @@ def grouped_split_conformal_coverage(
         .join(thr, on="g", how="left")
         .select("g", "nv", (r_num <= F.col("q_num")).alias("is_cov"))
         .groupBy("g")
-        .agg(
-            F.sum("nv").cast("long").alias("n_eval"),
-            F.sum(F.when(F.col("is_cov"), F.col("nv")).otherwise(0))
-            .cast("long")
-            .alias("n_cov"),
-        )
+        .agg(*_coverage_counts())
     )
     return (
         cal_tot.join(thr, on="g", how="left")
@@ -343,18 +392,7 @@ def grouped_split_conformal_coverage(
             F.col("g").alias(group_col),
             "n_cal",
             F.coalesce("n_eval", F.lit(0)).cast("long").alias("n_eval"),
-            k_expr.alias("k_rank"),
-            F.expr(
-                "CASE WHEN q_num IS NULL THEN CAST(NULL AS DOUBLE)"
-                " ELSE CAST(q_num AS DOUBLE)"
-                f" / (CAST(n_cal AS DOUBLE) * {float(scale)}) END"
-            ).alias("q_hat"),
-            F.expr(
-                "CASE WHEN n_eval IS NULL OR n_eval = 0"
-                " THEN CAST(NULL AS DOUBLE)"
-                " WHEN q_num IS NULL THEN 1.0"
-                " ELSE CAST(n_cov AS DOUBLE) / CAST(n_eval AS DOUBLE) END"
-            ).alias("coverage"),
+            *_conformal_cols(k_expr, scale),
         )
     )
 
@@ -496,40 +534,21 @@ def qq_drift_deciles(
     one 9-row join. Empty sides produce no rows for their deciles
     (inner join: the table needs both quantiles).
     """
-    hist = _cents_histogram(df, value_col, is_group1, scale).select(
-        "c", "n1v", (F.col("nv") - F.col("n1v")).alias("n2v")
-    )
-    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.select(
-        "c",
-        F.sum("n1v").over(w).alias("cum1"),
-        F.sum("n2v").over(w).alias("cum2"),
-    )
-    tot = cum.agg(
-        F.max("cum1").cast("long").alias("n1"),
-        F.max("cum2").cast("long").alias("n2"),
-    )
+    cum, tot = _two_sample_cum(df, value_col, is_group1, scale, ("c",))
     deciles = F.explode(
         F.array(*[F.lit(q) for q in range(10, 100, 10)])
     ).alias("decile")
     grid = cum.crossJoin(F.broadcast(tot)).select(
         "c", "cum1", "cum2", "n1", "n2", deciles
     )
-    qa = (
+    qa, qb = (
         grid.where(
-            (F.col("n1") > 0)
-            & (F.col("cum1") * 100 >= F.col("decile") * F.col("n1"))
+            (F.col(f"n{s}") > 0)
+            & (F.col(f"cum{s}") * 100 >= F.col("decile") * F.col(f"n{s}"))
         )
         .groupBy("decile")
-        .agg(F.min("c").alias("ca"))
-    )
-    qb = (
-        grid.where(
-            (F.col("n2") > 0)
-            & (F.col("cum2") * 100 >= F.col("decile") * F.col("n2"))
-        )
-        .groupBy("decile")
-        .agg(F.min("c").alias("cb"))
+        .agg(F.min("c").alias(out))
+        for s, out in ((1, "ca"), (2, "cb"))
     )
     return (
         qa.join(qb, on="decile")
@@ -587,20 +606,9 @@ def wasserstein_two_sample(
     bounded-grain contract; cum and lead share one WindowExec), one
     bounded aggregate. Nothing row-scale passes the window.
     """
-    hist = _cents_histogram(df, value_col, is_group1, scale).select(
-        "c", "n1v", (F.col("nv") - F.col("n1v")).alias("n2v")
-    )
-    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
-    wl = Window.orderBy("c")
-    cum = hist.select(
-        "c",
-        F.sum("n1v").over(w).alias("cum1"),
-        F.sum("n2v").over(w).alias("cum2"),
-        F.lead("c").over(wl).alias("cnext"),
-    )
-    tot = cum.agg(
-        F.max("cum1").cast("long").alias("n1"),
-        F.max("cum2").cast("long").alias("n2"),
+    cum, tot = _two_sample_cum(
+        df, value_col, is_group1, scale, ("c",),
+        F.lead("c").over(Window.orderBy("c")).alias("cnext"),
     )
     term = F.abs(
         F.col("cum1").cast("decimal(19,0)") * F.col("n2").cast("decimal(19,0)")
@@ -672,10 +680,17 @@ def rank_auc(
     scores in [0, 1]), never rows. One row out:
     (n_pos, n_neg, auc).
     """
-    hist = _cents_histogram(df, score_col, is_positive, scale)
-    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.withColumn("cumn", F.coalesce(F.sum("nv").over(w), F.lit(0)))
-    stats = cum.agg(
+    return _rank_auc(df, score_col, is_positive, scale)
+
+
+def _rank_auc(
+    df: DataFrame, score_col: str, is_positive: Column, scale: int, *keys: str
+) -> DataFrame:
+    """``rank_auc`` per ``keys`` slice (one row with no keys)."""
+    cum = _with_cum_below(
+        _cents_histogram(df, score_col, is_positive, scale, *keys), *keys
+    )
+    stats = cum.groupBy(*keys).agg(
         F.sum("n1v").cast("long").alias("n1"),
         (F.sum("nv") - F.sum("n1v")).cast("long").alias("n2"),
         F.sum(F.col("n1v") * (2 * F.col("cumn") + F.col("nv") + 1))
@@ -687,6 +702,7 @@ def rank_auc(
     # DuckDB's double division gives inf/NaN, so make NULL explicit
     # on both engines (the oracle carries the same CASE WHEN).
     return stats.select(
+        *keys,
         F.col("n1").alias("n_pos"),
         F.col("n2").alias("n_neg"),
         F.expr(
@@ -765,15 +781,12 @@ def spearman_rho(
         F.sum("nxy").cast("long").alias("n"),
         F.sum(dnxy * F.col("ax")).cast("decimal(38,0)").alias("sx"),
         F.sum(dnxy * F.col("ay")).cast("decimal(38,0)").alias("sy"),
-        F.sum(dnxy * F.col("ax") * F.col("ax"))
-        .cast("decimal(38,0)")
-        .alias("sxx"),
-        F.sum(dnxy * F.col("ay") * F.col("ay"))
-        .cast("decimal(38,0)")
-        .alias("syy"),
-        F.sum(dnxy * F.col("ax") * F.col("ay"))
-        .cast("decimal(38,0)")
-        .alias("sxy"),
+        *[
+            F.sum(dnxy * F.col(f"a{p}") * F.col(f"a{q}"))
+            .cast("decimal(38,0)")
+            .alias(f"s{p}{q}")
+            for p, q in ("xx", "yy", "xy")
+        ],
     )
     n = "CAST(n AS DECIMAL(38,0))"
     return stats.select(
@@ -849,19 +862,13 @@ def kendall_tau_b(
         .cast("long")
         .alias("nd"),
     )
-    tx = (
-        joint.groupBy("cx")
+    tx, ty = (
+        joint.groupBy(c)
         .agg(F.sum("nxy").alias("nv"))
         .agg(
-            F.sum(F.col("nv") * (F.col("nv") - 1) / 2).cast("long").alias("n1t")
+            F.sum(F.col("nv") * (F.col("nv") - 1) / 2).cast("long").alias(out)
         )
-    )
-    ty = (
-        joint.groupBy("cy")
-        .agg(F.sum("nxy").alias("nv"))
-        .agg(
-            F.sum(F.col("nv") * (F.col("nv") - 1) / 2).cast("long").alias("n2t")
-        )
+        for c, out in (("cx", "n1t"), ("cy", "n2t"))
     )
     tot = joint.agg(F.sum("nxy").cast("long").alias("n"))
     out = (
@@ -1060,37 +1067,52 @@ def grouped_rank_auc(
     scorecard needs (AUC per language, per source, per time bucket);
     degenerate slices (single class) yield explicit NULL.
     """
-    vals = df.where(F.col(score_col).isNotNull()).select(
-        F.col(group_col),
-        F.round(F.col(score_col) * scale).cast("long").alias("c"),
-        F.when(is_positive, 1).otherwise(0).alias("is1"),
+    return _rank_auc(df, score_col, is_positive, scale, group_col)
+
+
+def _score_bin(score_col: str, n_bins: int) -> Column:
+    """Equal-width bin 0..n_bins-1 of a score in [0, 1]."""
+    return F.least(
+        F.floor(F.col(score_col) * n_bins).cast("long"),
+        F.lit(n_bins - 1),
+    ).cast("int")
+
+
+def _bin_prefix_sums(base: DataFrame, *keys: str) -> tuple[DataFrame, ...]:
+    """Per (keys, bin) of ``base`` (keys, bin, y): rows ``nb`` and
+    positives ``ng``; and the PAV interval ends — ``jside`` (bin j,
+    counts before it ``lnb``/``lng``) and ``kside`` (bin k, counts
+    through it ``knb``/``kng``, keys renamed ``<key>k``)."""
+    bins = base.groupBy(*keys, "bin").agg(
+        F.count(F.lit(1)).cast("long").alias("nb"),
+        F.sum("y").cast("long").alias("ng"),
     )
-    hist = vals.groupBy(group_col, "c").agg(
-        F.sum("is1").alias("n1v"), F.count(F.lit(1)).alias("nv")
+    wcum = (
+        Window.partitionBy(*keys)
+        .orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    cum = bins.select(
+        *keys,
+        "bin",
+        "nb",
+        "ng",
+        F.sum("nb").over(wcum).alias("cnb"),
+        F.sum("ng").over(wcum).alias("cng"),
     )
-    cum = hist.withColumn("cumn", F.coalesce(F.sum("nv").over(w), F.lit(0)))
-    stats = cum.groupBy(group_col).agg(
-        F.sum("n1v").cast("long").alias("n1"),
-        (F.sum("nv") - F.sum("n1v")).cast("long").alias("n2"),
-        F.sum(F.col("n1v") * (2 * F.col("cumn") + F.col("nv") + 1))
-        .cast("long")
-        .alias("r2"),
+    jside = cum.select(
+        *keys,
+        F.col("bin").alias("j"),
+        (F.col("cnb") - F.col("nb")).alias("lnb"),
+        (F.col("cng") - F.col("ng")).alias("lng"),
     )
-    return stats.select(
-        F.col(group_col),
-        F.col("n1").alias("n_pos"),
-        F.col("n2").alias("n_neg"),
-        F.expr(
-            "CASE WHEN n1 = 0 OR n2 = 0 THEN CAST(NULL AS DOUBLE) "
-            "ELSE CAST(r2 - n1 * (n1 + 1) AS DOUBLE) "
-            "/ CAST(2 * n1 * n2 AS DOUBLE) END"
-        ).alias("auc"),
+    kside = cum.select(
+        *[F.col(k).alias(f"{k}k") for k in keys],
+        F.col("bin").alias("k"),
+        F.col("cnb").alias("knb"),
+        F.col("cng").alias("kng"),
     )
+    return bins, jside, kside
 
 
 def isotonic_calibration_bins(
@@ -1120,38 +1142,13 @@ def isotonic_calibration_bins(
     Output per non-empty bin: (bin, nb, ng, raw_rate, iso_rate) with
     iso_rate monotone non-decreasing in bin.
     """
-    base = df.select(
-        F.least(
-            F.floor(F.col(score_col) * n_bins).cast("long"),
-            F.lit(n_bins - 1),
-        )
-        .cast("int")
-        .alias("bin"),
-        F.col(label_col).cast("long").alias("y"),
-    )
-    bins = base.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("nb"),
-        F.sum("y").cast("long").alias("ng"),
-    )
     # prefix sums over <= n_bins rows: bounded unpartitioned window
     # (same declared class as the benford digit fold)
-    wcum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = bins.select(
-        "bin",
-        "nb",
-        "ng",
-        F.sum("nb").over(wcum).alias("cnb"),
-        F.sum("ng").over(wcum).alias("cng"),
-    )
-    jside = cum.select(
-        F.col("bin").alias("j"),
-        (F.col("cnb") - F.col("nb")).alias("lnb"),
-        (F.col("cng") - F.col("ng")).alias("lng"),
-    )
-    kside = cum.select(
-        F.col("bin").alias("k"),
-        F.col("cnb").alias("knb"),
-        F.col("cng").alias("kng"),
+    bins, jside, kside = _bin_prefix_sums(
+        df.select(
+            _score_bin(score_col, n_bins).alias("bin"),
+            F.col(label_col).cast("long").alias("y"),
+        )
     )
     ivl = jside.join(F.broadcast(kside), F.col("j") <= F.col("k")).select(
         "j",
@@ -1186,6 +1183,42 @@ def isotonic_calibration_bins(
     )
 
 
+def _calibration_bins(
+    df: DataFrame, score_col: str, label_col: str, n_bins: int, scale: int
+) -> tuple[DataFrame, DataFrame]:
+    """Rows (bin, pi, y) — score bin, score in exact 1/scale units,
+    label — and per bin the rows ``nb``, exact score sum ``spi`` and
+    positives ``ng``."""
+    pi = F.round(F.col(score_col) * scale).cast("long")
+    y = F.col(label_col).cast("long")
+    base = df.select(
+        _score_bin(score_col, n_bins).alias("bin"), pi.alias("pi"), y.alias("y")
+    )
+    bins = base.groupBy("bin").agg(
+        F.count(F.lit(1)).cast("long").alias("nb"),
+        F.sum(F.col("pi").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("spi"),
+        F.sum("y").cast("long").alias("ng"),
+    )
+    return base, bins
+
+
+def _ssq(scale: int) -> Column:
+    """Exact sum of squared errors, in (1/scale)^2 units, of rows
+    (pi, y)."""
+    sq = F.col("pi") - F.col("y") * scale
+    return F.sum(sq.cast("decimal(38,0)") * sq).cast("decimal(38,0)").alias("ssq")
+
+
+def _brier(scale: int) -> Column:
+    """Brier score from ``ssq`` over ``n_docs``."""
+    return F.expr(
+        "CAST(ssq AS DOUBLE)"
+        f" / (CAST(n_docs AS DOUBLE) * {float(scale) * float(scale)})"
+    ).alias("brier")
+
+
 def expected_calibration_error(
     df: DataFrame,
     score_col: str,
@@ -1214,29 +1247,9 @@ def expected_calibration_error(
     global agg for (N, Brier); the fold runs over n_bins elements on
     one row. No windows, no per-pair work.
     """
-    pi = F.round(F.col(score_col) * scale).cast("long")
-    y = F.col(label_col).cast("long")
-    base = df.select(
-        F.least(
-            F.floor(F.col(score_col) * n_bins).cast("long"),
-            F.lit(n_bins - 1),
-        )
-        .cast("int")
-        .alias("bin"),
-        pi.alias("pi"),
-        y.alias("y"),
-    )
-    bins = base.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("nb"),
-        F.sum(F.col("pi").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("spi"),
-        F.sum("y").cast("long").alias("ng"),
-    )
-    sq = F.col("pi") - F.col("y") * scale
+    base, bins = _calibration_bins(df, score_col, label_col, n_bins, scale)
     tot = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(sq.cast("decimal(38,0)") * sq).cast("decimal(38,0)").alias("ssq"),
+        F.count(F.lit(1)).cast("long").alias("n_docs"), _ssq(scale)
     )
     terms = bins.crossJoin(F.broadcast(tot)).select(
         "bin",
@@ -1262,10 +1275,7 @@ def expected_calibration_error(
         F.col("n_docs"),
         ece.alias("ece"),
         mce.alias("mce"),
-        F.expr(
-            "CAST(ssq AS DOUBLE)"
-            f" / (CAST(n_docs AS DOUBLE) * {float(scale) * float(scale)})"
-        ).alias("brier"),
+        _brier(scale),
     )
 
 
@@ -1302,30 +1312,11 @@ def murphy_decomposition(
     agg; the folds run over n_bins elements on one row. No windows,
     no per-pair work.
     """
-    pi = F.round(F.col(score_col) * scale).cast("long")
-    y = F.col(label_col).cast("long")
-    base_rows = df.select(
-        F.least(
-            F.floor(F.col(score_col) * n_bins).cast("long"),
-            F.lit(n_bins - 1),
-        )
-        .cast("int")
-        .alias("bin"),
-        pi.alias("pi"),
-        y.alias("y"),
-    )
-    bins = base_rows.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("nb"),
-        F.sum(F.col("pi").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("spi"),
-        F.sum("y").cast("long").alias("ng"),
-    )
-    sq = F.col("pi") - F.col("y") * scale
+    base_rows, bins = _calibration_bins(df, score_col, label_col, n_bins, scale)
     tot = base_rows.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("y").cast("long").alias("n_pos"),
-        F.sum(sq.cast("decimal(38,0)") * sq).cast("decimal(38,0)").alias("ssq"),
+        _ssq(scale),
     )
     terms = bins.crossJoin(F.broadcast(tot)).select(
         "bin",
@@ -1366,10 +1357,7 @@ def murphy_decomposition(
         rel.alias("reliability"),
         res.alias("resolution"),
         unc.alias("uncertainty"),
-        F.expr(
-            "CAST(ssq AS DOUBLE)"
-            f" / (CAST(n_docs AS DOUBLE) * {float(scale) * float(scale)})"
-        ).alias("brier"),
+        _brier(scale),
     )
 
 
@@ -1537,44 +1525,13 @@ def grouped_isotonic_calibration_bins(
     Output per (slice, non-empty bin): (group, bin, nb, ng,
     raw_rate, iso_rate) with iso_rate monotone within each slice.
     """
-    base = df.select(
-        F.col(group_col).alias("g"),
-        F.least(
-            F.floor(F.col(score_col) * n_bins).cast("long"),
-            F.lit(n_bins - 1),
-        )
-        .cast("int")
-        .alias("bin"),
-        F.col(label_col).cast("long").alias("y"),
-    )
-    bins = base.groupBy("g", "bin").agg(
-        F.count(F.lit(1)).cast("long").alias("nb"),
-        F.sum("y").cast("long").alias("ng"),
-    )
-    wcum = (
-        Window.partitionBy("g")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = bins.select(
+    bins, jside, kside = _bin_prefix_sums(
+        df.select(
+            F.col(group_col).alias("g"),
+            _score_bin(score_col, n_bins).alias("bin"),
+            F.col(label_col).cast("long").alias("y"),
+        ),
         "g",
-        "bin",
-        "nb",
-        "ng",
-        F.sum("nb").over(wcum).alias("cnb"),
-        F.sum("ng").over(wcum).alias("cng"),
-    )
-    jside = cum.select(
-        "g",
-        F.col("bin").alias("j"),
-        (F.col("cnb") - F.col("nb")).alias("lnb"),
-        (F.col("cng") - F.col("ng")).alias("lng"),
-    )
-    kside = cum.select(
-        F.col("g").alias("gk"),
-        F.col("bin").alias("k"),
-        F.col("cnb").alias("knb"),
-        F.col("cng").alias("kng"),
     )
     ivl = jside.join(
         kside, (F.col("g") == F.col("gk")) & (F.col("j") <= F.col("k"))
@@ -1615,6 +1572,30 @@ def grouped_isotonic_calibration_bins(
     )
 
 
+def _threshold_sweep(
+    df: DataFrame, score_col: str, is_positive: Column, scale: int, *carry: str
+) -> tuple[DataFrame, DataFrame]:
+    """Per score cell ``c`` (with the ``carry`` histogram columns):
+    the cumulative TP/FP of classifying positive at score >= cell, and
+    the one-row class totals (n_pos, n_neg)."""
+    hist = _cents_histogram(df, score_col, is_positive, scale)
+    w = (
+        Window.orderBy(F.col("c").desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum = hist.select(
+        "c",
+        *carry,
+        F.sum("n1v").over(w).alias("tp"),
+        F.sum(F.col("nv") - F.col("n1v")).over(w).alias("fp"),
+    )
+    tot = hist.agg(
+        F.sum("n1v").cast("long").alias("n_pos"),
+        (F.sum("nv") - F.sum("n1v")).cast("long").alias("n_neg"),
+    )
+    return cum, tot
+
+
 def average_precision(
     df: DataFrame,
     score_col: str,
@@ -1642,21 +1623,7 @@ def average_precision(
     DuckDB's double-multiply rounding agree. Single-class inputs
     yield explicit NULL.
     """
-    hist = _cents_histogram(df, score_col, is_positive, scale)
-    w = (
-        Window.orderBy(F.col("c").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = hist.select(
-        "c",
-        "n1v",
-        F.sum("n1v").over(w).alias("tp"),
-        F.sum(F.col("nv") - F.col("n1v")).over(w).alias("fp"),
-    )
-    tot = hist.agg(
-        F.sum("n1v").cast("long").alias("n_pos"),
-        (F.sum("nv") - F.sum("n1v")).cast("long").alias("n_neg"),
-    )
+    cum, tot = _threshold_sweep(df, score_col, is_positive, scale, "n1v")
     terms = (
         cum.where(F.col("n1v") > 0)
         .crossJoin(F.broadcast(tot))
@@ -1721,20 +1688,7 @@ def youden_j_threshold(
     (``classifier_gate_report`` does exactly this). An empty score
     histogram emits ZERO rows.
     """
-    hist = _cents_histogram(df, score_col, is_positive, scale)
-    w = (
-        Window.orderBy(F.col("c").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = hist.select(
-        "c",
-        F.sum("n1v").over(w).alias("tp"),
-        F.sum(F.col("nv") - F.col("n1v")).over(w).alias("fp"),
-    )
-    tot = hist.agg(
-        F.sum("n1v").cast("long").alias("n_pos"),
-        (F.sum("nv") - F.sum("n1v")).cast("long").alias("n_neg"),
-    )
+    cum, tot = _threshold_sweep(df, score_col, is_positive, scale)
     scored = cum.crossJoin(F.broadcast(tot)).select(
         "c",
         "tp",
@@ -1778,6 +1732,13 @@ def youden_j_threshold(
             " ELSE CAST(fp_at AS DOUBLE) / CAST(n_neg AS DOUBLE) END"
         ).alias("fpr"),
     )
+
+
+def _row_weight(weight_col: str | None) -> Column:
+    """Integer row weight: ``weight_col``, or 1 per row without one."""
+    if weight_col is None:
+        return F.lit(1).cast("long")
+    return F.col(weight_col).cast("long")
 
 
 def classifier_gate_report(
@@ -1836,11 +1797,7 @@ def classifier_gate_report(
         # cross join below must never drop the corpus
         .agg(F.min("_tc").alias("_thr_c"))
     )
-    wexpr = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
+    wexpr = _row_weight(weight_col)
     cell = F.round(F.col(score_col) * scale).cast("long")
     gated = df.select(
         F.col(group_col), wexpr.alias("_w"), cell.alias("_c")
@@ -1914,11 +1871,7 @@ def quantile_bucket_report(
     unique Exchanges unpinned vs 24 pinned); released by the
     caller's ``cache_scope`` or the session sweep.
     """
-    wexpr = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
+    wexpr = _row_weight(weight_col)
     cell = F.round(F.col(score_col) * scale).cast("long")
     hist = (
         df.select(
@@ -2350,11 +2303,7 @@ def mwu_screen_by_group(
         F.col(group_col).alias("g"),
         F.round(F.col(value_col) * scale).cast("long").alias("c"),
     )
-    comb = vals.groupBy("c").agg(F.count(F.lit(1)).alias("nv"))
-    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
-    comb = comb.withColumn(
-        "cumn", F.coalesce(F.sum("nv").over(w), F.lit(0))
-    )
+    comb = _with_cum_below(vals.groupBy("c").agg(F.count(F.lit(1)).alias("nv")))
     glob = comb.agg(
         F.sum("nv").cast("long").alias("n"),
         F.sum(dec(F.col("nv")) * dec(F.col("nv")) * F.col("nv") - F.col("nv"))
@@ -2380,13 +2329,7 @@ def mwu_screen_by_group(
         "tsum",
         (F.col("two_r") - dec(F.col("n1")) * (F.col("n1") + 1)).alias("u2"),
     )
-    return res.select(
-        "g",
-        "n1",
-        "n2",
-        F.expr("CAST(u2 AS DOUBLE) / 2.0").alias("u_statistic"),
-        F.expr(f"({MW_MEAN_DIFF}) / ({MW_SIGMA})").alias("z_value"),
-    )
+    return _mwu_select(res, "g")
 
 
 def bh_fdr_select(

@@ -278,6 +278,55 @@ def tfidf_top_terms(
     )
 
 
+def _ngram_slots(arr: Column, n: int) -> Column:
+    """Every n-token window of the token array ``arr``, space-joined,
+    in order; empty below ``n`` tokens."""
+    return F.when(
+        F.size(arr) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(arr) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(arr, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _mean_nll(logp_col: str, name: str) -> Column:
+    """Mean negative of the 6dp decimal log-probabilities
+    ``logp_col``: one exact sum, one double division."""
+    return (-(F.sum(logp_col).cast("double")) / F.count(F.lit(1))).alias(name)
+
+
+def _nll_report(
+    scored: DataFrame, id_col: str, miss_col: str, names: tuple[str, str, str]
+) -> DataFrame:
+    """Per doc of ``scored``: its rows, the rows flagged ``miss_col``
+    (unseen in the reference) and the mean NLL of ``_logp``, named by
+    ``names``."""
+    n_name, miss_name, nll_name = names
+    return scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("long").alias(n_name),
+        F.sum(miss_col).cast("long").alias(miss_name),
+        _mean_nll("_logp", nll_name),
+    )
+
+
+def _ref_vocab(ref_df: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
+    """The reference corpus's token counts ``c`` per ``tok`` (pinned:
+    read by the totals and a score join) and the one-row totals
+    (n_ref tokens, v_ref vocabulary size)."""
+    vocab = (
+        ref_df.select(F.explode(_ws_tokens(text_col)).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    vocab = pin(vocab)
+    totals = vocab.agg(
+        F.sum("c").cast("long").alias("n_ref"),
+        F.count(F.lit(1)).cast("long").alias("v_ref"),
+    )
+    return vocab, totals
+
+
 def word_ngrams(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5
 ) -> DataFrame:
@@ -285,14 +334,7 @@ def word_ngrams(
     Docs shorter than ``n`` tokens produce no rows. Pure array
     expressions (sequence/transform/slice) inside codegen — the
     shuffle-free building block for overlap/contamination checks."""
-    arr = _ws_tokens(text_col)
-    grams = F.when(
-        F.size(arr) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(arr, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _ngram_slots(_ws_tokens(text_col), n)
     return df.select(
         F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram")
     )
@@ -472,11 +514,33 @@ def span_contamination(
     positions), covered_tokens, covered_frac, is_contaminated
     (integer cross-multiplication at ``flag_pct``%).
     """
+    grams = _gram_positions(df, id_col, text_col, n)
+    bench = (
+        grams.where(F.col(id_col) % benchmark_mod == 0).select("g").distinct()
+    )
+    ev = grams.where(F.col(id_col) % benchmark_mod != 0)
+    matched = ev.join(bench, on="g").select(id_col, "i")
+    return _span_report(
+        ev,
+        matched,
+        id_col,
+        n,
+        flag_pct,
+        ("n_matched", "covered_frac", "is_contaminated"),
+    )
+
+
+def _gram_positions(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, n_tokens, i, g) per n-token window of each doc with at
+    least ``n`` whitespace tokens: ``i`` its 1-based start, ``g`` the
+    md5 of its text."""
     arr = _ws_tokens(text_col)
     docs = df.select(
-        F.col(id_col), arr.alias("arr"), F.size(arr).cast("long").alias("n_tokens")
+        F.col(id_col),
+        arr.alias("arr"),
+        F.size(arr).cast("long").alias("n_tokens"),
     ).where(F.size(F.col("arr")) >= n)
-    grams = docs.select(
+    return docs.select(
         F.col(id_col),
         F.col("n_tokens"),
         F.explode(
@@ -488,29 +552,43 @@ def span_contamination(
                 ),
             )
         ).alias("ig"),
-    ).select(id_col, "n_tokens", F.col("ig.i").alias("i"), F.col("ig.g").alias("g"))
-    bench = (
-        grams.where(F.col(id_col) % benchmark_mod == 0).select("g").distinct()
+    ).select(
+        id_col, "n_tokens", F.col("ig.i").alias("i"), F.col("ig.g").alias("g")
     )
-    ev = grams.where(F.col(id_col) % benchmark_mod != 0)
-    counts = ev.groupBy(id_col).agg(
+
+
+def _span_report(
+    grams: DataFrame,
+    matched: DataFrame,
+    id_col: str,
+    n: int,
+    flag_pct: int,
+    names: tuple[str, str, str],
+) -> DataFrame:
+    """Per doc of ``grams``: n_tokens, n_grams, the count of its
+    ``matched`` (id, i) gram positions, the tokens their n-token spans
+    cover, the covered share, and the flag at ``flag_pct``% (integer
+    cross-multiplication). ``names`` are the output names of the
+    match count, the share and the flag."""
+    n_name, frac_name, flag_name = names
+    counts = grams.groupBy(id_col).agg(
         F.first("n_tokens").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_grams"),
     )
-    matched = ev.join(bench, on="g").select(id_col, "i")
-    n_matched = matched.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_matched")
-    )
+    n_matched = matched.groupBy(id_col).agg(F.count(F.lit(1)).alias(n_name))
     covered = (
         matched.select(
-            id_col, F.explode(F.sequence(F.col("i"), F.col("i") + (n - 1))).alias("pos")
+            id_col,
+            F.explode(F.sequence(F.col("i"), F.col("i") + (n - 1))).alias(
+                "pos"
+            ),
         )
         .distinct()
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("covered_tokens"))
     )
     cov = F.coalesce(F.col("covered_tokens"), F.lit(0))
-    nm = F.coalesce(F.col("n_matched"), F.lit(0))
+    nm = F.coalesce(F.col(n_name), F.lit(0))
     return (
         counts.join(n_matched, on=id_col, how="left")
         .join(covered, on=id_col, how="left")
@@ -518,14 +596,14 @@ def span_contamination(
             id_col,
             "n_tokens",
             "n_grams",
-            nm.alias("n_matched"),
+            nm.alias(n_name),
             cov.alias("covered_tokens"),
             (cov.cast("double") / F.col("n_tokens").cast("double")).alias(
-                "covered_frac"
+                frac_name
             ),
             (cov * 100 >= F.col("n_tokens") * flag_pct)
             .cast("int")
-            .alias("is_contaminated"),
+            .alias(flag_name),
         )
     )
 
@@ -628,27 +706,7 @@ def bloom_span_dedup(
     """
     from .membership import bloom_build, bloom_probe
 
-    arr = _ws_tokens(text_col)
-    docs = df.select(
-        F.col(id_col),
-        arr.alias("arr"),
-        F.size(arr).cast("long").alias("n_tokens"),
-    ).where(F.size(F.col("arr")) >= n)
-    grams = docs.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("n_tokens") - (n - 1)),
-                lambda i: F.struct(
-                    i.alias("i"),
-                    F.md5(F.concat_ws(" ", F.slice("arr", i, n))).alias("g"),
-                ),
-            )
-        ).alias("ig"),
-    ).select(
-        id_col, "n_tokens", F.col("ig.i").alias("i"), F.col("ig.g").alias("g")
-    )
+    grams = _gram_positions(df, id_col, text_col, n)
     hist = (
         grams.where(F.col(id_col) % history_mod == 0).select("g").distinct()
     )
@@ -669,42 +727,13 @@ def bloom_span_dedup(
     # exact verify: only the maybe-seen grams meet the history set
     dup_g = maybe.join(hist, on="g")
     matched = batch.join(dup_g, on="g").select(id_col, "i")
-    counts = batch.groupBy(id_col).agg(
-        F.first("n_tokens").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_grams"),
-    )
-    n_dup = matched.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_dup_grams")
-    )
-    covered = (
-        matched.select(
-            id_col,
-            F.explode(F.sequence(F.col("i"), F.col("i") + (n - 1))).alias(
-                "pos"
-            ),
-        )
-        .distinct()
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("covered_tokens"))
-    )
-    cov = F.coalesce(F.col("covered_tokens"), F.lit(0))
-    nd = F.coalesce(F.col("n_dup_grams"), F.lit(0))
-    return (
-        counts.join(n_dup, on=id_col, how="left")
-        .join(covered, on=id_col, how="left")
-        .select(
-            id_col,
-            "n_tokens",
-            "n_grams",
-            nd.alias("n_dup_grams"),
-            cov.alias("covered_tokens"),
-            (cov.cast("double") / F.col("n_tokens").cast("double")).alias(
-                "dup_frac"
-            ),
-            (cov * 100 >= F.col("n_tokens") * flag_pct)
-            .cast("int")
-            .alias("is_flagged"),
-        )
+    return _span_report(
+        batch,
+        matched,
+        id_col,
+        n,
+        flag_pct,
+        ("n_dup_grams", "dup_frac", "is_flagged"),
     )
 
 
@@ -778,9 +807,7 @@ def unigram_logprob_score(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
-            (-(F.sum("logp").cast("double")) / F.count(F.lit(1))).alias(
-                "avg_neg_logprob"
-            ),
+            _mean_nll("logp", "avg_neg_logprob"),
         )
     )
 
@@ -986,14 +1013,7 @@ def repetition_signals(
     movement, and the two per-doc summaries co-partition on the doc
     id for the final join.
     """
-    arr = _ws_tokens(text_col)
-    grams_n = F.when(
-        F.size(arr) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(arr, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams_n = _ngram_slots(_ws_tokens(text_col), n)
     gn = df.select(F.col(id_col), F.explode(grams_n).alias("gram"))
     ng = (
         gn.groupBy(id_col, "gram")
@@ -1329,9 +1349,7 @@ def bigram_logprob_score(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            (-(F.sum("logp").cast("double")) / F.count(F.lit(1))).alias(
-                "avg_neg_logprob2"
-            ),
+            _mean_nll("logp", "avg_neg_logprob2"),
         )
     )
 
@@ -1764,20 +1782,7 @@ def heldout_unigram_nll(
     and join only the tail, as with the in-corpus scorers. OOV
     handling is a LEFT join + coalesce, not a second pass.
     """
-    vocab = (
-        ref_df.select(
-            F.explode(_ws_tokens(text_col)).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    # feeds the (N, V) totals AND the score join — persist so the
-    # reference corpus is scanned once, not twice
-    vocab = pin(vocab)
-    totals = vocab.agg(
-        F.sum("c").cast("long").alias("n_ref"),
-        F.count(F.lit(1)).cast("long").alias("v_ref"),
-    )
+    vocab, totals = _ref_vocab(ref_df, text_col)
     toks = df.select(
         F.col(id_col), F.explode(_ws_tokens(text_col)).alias("tok")
     )
@@ -1803,13 +1808,7 @@ def heldout_unigram_nll(
             .alias("_logp"),
         )
     )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        F.sum("_oov").cast("long").alias("oov_tokens"),
-        (-(F.sum("_logp").cast("double")) / F.count(F.lit(1))).alias(
-            "avg_nll"
-        ),
-    )
+    return _nll_report(scored, id_col, "_oov", ("n_tokens", "oov_tokens", "avg_nll"))
 
 
 def heldout_interp_bigram_nll(
@@ -1848,16 +1847,7 @@ def heldout_interp_bigram_nll(
     LM scorers applies to all three.
     """
     one_minus = 1.0 - lam
-    vocab = (
-        ref_df.select(F.explode(_ws_tokens(text_col)).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    vocab = pin(vocab)  # totals + the w2 join
-    totals = vocab.agg(
-        F.sum("c").cast("long").alias("n_ref"),
-        F.count(F.lit(1)).cast("long").alias("v_ref"),
-    )
+    vocab, totals = _ref_vocab(ref_df, text_col)
     cb = (
         ref_df.select(F.explode(_word_bigrams(text_col)).alias("gram"))
         .groupBy("gram")
@@ -1898,10 +1888,6 @@ def heldout_interp_bigram_nll(
             .alias("_logp"),
         )
     )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.sum("_unseen").cast("long").alias("unseen_bigrams"),
-        (-(F.sum("_logp").cast("double")) / F.count(F.lit(1))).alias(
-            "avg_interp_nll"
-        ),
+    return _nll_report(
+        scored, id_col, "_unseen", ("n_bigrams", "unseen_bigrams", "avg_interp_nll")
     )

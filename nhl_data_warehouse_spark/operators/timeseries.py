@@ -16,11 +16,12 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nhl_data_warehouse_spark.operators.caching import pin
+from nhl_data_warehouse_spark.operators.stats import ordered_sum
 
 
 def gap_fill(
@@ -543,23 +544,9 @@ def cusum_peak(
     Output (one row): n_days, peak_day, peak_cusum (signed, in
     value units — cents/``cents_scale``), mean_daily (same units).
     """
-    w = Window.orderBy(time_col).rowsBetween(Window.unboundedPreceding, 0)
-    cum = df.select(
-        F.col(time_col).alias("d"),
-        F.sum(value_col).over(w).cast("decimal(38,0)").alias("s"),
-        F.count(F.lit(1)).over(w).cast("decimal(38,0)").alias("idx"),
-    )
-    tot = df.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum(value_col).cast("long").alias("t"),
-    )
+    cum, tot = _cusum_parts(df, time_col, value_col)
     scaled = cum.crossJoin(F.broadcast(tot)).select(
-        "d",
-        "n_days",
-        "t",
-        (F.col("s") * F.col("n_days") - F.col("idx") * F.col("t"))
-        .cast("decimal(38,0)")
-        .alias("sc"),
+        "d", "n_days", "t", _cusum_sc()
     )
     peak = scaled.groupBy("n_days", "t").agg(
         F.max(F.abs(F.col("sc"))).alias("pk")
@@ -567,10 +554,51 @@ def cusum_peak(
     at_peak = scaled.join(F.broadcast(peak), on=["n_days", "t"]).where(
         F.abs(F.col("sc")) == F.col("pk")
     )
-    return at_peak.groupBy("n_days", "t").agg(
+    return _cusum_report(at_peak, cents_scale)
+
+
+def _cusum_parts(
+    df: DataFrame, time_col: str, value_col: str, *group_cols: str
+) -> tuple[DataFrame, DataFrame]:
+    """Per day ``d`` (within slice ``g`` of ``group_cols``): the
+    running value sum ``s`` and day index ``idx`` in DECIMAL(38,0);
+    and per slice the day count ``n_days`` and value total ``t``."""
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy(time_col)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    g = [F.col(c).alias("g") for c in group_cols]
+    cum = df.select(
+        *g,
+        F.col(time_col).alias("d"),
+        F.sum(value_col).over(w).cast("decimal(38,0)").alias("s"),
+        F.count(F.lit(1)).over(w).cast("decimal(38,0)").alias("idx"),
+    )
+    tot = df.groupBy(*g).agg(
+        F.count(F.lit(1)).cast("long").alias("n_days"),
+        F.sum(value_col).cast("long").alias("t"),
+    )
+    return cum, tot
+
+
+def _cusum_sc() -> Column:
+    """The mean-centered CUSUM cleared to integers: S_d * D - d * T."""
+    return (
+        (F.col("s") * F.col("n_days") - F.col("idx") * F.col("t"))
+        .cast("decimal(38,0)")
+        .alias("sc")
+    )
+
+
+def _cusum_report(at_peak: DataFrame, cents_scale: int, *keys: str) -> DataFrame:
+    """Earliest peak day per (keys, n_days, t) of the peak-|sc| rows,
+    with the peak CUSUM and the mean daily value in value units."""
+    return at_peak.groupBy(*keys, "n_days", "t").agg(
         F.min("d").alias("peak_day"),
         F.expr("min_by(sc, d)").alias("sc_at_peak"),
     ).select(
+        *keys,
         "n_days",
         "peak_day",
         F.expr(
@@ -607,49 +635,14 @@ def grouped_cusum_peak(
     ``group_col`` where a forced broadcast would ship a data-sized
     relation to every executor (ADVICE r9).
     """
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(time_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = df.select(
-        F.col(group_col).alias("g"),
-        F.col(time_col).alias("d"),
-        F.sum(value_col).over(w).cast("decimal(38,0)").alias("s"),
-        F.count(F.lit(1)).over(w).cast("decimal(38,0)").alias("idx"),
-    )
-    tot = df.groupBy(F.col(group_col).alias("g")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum(value_col).cast("long").alias("t"),
-    )
-    scaled = cum.join(tot, on="g").select(
-        "g",
-        "d",
-        "n_days",
-        "t",
-        (F.col("s") * F.col("n_days") - F.col("idx") * F.col("t"))
-        .cast("decimal(38,0)")
-        .alias("sc"),
-    )
+    cum, tot = _cusum_parts(df, time_col, value_col, group_col)
+    scaled = cum.join(tot, on="g").select("g", "d", "n_days", "t", _cusum_sc())
     peak = scaled.groupBy("g").agg(F.max(F.abs(F.col("sc"))).alias("pk"))
     at_peak = scaled.join(peak, on="g").where(
         F.abs(F.col("sc")) == F.col("pk")
     )
-    return at_peak.groupBy("g", "n_days", "t").agg(
-        F.min("d").alias("peak_day"),
-        F.expr("min_by(sc, d)").alias("sc_at_peak"),
-    ).select(
-        F.col("g").alias(group_col),
-        "n_days",
-        "peak_day",
-        F.expr(
-            "CAST(sc_at_peak AS DOUBLE)"
-            f" / (CAST(n_days AS DOUBLE) * {float(cents_scale)})"
-        ).alias("peak_cusum"),
-        F.expr(
-            "CAST(t AS DOUBLE)"
-            f" / (CAST(n_days AS DOUBLE) * {float(cents_scale)})"
-        ).alias("mean_daily"),
+    return _cusum_report(at_peak, cents_scale, "g").withColumnRenamed(
+        "g", group_col
     )
 
 
@@ -1034,14 +1027,7 @@ def seasonal_decompose_daily(
         )
     )
     centering = dow_means.agg(
-        F.aggregate(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dow", "raw_seasonal"))),
-                lambda s: s["raw_seasonal"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("season_sum"),
+        ordered_sum("dow", "raw_seasonal").alias("season_sum"),
         F.count(F.lit(1)).cast("long").alias("n_dows"),
     )
     seasonal = dow_means.crossJoin(F.broadcast(centering)).select(

@@ -19,8 +19,14 @@ distributed aggregation and DuckDB's sequential one agree bit-for-bit):
 - An oracle fragment used by two or more queries is defined once, as
   a ``_*_CTE`` constant or an ``_*_sql()`` helper (a non-CTE piece,
   such as an expression or a select tail, as a ``_*_SQL`` constant)
-  in the suite module of its query family;
-  ``tests/test_oracle_fragments.py`` fails on a copied fragment.
+  in the suite module of its query family.
+- A Spark-side DataFrame fragment used by two or more queries or
+  operators is likewise defined once, as a private helper in the
+  suite or operator module of its family (``training._hlq_eval``,
+  ``stats._threshold_sweep``); the value that differs between callers
+  is an argument, and the helper never branches on its caller.
+  ``tests/test_oracle_fragments.py`` fails on a copied fragment of
+  either kind.
 """
 
 from nhl_data_warehouse_spark.suite.registry import REGISTRY, QuerySpec, register

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nhl_data_warehouse_spark.operators import layout, sketches, timeseries
+from nhl_data_warehouse_spark.operators.caching import checkpoint, pin
 from nhl_data_warehouse_spark.suite.registry import load, register
 from nhl_data_warehouse_spark.suite.training import (
     _OLS_SUMS_SQL,
@@ -77,6 +78,21 @@ _Q1_PRIORITY_GRID_CTES = """spine AS (
     )"""
 
 
+def _priority_days(orders: DataFrame, end: str, *aggs) -> DataFrame:
+    """``aggs`` per (priority, order day) over the orders from
+    1995-01-01 up to ``end``."""
+    return (
+        orders.filter(
+            (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < end)
+        )
+        .groupBy(
+            "o_orderpriority",
+            F.col("o_orderdate").cast("date").alias("order_day"),
+        )
+        .agg(*aggs)
+    )
+
+
 @register(
     "gapfill_priority_revenue",
     op_ids="beyond-reference time-series densification: date spine + "
@@ -117,19 +133,11 @@ _Q1_PRIORITY_GRID_CTES = """spine AS (
 )
 def gapfill_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load(spark, sf_dir, "orders")
-    daily = (
-        orders.filter(
-            (F.col("o_orderdate") >= "1995-01-01")
-            & (F.col("o_orderdate") < "1995-04-01")
-        )
-        .groupBy(
-            "o_orderpriority",
-            F.col("o_orderdate").cast("date").alias("order_day"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast(DEC)).alias("revenue"),
-        )
+    daily = _priority_days(
+        orders,
+        "1995-04-01",
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.col("o_totalprice").cast(DEC)).alias("revenue"),
     )
     out = timeseries.gap_fill(
         daily,
@@ -173,16 +181,8 @@ def gapfill_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load(spark, sf_dir, "orders")
-    daily = (
-        orders.filter(
-            (F.col("o_orderdate") >= "1995-01-01")
-            & (F.col("o_orderdate") < "1996-01-01")
-        )
-        .groupBy(
-            "o_orderpriority",
-            F.col("o_orderdate").cast("date").alias("order_day"),
-        )
-        .agg(F.sum(F.col("o_totalprice").cast(DEC)).alias("revenue"))
+    daily = _priority_days(
+        orders, "1996-01-01", F.sum(F.col("o_totalprice").cast(DEC)).alias("revenue")
     )
     out = timeseries.rolling_days(
         daily, "o_orderpriority", "order_day", "revenue", days=7
@@ -379,7 +379,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load(spark, sf_dir, "events")
-    events = events.select("user_id", "ts").persist()
+    events = pin(events.select("user_id", "ts"))
     first_seen = events.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
     )
@@ -928,18 +928,10 @@ def copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators import graph
 
     (lineitem,) = load(spark, sf_dir, "lineitem")
-    items = lineitem.select(
-        F.col("l_orderkey").alias("_g"), F.col("l_partkey").alias("_i")
-    ).distinct()
-    edges = (
-        items.join(items.select("_g", F.col("_i").alias("_j")), on="_g")
-        .filter(F.col("_i") < F.col("_j"))
-        .groupBy("_i", "_j")
-        .agg(F.count(F.lit(1)).alias("_ng"))
-        .where(F.col("_ng") >= 2)
-        .select(F.col("_i").alias("a"), F.col("_j").alias("b"))
+    edges = graph._shared_group_edges(lineitem, "l_orderkey", "l_partkey", 2)
+    return graph.kcore_peel(
+        edges.select(F.col("_i").alias("a"), F.col("_j").alias("b")), k=2, rounds=4
     )
-    return graph.kcore_peel(edges, k=2, rounds=4)
 
 
 @register(
@@ -1083,7 +1075,7 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter) would otherwise each execute the full distinct +
     # self-join + aggregate pipeline — persist halves the upstream
     # cost (harness.run_query reclaims it with release_cached)
-    shared = shared.persist()
+    shared = pin(shared)
     mean_shared = shared.agg(
         (F.sum("n_shared").cast("double") / F.count(F.lit(1))).alias("m")
     )
@@ -1290,14 +1282,16 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge pipeline per hop (measured 2x the iterative BFS at sf0.1).
     # Checkpointing truncates the lineage — the loop body scans the
     # materialized nation-level edge list (dimension-scale) instead.
-    edges = spark.sql(
-        _REACH_EDGES_SQL.format(
-            lineitem="v_rc_lineitem",
-            orders="v_rc_orders",
-            customer="v_rc_customer",
-            supplier="v_rc_supplier",
+    edges = checkpoint(
+        spark.sql(
+            _REACH_EDGES_SQL.format(
+                lineitem="v_rc_lineitem",
+                orders="v_rc_orders",
+                customer="v_rc_customer",
+                supplier="v_rc_supplier",
+            )
         )
-    ).localCheckpoint()
+    )
     edges.createOrReplaceTempView("v_rc_edges")
     return spark.sql(_REACH_RECURSIVE_SQL.format(extra="", edges="v_rc_edges"))
 
@@ -1456,23 +1450,31 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def km_order_gap_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
+    (orders,) = load(spark, sf_dir, "orders")
+    spells = _order_gap_spells(orders, orders, "o_custkey")
+    return timeseries.km_survival(spells, "duration", "observed")
+
+
+def _order_gap_spells(src: DataFrame, orders: DataFrame, key: str) -> DataFrame:
+    """Per order of ``src``: the ``duration`` in days to the customer's
+    next order, ``observed`` 0 when the spell is censored at the
+    corpus's last order date, and the ``key`` column."""
     from pyspark.sql.window import Window
 
-    (orders,) = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    seq = orders.select(
-        "o_custkey",
+    seq = src.select(
+        key,
         F.col("o_orderdate").cast("date").alias("d"),
         F.lead(F.col("o_orderdate").cast("date")).over(w).alias("nxt"),
     )
     cm = orders.agg(F.max(F.col("o_orderdate").cast("date")).alias("cmax"))
     # one pass, no union: the censored tail spell is just
     # coalesce(next_order, corpus_max) — evaluating `seq` once
-    spells = seq.crossJoin(F.broadcast(cm)).select(
+    return seq.crossJoin(F.broadcast(cm)).select(
         F.datediff(F.coalesce("nxt", "cmax"), "d").cast("long").alias("duration"),
         F.col("nxt").isNotNull().cast("int").alias("observed"),
+        key,
     )
-    return timeseries.km_survival(spells, "duration", "observed")
 
 
 @register(
@@ -1533,6 +1535,27 @@ _PRICE_RANKED_CTE = """ranked AS (
     )"""
 
 
+def _price_ranked(orders: DataFrame) -> DataFrame:
+    """Spark twin of ``_PRICE_RANKED_CTE``: each order's price in
+    cents with its row number ``rn`` (by cents, then key) and the row
+    count ``n`` of its priority."""
+    from pyspark.sql.window import Window
+
+    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
+    w = Window.partitionBy("o_orderpriority").orderBy(
+        F.col("cents"), F.col("o_orderkey")
+    )
+    wn = Window.partitionBy("o_orderpriority")
+    return orders.select(
+        "o_orderpriority", cents.alias("cents"), "o_orderkey"
+    ).select(
+        "o_orderpriority",
+        "cents",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(wn).alias("n"),
+    )
+
+
 @register(
     "winsorized_mean_revenue",
     op_ids="beyond-reference robust aggregate (rank-based winsorized "
@@ -1570,22 +1593,8 @@ _PRICE_RANKED_CTE = """ranked AS (
     """,
 )
 def winsorized_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     (orders,) = load(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("cents"), F.col("o_orderkey")
-    )
-    wn = Window.partitionBy("o_orderpriority")
-    ranked = orders.select(
-        "o_orderpriority", cents.alias("cents"), "o_orderkey"
-    ).select(
-        "o_orderpriority",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
+    ranked = _price_ranked(orders)
     k = F.floor(F.col("n") / 20)
     agg = ranked.groupBy("o_orderpriority").agg(
         F.max("n").cast("long").alias("n_orders"),
@@ -1639,22 +1648,8 @@ def winsorized_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def trimmed_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     (orders,) = load(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("cents"), F.col("o_orderkey")
-    )
-    wn = Window.partitionBy("o_orderpriority")
-    ranked = orders.select(
-        "o_orderpriority", cents.alias("cents"), "o_orderkey"
-    ).select(
-        "o_orderpriority",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
+    ranked = _price_ranked(orders)
     kept = ranked.filter(
         (F.col("rn") > F.expr("n div 20")) & (F.col("rn") <= F.col("n") - F.expr("n div 20"))
     )
@@ -2417,29 +2412,13 @@ def grouped_hybrid_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def logrank_segment_gap_survival(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.window import Window
-
     orders, customer = load(spark, sf_dir, "orders", "customer")
     seg = customer.select(
         "c_custkey",
         (F.col("c_mktsegment") == "BUILDING").cast("int").alias("g1"),
     )
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    seq = orders.join(
-        F.broadcast(seg), orders["o_custkey"] == seg["c_custkey"]
-    ).select(
-        "g1",
-        F.col("o_orderdate").cast("date").alias("d"),
-        F.lead(F.col("o_orderdate").cast("date")).over(w).alias("nxt"),
-    )
-    cm = orders.agg(F.max(F.col("o_orderdate").cast("date")).alias("cmax"))
-    spells = seq.crossJoin(F.broadcast(cm)).select(
-        F.datediff(F.coalesce("nxt", "cmax"), "d")
-        .cast("long")
-        .alias("duration"),
-        F.col("nxt").isNotNull().cast("int").alias("observed"),
-        "g1",
-    )
+    joined = orders.join(F.broadcast(seg), orders["o_custkey"] == seg["c_custkey"])
+    spells = _order_gap_spells(joined, orders, "g1")
     return timeseries.logrank_two_sample(
         spells, "duration", "observed", "g1"
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from nhl_data_warehouse_spark.functions.cleaning import md5_key, null_out_like
 from nhl_data_warehouse_spark.operators.asof import as_of_join
+from nhl_data_warehouse_spark.operators.caching import checkpoint
 from nhl_data_warehouse_spark.operators.rangejoin import range_join_pairs
 from nhl_data_warehouse_spark.operators.sessions import sessionize_batch
 from nhl_data_warehouse_spark.suite.ingest import _RANGE_JOIN_5MIN_ORACLE
@@ -391,7 +392,7 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize the aggregate under the no-broadcast conf; the
         # noop write pins the executed plan before the conf restores
-        out = out.localCheckpoint()
+        out = checkpoint(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.conf.set("spark.sql.sources.bucketing.enabled", old_bucketing)
@@ -731,6 +732,12 @@ def monthly_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def asof_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _asof_event_orders(spark, sf_dir, "backward")
+
+
+def _asof_event_orders(spark: SparkSession, sf_dir: str, direction: str) -> DataFrame:
+    """Each event with the order date of its user's nearest order in
+    ``direction`` (both bounds inclusive)."""
     events, orders = load(spark, sf_dir, "events", "orders")
     return as_of_join(
         events.select("event_id", "user_id", "ts"),
@@ -740,6 +747,7 @@ def asof_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_time="ts",
         right_time="o_orderdate",
         payloads=["o_orderdate"],
+        direction=direction,
     )
 
 

@@ -16,13 +16,21 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nhl_data_warehouse_spark.suite.registry import load, read_parquet, register
+from nhl_data_warehouse_spark.operators.caching import pin
+from nhl_data_warehouse_spark.suite.registry import (
+    load,
+    normalize_timestamps,
+    pin_session_defaults,
+    read_parquet,
+    register,
+)
 
 # scratch dirs / memory-sink views from PRIOR invocations of the same
 # query, reclaimed on the next invocation (their results have been
@@ -84,6 +92,51 @@ def _drain(q, timeout_s: int = 300) -> None:
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(f"streaming drain exceeded {timeout_s}s")
+
+
+def _events_dir(sf_dir: str, tag: str, *names: str) -> str:
+    """A fresh stream source dir holding the events parquet under each
+    of ``names`` (symlinks: the file source wants a directory, and
+    nothing is copied)."""
+    src_dir = _fresh_dir(f"suite_{tag}_src_")
+    for n in names or ("events.parquet",):
+        os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/{n}")
+    return src_dir
+
+
+def _event_stream(
+    spark: SparkSession, sf_dir: str, src_dir: str, max_files: int | None = None
+) -> DataFrame:
+    """``src_dir`` read as a file stream with the events batch schema,
+    timestamps normalized; ``max_files`` sets ``maxFilesPerTrigger``."""
+    pin_session_defaults(spark)
+    reader = spark.readStream.schema(
+        read_parquet(spark, f"{sf_dir}/events.parquet").schema
+    )
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return normalize_timestamps(reader.parquet(src_dir), "events")
+
+
+def _to_memory(spark: SparkSession, df: DataFrame, tag: str, mode: str) -> DataFrame:
+    """Run the stream ``df`` to a fresh memory sink with
+    ``availableNow`` (small stateful shuffle, fully drained) and return
+    the sink table."""
+    ckpt = _fresh_dir(f"suite_{tag}_ckpt_")
+    name = _fresh_memory_sink(
+        spark, f"stream_{tag}_", os.path.basename(ckpt).split("_")[-1]
+    )
+    with _stateful_shuffle(spark):
+        q = (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q)
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -421,42 +474,14 @@ def view_materialization_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from nhl_data_warehouse_spark.streaming.windows import windowed_event_counts
-    from nhl_data_warehouse_spark.suite.registry import (
-        normalize_timestamps,
-        pin_session_defaults,
-    )
 
-    # the file streaming source wants a directory; point a temp dir at
-    # the events parquet via symlink so nothing is copied
-    pin_session_defaults(spark)
-    src_dir = _fresh_dir("suite_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    ckpt = _fresh_dir("suite_stream_ckpt_")
-    name = _fresh_memory_sink(
-        spark, "stream_hourly_", os.path.basename(ckpt).split("_")[-1]
-    )
-
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(batch_schema).parquet(src_dir)
-    stream = normalize_timestamps(stream, "events").withColumn(
-        "value", F.col("value").cast("decimal(18,2)")
-    )
+    stream = _event_stream(
+        spark, sf_dir, _events_dir(sf_dir, "hourly")
+    ).withColumn("value", F.col("value").cast("decimal(18,2)"))
     agg = windowed_event_counts(stream, window_duration="1 hour", streaming=True)
-    with _stateful_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     # exact decimal sums inside the stream; double in the final schema
-    return spark.table(name).select(
+    return _to_memory(spark, agg, "hourly", "complete").select(
         "window_start",
         "event_type",
         "n_events",
@@ -483,44 +508,28 @@ def streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from nhl_data_warehouse_spark.streaming.stateful import running_user_totals
-    from nhl_data_warehouse_spark.suite.registry import pin_session_defaults
 
-    pin_session_defaults(spark)
-    src_dir = _fresh_dir("suite_state_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    ckpt = _fresh_dir("suite_state_ckpt_")
-    name = _fresh_memory_sink(
-        spark, "stream_totals_", os.path.basename(ckpt).split("_")[-1]
-    )
+    totals = running_user_totals(_cents_stream(spark, sf_dir, "totals"))
+    return _final_user_totals(_to_memory(spark, totals, "totals", "update"))
 
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(batch_schema).parquet(src_dir)
-    # exact integer cents through the double-typed state slot: pandas
-    # int64 sums are exact and floats are exact integers below 2^53,
-    # so the accumulated value is order-independent
+
+def _cents_stream(spark: SparkSession, sf_dir: str, tag: str) -> DataFrame:
+    """(user_id, value) of the events stream, value as exact integer
+    cents through the double-typed state slot: pandas int64 sums are
+    exact and floats are exact integers below 2^53, so the accumulated
+    value is order-independent."""
+    stream = _event_stream(spark, sf_dir, _events_dir(sf_dir, tag))
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    totals = running_user_totals(
-        stream.select("user_id", cents.cast("double").alias("value"))
-    )
-    with _stateful_shuffle(spark):
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    # update mode re-emits a user's row each micro-batch that touches
-    # it; n_events is strictly monotone per user, so max_by keeps the
-    # final state regardless of how the file source batched
+    return stream.select("user_id", cents.cast("double").alias("value"))
+
+
+def _final_user_totals(sink: DataFrame) -> DataFrame:
+    """Update mode re-emits a user's row each micro-batch that touches
+    it; n_events is strictly monotone per user, so max_by keeps the
+    final state regardless of how the file source batched."""
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(
             F.max_by(
                 F.struct("n_events", "sum_value"), F.col("n_events")
@@ -548,28 +557,9 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semantics on the applyInPandasWithState runtime, which needs no
 # protobuf.
 def _streaming_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from nhl_data_warehouse_spark.streaming.stateful import running_user_totals_tws
-    from nhl_data_warehouse_spark.suite.registry import pin_session_defaults
 
-    pin_session_defaults(spark)
-    src_dir = _fresh_dir("suite_tws_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    ckpt = _fresh_dir("suite_tws_ckpt_")
-    name = _fresh_memory_sink(
-        spark, "stream_tws_", os.path.basename(ckpt).split("_")[-1]
-    )
-
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(batch_schema).parquet(src_dir)
-    # exact integer cents through the double-typed state slot (same
-    # convention as streaming_user_totals: int64 pandas sums are
-    # exact, and integer-valued doubles below 2^53 are exact)
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    totals = running_user_totals_tws(
-        stream.select("user_id", cents.cast("double").alias("value"))
-    )
+    totals = running_user_totals_tws(_cents_stream(spark, sf_dir, "tws"))
     # transformWithState requires the RocksDB state store provider
     # (the HDFS-backed default rejects its multi-variable state);
     # scope the conf to this query and restore after
@@ -581,38 +571,13 @@ def _streaming_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RocksDBStateStoreProvider",
     )
     try:
-        with _stateful_shuffle(spark):
-            q = (
-                totals.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
+        sink = _to_memory(spark, totals, "tws", "update")
     finally:
         if prior is None:
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, prior)
-    # update mode re-emits a user's row each micro-batch that touches
-    # it; n_events is strictly monotone per user, so max_by keeps the
-    # final state regardless of how the file source batched
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "sum_value"), F.col("n_events")
-            ).alias("_f")
-        )
-        .select(
-            "user_id",
-            F.col("_f.n_events").alias("n_events"),
-            (F.col("_f.sum_value") / F.lit(100.0)).alias("sum_value"),
-        )
-    )
+    return _final_user_totals(sink)
 
 
 
@@ -631,25 +596,10 @@ def _streaming_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from nhl_data_warehouse_spark.streaming.windows import dedup_events_stream
-    from nhl_data_warehouse_spark.suite.registry import (
-        normalize_timestamps,
-        pin_session_defaults,
-    )
 
-    pin_session_defaults(spark)
-    src_dir = _fresh_dir("suite_dedup_src_")
     # duplicate delivery: same physical file under two names
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_b.parquet")
-    ckpt = _fresh_dir("suite_dedup_ckpt_")
-    name = _fresh_memory_sink(
-        spark, "stream_dedup_", os.path.basename(ckpt).split("_")[-1]
-    )
-
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
+    src_dir = _events_dir(sf_dir, "dedup", "events_a.parquet", "events_b.parquet")
     # Correctness here must not depend on how the file source batches
     # the two deliveries (ADVICE r2): (a) maxFilesPerTrigger pins both
     # symlinks into one micro-batch even if a future option changes
@@ -657,25 +607,14 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the testdata's whole event-time span (30 days), so even under
     # multi-batch replay no duplicate's state has expired when its
     # twin arrives.
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(src_dir)
-    )
-    stream = normalize_timestamps(stream, "events")
+    stream = _event_stream(spark, sf_dir, src_dir, max_files=64)
     deduped = dedup_events_stream(stream, keys=["event_id"], watermark="2400 hours")
-    with _stateful_shuffle(spark):
-        q = (
-            deduped.select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name)
+    return _to_memory(
+        spark,
+        deduped.select("event_id", "ts", "user_id", "event_type", "value"),
+        "dedup",
+        "append",
+    )
 
 
 @register(
@@ -695,24 +634,9 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from nhl_data_warehouse_spark.streaming.joins import enrich_stream
-    from nhl_data_warehouse_spark.suite.registry import (
-        load as _load,
-        normalize_timestamps,
-        pin_session_defaults,
-    )
 
-    pin_session_defaults(spark)
-    src_dir = _fresh_dir("suite_enr_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    ckpt = _fresh_dir("suite_enr_ckpt_")
-    name = _fresh_memory_sink(
-        spark, "stream_enr_", os.path.basename(ckpt).split("_")[-1]
-    )
-
-    customer, nation = _load(spark, sf_dir, "customer", "nation")
+    customer, nation = load(spark, sf_dir, "customer", "nation")
     dim = customer.select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     ).join(
@@ -721,20 +645,13 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left",
     ).select("user_id", "nation_name")
 
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(batch_schema).parquet(src_dir)
-    stream = normalize_timestamps(stream, "events").select("event_id", "user_id")
-    enriched = enrich_stream(stream, dim, on="user_id")
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    stream = _event_stream(spark, sf_dir, _events_dir(sf_dir, "enr")).select(
+        "event_id", "user_id"
     )
-    _drain(q)
-    return spark.table(name).select("event_id", "user_id", "nation_name")
+    enriched = enrich_stream(stream, dim, on="user_id")
+    return _to_memory(spark, enriched, "enr", "append").select(
+        "event_id", "user_id", "nation_name"
+    )
 
 
 @register(
@@ -755,20 +672,12 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     from nhl_data_warehouse_spark import catalog
-    from nhl_data_warehouse_spark.suite.registry import (
-        normalize_timestamps,
-        pin_session_defaults,
-    )
     from nhl_data_warehouse_spark.write import incremental_insert
 
-    pin_session_defaults(spark)
-    src_dir = _fresh_dir("suite_fbu_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_b.parquet")
+    src_dir = _events_dir(sf_dir, "fbu", "events_a.parquet", "events_b.parquet")
     ckpt = _fresh_dir("suite_fbu_ckpt_")
 
     catalog.ensure_database(spark, "nhl_suite_stream")
@@ -778,16 +687,10 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     shutil.rmtree(f"{wh}/nhl_suite_stream.db/fbu_events", ignore_errors=True)
 
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # one file per trigger forces the duplicate delivery into a LATER
     # micro-batch, so the second upsert exercises the anti-join against
     # already-committed table state (not intra-batch dedup)
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    stream = normalize_timestamps(stream, "events").select(
+    stream = _event_stream(spark, sf_dir, src_dir, max_files=1).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
 
@@ -846,42 +749,16 @@ def _value_sessions_sql(gap_us: int) -> str:
     """,
 )
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from nhl_data_warehouse_spark.streaming.windows import sessionize
-    from nhl_data_warehouse_spark.suite.registry import (
-        normalize_timestamps,
-        pin_session_defaults,
-    )
 
-    pin_session_defaults(spark)
-    src_dir = _fresh_dir("suite_sess_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    ckpt = _fresh_dir("suite_sess_ckpt_")
-    name = _fresh_memory_sink(
-        spark, "stream_sess_", os.path.basename(ckpt).split("_")[-1]
-    )
-
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(batch_schema).parquet(src_dir)
-    stream = normalize_timestamps(stream, "events").withColumn(
-        "value", F.col("value").cast("decimal(18,2)")
-    )
+    stream = _event_stream(
+        spark, sf_dir, _events_dir(sf_dir, "sess")
+    ).withColumn("value", F.col("value").cast("decimal(18,2)"))
     # complete mode: every session is in the final sink regardless of
     # where the closing watermark lands (append would hold back any
     # session still open against the final watermark)
     sessions = sessionize(stream, gap="30 minutes", streaming=True)
-    with _stateful_shuffle(spark):
-        q = (
-            sessions.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select(
+    return _to_memory(spark, sessions, "sess", "complete").select(
         "session_start",
         "session_end",
         "user_id",
@@ -917,66 +794,42 @@ _RANGE_JOIN_5MIN_ORACLE = """
     oracle=_RANGE_JOIN_5MIN_ORACLE,
 )
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from nhl_data_warehouse_spark.streaming.joins import interval_join_streams
-    from nhl_data_warehouse_spark.suite.registry import (
-        normalize_timestamps,
-        pin_session_defaults,
-    )
-
-    pin_session_defaults(spark)
-    left_dir = _fresh_dir("suite_ssj_left_")
-    right_dir = _fresh_dir("suite_ssj_right_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{left_dir}/events.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{right_dir}/events.parquet")
-    ckpt = _fresh_dir("suite_ssj_ckpt_")
-    name = _fresh_memory_sink(
-        spark, "stream_ssj_", os.path.basename(ckpt).split("_")[-1]
-    )
-
-    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # maxFilesPerTrigger pins each side's single file into one
     # micro-batch so no match can race a watermark-driven eviction;
     # the watermark itself (30 min >= the 5-min interval upper bound)
     # is what bounds the join state on an unbounded run
-    left = normalize_timestamps(
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(left_dir),
-        "events",
-    ).select("user_id", "ts", "event_id")
-    right = normalize_timestamps(
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(right_dir),
-        "events",
-    ).select(
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_event_id"),
+    left, right = (
+        _event_stream(spark, sf_dir, _events_dir(sf_dir, f"ssj_{side}"), max_files=64)
+        for side in ("left", "right")
     )
+    out = _interval_pairs(left, right, "inner")
+    return _to_memory(spark, out, "ssj", "append")
+
+
+def _interval_pairs(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+    """Same-user (left, right) event pairs at most 5 minutes apart,
+    right later, as (user_id, a_id, b_id, gap_seconds)."""
+    from nhl_data_warehouse_spark.streaming.joins import interval_join_streams
+
     joined = interval_join_streams(
-        left, right, key="user_id", upper="5 minutes", watermark="30 minutes"
+        left.select("user_id", "ts", "event_id"),
+        right.select(
+            F.col("user_id").alias("r_user_id"),
+            F.col("ts").alias("r_ts"),
+            F.col("event_id").alias("r_event_id"),
+        ),
+        key="user_id",
+        upper="5 minutes",
+        watermark="30 minutes",
+        how=how,
     )
     gap_us = F.unix_micros(F.col("r_ts")) - F.unix_micros(F.col("ts"))
-    out = joined.select(
+    return joined.select(
         "user_id",
         F.col("event_id").alias("a_id"),
         F.col("r_event_id").alias("b_id"),
         (gap_us.cast("double") / F.lit(1000000.0)).alias("gap_seconds"),
     )
-    with _stateful_shuffle(spark):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -1385,19 +1238,9 @@ def observed_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from nhl_data_warehouse_spark.streaming.joins import interval_join_streams
-    from nhl_data_warehouse_spark.suite.registry import (
-        normalize_timestamps,
-        pin_session_defaults,
-    )
-
     pin_session_defaults(spark)
-    left_dir = _fresh_dir("suite_ssoj_left_")
-    right_dir = _fresh_dir("suite_ssoj_right_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{left_dir}/events.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{right_dir}/events.parquet")
+    left_dir = _events_dir(sf_dir, "ssoj_left")
+    right_dir = _events_dir(sf_dir, "ssoj_right")
 
     # heartbeat sentinel: one far-future row per side, written NOW so
     # its mtime orders it into a second micro-batch after the data
@@ -1436,58 +1279,16 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # orders into the second micro-batch)
         _shutil.copy(part, os.path.join(d, "zz_sentinel.parquet"))
 
-    name = _fresh_memory_sink(
-        spark, "stream_ssoj_", os.path.basename(left_dir).split("_")[-1]
-    )
-    ckpt = _fresh_dir("suite_ssoj_ckpt_")
-    batch_schema = raw.schema
     # one file per micro-batch per source, oldest first: batch 1 holds
     # both data files, batch 2 both sentinels -> the final no-data
     # batch evicts state under the advanced watermark
-    left = normalize_timestamps(
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(left_dir),
-        "events",
-    ).select("user_id", "ts", "event_id")
-    right_all = normalize_timestamps(
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(right_dir),
-        "events",
+    left = _event_stream(spark, sf_dir, left_dir, max_files=1)
+    right = _event_stream(spark, sf_dir, right_dir, max_files=1)
+    out = _interval_pairs(
+        left, right.filter(F.col("event_type") == "purchase"), "leftOuter"
     )
-    right = right_all.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_event_id"),
-    )
-    joined = interval_join_streams(
-        left,
-        right,
-        key="user_id",
-        upper="5 minutes",
-        watermark="30 minutes",
-        how="leftOuter",
-    )
-    gap_us = F.unix_micros(F.col("r_ts")) - F.unix_micros(F.col("ts"))
-    out = joined.select(
-        "user_id",
-        F.col("event_id").alias("a_id"),
-        F.col("r_event_id").alias("b_id"),
-        (gap_us.cast("double") / F.lit(1000000.0)).alias("gap_seconds"),
-    )
-    with _stateful_shuffle(spark):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     # drop the sentinel's own (unmatched) output row
-    return spark.table(name).filter(F.col("a_id") >= 0)
+    return _to_memory(spark, out, "ssoj", "append").filter(F.col("a_id") >= 0)
 
 
 @register(
@@ -1656,7 +1457,7 @@ def corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a malformed CELL nulls only that field while the parseable
     neighbors survive, and the untouched raw line lands in the
     corrupt column; wrong column counts are also quarantined. The
-    post-load ``cache()`` is required — Spark refuses to execute a
+    post-load ``pin`` is required — Spark refuses to execute a
     plan whose only projection is the internal corrupt column on an
     uncached raw scan."""
     import os
@@ -1678,7 +1479,7 @@ def corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(landing)
     )
-    raw = raw.cache()
+    raw = pin(raw)
     return raw.select(
         F.col("id").cast("long").alias("id"),
         F.col("qty").cast("long").alias("qty"),

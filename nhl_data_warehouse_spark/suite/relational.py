@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nhl_data_warehouse_spark.suite.core import _asof_event_orders
 from nhl_data_warehouse_spark.suite.registry import load, register
 
 DEC = "decimal(18,2)"
@@ -605,19 +606,7 @@ def props_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def asof_join_orders_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nhl_data_warehouse_spark.operators.asof import as_of_join
-
-    events, orders = load(spark, sf_dir, "events", "orders")
-    return as_of_join(
-        events.select("event_id", "user_id", "ts"),
-        orders,
-        left_on="user_id",
-        right_on="o_custkey",
-        left_time="ts",
-        right_time="o_orderdate",
-        payloads=["o_orderdate"],
-        direction="forward",
-    )
+    return _asof_event_orders(spark, sf_dir, "forward")
 
 
 @register(

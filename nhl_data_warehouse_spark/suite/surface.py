@@ -18,7 +18,7 @@ Two families (VERDICT r5 items 6 and the beyond-reference widening):
   `io.delta:delta-spark_2.13:4.0.0` fails offline with
   `unresolved dependency: io.delta#delta-spark_2.13;4.0.0: not
   found`. Round 9 (VERDICT r8 item 5): the write-only Delta arm is
-  DELETED — `merge_upsert` (staged overwrite) and `append_new_rows`
+  DELETED — `merge_upsert` (staged overwrite) and `incremental_insert`
   (anti-join) are the supported upsert strategies, documented in
   write.py and SCALE.md.)
 - **Distribution statistics** a training-data pipeline runs on its
@@ -38,10 +38,12 @@ unpartitioned window, so the ordering step never sees row-scale data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from nhl_data_warehouse_spark.operators.caching import pin
+from nhl_data_warehouse_spark.operators.stats import ordered_sum
 from nhl_data_warehouse_spark.suite.analytics import _Q1_PRIORITY_GRID_CTES
 from nhl_data_warehouse_spark.suite.core import _SESSION_IDS_CTES
 from nhl_data_warehouse_spark.suite.ingest import _value_sessions_sql
@@ -1774,16 +1776,22 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.timeseries import autocorrelation
 
     (orders,) = load(spark, sf_dir, "orders")
-    daily = (
+    daily = _daily_cents(orders)
+    return autocorrelation(daily, "d", "x", max_lag=7)
+
+
+def _daily_cents(orders: DataFrame, *keys: Column) -> DataFrame:
+    """Daily order revenue ``x`` in exact integer cents per day ``d``
+    (and ``keys`` slice)."""
+    return (
         orders.where(F.col("o_totalprice").isNotNull())
-        .groupBy(F.col("o_orderdate").alias("d"))
+        .groupBy(*keys, F.col("o_orderdate").alias("d"))
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
             .cast("long")
             .alias("x")
         )
     )
-    return autocorrelation(daily, "d", "x", max_lag=7)
 
 
 @register(
@@ -1836,15 +1844,7 @@ def cusum_drift_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.timeseries import cusum_peak
 
     (orders,) = load(spark, sf_dir, "orders")
-    daily = (
-        orders.where(F.col("o_totalprice").isNotNull())
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("x")
-        )
-    )
+    daily = _daily_cents(orders)
     return cusum_peak(daily, "d", "x", cents_scale=100)
 
 
@@ -1904,17 +1904,7 @@ def cusum_drift_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (orders,) = load(spark, sf_dir, "orders")
-    daily = (
-        orders.where(F.col("o_totalprice").isNotNull())
-        .groupBy(
-            F.col("o_orderpriority"), F.col("o_orderdate").alias("d")
-        )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("x")
-        )
-    )
+    daily = _daily_cents(orders, F.col("o_orderpriority"))
     return grouped_cusum_peak(
         daily, "o_orderpriority", "d", "x", cents_scale=100
     )
@@ -2186,15 +2176,7 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.timeseries import theil_sen_trend
 
     (orders,) = load(spark, sf_dir, "orders")
-    daily = (
-        orders.where(F.col("o_totalprice").isNotNull())
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("x")
-        )
-    )
+    daily = _daily_cents(orders)
     return theil_sen_trend(daily, "d", "x")
 
 
@@ -2362,18 +2344,9 @@ def benford_price_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("expected_n"),
         )
     )
-    e = e.persist()
+    e = pin(e)
     e.count()  # chi2 consumer + the row output share one computation
-    chi = e.agg(
-        F.aggregate(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("digit", "dev"))),
-                lambda s: s["dev"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("chi2")
-    )
+    chi = e.agg(ordered_sum("digit", "dev").alias("chi2"))
     return e.crossJoin(F.broadcast(chi)).select(
         "digit", "n_obs", "expected_n", "dev", "chi2"
     )
@@ -2500,7 +2473,7 @@ def session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "session_start",
         "session_end",
     )
-    sess = sess.persist()
+    sess = pin(sess)
     sess.count()  # both sides of the self-join share one computation
     pairs = interval_overlap_join(
         sess, sess, "session_start", "session_end", cell_minutes=60

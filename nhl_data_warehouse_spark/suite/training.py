@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nhl_data_warehouse_spark.operators import dedup, multimodal, similarity, text
+from nhl_data_warehouse_spark.operators.caching import pin
+from nhl_data_warehouse_spark.operators.stats import ordered_sum
 from nhl_data_warehouse_spark.suite.registry import load, register
 
 SHINGLE_K = 12
@@ -265,11 +267,52 @@ def jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lsh_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
+    return _lsh_verified_pairs(documents)
+
+
+def _lsh_verified_pairs(
+    documents: DataFrame, star_cap: int | None = None
+) -> DataFrame:
+    """The MinHash chain: multiset shingles -> signatures -> band
+    candidates (``star_cap`` as in ``minhash_band_candidates``) ->
+    exact Jaccard >= 0.5 verify."""
     sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
-    sh = sh.persist()  # feeds signatures AND the verify stage
+    sh = pin(sh)  # feeds signatures AND the verify stage
     sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
-    cand = dedup.minhash_band_candidates(sig, n_hashes=N_HASHES, band_size=BAND_SIZE)
+    cand = dedup.minhash_band_candidates(
+        sig, n_hashes=N_HASHES, band_size=BAND_SIZE, star_cap=star_cap
+    )
     return dedup.jaccard_pairs(sh, candidates=cand, threshold=0.5)
+
+
+def _near_dup_components(
+    documents: DataFrame,
+    components=dedup.connected_components,
+    star_cap: int | None = None,
+) -> DataFrame:
+    """``components`` (doc_id, cluster_id) of the verified pairs."""
+    pairs = _lsh_verified_pairs(documents, star_cap).select("a_id", "b_id")
+    return components(pairs)
+
+
+def _near_dup_clusters(documents: DataFrame, **kw) -> DataFrame:
+    """``_near_dup_components`` with each cluster's min-id
+    representative flagged."""
+    return _near_dup_components(documents, **kw).select(
+        "doc_id",
+        "cluster_id",
+        (F.col("doc_id") == F.col("cluster_id")).alias("is_representative"),
+    )
+
+
+def _doc_clusters(documents: DataFrame) -> DataFrame:
+    """Every doc's near-dup cluster id; a singleton is its own."""
+    cc = _near_dup_components(documents)
+    return (
+        documents.select("doc_id")
+        .join(cc.select("doc_id", "cluster_id"), on="doc_id", how="left")
+        .withColumn("cluster_id", F.coalesce("cluster_id", "doc_id"))
+    )
 
 
 @register(
@@ -296,7 +339,7 @@ def prefix_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one shingle computation (VERDICT r6 item 4; the r6 floor drift
     # itself root-caused to first-execution codegen + ambient noise —
     # see BASELINE.md "prefix_jaccard_near_dups floor drift")
-    sh = dedup.char_shingles(documents, k=SHINGLE_K).persist()
+    sh = pin(dedup.char_shingles(documents, k=SHINGLE_K))
     sh.count()
     return dedup.prefix_filter_jaccard_pairs(sh, threshold=0.5)
 
@@ -319,17 +362,7 @@ def prefix_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
-    sh = sh.persist()
-    sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
-    cand = dedup.minhash_band_candidates(sig, n_hashes=N_HASHES, band_size=BAND_SIZE)
-    pairs = dedup.jaccard_pairs(sh, candidates=cand, threshold=0.5).select("a_id", "b_id")
-    cc = dedup.connected_components(pairs)
-    return cc.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_representative"),
-    )
+    return _near_dup_clusters(documents)
 
 
 @register(
@@ -344,16 +377,8 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_clusters_kiveris(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
-    sh = sh.persist()
-    sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
-    cand = dedup.minhash_band_candidates(sig, n_hashes=N_HASHES, band_size=BAND_SIZE)
-    pairs = dedup.jaccard_pairs(sh, candidates=cand, threshold=0.5).select("a_id", "b_id")
-    cc = dedup.connected_components_kiveris(pairs)
-    return cc.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_representative"),
+    return _near_dup_clusters(
+        documents, components=dedup.connected_components_kiveris
     )
 
 
@@ -398,21 +423,7 @@ def near_dup_clusters_kiveris(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_clusters_starcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
-    sh = sh.persist()
-    sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
-    cand = dedup.minhash_band_candidates(
-        sig, n_hashes=N_HASHES, band_size=BAND_SIZE, star_cap=2
-    )
-    pairs = dedup.jaccard_pairs(sh, candidates=cand, threshold=0.5).select(
-        "a_id", "b_id"
-    )
-    cc = dedup.connected_components(pairs)
-    return cc.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_representative"),
-    )
+    return _near_dup_clusters(documents, star_cap=2)
 
 
 def _simhash_sums_sql(bits: int) -> str:
@@ -1157,9 +1168,24 @@ _HLQ_AGG_CTES = f"""toks AS (
 )
 def model_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
+    return _hlq(documents)
+
+
+def _hlq(documents: DataFrame) -> DataFrame:
+    """The hashed-linear quality classifier every eval query scores."""
     return text.hashed_linear_quality(
         documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
     )
+
+
+def _hlq_eval(documents: DataFrame, *pred_cols: str) -> DataFrame:
+    """Spark twin of ``_HLQ_EVAL_CTES``: each doc's classifier score
+    (plus ``pred_cols``) joined to its heuristic label ``is_good``."""
+    pred = _hlq(documents).select("doc_id", *pred_cols, "quality_score")
+    labels = text.quality_score(documents).select(
+        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
+    )
+    return pred.join(labels, on="doc_id")
 
 
 def _lang_id_oracle() -> str:
@@ -2496,14 +2522,19 @@ def sequence_token_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators import packing
 
     (documents,) = load(spark, sf_dir, "documents")
-    counts = documents.select(
+    counts = _doc_token_counts(documents)
+    return packing.token_spans(counts, block_size=512, bucket_width=1024)
+
+
+def _doc_token_counts(documents: DataFrame) -> DataFrame:
+    """(doc_id, source, n_tokens): each doc's whitespace-token count."""
+    return documents.select(
         "doc_id",
         "source",
         F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias(
             "n_tokens"
         ),
     )
-    return packing.token_spans(counts, block_size=512, bucket_width=1024)
 
 
 @register(
@@ -2599,13 +2630,7 @@ def greedy_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators import packing
 
     (documents,) = load(spark, sf_dir, "documents")
-    counts = documents.select(
-        "doc_id",
-        "source",
-        F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias(
-            "n_tokens"
-        ),
-    )
+    counts = _doc_token_counts(documents)
     return packing.pack_next_fit(counts, budget=128)
 
 
@@ -3837,7 +3862,7 @@ def minhash_jaccard_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
     # read 3x (banding + both signature sides of the estimate join);
     # (doc, 8 slots) rows — tiny; release_cached reclaims it
-    sigs = dedup.minhash_signatures(sh, n_hashes=N_HASHES).persist()
+    sigs = pin(dedup.minhash_signatures(sh, n_hashes=N_HASHES))
     cands = dedup.minhash_band_candidates(
         sigs, n_hashes=N_HASHES, band_size=BAND_SIZE
     )
@@ -4564,13 +4589,7 @@ _LANG_CELLS_CTES = f"""preds AS ({_lang_id_oracle()}),
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    preds = text.lang_id(documents).select("doc_id", "pred_lang")
-    joined = documents.select("doc_id", F.col("lang").alias("true_lang")).join(
-        preds, on="doc_id"
-    )
-    cells = joined.groupBy("true_lang", "pred_lang").agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    cells = _lang_id_cells(documents)
     tot = cells.groupBy("true_lang").agg(F.sum("n").cast("long").alias("n_true"))
     return (
         cells.join(F.broadcast(tot), on="true_lang")
@@ -4581,6 +4600,18 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_true",
             (F.col("n") / F.col("n_true").cast("double")).alias("recall_share"),
         )
+    )
+
+
+def _lang_id_cells(documents: DataFrame) -> DataFrame:
+    """Spark twin of the lang-ID ``cells`` CTE: docs per (true_lang,
+    pred_lang) confusion cell."""
+    preds = text.lang_id(documents).select("doc_id", "pred_lang")
+    joined = documents.select("doc_id", F.col("lang").alias("true_lang")).join(
+        preds, on="doc_id"
+    )
+    return joined.groupBy("true_lang", "pred_lang").agg(
+        F.count(F.lit(1)).alias("n")
     )
 
 
@@ -4686,23 +4717,8 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
-    sh = sh.persist()
-    sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
-    cand = dedup.minhash_band_candidates(
-        sig, n_hashes=N_HASHES, band_size=BAND_SIZE
-    )
-    pairs = dedup.jaccard_pairs(sh, candidates=cand, threshold=0.5).select(
-        "a_id", "b_id"
-    )
-    cc = dedup.connected_components(pairs)
-    withc = (
-        documents.select("doc_id")
-        .join(cc.select("doc_id", "cluster_id"), on="doc_id", how="left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", "doc_id"))
-    )
     return sampling.hash_split(
-        withc,
+        _doc_clusters(documents),
         ["cluster_id"],
         {"train": 0.8, "val": 0.1, "test": 0.1},
         salt="leak-v1",
@@ -4867,20 +4883,20 @@ def lsh_candidate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the LSH arm and the exact-PPJoin truth arm inside ONE final
     # job lets parallel subtrees race to populate the cache and
     # recompute the explode; one count() pins it
-    sh = sh.persist()
+    sh = pin(sh)
     sh.count()
     sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
     cand = dedup.minhash_band_candidates(
         sig, n_hashes=N_HASHES, band_size=BAND_SIZE
     )
-    cand = cand.persist()  # counted AND joined against truth
+    cand = pin(cand)  # counted AND joined against truth
     # ground truth via the PPJoin exact set-similarity join — provably
     # the same pair set as the all-pairs join (zero recall loss, the
     # oracle IS all-pairs SQL) at subquadratic cost
     truth = dedup.prefix_filter_jaccard_pairs(sh, threshold=0.5).select(
         "a_id", "b_id"
     )
-    truth = truth.persist()
+    truth = pin(truth)
     n_cand = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
     n_true = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
     n_hit = cand.join(truth, on=["a_id", "b_id"]).agg(
@@ -4975,24 +4991,9 @@ def media_byte_class_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cluster_best_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
-    sh = sh.persist()
-    sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
-    cand = dedup.minhash_band_candidates(
-        sig, n_hashes=N_HASHES, band_size=BAND_SIZE
-    )
-    pairs = dedup.jaccard_pairs(sh, candidates=cand, threshold=0.5).select(
-        "a_id", "b_id"
-    )
-    cc = dedup.connected_components(pairs)
-    cmap = (
-        documents.select("doc_id")
-        .join(cc.select("doc_id", "cluster_id"), on="doc_id", how="left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", "doc_id"))
-    )
     scored = text.quality_score(documents).select("doc_id", "quality_decile")
-    j = cmap.join(scored, on="doc_id")
-    j = j.persist()  # feeds the max-quality agg AND the rep pick
+    j = _doc_clusters(documents).join(scored, on="doc_id")
+    j = pin(j)  # feeds the max-quality agg AND the rep pick
     # alias the aggregate side's columns so the shared-lineage join is
     # unambiguous (the suite's recall-eval convention — don't rely on
     # Spark's ambiguous-self-join rewrite)
@@ -5124,13 +5125,7 @@ _HLQ_EVAL_CTES = f"""{_HLQ_AGG_CTES},
 )
 def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id")
+    joined = _hlq_eval(documents)
     bin_col = F.least(
         F.floor(F.col("quality_score") * 10).cast("long"), F.lit(9)
     ).cast("int")
@@ -5245,13 +5240,7 @@ def classifier_ece_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id")
+    joined = _hlq_eval(documents)
     return expected_calibration_error(
         joined, "quality_score", "is_good", n_bins=10, scale=1_000_000
     )
@@ -5312,13 +5301,7 @@ def youden_threshold_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.stats import youden_j_threshold
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id")
+    joined = _hlq_eval(documents)
     return youden_j_threshold(
         joined, "quality_score", F.col("is_good"), scale=1_000_000
     )
@@ -5367,13 +5350,7 @@ def classifier_pr_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.stats import average_precision
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id")
+    joined = _hlq_eval(documents)
     return average_precision(
         joined, "quality_score", F.col("is_good"), scale=1_000_000
     )
@@ -5435,15 +5412,8 @@ def classifier_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "n_tokens", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = (
-        pred.join(labels, on="doc_id")
-        .join(documents.select("doc_id", "source"), on="doc_id")
+    joined = _hlq_eval(documents, "n_tokens").join(
+        documents.select("doc_id", "source"), on="doc_id"
     )
     return classifier_gate_report(
         joined,
@@ -5503,13 +5473,7 @@ def brier_murphy_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.stats import murphy_decomposition
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id")
+    joined = _hlq_eval(documents)
     return murphy_decomposition(
         joined, "quality_score", "is_good", n_bins=10, scale=1_000_000
     )
@@ -5577,13 +5541,7 @@ def isotonic_calibration_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id")
+    joined = _hlq_eval(documents)
     return isotonic_calibration_bins(
         joined, "quality_score", "is_good", n_bins=10
     )
@@ -5657,13 +5615,7 @@ def isotonic_calibration_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id").join(
+    joined = _hlq_eval(documents).join(
         documents.select("doc_id", "lang"), on="doc_id"
     )
     return grouped_isotonic_calibration_bins(
@@ -6005,7 +5957,7 @@ def approx_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     k_top = 10
     (documents,) = load(spark, sf_dir, "documents")
     grams = documents.select(F.explode(_word_bigrams("text")).alias("gram"))
-    grams = grams.persist()
+    grams = pin(grams)
     grams.count()  # materialize before the sketch/exact fan-out
     sketch = (
         grams.agg(F.expr(f"approx_top_k(gram, {k_top}, 10000)").alias("tk"))
@@ -6017,7 +5969,7 @@ def approx_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
     # four consumer subtrees (kth, scalars, counts_exact, dominates)
     # share one final job — materialize so they can't race the cache
-    exact = exact.persist()
+    exact = pin(exact)
     exact.count()
     kth = (
         exact.orderBy(F.col("c").desc(), F.col("gram"))
@@ -6123,13 +6075,7 @@ def classifier_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.stats import rank_auc
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = pred.join(labels, on="doc_id")
+    joined = _hlq_eval(documents)
     return rank_auc(joined, "quality_score", F.col("is_good"), scale=1_000_000)
 
 
@@ -6168,14 +6114,8 @@ def classifier_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lang_id_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    preds = text.lang_id(documents).select("doc_id", "pred_lang")
-    joined = documents.select("doc_id", F.col("lang").alias("true_lang")).join(
-        preds, on="doc_id"
-    )
-    cells = joined.groupBy("true_lang", "pred_lang").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    cells = cells.persist()
+    cells = _lang_id_cells(documents)
+    cells = pin(cells)
     cells.count()  # three consumer subtrees share one final job
     st = cells.agg(
         F.sum("n").cast("long").alias("n_docs"),
@@ -6349,15 +6289,8 @@ def auc_by_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.stats import grouped_rank_auc
 
     (documents,) = load(spark, sf_dir, "documents")
-    pred = text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    ).select("doc_id", "quality_score")
-    labels = text.quality_score(documents).select(
-        "doc_id", (F.col("quality_decile") >= 6).alias("is_good")
-    )
-    joined = (
-        pred.join(labels, on="doc_id")
-        .join(documents.select("doc_id", "lang"), on="doc_id")
+    joined = _hlq_eval(documents).join(
+        documents.select("doc_id", "lang"), on="doc_id"
     )
     return grouped_rank_auc(
         joined, "lang", "quality_score", F.col("is_good"), scale=1_000_000
@@ -6486,14 +6419,8 @@ def audio_ingest_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lang_id_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    preds = text.lang_id(documents).select("doc_id", "pred_lang")
-    joined = documents.select("doc_id", F.col("lang").alias("true_lang")).join(
-        preds, on="doc_id"
-    )
-    cells = joined.groupBy("true_lang", "pred_lang").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    cells = cells.persist()
+    cells = _lang_id_cells(documents)
+    cells = pin(cells)
     cells.count()  # three marginal consumers share one computation
     gold = cells.groupBy(F.col("true_lang").alias("lang")).agg(
         F.sum("n").cast("long").alias("n_gold")
@@ -6530,20 +6457,10 @@ def lang_id_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE)"
         ).alias("f1"),
     )
-    scored = scored.persist()
+    scored = pin(scored)
     scored.count()  # macro fold + row output share one computation
     macro = scored.agg(
-        (
-            F.aggregate(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("lang", "f1"))),
-                    lambda s: s["f1"],
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.count(F.lit(1))
-        ).alias("macro_f1")
+        (ordered_sum("lang", "f1") / F.count(F.lit(1))).alias("macro_f1")
     )
     return scored.crossJoin(F.broadcast(macro))
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nhl_data_warehouse_spark.operators.caching import cache_scope, checkpoint, pin
+
 
 def as_view(df: DataFrame, name: str) -> None:
     """M1 view materialization (reference ``dbt_project.yml:36``
@@ -53,13 +55,11 @@ def incremental_insert(
     # Materialize the anti-join BEFORE appending: the plan is lazy, so
     # counting afterwards would re-evaluate it against the already-
     # updated target and always report 0.
-    new_rows = df.join(existing, on=key, how="left_anti").persist()
-    try:
+    with cache_scope():
+        new_rows = pin(df.join(existing, on=key, how="left_anti"))
         n = new_rows.count()
         if n:
             new_rows.write.mode("append").saveAsTable(table)
-    finally:
-        new_rows.unpersist()
     return n
 
 
@@ -138,7 +138,7 @@ def merge_upsert_partitioned(
     # pin BEFORE writing: the plan reads the very files the dynamic
     # overwrite deletes; checkpointing materializes the merged slice
     # so the write has no lineage back to the target path
-    merged = merged.localCheckpoint()
+    merged = checkpoint(merged)
     overwrite_partitions(merged, path, partition_by)
 
 
@@ -175,19 +175,20 @@ def write_bucketed(
     table: str,
     bucket_key: str,
     n_buckets: int = 32,
-    sort: bool = True,
 ) -> None:
-    """Persist a table hash-bucketed (and optionally sorted) on its
-    join key: two tables bucketed the same way equi-join with NO
-    shuffle on either side — the pre-partitioning that turns the
+    """Persist a table hash-bucketed and sorted on its join key: two
+    tables bucketed the same way equi-join with NO shuffle on either
+    side — the pre-partitioning that turns the
     nightly big-fact ⋈ big-fact join from a full reshuffle of both
     inputs into a zip of co-located buckets. At 100TB this is the
     difference between moving the table and moving nothing.
     """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_key)
-    if sort:
-        w = w.sortBy(bucket_key)
-    w.saveAsTable(table)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_key)
+        .sortBy(bucket_key)
+        .saveAsTable(table)
+    )
 
 
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -283,9 +284,9 @@ def scd2_apply(
 #   * ``merge_upsert`` — staged-overwrite delete+insert (M2), exact
 #     semantics of the reference's incremental pattern, driver-green
 #     via ``merge_upsert_roundtrip``;
-#   * ``append_new_rows`` — anti-join incremental append, driver-green
+#   * ``incremental_insert`` — anti-join incremental append, driver-green
 #     via ``anti_join_incremental``;
-#   * ``scd2_upsert`` — the history-preserving variant.
+#   * ``scd2_apply`` — the history-preserving variant.
 # On a real lakehouse, swap the sink for a v2 catalog (Delta/Iceberg)
 # and express M2 as MERGE INTO; the logical plans above are the
 # engine-portable statement of the same semantics.
