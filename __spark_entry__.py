@@ -3,9 +3,7 @@
 ``entry(spark)`` runs the flagship snowflake-join query at sf0.001;
 ``queries()`` exposes every implemented operator from SURVEY.md §2
 (plus the beyond-reference training-data ops) as (spark, sf_dir) ->
-DataFrame; ``oracle_sql()`` gives the DuckDB-equivalent SQL for each
-(omitted only for ops whose semantics SQL can't express — those get
-the driver's weaker rows-only check).
+DataFrame; ``oracle_sql()`` gives the DuckDB-equivalent SQL for each.
 
 Implementation lives in ``nhl_data_warehouse_spark/suite/``.
 """
@@ -31,7 +29,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (where expressible)."""
-    return {
-        name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None
-    }
+    """DuckDB-runnable ANSI SQL oracle per query."""
+    return {name: spec.oracle for name, spec in REGISTRY.items()}

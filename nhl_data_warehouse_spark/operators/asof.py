@@ -86,8 +86,6 @@ def pit_join(
     dim: DataFrame,
     key: str,
     ts_col: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
     how: str = "left",
 ) -> DataFrame:
     """Point-in-time join of a fact stream to an SCD2 dimension: each
@@ -106,14 +104,14 @@ def pit_join(
     f, d = facts.alias("__f"), dim.alias("__d")
     cond = (
         (F.col(f"__f.{key}") == F.col(f"__d.{key}"))
-        & (F.col(f"__f.{ts_col}") >= F.col(f"__d.{valid_from}"))
+        & (F.col(f"__f.{ts_col}") >= F.col("__d.valid_from"))
         & (
-            F.col(f"__d.{valid_to}").isNull()
-            | (F.col(f"__f.{ts_col}") < F.col(f"__d.{valid_to}"))
+            F.col("__d.valid_to").isNull()
+            | (F.col(f"__f.{ts_col}") < F.col("__d.valid_to"))
         )
     )
     dim_cols = [
-        c for c in dim.columns if c not in (key, valid_from, valid_to)
+        c for c in dim.columns if c not in (key, "valid_from", "valid_to")
     ]
     # dim payloads keep their own names next to __f.* — that is only
     # well-formed when the names are disjoint from the fact columns

@@ -52,9 +52,6 @@ def apply_changes(
     target_table: str,
     changes: DataFrame,
     keys: Sequence[str],
-    seq_cols: Sequence[str],
-    op_col: str | None = None,
-    delete_values: Sequence[str] = ("D",),
 ) -> None:
     """Converge ``target_table`` to the source state described by a
     change batch: compact, then delete+upsert by key (the same staged
@@ -63,12 +60,8 @@ def apply_changes(
     no-op."""
     from nhl_data_warehouse_spark import write
 
-    latest = compact_changes(changes, keys, seq_cols)  # keep tombstones for now
-    upserts = (
-        latest.filter(~F.col(op_col).isin(list(delete_values)))
-        if op_col is not None
-        else latest
-    )
+    latest = compact_changes(changes, keys, ["seq"])  # keep tombstones for now
+    upserts = latest.filter(~F.col("op").isin(["D"]))
     if not write.table_exists(spark, target_table):
         upserts.write.saveAsTable(target_table)
         return

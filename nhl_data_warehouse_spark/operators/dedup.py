@@ -30,30 +30,27 @@ from pyspark.sql import functions as F
 from nhl_data_warehouse_spark.operators.caching import checkpoint, pin
 
 
-def normalized_text(col="text") -> F.Column:
-    """Canonical text for fingerprinting: lowercase, punctuation
+def normalized_text() -> F.Column:
+    """Canonical ``text`` for fingerprinting: lowercase, punctuation
     stripped, whitespace collapsed and trimmed."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.lower(c)
+    c = F.lower(F.col("text"))
     c = F.regexp_replace(c, r"[^a-z0-9\s]", "")
     c = F.regexp_replace(c, r"\s+", " ")
     return F.trim(c)
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", normalize: bool = False
-) -> DataFrame:
+def exact_dedup(df: DataFrame, normalize: bool = False) -> DataFrame:
     """Exact duplicate groups by content hash: one row per distinct
     content with the representative (min id) and the duplicate count.
     Content equality via md5 fingerprint group-by — one shuffle keyed
     on a 32-char hash, never on the (potentially huge) text itself.
     """
-    content = normalized_text(text_col) if normalize else F.col(text_col)
+    content = normalized_text() if normalize else F.col("text")
     return (
-        df.select(F.col(id_col), F.md5(content).alias("fingerprint"))
+        df.select(F.col("doc_id"), F.md5(content).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("representative_id"),
+            F.min("doc_id").alias("representative_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -62,8 +59,6 @@ def exact_dedup(
 def dedup_against_corpus(
     new_batch: DataFrame,
     history: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Incremental-ingest dedup: keep only the new-batch documents
     whose exact-text fingerprint is absent from the historical corpus,
@@ -80,14 +75,14 @@ def dedup_against_corpus(
     Composes with ``write.incremental_insert`` (J3/M2): this is the
     content-addressed generalization of its key-based anti-join.
     """
-    content = F.col(text_col)
-    new_fp = new_batch.select(F.col(id_col), F.md5(content).alias("fingerprint"))
+    content = F.col("text")
+    new_fp = new_batch.select(F.col("doc_id"), F.md5(content).alias("fingerprint"))
     hist_fp = history.select(F.md5(content).alias("fingerprint")).distinct()
     return (
         new_fp.join(hist_fp, on="fingerprint", how="left_anti")
         .groupBy("fingerprint")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col, "fingerprint")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id", "fingerprint")
     )
 
 
@@ -114,10 +109,10 @@ def scale_out(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingle_array(text_col: str | F.Column, k: int) -> F.Column:
-    """Distinct char k-gram shingles of a text column as an array —
-    a pure per-row expression (positions -> substring -> distinct)."""
-    text = F.col(text_col) if isinstance(text_col, str) else text_col
+def _shingle_array(k: int) -> F.Column:
+    """Distinct char k-gram shingles of ``text`` as an array — a pure
+    per-row expression (positions -> substring -> distinct)."""
+    text = F.col("text")
     positions = F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1)))
     return F.filter(
         F.array_distinct(F.transform(positions, lambda i: F.substring(text, i, k))),
@@ -125,21 +120,17 @@ def _shingle_array(text_col: str | F.Column, k: int) -> F.Column:
     )
 
 
-def char_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 12
-) -> DataFrame:
+def char_shingles(df: DataFrame, k: int = 12) -> DataFrame:
     """Distinct character k-gram shingles per document (narrow op:
     generate positions -> substring -> explode -> local distinct)."""
     return scale_out(df).select(
-        F.col(id_col),
-        F.explode(_shingle_array(text_col, k)).alias("shingle"),
+        F.col("doc_id"),
+        F.explode(_shingle_array(k)).alias("shingle"),
     )
 
 
-def char_shingles_multiset(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 12
-) -> DataFrame:
-    """Char k-gram shingles per document WITHOUT the per-doc distinct —
+def char_shingles_multiset(df: DataFrame) -> DataFrame:
+    """Char 12-gram shingles per document WITHOUT the per-doc distinct —
     for consumers whose aggregates dedupe anyway (``min`` in the
     minhash fold, ``collect_set`` in the verify path), where duplicate
     shingle rows change nothing.
@@ -154,89 +145,20 @@ def char_shingles_multiset(
     per-row work drops out of the interpreter. Never use it where
     per-doc distinctness is load-bearing (window/frequency counts:
     the all-pairs and prefix-filter paths)."""
-    text = F.col(text_col)
-    positions = F.sequence(
-        F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1))
-    )
+    text = F.col("text")
+    positions = F.sequence(F.lit(1), F.greatest(F.length(text) - 11, F.lit(1)))
     return (
         scale_out(df)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             text.alias("__t"),
             F.explode(positions).alias("__p"),
         )
         .select(
-            F.col(id_col),
-            F.col("__t").substr(F.col("__p"), F.lit(k)).alias("shingle"),
+            F.col("doc_id"),
+            F.col("__t").substr(F.col("__p"), F.lit(12)).alias("shingle"),
         )
-        .filter(F.length("shingle") == k)
-    )
-
-
-def minhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 12,
-    n_hashes: int = 8,
-) -> DataFrame:
-    """MinHash signature per document: for hash function i,
-    ``min(<8-hex window i of md5(prefix || shingle)>)`` over the doc's
-    distinct char k-gram shingles — computed as a single per-row fold
-    (windowed digests: see ``_WINDOWS_PER_MD5``).
-
-    Shuffle-free narrow map: the shingle array is built once per
-    document and folded once (``F.aggregate`` with a struct
-    accumulator holding the n running minima); nothing leaves its
-    input partition. Trade-off vs ``minhash_signatures``
-    (explode + hash-aggregate): that path pays one tiny shuffle of
-    (doc, n_hashes) partial minima but its md5 work runs inside
-    whole-stage codegen, while higher-order-function lambdas are
-    evaluated interpreted — measured on ~300-char docs the codegen
-    path is ~30% faster, so it is the default in the suite. This
-    fold form wins when shuffles are the scarce resource (very wide
-    docs, or a cluster where the explode's row blow-up pressures
-    shuffle memory).
-
-    Documents with no length-k shingle (len(text) < k) are dropped,
-    matching the relational formulation where they produce no rows.
-    """
-    hashes = list(range(1, n_hashes + 1))
-    n_digests = (n_hashes + _WINDOWS_PER_MD5 - 1) // _WINDOWS_PER_MD5
-    # 'g' sorts after every lowercase-hex md5 digest, so it is an
-    # identity element for the string-min fold
-    init = F.struct(*[F.lit("g").alias(f"mh{i}") for i in hashes])
-
-    def slot(h, i):
-        j, start = _mh_window(i)
-        return F.substring(h[f"h{j}"], start, 8)
-
-    sig = F.aggregate(
-        F.col("_hashed"),
-        init,
-        lambda acc, h: F.struct(
-            *[F.least(acc[f"mh{i}"], slot(h, i)).alias(f"mh{i}") for i in hashes]
-        ),
-    )
-    # hash each shingle ONCE into a struct of digests, then fold mins
-    # of its 8-hex windows (same ceil(n/4)-digest trick as
-    # minhash_signatures, see _WINDOWS_PER_MD5)
-    hashed = F.transform(
-        F.col("_shingles"),
-        lambda s: F.struct(
-            *[
-                F.md5(F.concat(F.lit(f"{j}|"), s)).alias(f"h{j}")
-                for j in range(n_digests)
-            ]
-        ),
-    )
-    return (
-        scale_out(df)
-        .select(F.col(id_col), _shingle_array(text_col, k).alias("_shingles"))
-        .filter(F.size("_shingles") > 0)
-        .select(F.col(id_col), hashed.alias("_hashed"))
-        .select(F.col(id_col), sig.alias("_sig"))
-        .select(id_col, *[F.col(f"_sig.mh{i}").alias(f"mh{i}") for i in hashes])
+        .filter(F.length("shingle") == 12)
     )
 
 
@@ -255,29 +177,25 @@ def _mh_window(i: int):
     return j, 1 + 8 * k
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str = "doc_id", n_hashes: int = 8
-) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, n_hashes: int = 8) -> DataFrame:
     """MinHash signatures from an exploded (doc, shingle) pair table:
     one hash-aggregate with n inline mins over 8-hex md5 windows (see
     ``_WINDOWS_PER_MD5`` — ceil(n/4) digests per shingle). Partial
     (map-side) aggregation means the shuffle carries only
     (doc, n_hashes) minima regardless of shingle count; codegen
     subexpression elimination computes each digest once per row even
-    though 4 aggregates reference it. Prefer ``minhash`` (fused,
-    shuffle-free) when shuffle pressure matters more than codegen."""
+    though 4 aggregates reference it."""
 
     def mh(i: int):
         j, start = _mh_window(i)
         digest = F.md5(F.concat(F.lit(f"{j}|"), F.col("shingle")))
         return F.min(F.substring(digest, start, 8)).alias(f"mh{i}")
 
-    return shingles.groupBy(id_col).agg(*[mh(i) for i in range(1, n_hashes + 1)])
+    return shingles.groupBy("doc_id").agg(*[mh(i) for i in range(1, n_hashes + 1)])
 
 
 def minhash_band_candidates(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     n_hashes: int = 8,
     band_size: int = 2,
     star_cap: int | None = None,
@@ -302,7 +220,7 @@ def minhash_band_candidates(
     """
     n_bands = n_hashes // band_size
     bands = signatures.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(
                 *[
@@ -321,7 +239,7 @@ def minhash_band_candidates(
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     # both sides of the self-join read `bands`; persist so the
     # signature computation upstream runs once, not twice
     bands = pin(bands)
@@ -332,12 +250,12 @@ def minhash_band_candidates(
         # when small and falls back to a co-partitioned join when a
         # 100 TB bucket count outgrows the broadcast ceiling
         stats = bands.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bsz"), F.min(id_col).alias("__bmin")
+            F.count(F.lit(1)).alias("__bsz"), F.min("doc_id").alias("__bmin")
         )
         sized = bands.join(stats, on=["band", "bucket"])
         small = sized.filter(F.col("__bsz") <= star_cap).drop("__bsz", "__bmin")
-        sa = small.select(F.col(id_col).alias("a_id"), "band", "bucket")
-        sb = small.select(F.col(id_col).alias("b_id"), "band", "bucket")
+        sa = small.select(F.col("doc_id").alias("a_id"), "band", "bucket")
+        sb = small.select(F.col("doc_id").alias("b_id"), "band", "bucket")
         all_pairs = (
             sa.join(sb, on=["band", "bucket"])
             .filter(F.col("a_id") < F.col("b_id"))
@@ -345,13 +263,13 @@ def minhash_band_candidates(
         )
         star_pairs = (
             sized.filter(
-                (F.col("__bsz") > star_cap) & (F.col(id_col) != F.col("__bmin"))
+                (F.col("__bsz") > star_cap) & (F.col("doc_id") != F.col("__bmin"))
             )
-            .select(F.col("__bmin").alias("a_id"), F.col(id_col).alias("b_id"))
+            .select(F.col("__bmin").alias("a_id"), F.col("doc_id").alias("b_id"))
         )
         return all_pairs.unionByName(star_pairs).distinct()
-    a = bands.select(F.col(id_col).alias("a_id"), "band", "bucket")
-    b = bands.select(F.col(id_col).alias("b_id"), "band", "bucket")
+    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bucket")
+    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bucket")
     return (
         a.join(b, on=["band", "bucket"])
         .filter(F.col("a_id") < F.col("b_id"))
@@ -363,7 +281,6 @@ def minhash_band_candidates(
 def jaccard_pairs(
     shingles: DataFrame,
     candidates: DataFrame | None = None,
-    id_col: str = "doc_id",
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
     metric: str = "jaccard",
@@ -406,14 +323,12 @@ def jaccard_pairs(
                 .filter(F.col("__tf") <= max_shingle_freq)
                 .drop("__tf")
             )
-        sh = sh.withColumn(
-            "__n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-        )
+        sh = sh.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
         a = sh.select(
-            F.col(id_col).alias("a_id"), "shingle", F.col("__n").alias("n_a")
+            F.col("doc_id").alias("a_id"), "shingle", F.col("__n").alias("n_a")
         )
         b = sh.select(
-            F.col(id_col).alias("b_id"), "shingle", F.col("__n").alias("n_b")
+            F.col("doc_id").alias("b_id"), "shingle", F.col("__n").alias("n_b")
         )
         scored = (
             a.join(b, on="shingle")
@@ -463,19 +378,17 @@ def jaccard_pairs(
     # ObjectHashAggregate passes over the cached shingles), while
     # pinning docsets runs shingling + the set aggregate exactly once
     # and caches one row per doc instead of one per shingle (§2.4/§5).
-    docsets = pin(
-        sh.groupBy(id_col).agg(F.collect_set("shingle").alias("__set"))
-    )
+    docsets = pin(sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("__set")))
     scored = (
         candidates.join(
             docsets.select(
-                F.col(id_col).alias("a_id"), F.col("__set").alias("__set_a")
+                F.col("doc_id").alias("a_id"), F.col("__set").alias("__set_a")
             ).hint("shuffle_hash"),
             on="a_id",
         )
         .join(
             docsets.select(
-                F.col(id_col).alias("b_id"), F.col("__set").alias("__set_b")
+                F.col("doc_id").alias("b_id"), F.col("__set").alias("__set_b")
             ).hint("shuffle_hash"),
             on="b_id",
         )
@@ -524,7 +437,6 @@ def _pair_score(scored: DataFrame, metric: str, threshold: float) -> DataFrame:
 def prefix_filter_jaccard_pairs(
     shingles: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT Jaccard >= ``threshold`` pairs via prefix filtering
     (SSJoin/PPJoin candidate generation) — the subquadratic path to
@@ -585,8 +497,8 @@ def prefix_filter_jaccard_pairs(
     # skew exposure, one less full exchange + no join), measured 2.2x
     # faster at sf0.1.
     w_tf = Window.partitionBy("shingle")
-    w_doc = Window.partitionBy(id_col).orderBy("__tf", "shingle")
-    w_n = Window.partitionBy(id_col)
+    w_doc = Window.partitionBy("doc_id").orderBy("__tf", "shingle")
+    w_n = Window.partitionBy("doc_id")
     index_pref = (
         shingles.withColumn("__tf", F.count(F.lit(1)).over(w_tf))
         .withColumn("__rn", F.row_number().over(w_doc))
@@ -595,7 +507,7 @@ def prefix_filter_jaccard_pairs(
             F.col("__rn")
             <= F.col("__n") - F.expr(f"({p} * __n + {q - 1}) div {q}") + F.lit(1)
         )
-        .select(id_col, "shingle", "__rn", "__n")
+        .select("doc_id", "shingle", "__rn", "__n")
     )
     # feeds BOTH sides of the candidate join — persist so the
     # window pipeline runs once, not per branch
@@ -616,13 +528,13 @@ def prefix_filter_jaccard_pairs(
         + F.lit(1)
     )
     a = probe_pref.select(
-        F.col(id_col).alias("a_id"),
+        F.col("doc_id").alias("a_id"),
         "shingle",
         F.col("__rn").alias("__rn_a"),
         F.col("__n").alias("__n_a"),
     )
     b = index_pref.select(
-        F.col(id_col).alias("b_id"),
+        F.col("doc_id").alias("b_id"),
         "shingle",
         F.col("__rn").alias("__rn_b"),
         F.col("__n").alias("__n_b"),
@@ -652,7 +564,7 @@ def prefix_filter_jaccard_pairs(
         )
         .distinct()
     )
-    return jaccard_pairs(shingles, candidates=cand, id_col=id_col, threshold=threshold)
+    return jaccard_pairs(shingles, candidates=cand, threshold=threshold)
 
 
 def connected_components(
@@ -808,9 +720,7 @@ def connected_components_kiveris(
     )
 
 
-def simhash(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 16
-) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash sketch: per token, bit b votes +1/-1 by the high bit of
     hex digit b of md5(token); the sketch sets bit b iff the weighted
     vote is positive. Near-dup docs differ in few bits (hamming), so
@@ -831,7 +741,7 @@ def simhash(
     The narrow doc-grain shuffle is cheap; the per-token CPU is not.
     Documents with no tokens produce no rows, matching the relational
     formulation. The sketch is per-ID, not per-row: rows sharing
-    ``id_col`` pool their token votes into ONE sketch (the groupBy
+    ``doc_id`` pool their token votes into ONE sketch (the groupBy
     grain — a multi-shard ingest of the same document fingerprints
     the union of its shards; pre-dedup rows if per-row sketches are
     wanted).
@@ -840,15 +750,15 @@ def simhash(
     toks = (
         scale_out(df)
         .select(
-            F.col(id_col),
-            F.explode(F.split(F.col(text_col), " ")).alias("_t"),
+            F.col("doc_id"),
+            F.explode(F.split(F.col("text"), " ")).alias("_t"),
         )
         .where(F.col("_t") != "")
-        .select(id_col, F.md5("_t").alias("_h"))
+        .select("doc_id", F.md5("_t").alias("_h"))
     )
     # hex digits order '0'-'9' < 'a'-'f', so >= '8' is exactly the
     # high-bit test (same set as the oracle's strpos('89abcdef', ch))
-    votes = toks.groupBy(id_col).agg(
+    votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.col("_h").substr(b + 1, 1) >= "8", 1).otherwise(-1)
@@ -865,7 +775,7 @@ def simhash(
             for b in range(bits)
         ],
     )
-    return votes.select(id_col, sketch.alias("simhash"))
+    return votes.select("doc_id", sketch.alias("simhash"))
 
 
 def dedup_savings_report(
@@ -925,8 +835,6 @@ def dedup_savings_report(
 
 def paragraph_dedup_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     delim: str = "\n\n",
     min_chars: int = 1,
 ) -> DataFrame:
@@ -956,19 +864,19 @@ def paragraph_dedup_stats(
     exchanges differ (partial counts vs (id, h, len)) so ReuseExchange
     cannot share them — without the pin the corpus-scale
     split/trim/md5 projection executes twice (code-review r12; the
-    fuzzyjoin/_canonical_deg_tri convention). Released by the
+    fuzzyjoin/_deg_tri convention). Released by the
     caller's ``cache_scope`` or ``session.release_cached``.
     """
     seg = F.trim(F.col("_p"))
     paras = (
         scale_out(df)
         .select(
-            F.col(id_col),
-            F.explode(F.split(F.col(text_col), delim)).alias("_p"),
+            F.col("doc_id"),
+            F.explode(F.split(F.col("text"), delim)).alias("_p"),
         )
         .where(F.length(seg) >= min_chars)
         .select(
-            id_col,
+            "doc_id",
             F.md5(seg).alias("_h"),
             F.length(seg).cast("long").alias("_len"),
         )
@@ -977,7 +885,7 @@ def paragraph_dedup_stats(
     freq = paras.groupBy("_h").agg(F.count(F.lit(1)).alias("_n"))
     return (
         paras.join(freq, on="_h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_paras"),
             F.sum(F.when(F.col("_n") > 1, 1).otherwise(0))
@@ -995,7 +903,6 @@ def length_blocked_edit_pairs(
     df: DataFrame,
     name_col: str = "name",
     max_dist: int = 2,
-    block_width: int | None = None,
 ) -> DataFrame:
     """Entity-resolution near-dup pairing by EDIT DISTANCE with
     LOSSLESS length blocking — the string-grain similarity the
@@ -1030,8 +937,7 @@ def length_blocked_edit_pairs(
     (name_a, name_b, edit_dist, n_recs_a, n_recs_b) with
     name_a < name_b.
     """
-    b = block_width if block_width is not None else 2 * max_dist + 1
-    assert b >= 2 * max_dist + 1, "blocks must cover the ±d length window"
+    b = 2 * max_dist + 1  # the narrowest block covering the ±d length window
     names = (
         df.select(F.col(name_col).alias("_nm"))
         .groupBy("_nm")
@@ -1078,29 +984,25 @@ def length_blocked_edit_pairs(
 
 def simhash_band_near_dups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
     """SimHash near-duplicate PAIRING — the join the ``simhash``
     sketch exists for (the sketch query only computes the per-doc
-    fingerprint): all pairs of documents whose ``bits``-bit simhashes
+    fingerprint): all pairs of documents whose 32-bit simhashes
     differ in at most ``max_hamming`` bits, WITHOUT an all-pairs
     comparison. The Manku/Google dedup recipe: split the sketch into
-    ``bands`` contiguous bit-bands; by pigeonhole, two sketches with
-    Hamming distance <= bands-1 agree EXACTLY on at least one band,
+    4 contiguous 8-bit bands; by pigeonhole, two sketches with
+    Hamming distance <= 3 agree EXACTLY on at least one band,
     so an equi-join on (band index, band bits) finds every qualifying
-    pair (completeness requires ``max_hamming <= bands - 1``,
+    pair (completeness requires ``max_hamming <= 3``,
     asserted) and a cheap ``bit_count(xor)`` verify rejects the false
     candidates. Exact — the oracle is the naive all-pairs join.
 
     Scale shape: sketches are one narrow map (``simhash``); each doc
-    explodes to ``bands`` (band, key) rows; candidates come from a
+    explodes to 4 (band, key) rows; candidates come from a
     band-keyed self-equi-join — the LSH band-bucket shape, never a
     cartesian. Bucket population is n / 2^(bits/bands) per band key
-    in expectation: at the suite's 32-bit/4-band setting that is
+    in expectation: at this 32-bit/4-band setting that is
     n/256; a production 64-bit sketch with 16-bit bands bounds it to
     n/65536 (the same knob as MinHash-LSH band width). Verify cost is
     one integer xor per candidate. Duplicate SKETCHES (exact dups)
@@ -1110,13 +1012,12 @@ def simhash_band_near_dups(
     Output: (id_a, id_b, hamming) with id_a < id_b, one row per
     qualifying pair.
     """
-    assert max_hamming <= bands - 1, "pigeonhole completeness bound"
-    assert bits % bands == 0
-    width = bits // bands
-    sk = simhash(df, id_col=id_col, text_col=text_col, bits=bits)
+    assert max_hamming <= 3, "pigeonhole completeness bound of 4 bands"
+    width = 8  # 32-bit sketch, 4 bands
+    sk = simhash(df, bits=32)
     mask = (1 << width) - 1
     keyed = sk.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.col("simhash").alias("_sk"),
         F.posexplode(
             F.array(
@@ -1124,7 +1025,7 @@ def simhash_band_near_dups(
                     F.shiftrightunsigned(F.col("simhash"), b * width)
                     .bitwiseAND(F.lit(mask))
                     .cast("long")
-                    for b in range(bands)
+                    for b in range(4)
                 ]
             )
         ).alias("_band", "_key"),
@@ -1156,10 +1057,10 @@ def simhash_band_near_dups(
     ).where(F.col("hamming") <= max_hamming)
 
 
-def _token_docs(df: DataFrame, key_col: str, text_col: str) -> DataFrame:
+def _token_docs(df: DataFrame, key_col: str) -> DataFrame:
     """(key, _toks, _n) of each document with at least one
     whitespace token."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     return (
         scale_out(df)
         .select(F.col(key_col), toks.alias("_toks"))
@@ -1179,8 +1080,6 @@ def _chunk_hashes(n_chunks: F.Column, c: int) -> F.Column:
 
 def dup_chunk_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 8,
 ) -> DataFrame:
     """Per-document duplicated-chunk fraction (Dolma/RedPajama-style
@@ -1204,26 +1103,26 @@ def dup_chunk_stats(
     sub-document granularity.
     """
     c = int(chunk_tokens)
-    base = _token_docs(df, id_col, text_col)
+    base = _token_docs(df, "doc_id")
     n_chunks = F.ceil(F.col("_n") / F.lit(float(c)))
     chunks = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chunks.cast("long").alias("n_chunks"),
         F.explode(_chunk_hashes(n_chunks, c)).alias("chunk_hash"),
     )
     occ = chunks.groupBy("chunk_hash").agg(
-        F.count_distinct(F.col(id_col)).alias("_nd")
+        F.count_distinct(F.col("doc_id")).alias("_nd")
     )
     return (
         chunks.join(occ, "chunk_hash")
-        .groupBy(id_col, "n_chunks")
+        .groupBy("doc_id", "n_chunks")
         .agg(
             F.sum(F.when(F.col("_nd") >= 2, 1).otherwise(0))
             .cast("long")
             .alias("n_dup_chunks")
         )
         .select(
-            id_col,
+            "doc_id",
             "n_chunks",
             "n_dup_chunks",
             (
@@ -1236,8 +1135,6 @@ def dup_chunk_stats(
 
 def remove_duplicate_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 8,
 ) -> DataFrame:
     """Exact duplicated-span REMOVAL (the ExactSubstr rewrite of Lee
@@ -1263,7 +1160,7 @@ def remove_duplicate_spans(
     to sub-document spans.
     """
     c = int(chunk_tokens)
-    base = _token_docs(df, id_col, text_col).withColumn(
+    base = _token_docs(df, "doc_id").withColumn(
         "n_chunks", F.ceil(F.col("_n") / F.lit(float(c))).cast("long")
     )
     # base feeds the chunk explode AND the final stitch; chunks feeds
@@ -1272,17 +1169,17 @@ def remove_duplicate_spans(
     # caller's cache_scope or session.release_cached)
     base = pin(base)
     chunks = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(_chunk_hashes(F.col("n_chunks"), c)).alias("_i", "_h"),
     )
     chunks = pin(chunks)
     occ = chunks.groupBy("_h").agg(
-        F.count_distinct(F.col(id_col)).alias("_nd"),
-        F.min(id_col).alias("_mdoc"),
+        F.count_distinct(F.col("doc_id")).alias("_nd"),
+        F.min("doc_id").alias("_mdoc"),
     )
     first_i = (
         chunks.join(occ, "_h")
-        .filter(F.col(id_col) == F.col("_mdoc"))
+        .filter(F.col("doc_id") == F.col("_mdoc"))
         .groupBy("_h")
         .agg(F.min("_i").alias("_fi"))
     )
@@ -1291,18 +1188,18 @@ def remove_duplicate_spans(
         .join(first_i, "_h")
         .filter(
             (F.col("_nd") < 2)
-            | ((F.col(id_col) == F.col("_mdoc")) & (F.col("_i") == F.col("_fi")))
+            | ((F.col("doc_id") == F.col("_mdoc")) & (F.col("_i") == F.col("_fi")))
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sort_array(F.collect_list("_i")).alias("_ki"),
             F.count(F.lit(1)).cast("long").alias("_n_kept"),
         )
     )
     return (
-        base.join(kept, on=id_col, how="left")
+        base.join(kept, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             "n_chunks",
             (F.col("n_chunks") - F.coalesce(F.col("_n_kept"), F.lit(0))).alias(
                 "n_removed"
@@ -1325,8 +1222,6 @@ def remove_duplicate_spans(
 
 def source_overlap_matrix(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
     chunk_tokens: int = 8,
 ) -> DataFrame:
     """Cross-source duplication matrix: for every source pair, how
@@ -1343,26 +1238,26 @@ def source_overlap_matrix(
     never doc-pair work. Emits only pairs sharing >= 1 chunk.
     """
     c = int(chunk_tokens)
-    base = _token_docs(df, group_col, text_col)
+    base = _token_docs(df, "source")
     n_chunks = F.ceil(F.col("_n") / F.lit(float(c)))
     sc = base.select(
-        F.col(group_col),
+        F.col("source"),
         F.explode(_chunk_hashes(n_chunks, c)).alias("chunk_hash"),
     ).distinct()
     # read 3x (sizes + both self-join sides); released by the
     # caller's cache_scope or session.release_cached
     sc = pin(sc)
-    sizes = sc.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_chunks"))
-    a = sc.select(F.col(group_col).alias("src_a"), "chunk_hash")
-    b = sc.select(F.col(group_col).alias("src_b"), "chunk_hash")
+    sizes = sc.groupBy("source").agg(F.count(F.lit(1)).alias("n_chunks"))
+    a = sc.select(F.col("source").alias("src_a"), "chunk_hash")
+    b = sc.select(F.col("source").alias("src_b"), "chunk_hash")
     inter = (
         a.join(b, on="chunk_hash")
         .filter(F.col("src_a") < F.col("src_b"))
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(group_col).alias("src_a"), F.col("n_chunks").alias("n_a"))
-    sb = sizes.select(F.col(group_col).alias("src_b"), F.col("n_chunks").alias("n_b"))
+    sa = sizes.select(F.col("source").alias("src_a"), F.col("n_chunks").alias("n_a"))
+    sb = sizes.select(F.col("source").alias("src_b"), F.col("n_chunks").alias("n_b"))
     return (
         inter.join(sa, on="src_a")
         .join(sb, on="src_b")
@@ -1380,12 +1275,7 @@ def source_overlap_matrix(
     )
 
 
-def dedup_rate_by_group(
-    df: DataFrame,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_rate_by_group(df: DataFrame) -> DataFrame:
     """Per-group duplicate-rate report: for each group (source,
     language, crawl, ...), how many docs exist, how many are copies
     of content (``normalized_text``) that appears >= 2 times ANYWHERE
@@ -1398,14 +1288,12 @@ def dedup_rate_by_group(
     one join back, one per-group rollup — all partial-agg friendly;
     text never shuffles.
     """
-    fp = F.md5(normalized_text(text_col))
-    docs = scale_out(df).select(
-        F.col(group_col), F.col(id_col), fp.alias("_fp")
-    )
+    fp = F.md5(normalized_text())
+    docs = scale_out(df).select(F.col("source"), F.col("doc_id"), fp.alias("_fp"))
     occ = docs.groupBy("_fp").agg(F.count(F.lit(1)).alias("_nc"))
     return (
         docs.join(occ, on="_fp")
-        .groupBy(group_col)
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.when(F.col("_nc") >= 2, 1).otherwise(0))
@@ -1413,7 +1301,7 @@ def dedup_rate_by_group(
             .alias("n_dup_docs"),
         )
         .select(
-            group_col,
+            "source",
             "n_docs",
             "n_dup_docs",
             (
@@ -1423,23 +1311,16 @@ def dedup_rate_by_group(
     )
 
 
-def cdc_chunks(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    divisor: int = 16,
-) -> DataFrame:
+def cdc_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking (the FastCDC/rolling-window idea
     reduced to its portable core): a chunk boundary falls AFTER
-    character position ``e = i + window - 1`` whenever the hash of the
-    ``window`` chars ending there satisfies ``hex4(md5(win)) %
-    divisor == 0``. Because the trigger depends only on LOCAL content,
+    character position ``e = i + 7`` whenever the hash of the 8
+    chars ending there satisfies ``hex4(md5(win)) % 16 == 0``. Because the trigger depends only on LOCAL content,
     an insertion near the start of a document re-chunks only the
     region it touches — unlike the fixed 8-token chunk grain
     (``dup_chunk_fraction``), where one inserted token shifts every
     later chunk and defeats chunk-hash dedup. Expected chunk length is
-    ~``divisor`` chars plus the window.
+    ~16 chars plus the window.
 
     Output: one row per chunk (id, chunk_start, chunk_len,
     chunk_hash) with md5 chunk hashes — the sub-document dedup grain.
@@ -1450,11 +1331,11 @@ def cdc_chunks(
     higher-order-function formulation was measured 3x slower at sf0.1
     because HOF lambdas evaluate interpreted), and ONLY the narrow
     ``(_id, e)`` boundary rows shuffle, into a per-doc sorted array
-    (~L/divisor ints per doc). Document text crosses an Exchange
+    (~L/16 ints per doc). Document text crosses an Exchange
     exactly ONCE per document — the doc-grain equi-join that brings
     the boundary array back — never at the boundary/position grain
     (the old lag-window form replicated the full text onto every
-    boundary row: O(L²/divisor) shuffle bytes per document). Spans
+    boundary row: O(L²/16) shuffle bytes per document). Spans
     and chunk hashes then derive per-row from the bounded array with
     ``transform``/``zip_with`` + one explode. Pinned by
     tests/test_round11_fixes.py: no Exchange child may carry the text
@@ -1464,8 +1345,8 @@ def cdc_chunks(
     # (one digest per character window) and runs BEFORE any exchange —
     # an under-partitioned scan (one small parquet file) would
     # serialize all of it onto one task; no-op at real scale
-    docs = scale_out(df.where(F.length(F.col(text_col)) >= 1)).select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
+    docs = scale_out(df.where(F.length(F.col("text")) >= 1)).select(
+        F.col("doc_id").alias("_id"), F.col("text").alias("_t")
     )
     Lt = F.length("_t")
     pos = docs.select(
@@ -1473,19 +1354,19 @@ def cdc_chunks(
         Lt.alias("_len"),
         "_t",
         F.explode(
-            F.when(Lt >= window, F.sequence(F.lit(1), Lt - (window - 1)))
+            F.when(Lt >= 8, F.sequence(F.lit(1), Lt - 7))
             .otherwise(F.array().cast("array<int>"))
         ).alias("i"),
     )
-    e = F.col("i") + (window - 1)
+    e = F.col("i") + 7
     bnd = pos.where(
         (
             F.conv(
-                F.substring(F.md5(F.substring("_t", F.col("i"), F.lit(window))), 1, 4),
+                F.substring(F.md5(F.substring("_t", F.col("i"), F.lit(8))), 1, 4),
                 16,
                 10,
             ).cast("long")
-            % divisor
+            % 16
             == 0
         )
         & (e < F.col("_len"))
@@ -1503,7 +1384,7 @@ def cdc_chunks(
     return joined.select(
         "_id", "_t", F.explode(spans).alias("se")
     ).select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.col("se.s").alias("chunk_start"),
         (F.col("se.e") - F.col("se.s") + 1).cast("long").alias("chunk_len"),
         F.md5(F.expr("substring(_t, se.s, se.e - se.s + 1)")).alias(
@@ -1512,13 +1393,7 @@ def cdc_chunks(
     )
 
 
-def cdc_dedup_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    divisor: int = 16,
-) -> DataFrame:
+def cdc_dedup_stats(df: DataFrame) -> DataFrame:
     """Per-document sub-document dedup scorecard over the
     content-defined chunk grain: chunk count, chunks whose hash also
     appears in at least one OTHER document, and the duplicated
@@ -1529,22 +1404,22 @@ def cdc_dedup_stats(
     never a self-join of chunk rows. Zero-chunk (empty) documents are
     kept via the left join with NULL fraction.
     """
-    chunks = cdc_chunks(df, id_col, text_col, window, divisor)
+    chunks = cdc_chunks(df)
     per_hash = chunks.groupBy("chunk_hash").agg(
-        F.count_distinct(F.col(id_col)).alias("n_docs_with")
+        F.count_distinct(F.col("doc_id")).alias("n_docs_with")
     )
     flagged = chunks.join(per_hash, on="chunk_hash").select(
-        id_col, (F.col("n_docs_with") >= 2).cast("long").alias("is_dup")
+        "doc_id", (F.col("n_docs_with") >= 2).cast("long").alias("is_dup")
     )
-    per_doc = flagged.groupBy(id_col).agg(
+    per_doc = flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_chunks"),
         F.sum("is_dup").cast("long").alias("n_dup_chunks"),
     )
     return (
-        df.select(id_col)
-        .join(per_doc, on=id_col, how="left")
+        df.select("doc_id")
+        .join(per_doc, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
             F.coalesce("n_dup_chunks", F.lit(0)).alias("n_dup_chunks"),
             F.expr(
@@ -1559,11 +1434,11 @@ def cdc_dedup_stats(
 _TRACKING_PARAM_RE = "^(utm_[^=&]*|gclid|fbclid|ref)(=|$)"
 
 
-def _url_head(col) -> tuple[F.Column, F.Column, F.Column]:
+def _url_head() -> tuple[F.Column, F.Column, F.Column]:
     """A URL trimmed and fragment-stripped, its lowercased scheme, and
     its lowercased host with the scheme's default port removed
     (``canonical_url`` rules 1-3)."""
-    u = F.trim(F.col(col) if isinstance(col, str) else col)
+    u = F.trim(F.col("url"))
     u = F.regexp_replace(u, "#.*$", "")
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
     auth = F.lower(
@@ -1577,7 +1452,7 @@ def _url_head(col) -> tuple[F.Column, F.Column, F.Column]:
     return u, scheme, host
 
 
-def canonical_url(col="url") -> F.Column:
+def canonical_url() -> F.Column:
     """Canonical form of an absolute URL — the C4/CCNet *first-line*
     dedup grain: web corpora dedup by normalized URL before any
     content pass, because the same page is crawled under dozens of
@@ -1611,7 +1486,7 @@ def canonical_url(col="url") -> F.Column:
     miss rate of those two is negligible next to tracking-param and
     slash noise.
     """
-    u, scheme, host = _url_head(col)
+    u, scheme, host = _url_head()
     path = F.regexp_replace(
         F.regexp_extract(
             u, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)", 1
@@ -1635,9 +1510,7 @@ def canonical_url(col="url") -> F.Column:
     return F.when((scheme == "") | (host == ""), F.lit(None)).otherwise(out)
 
 
-def url_dedup_groups(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def url_dedup_groups(df: DataFrame) -> DataFrame:
     """URL-grain exact dedup: one row per canonical URL with the
     representative (min id) and the duplicate count — ``exact_dedup``
     with ``canonical_url`` as the content fingerprint. Rows whose URL
@@ -1651,13 +1524,13 @@ def url_dedup_groups(
     contract, one grain up the C4/CCNet ladder: URL -> document ->
     paragraph -> chunk -> n-gram.
     """
-    canon = canonical_url(url_col)
+    canon = canonical_url()
     return (
-        df.select(F.col(id_col), canon.alias("canonical_url"))
+        df.select(F.col("doc_id"), canon.alias("canonical_url"))
         .where(F.col("canonical_url").isNotNull())
         .groupBy("canonical_url")
         .agg(
-            F.min(id_col).alias("representative_id"),
+            F.min("doc_id").alias("representative_id"),
             F.count(F.lit(1)).cast("long").alias("n_copies"),
         )
     )
@@ -1665,10 +1538,7 @@ def url_dedup_groups(
 
 def within_doc_segment_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     delim: str = "\n\n",
-    min_chars: int = 1,
     join_delim: str | None = None,
 ) -> DataFrame:
     """WITHIN-document segment dedup — the Dolma/CCNet per-document
@@ -1679,8 +1549,8 @@ def within_doc_segment_dedup(
     outside the document, so templated pages that repeat their own
     nav/footer blocks shrink even when nothing repeats corpus-wide.
 
-    Semantics: split on ``delim`` (Java regex), trim, drop segments
-    under ``min_chars``; within each document keep the first (minimum
+    Semantics: split on ``delim`` (Java regex), trim, drop empty
+    segments; within each document keep the first (minimum
     split position) occurrence of each distinct trimmed segment;
     output one row per document that retains >= 1 segment:
     (id, n_segs, n_kept, chars_removed, clean_text) with clean_text
@@ -1701,16 +1571,16 @@ def within_doc_segment_dedup(
     segs = (
         scale_out(df)
         .select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), delim)).alias("_i", "_p"),
+            F.col("doc_id"),
+            F.posexplode(F.split(F.col("text"), delim)).alias("_i", "_p"),
         )
-        .where(F.length(seg) >= min_chars)
-        .select(id_col, "_i", seg.alias("_s"))
+        .where(F.length(seg) >= 1)
+        .select("doc_id", "_i", seg.alias("_s"))
     )
-    w = Window.partitionBy(id_col, F.md5(F.col("_s")))
+    w = Window.partitionBy("doc_id", F.md5(F.col("_s")))
     flagged = segs.withColumn("_first", F.min("_i").over(w) == F.col("_i"))
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_segs"),
             F.sum(F.col("_first").cast("long")).cast("long").alias("n_kept"),
@@ -1737,7 +1607,7 @@ def within_doc_segment_dedup(
     )
 
 
-def site_key(url_col="url") -> F.Column:
+def site_key() -> F.Column:
     """Site identity of a URL — the canonical host with a leading
     ``www.`` stripped: the grain C4-style corpora gate and report on
     (domain blocklists, per-site caps, head-concentration checks).
@@ -1747,14 +1617,13 @@ def site_key(url_col="url") -> F.Column:
     (lowercase, default ports removed) cover the overwhelming share
     of same-site aliasing. NULL for URLs with no parseable host.
     """
-    _, scheme, host = _url_head(url_col)
+    _, scheme, host = _url_head()
     host = F.regexp_replace(host, r"^www\.", "")
     return F.when((scheme == "") | (host == ""), F.lit(None)).otherwise(host)
 
 
 def domain_concentration(
     df: DataFrame,
-    url_col: str = "url",
     weight_col: str | None = None,
     top_k: int = 20,
 ) -> DataFrame:
@@ -1781,7 +1650,7 @@ def domain_concentration(
         else F.lit(1).cast("long")
     )
     sites = (
-        df.select(site_key(url_col).alias("site"), wexpr.alias("_w"))
+        df.select(site_key().alias("site"), wexpr.alias("_w"))
         .where(F.col("site").isNotNull())
         .groupBy("site")
         .agg(

@@ -25,22 +25,23 @@ from pyspark.sql import functions as F
 
 from nhl_data_warehouse_spark.operators.caching import pin
 
+# edit-distance bound of a fuzzy match
+_MAX_DIST = 1
+
 
 def blocked_edit_distance_pairs(
     df: DataFrame,
     col: str,
-    max_dist: int = 1,
     prefix_len: int = 1,
-    length_band: int = 1,
 ) -> DataFrame:
-    """Distinct unordered string pairs within ``max_dist`` edits,
+    """Distinct unordered string pairs within ``_MAX_DIST`` edits,
     candidate-limited to pairs sharing the first ``prefix_len`` chars
-    and differing in length by at most ``length_band``.
+    and differing in length by at most 1.
 
     Returns (a, b, dist) with a < b (deterministic orientation). The
     length band is sound for recall within the block: two strings at
-    edit distance d differ in length by at most d, so
-    ``length_band >= max_dist`` loses nothing.
+    edit distance d differ in length by at most d, so a band of 1 >=
+    ``_MAX_DIST`` loses nothing.
     """
     vals = df.select(F.col(col).alias("v")).filter(F.col("v").isNotNull()).distinct()
     blocked = vals.select(
@@ -57,11 +58,11 @@ def blocked_edit_distance_pairs(
     )
     cand = a.join(b, on="_blk").filter(
         (F.col("a") < F.col("b"))
-        & (F.abs(F.col("_la") - F.col("_lb")) <= length_band)
+        & (F.abs(F.col("_la") - F.col("_lb")) <= 1)
     )
     return (
         cand.select("a", "b", F.levenshtein("a", "b").alias("dist"))
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= _MAX_DIST)
     )
 
 
@@ -69,31 +70,29 @@ def fuzzy_semi_match(
     left: DataFrame,
     right: DataFrame,
     left_col: str,
-    right_col: str,
-    max_dist: int = 1,
-    prefix_len: int = 1,
 ) -> DataFrame:
-    """Left rows having at least one fuzzy match in ``right`` — the
-    lookup form (e.g. "is this near-miss of a benchmark answer string
-    present in the training corpus"). Same blocking as
-    ``blocked_edit_distance_pairs``; returns ``left`` rows distinct.
+    """Left rows having at least one fuzzy match in ``right``'s
+    ``name`` column — the lookup form (e.g. "is this near-miss of a
+    benchmark answer string present in the training corpus"). Same
+    blocking as ``blocked_edit_distance_pairs``, on a 1-char prefix;
+    returns ``left`` rows distinct.
 
     Scale: ``right`` is reduced to its distinct blocked strings before
     the join; when that projection is dimension-sized it broadcasts
     (AQE decides), so the big left side never re-shuffles.
     """
     r = (
-        right.select(F.col(right_col).alias("_rv"))
+        right.select(F.col("name").alias("_rv"))
         .filter(F.col("_rv").isNotNull())
         .distinct()
-        .select("_rv", F.substring("_rv", 1, prefix_len).alias("_blk"))
+        .select("_rv", F.substring("_rv", 1, 1).alias("_blk"))
     )
-    l_blk = left.withColumn("_blk", F.substring(F.col(left_col), 1, prefix_len))
+    l_blk = left.withColumn("_blk", F.substring(F.col(left_col), 1, 1))
     matched = (
         l_blk.join(r, on="_blk")
         .filter(
-            (F.abs(F.length(left_col) - F.length("_rv")) <= max_dist)
-            & (F.levenshtein(F.col(left_col), F.col("_rv")) <= max_dist)
+            (F.abs(F.length(left_col) - F.length("_rv")) <= _MAX_DIST)
+            & (F.levenshtein(F.col(left_col), F.col("_rv")) <= _MAX_DIST)
         )
         .drop("_blk", "_rv")
         .distinct()

@@ -23,32 +23,28 @@ from pyspark.sql.window import Window
 
 from nhl_data_warehouse_spark.operators.caching import checkpoint, pin
 
+# shared parts that make two suppliers co-suppliers
+_MIN_SHARED = 2
+
 
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
-    node_col: str = "node",
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    n_iter: int = 3,
-    damping: float = 0.85,
 ) -> DataFrame:
-    """Weighted PageRank, ``n_iter`` fixed iterations, simplified
+    """Weighted PageRank of ``nodes`` (node) over ``edges`` (src, dst,
+    weight): 3 fixed iterations at damping d = 0.85, simplified
     dangling handling (dangling mass is dropped, the standard
     tutorial formulation — ranks need not sum to 1). Returns
     (node, rank) with rank = round((1-d)/N + d * sum_in, 6).
     """
     n_nodes = nodes.count()  # driver-side scalar: node table is tiny
-    base = round((1.0 - damping) / n_nodes, 12)
-    out_w = edges.groupBy(src).agg(F.sum(weight).alias("__out_w"))
+    base = round((1.0 - 0.85) / n_nodes, 12)
+    out_w = edges.groupBy("src").agg(F.sum("weight").alias("__out_w"))
     # normalized transition weight; edges is the big side, compute once
-    trans = edges.join(out_w, on=src).select(
-        F.col(src).alias("__src"),
-        F.col(dst).alias("__dst"),
-        (F.col(weight).cast("double") / F.col("__out_w").cast("double")).alias(
-            "__p"
-        ),
+    trans = edges.join(out_w, on="src").select(
+        F.col("src").alias("__src"),
+        F.col("dst").alias("__dst"),
+        (F.col("weight").cast("double") / F.col("__out_w").cast("double")).alias("__p"),
     )
     trans = checkpoint(trans)  # reused every iteration
     init = round(1.0 / n_nodes, 6)
@@ -56,10 +52,10 @@ def pagerank(
     # lives in the per-edge DECIMAL partial sums below; a double final
     # schema is what the driver's oracle comparison can hash (W1)
     ranks = nodes.select(
-        F.col(node_col).alias("__node"),
+        F.col("node").alias("__node"),
         F.lit(init).cast("double").alias("rank"),
     )
-    for _ in range(n_iter):
+    for _ in range(3):
         contrib = (
             trans.join(
                 F.broadcast(ranks.withColumnRenamed("__node", "__src")),
@@ -82,21 +78,16 @@ def pagerank(
                 "__node",
                 F.round(
                     F.lit(base)
-                    + F.lit(damping)
+                    + F.lit(0.85)
                     * F.coalesce(F.col("__sum").cast("double"), F.lit(0.0)),
                     6,
                 ).alias("rank"),
             )
         )
-    return ranks.select(F.col("__node").alias(node_col), "rank")
+    return ranks.select(F.col("__node").alias("node"), "rank")
 
 
-def triangle_counts(
-    edges: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    assume_canonical: bool = False,
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts on an undirected graph,
     via degree-ordered edge orientation (the MapReduce scheme of
     Suri & Vassilvitskii, "Counting Triangles and the Curse of the
@@ -111,15 +102,9 @@ def triangle_counts(
     O(sum deg_out^2) = O(m^1.5) instead of the last reducer drowning
     in a celebrity node's O(deg^2).
 
-    By default the input may contain duplicates / both directions /
-    self-loops; it is canonicalized first. ``assume_canonical=True``
-    skips that step (the least/greatest orientation, the self-loop
-    filter and the distinct): the caller must pass each undirected
-    edge once, with a < b and no self-loops. Nothing checks this — a
-    duplicate, reversed copy or self-loop counts as one more edge,
-    silently inflating the degree and wedge counts and so the
-    triangle counts. Output: (node, n_triangles) for nodes in >= 1
-    triangle.
+    The input (columns ``a``, ``b``) may contain duplicates / both
+    directions / self-loops; it is canonicalized first. Output:
+    (node, n_triangles) for nodes in >= 1 triangle.
 
     Broadcast-size assumption: the degree table is |V|-sized and is
     broadcast into both lookups — valid while |V| fits Spark's ~8 GB
@@ -129,26 +114,24 @@ def triangle_counts(
     The shared core pins two relations; a library caller releases
     them with ``cache_scope`` (``operators/caching.py``).
     """
-    return _canonical_deg_tri(edges, a, b, assume_canonical)[1]
+    return _deg_tri(_canonical_edges(edges))[1]
 
 
-def _canonical_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
+def _canonical_edges(edges: DataFrame) -> DataFrame:
     """Undirected edges as distinct (_a, _b) with _a < _b: reversed
     copies fold together, self-loops drop."""
     return (
         edges.select(
-            F.least(F.col(a), F.col(b)).alias("_a"),
-            F.greatest(F.col(a), F.col(b)).alias("_b"),
+            F.least(F.col("a"), F.col("b")).alias("_a"),
+            F.greatest(F.col("a"), F.col("b")).alias("_b"),
         )
         .filter(F.col("_a") < F.col("_b"))
         .distinct()
     )
 
 
-def _shared_group_edges(
-    df: DataFrame, group_col: str, item_col: str, min_shared: int
-) -> DataFrame:
-    """Item pairs (_i < _j) that share at least ``min_shared`` groups."""
+def _shared_group_edges(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
+    """Item pairs (_i < _j) that share at least ``_MIN_SHARED`` groups."""
     items = df.select(
         F.col(group_col).alias("_g"), F.col(item_col).alias("_i")
     ).distinct()
@@ -157,34 +140,30 @@ def _shared_group_edges(
         .filter(F.col("_i") < F.col("_j"))
         .groupBy("_i", "_j")
         .agg(F.count(F.lit(1)).alias("_ng"))
-        .where(F.col("_ng") >= min_shared)
+        .where(F.col("_ng") >= _MIN_SHARED)
         .select("_i", "_j")
     )
 
 
-def _canonical_deg_tri(
-    edges: DataFrame,
-    a: str,
-    b: str,
-    assume_canonical: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared core of ``triangle_counts`` / ``clustering_coefficients``:
-    canonicalize once (persisted — read by the degree aggregate AND
-    the orientation join), return (degrees as (node, degree),
-    per-node triangle counts). Sharing the persisted relation is what
-    keeps the coefficient operator from executing an expensive
+def _deg_tri(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Shared core of ``triangle_counts`` / ``clustering_coefficients``
+    over CANONICAL edges ``(_a, _b)``: each undirected edge once, with
+    _a < _b and no self-loops. A duplicate, reversed copy or self-loop
+    would count as one more edge and inflate the degree and wedge
+    counts, so the public operators pass ``_canonical_edges`` output;
+    a caller whose edges are canonical by construction (a groupBy(a,
+    b) over an a < b join) passes them directly and skips that
+    exchange + distinct aggregate (a distinct on data that is already
+    unique is a pure-overhead shuffle, and here it also costs a
+    codegen stage).
+
+    The edges are persisted once — read by the degree aggregate AND
+    the orientation join — and the result is (degrees as (node,
+    degree), per-node triangle counts). Sharing the persisted relation
+    is what keeps the coefficient operator from executing an expensive
     upstream edge projection twice (measured 6.9 -> 5.2-6.1 s warm on
     the co-supply graph at sf0.1 — parity with the bare triangle
     count's 5.3 s; the remaining cost IS the shared wedge machinery)."""
-    if assume_canonical:
-        # caller guarantees a < b, no duplicates, no self-loops (e.g.
-        # edges born from a groupBy(a, b) with an a < b join filter) —
-        # skip the canonicalize exchange + distinct aggregate outright
-        # (guide §2.4: a distinct on data that is already unique is a
-        # pure-overhead shuffle, and here it also costs a codegen stage)
-        e = edges.select(F.col(a).alias("_a"), F.col(b).alias("_b"))
-    else:
-        e = _canonical_edges(edges, a, b)
     e = pin(e)  # read 3x: two degree projections + the orient join
     deg = (
         e.select(F.col("_a").alias("_n"))
@@ -281,9 +260,6 @@ def _canonical_deg_tri(
 def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
     max_hops: int = 4,
 ) -> DataFrame:
     """Minimum hop distance from a seed set over a directed edge list,
@@ -302,21 +278,21 @@ def bfs_hops(
     to low-billions of edges over dimension-scale node sets. Beyond
     that, drop the explicit hints and let AQE pick shuffle joins.
 
-    Returns (node, hop) with hop 0 for seeds, named ``node_col``.
+    Returns (node, hop) with hop 0 for seeds.
     """
     # pin the edge list: every level's join + isEmpty() is an action,
     # and an unpinned edge DataFrame re-runs its whole derivation
     # (often a multi-join aggregate) once per level
     edges = pin(edges)
     visited = seeds.select(
-        F.col(node_col).alias("node"), F.lit(0).alias("hop")
+        "node", F.lit(0).alias("hop")
     ).distinct()  # duplicate seed rows must not duplicate hop-0 output
     frontier = checkpoint(visited)
     for h in range(1, max_hops + 1):
         fr = F.broadcast(frontier.select(F.col("node").alias("_fn")))
         nxt = checkpoint(
-            fr.join(edges, fr["_fn"] == edges[src])
-            .select(F.col(dst).alias("node"), F.lit(h).alias("hop"))
+            fr.join(edges, fr["_fn"] == edges["src"])
+            .select(F.col("dst").alias("node"), F.lit(h).alias("hop"))
             .distinct()
             .join(visited.select("node"), on="node", how="left_anti")
         )
@@ -324,7 +300,7 @@ def bfs_hops(
             break
         visited = visited.unionAll(nxt)
         frontier = nxt
-    return visited.select(F.col("node").alias(node_col), "hop")
+    return visited.select("node", "hop")
 
 
 def cooccurrence_pairs(
@@ -370,7 +346,6 @@ def degree_assortativity(
     df: DataFrame,
     group_col: str,
     item_col: str,
-    min_shared: int = 2,
 ) -> DataFrame:
     """Degree assortativity coefficient (Newman's r) of the
     co-occurrence projection graph: the Pearson correlation of the
@@ -381,7 +356,7 @@ def degree_assortativity(
     a few giant stars (dedup clusters that will chain badly) or a
     flat mesh — checked before running connected components at scale.
 
-    Edges are item pairs sharing >= ``min_shared`` groups (the
+    Edges are item pairs sharing >= ``_MIN_SHARED`` groups (the
     ``neighbor_jaccard`` pruning), degrees counted WITHIN that graph.
     Exactness: over the directed edge list (each undirected edge in
     both orientations, M = 2m rows) symmetry gives Sx = Sy and
@@ -398,7 +373,7 @@ def degree_assortativity(
     moment reduction is one bounded aggregate. No window, no
     all-pairs beyond the capped projection.
     """
-    edges = _shared_group_edges(df, group_col, item_col, min_shared)
+    edges = _shared_group_edges(df, group_col, item_col)
     directed = edges.unionByName(
         edges.select(F.col("_j").alias("_i"), F.col("_i").alias("_j"))
     )
@@ -444,8 +419,6 @@ def label_propagation(
     df: DataFrame,
     group_col: str,
     item_col: str,
-    min_shared: int = 2,
-    rounds: int = 3,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (LPA,
     Raghavan et al.) over the co-occurrence projection — the DENSITY
@@ -468,11 +441,11 @@ def label_propagation(
     Scale shape per round: one node-keyed equi-join (neighbor
     labels), one map-side-combined (node, label) count, one window
     PARTITIONED by node over per-node label counts (bounded by
-    degree). ``rounds`` is a fixed small constant — the plan is
-    ``rounds`` such stages; for big graphs localCheckpoint between
+    degree). The round count is a fixed small constant (3) — the plan
+    is 3 such stages; for big graphs localCheckpoint between
     rounds caps lineage (the kiveris doctrine).
     """
-    edges = _shared_group_edges(df, group_col, item_col, min_shared)
+    edges = _shared_group_edges(df, group_col, item_col)
     directed = edges.unionByName(
         edges.select(F.col("_j").alias("_i"), F.col("_i").alias("_j"))
     )
@@ -482,7 +455,7 @@ def label_propagation(
     w = Window.partitionBy("_v").orderBy(
         F.col("_cnt").desc(), F.col("_lbl").asc()
     )
-    for _ in range(rounds):
+    for _ in range(3):
         nb = directed.join(
             labels, on=F.col("_j") == F.col("_n")
         ).select(F.col("_i").alias("_v"), "_lbl")
@@ -500,8 +473,6 @@ def label_propagation(
 
 def kcore_peel(
     edges: DataFrame,
-    a: str = "a",
-    b: str = "b",
     k: int = 3,
     rounds: int = 4,
 ) -> DataFrame:
@@ -538,7 +509,7 @@ def kcore_peel(
     blocks are released by the caller's ``cache_scope`` or the
     session's ``release_cached`` sweep.
     """
-    e = _canonical_edges(edges, a, b)
+    e = _canonical_edges(edges)
 
     def _deg(cur: DataFrame) -> DataFrame:
         return (
@@ -566,7 +537,6 @@ def association_rules(
     group_col: str,
     item_col: str,
     min_pair_count: int = 3,
-    top_k: int = 30,
 ) -> DataFrame:
     """Association-rule mining over the co-occurrence projection:
     support, directional confidence and lift per item pair — the
@@ -626,7 +596,7 @@ def association_rules(
     )
     return out.orderBy(
         F.col("lift").desc(), F.col("item_a").asc(), F.col("item_b").asc()
-    ).limit(top_k)
+    ).limit(30)
 
 
 def neighbor_jaccard(
@@ -697,12 +667,7 @@ def neighbor_jaccard(
     return out
 
 
-def clustering_coefficients(
-    edges: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    assume_canonical: bool = False,
-) -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Per-node LOCAL clustering coefficient cc(v) = 2*T(v) /
     (deg(v)*(deg(v)-1)) — how close each node's neighborhood is to a
     clique, the node-level density gauge that turns the raw triangle
@@ -720,20 +685,18 @@ def clustering_coefficients(
     aggregate over the canonicalized edge relation; the final join is
     node-keyed. Same |V|-broadcast assumption as triangle_counts.
     Degrees and triangles come from ONE shared canonicalized (and
-    persisted) edge relation (``_canonical_deg_tri``) — a separate
-    degree pass would execute the expensive upstream edge projection
-    (the co-supply self-join) a second time (measured 6.9 -> 5.2-6.1 s
-    warm at sf0.1, parity with triangle_cosupply's 5.3 s).
-
-    ``assume_canonical=True`` skips the canonicalize step as in
-    ``triangle_counts``: the caller must pass each undirected edge
-    once, with a < b and no self-loops. Nothing checks this — with
-    duplicates, reversed copies or self-loops the degree and wedge
-    counts are silently inflated, so the coefficients are wrong (a
-    triangle plus one reversed and one repeated edge gives 4 triangles
-    per node and coefficients of 2/3 and 4/3).
+    persisted) edge relation (``_deg_tri``) — a separate degree pass
+    would execute the expensive upstream edge projection (the
+    co-supply self-join) a second time (measured 6.9 -> 5.2-6.1 s warm
+    at sf0.1, parity with triangle_cosupply's 5.3 s).
     """
-    deg, tri = _canonical_deg_tri(edges, a, b, assume_canonical)
+    return _coefficients(_canonical_edges(edges))
+
+
+def _coefficients(e: DataFrame) -> DataFrame:
+    """``clustering_coefficients`` over canonical edges ``(_a, _b)``
+    (the ``_deg_tri`` contract)."""
+    deg, tri = _deg_tri(e)
     return (
         deg.join(tri, on="node", how="left")
         .select(

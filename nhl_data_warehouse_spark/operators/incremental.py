@@ -88,7 +88,6 @@ def join_view_delta(
     dim_key: str,
     group_col: str,
     value_col,
-    out_col: str = "revenue",
 ):
     """Insert-only incremental maintenance of a JOIN view's aggregate:
     V = SELECT g, SUM(v) FROM facts JOIN dim GROUP BY g, maintained as
@@ -122,6 +121,4 @@ def join_view_delta(
         .groupBy(group_col)
         .agg(F.sum("_s").alias("_t"))
     )
-    return merged.select(
-        group_col, F.col("_t").cast("double").alias(out_col)
-    )
+    return merged.select(group_col, F.col("_t").cast("double").alias("revenue"))

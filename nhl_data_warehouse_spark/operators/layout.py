@@ -16,16 +16,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# bits per Z-order dimension, and equal-depth buckets of the
+# two-level global rank
+_BITS = 16
+_N_BUCKETS = 4096
 
-def z_value(x: Column, y: Column, bits: int = 16) -> Column:
+
+def z_value(x: Column, y: Column) -> Column:
     """Morton Z-value of two non-negative ints already reduced to
-    ``bits`` bits (``bits`` <= 32): x's bit i lands at 2i, y's at
+    ``_BITS`` bits: x's bit i lands at 2i, y's at
     2i+1. Computed with the binary-magic-numbers bit spread — 5
     shift/or/mask rounds per operand instead of one term per bit
     (~30 integer ops vs ~190 for the naive per-bit sum at 16 bits),
     all inside whole-stage codegen. Values are identical to the
     per-bit formulation ``z_value_sql`` emits for the oracles."""
-    assert bits <= 32
 
     def spread(c: Column) -> Column:
         # interleave zeros between the bits of a 32-bit value
@@ -50,27 +54,25 @@ def z_value(x: Column, y: Column, bits: int = 16) -> Column:
     return spread(x).bitwiseOR(F.shiftleft(spread(y), 1)).cast("long")
 
 
-def z_value_sql(x_expr: str, y_expr: str, bits: int = 16) -> str:
+def z_value_sql() -> str:
     """The same Morton interleave as ANSI SQL text (for oracles and
-    pushdown into external engines)."""
+    pushdown into external engines), over the orders layout key:
+    ``o_custkey`` and the order day, each reduced to 16 bits."""
+    y = "date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) & 65535"
     terms = []
-    for i in range(bits):
-        terms.append(f"((({x_expr}) >> {i}) & 1) * {1 << (2 * i)}")
-        terms.append(f"((({y_expr}) >> {i}) & 1) * {1 << (2 * i + 1)}")
+    for i in range(_BITS):
+        terms.append(f"(((o_custkey & 65535) >> {i}) & 1) * {1 << (2 * i)}")
+        terms.append(f"((({y}) >> {i}) & 1) * {1 << (2 * i + 1)}")
     return "(" + " + ".join(terms) + ")"
 
 
 def zorder_file_assignment(
     df: DataFrame,
-    x_col: str,
-    y_col: str,
     id_col: str,
     n_files: int = 32,
-    bits: int = 16,
-    bucket_bits: int = 12,
 ) -> DataFrame:
     """Assign each row a target file by Z-order: compute the Morton
-    key over (x % 2^bits, y % 2^bits) and split the Z-sorted order
+    key over (x % 2^16, y % 2^16) and split the Z-sorted order
     into ``n_files`` equal-depth ranges, tie-broken on ``id_col`` so
     the assignment is total and deterministic (bit-identical to
     ``NTILE(n_files) OVER (ORDER BY z_key, id)``). The write path
@@ -81,29 +83,28 @@ def zorder_file_assignment(
     funnels every row through one task — the exact single-partition
     violation SCALE.md bans. Instead the global rank is computed with
     the same two-level prefix sum as ``packing.py``: rows shuffle once
-    into ~2^bucket_bits contiguous Z-prefix buckets (a *partitioned*
+    into ~2^12 contiguous Z-prefix buckets (a *partitioned*
     row_number window), the only unpartitioned window runs over the
     bucket TOTALS (~4096 rows), and the NTILE tile arithmetic is then
     a per-row closed form over (rank, total). One row-scale shuffle —
     the same cost ``repartitionByRange`` pays — instead of a global
     single-partition sort.
     """
-    mask = (1 << bits) - 1
+    mask = (1 << _BITS) - 1
     zk = z_value(
-        F.col(x_col).bitwiseAND(F.lit(mask)),
-        F.col(y_col).bitwiseAND(F.lit(mask)),
-        bits,
+        F.col("x").bitwiseAND(F.lit(mask)),
+        F.col("y").bitwiseAND(F.lit(mask)),
     )
     out = df.withColumn("z_key", zk)
     # contiguous coarse buckets: the high bits of z_key are monotone
     # in z_key, so bucket ranges tile the global (z_key, id) order
-    shift = max(2 * bits - bucket_bits, 0)
+    shift = 2 * _BITS - 12
     out = out.withColumn("__zbucket", F.shiftright(F.col("z_key"), shift))
     ranked = two_level_rank(out, "__zbucket", [F.col("z_key"), F.col(id_col)])
     return ranked.select(
         id_col,
-        x_col,
-        y_col,
+        "x",
+        "y",
         "z_key",
         _ntile_from_rank(n_files).alias("file_id"),
     )
@@ -111,15 +112,13 @@ def zorder_file_assignment(
 
 def skipping_manifest(
     assigned: DataFrame,
-    file_col: str,
-    dims: list[str],
     pred_ranges: dict[str, tuple[int, int]],
 ) -> DataFrame:
-    """Per-file min/max manifest over ``dims`` plus the data-skipping
-    verdict for a conjunctive range predicate — the *payoff* half of
-    Z-ordering: a file must be scanned iff every predicated dimension's
-    [min, max] envelope intersects its range (the Parquet row-group /
-    Delta file-stats pruning rule). One shuffle keyed on the file id
+    """Per-file (``file_id``) min/max manifest over x and y plus the
+    data-skipping verdict for a conjunctive range predicate — the
+    *payoff* half of Z-ordering: a file must be scanned iff every
+    predicated dimension's [min, max] envelope intersects its range
+    (the Parquet row-group / Delta file-stats pruning rule). One shuffle keyed on the file id
     with map-side partial min/max — manifest building is O(files)
     output however large the table, and at 100 TB this IS the metadata
     pass a scan planner runs instead of reading data.
@@ -127,9 +126,9 @@ def skipping_manifest(
     Returns one row per file: counts, per-dim min/max, and ``scanned``.
     """
     aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for d in dims:
+    for d in ("x", "y"):
         aggs += [F.min(d).alias(f"min_{d}"), F.max(d).alias(f"max_{d}")]
-    manifest = assigned.groupBy(file_col).agg(*aggs)
+    manifest = assigned.groupBy("file_id").agg(*aggs)
     scanned = F.lit(True)
     for d, (lo, hi) in pred_ranges.items():
         scanned = (
@@ -205,7 +204,6 @@ def equal_depth_assign(
     value_col: str,
     id_col: str,
     n_tiles: int,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """``NTILE(n_tiles) OVER (ORDER BY value, id)`` for a numeric
     (non-null) value column without a global single-partition sort —
@@ -215,7 +213,7 @@ def equal_depth_assign(
     monotone and contiguous in the value order, so the two-level rank
     is exact regardless of how uneven the bucket populations are.
     Heavily skewed distributions concentrate rows in few buckets —
-    raise ``n_buckets`` (the totals relation stays tiny) or pre-map
+    raise ``_N_BUCKETS`` (the totals relation stays tiny) or pre-map
     the value (log, rank-of-rank) if one bucket still dominates; ties
     on ``value_col`` land in one bucket by construction, so the
     ``id_col`` tie-break never crosses buckets. Adds a ``__tile``
@@ -227,7 +225,7 @@ def equal_depth_assign(
         "__vbucket",
         F.when(F.col("__lo") == F.col("__hi"), F.lit(1)).otherwise(
             F.width_bucket(
-                F.col(value_col), F.col("__lo"), F.col("__hi"), F.lit(n_buckets)
+                F.col(value_col), F.col("__lo"), F.col("__hi"), F.lit(_N_BUCKETS)
             )
         ),
     )
@@ -244,7 +242,6 @@ def grouped_ntile(
     id_col: str,
     metric_cols: list[str],
     n_tiles: int,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """``NTILE(n_tiles) OVER (ORDER BY metric, id)`` for SEVERAL
     integer metric columns in ONE pass: the row is melted to
@@ -281,7 +278,7 @@ def grouped_ntile(
         "__vb",
         F.when(F.col("__lo") == F.col("__hi"), F.lit(1)).otherwise(
             F.width_bucket(
-                F.col("__v"), F.col("__lo"), F.col("__hi"), F.lit(n_buckets)
+                F.col("__v"), F.col("__lo"), F.col("__hi"), F.lit(_N_BUCKETS)
             )
         ),
     )

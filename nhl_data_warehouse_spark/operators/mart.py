@@ -116,9 +116,6 @@ def seasonal_team_rollup(regular_season: DataFrame) -> DataFrame:
 
 def rfm_segments(
     orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
     n_tiles: int = 5,
 ) -> DataFrame:
     """RFM customer segmentation: recency (days since the customer's
@@ -139,12 +136,12 @@ def rfm_segments(
     """
     from nhl_data_warehouse_spark.operators.layout import grouped_ntile
 
-    per = orders.groupBy(cust_col).agg(
-        F.max(F.col(date_col).cast("date")).alias("_last"),
+    per = orders.groupBy("o_custkey").agg(
+        F.max(F.col("o_orderdate").cast("date")).alias("_last"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.round(F.col(amount_col) * 100, 0).cast("long")).alias("_cents"),
+        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("_cents"),
     )
-    cmax = orders.agg(F.max(F.col(date_col).cast("date")).alias("_cmax"))
+    cmax = orders.agg(F.max(F.col("o_orderdate").cast("date")).alias("_cmax"))
     per = (
         per.crossJoin(F.broadcast(cmax))
         .withColumn("recency_days", F.datediff("_cmax", "_last").cast("long"))
@@ -155,18 +152,18 @@ def rfm_segments(
     per = pin(per)
     tiles = grouped_ntile(
         per,
-        id_col=cust_col,
+        id_col="o_custkey",
         metric_cols=["recency_days", "frequency", "_cents"],
         n_tiles=n_tiles,
     ).select(
-        cust_col,
+        "o_custkey",
         F.col("recency_days_tile").alias("r_tile"),
         F.col("frequency_tile").alias("f_tile"),
         F.col("_cents_tile").alias("m_tile"),
     )
-    per = per.join(tiles, on=cust_col)
+    per = per.join(tiles, on="o_custkey")
     return per.select(
-        cust_col,
+        "o_custkey",
         "recency_days",
         "frequency",
         (F.col("_cents").cast("double") / 100.0).alias("monetary"),

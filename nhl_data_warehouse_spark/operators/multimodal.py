@@ -62,14 +62,12 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def as_media_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", source_col: str = "source"
-) -> DataFrame:
+def as_media_table(df: DataFrame, source_col: str = "source") -> DataFrame:
     """Wrap any table into the canonical media shape by encoding a
     column as the binary payload (stand-in for image/audio bytes)."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("text/plain").alias("mime"),
@@ -149,13 +147,7 @@ def png_payload(width: int, height: int) -> bytes:
     )
 
 
-def as_png_media_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    width_expr: str = "1 + doc_id % 64",
-    height_expr: str = "1 + coalesce(n_chars, 0) % 64",
-    source_col: str = "source",
-) -> DataFrame:
+def as_png_media_table(df: DataFrame) -> DataFrame:
     """Wrap a table into the media shape with REAL decodable PNG
     payloads whose dimensions derive from row columns — so a decode
     stage downstream has an exact, SQL-expressible oracle (the same
@@ -166,10 +158,10 @@ def as_png_media_table(
     import pandas as pd
 
     dims = df.selectExpr(
-        f"{id_col} AS media_id",
-        f"CAST({width_expr} AS INT) AS __w",
-        f"CAST({height_expr} AS INT) AS __h",
-        f"{source_col} AS __source",
+        "doc_id AS media_id",
+        "CAST(1 + doc_id % 64 AS INT) AS __w",
+        "CAST(1 + coalesce(n_chars, 0) % 64 AS INT) AS __h",
+        "source AS __source",
     )
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -225,7 +217,7 @@ def _decode_dimensions(payload: bytes) -> tuple[int, int, bool]:
     return w, h, False
 
 
-def extract_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload:
     byte stats (real) + decoded dimensions (stubbed fake). The
     mapInPandas iterator contract keeps memory at one Arrow batch."""
@@ -266,18 +258,17 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def frame_sample(media: DataFrame, every_n: int = 4, frame_bytes: int = 64) -> DataFrame:
+def frame_sample(media: DataFrame) -> DataFrame:
     """Frame sampling plumbing: one output row per sampled frame of
     each media item (a 1->N Arrow-batched flatMap — the shape a video
     pipeline needs). REAL DEMUX IS STUBBED: without ffmpeg the
-    "frames" are deterministic fixed-width byte windows of the
-    payload; swap the slicing loop for a demuxer without touching the
-    Spark contract.
+    "frames" are deterministic 64-byte windows of the payload, every
+    4th one sampled; swap the slicing loop for a demuxer without
+    touching the Spark contract.
 
-    Scale notes: output fan-out is bounded by payload size /
-    (every_n * frame_bytes); frames inherit the parent's partition, so
-    no shuffle — downstream per-frame work repartitions if it needs
-    more parallelism.
+    Scale notes: output fan-out is bounded by payload size / 256;
+    frames inherit the parent's partition, so no shuffle — downstream
+    per-frame work repartitions if it needs more parallelism.
     """
     import pandas as pd
 
@@ -286,9 +277,9 @@ def frame_sample(media: DataFrame, every_n: int = 4, frame_bytes: int = 64) -> D
             out = []
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
                 b = bytes(payload) if payload is not None else b""
-                step = every_n * frame_bytes
+                step = 4 * 64
                 for idx, off in enumerate(range(0, len(b), step)):
-                    frame = b[off : off + frame_bytes]
+                    frame = b[off : off + 64]
                     out.append((int(media_id), idx, frame, len(frame)))
             yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
 
@@ -450,7 +441,7 @@ def wav_payload(n_samples: int, sample_rate: int = 16000, seed: int = 1) -> byte
     return hdr + data
 
 
-def audio_pcm_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
+def audio_pcm_stats(media: DataFrame) -> DataFrame:
     """Parse PCM16 WAV payloads and emit exact per-item sample
     statistics via Arrow-batched ``mapInPandas`` — the real audio
     ingest path: header fields read with ``struct``, the sample block
@@ -466,7 +457,7 @@ def audio_pcm_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
 
     out_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType(), False),
+            T.StructField("media_id", T.LongType(), False),
             T.StructField("sample_rate", T.LongType()),
             T.StructField("n_samples", T.LongType()),
             T.StructField("peak_abs", T.LongType()),
@@ -480,7 +471,7 @@ def audio_pcm_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
 
         for b in batches:
             rows = []
-            for mid, payload in zip(b[id_col], b["payload"]):
+            for mid, payload in zip(b["media_id"], b["payload"]):
                 ok = (
                     payload is not None
                     and len(payload) >= 44
@@ -511,7 +502,7 @@ def audio_pcm_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
                 )
             yield pd.DataFrame(
                 rows,
-                columns=[id_col, "sample_rate", "n_samples", "peak_abs", "sum_sq"],
+                columns=["media_id", "sample_rate", "n_samples", "peak_abs", "sum_sq"],
             )
 
-    return media.select(id_col, "payload").mapInPandas(run, out_schema)
+    return media.select("media_id", "payload").mapInPandas(run, out_schema)

@@ -34,13 +34,12 @@ from pyspark.sql.window import Window
 def token_spans(
     df: DataFrame,
     id_col: str = "doc_id",
-    weight_col: str = "n_tokens",
     block_size: int = 512,
     bucket_width: int = 1024,
 ) -> DataFrame:
     """Absolute token offsets + block spans under concat-then-chunk.
 
-    ``df`` has one row per doc with an integer ``weight_col``; docs are
+    ``df`` has one row per doc with an integer ``n_tokens``; docs are
     concatenated in ascending ``id_col`` order. Returns the input plus
     ``start_offset``, ``first_block``, ``last_block``, ``n_blocks``.
 
@@ -56,7 +55,7 @@ def token_spans(
     keeps the arithmetic in non-negative integers, where truncating
     and flooring division agree across engines).
     """
-    w = F.col(weight_col).cast("long")
+    w = F.col("n_tokens").cast("long")
     bucketed = df.withColumn("__bucket", F.expr(f"{id_col} div {bucket_width}"))
     totals = bucketed.groupBy("__bucket").agg(F.sum(w).alias("__tot"))
     base_w = Window.orderBy("__bucket").rowsBetween(
@@ -79,7 +78,7 @@ def token_spans(
     start = F.col("start_offset")
     first = F.expr(f"start_offset div {block_size}")
     last = F.expr(
-        f"(start_offset + greatest(cast({weight_col} as long), 1L) - 1) "
+        f"(start_offset + greatest(cast(n_tokens as long), 1L) - 1) "
         f"div {block_size}"
     )
     return out.select(
@@ -93,8 +92,6 @@ def token_spans(
 
 def block_segments(
     df: DataFrame,
-    id_col: str = "doc_id",
-    weight_col: str = "n_tokens",
     block_size: int = 512,
     bucket_width: int = 1024,
 ) -> DataFrame:
@@ -112,11 +109,11 @@ def block_segments(
     shuffle beyond the prefix sum's one. Zero-weight docs contribute
     no segments.
     """
-    spans = token_spans(df, id_col, weight_col, block_size, bucket_width)
-    w = F.col(weight_col).cast("long")
+    spans = token_spans(df, "doc_id", block_size, bucket_width)
+    w = F.col("n_tokens").cast("long")
     blocks = F.sequence(F.col("first_block"), F.col("last_block"))
     seg = spans.filter(w > 0).select(
-        id_col,
+        "doc_id",
         "start_offset",
         w.alias("__w"),
         F.explode(blocks).alias("block_id"),
@@ -130,7 +127,7 @@ def block_segments(
     )
     return seg.select(
         "block_id",
-        id_col,
+        "doc_id",
         seg_start.alias("seg_start"),
         (seg_end - seg_start).alias("n_seg_tokens"),
     )
@@ -138,16 +135,13 @@ def block_segments(
 
 def pack_next_fit(
     df: DataFrame,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    weight_col: str = "n_tokens",
     budget: int = 128,
 ) -> DataFrame:
-    """Greedy next-fit packing: within each ``group_col``, docs in
-    ascending ``id_col`` order are appended to the current bin while
-    they fit in ``budget`` tokens; otherwise a new bin opens (an
-    oversized doc gets a bin to itself and overflows it — next-fit
-    never splits docs). Returns (group, id, weight, bin) with bins
+    """Greedy next-fit packing: within each ``source``, docs in
+    ascending ``doc_id`` order are appended to the current bin while
+    their ``n_tokens`` fit in ``budget`` tokens; otherwise a new bin
+    opens (an oversized doc gets a bin to itself and overflows it —
+    next-fit never splits docs). Returns (group, id, weight, bin) with bins
     numbered from 0 per group.
 
     The scan is inherently sequential per group, so it runs as one
@@ -155,9 +149,9 @@ def pack_next_fit(
     (group, id, weight) projection is shuffled, never document text.
     """
     narrow = df.select(
-        F.col(group_col).cast("string").alias("group_key"),
-        F.col(id_col).cast("long").alias("item_id"),
-        F.col(weight_col).cast("long").alias("weight"),
+        F.col("source").cast("string").alias("group_key"),
+        F.col("doc_id").cast("long").alias("item_id"),
+        F.col("n_tokens").cast("long").alias("weight"),
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -183,8 +177,6 @@ def pack_next_fit(
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_size: int = 64,
     overlap: int = 16,
 ) -> DataFrame:
@@ -209,7 +201,7 @@ def chunk_documents(
     # the suite's one canonical tokenization (same as the oracles'
     # string_split contract) — chunk offsets must agree with every
     # text operator's token counts
-    toks = _ws_tokens(text_col)
+    toks = _ws_tokens("text")
     n = F.size(toks)
     # starts: 0, stride, 2*stride, ... while start < n and (start == 0
     # or start + overlap < n)  — the containment condition drops a
@@ -237,15 +229,14 @@ def chunk_documents(
         "array<struct<chunk_index:int,start_token:bigint,"
         "n_chunk_tokens:bigint,chunk_text:string>>"
     ))
-    return df.select(F.col(id_col), F.explode(chunks).alias("c")).select(
-        id_col, "c.chunk_index", "c.start_token", "c.n_chunk_tokens", "c.chunk_text"
+    return df.select(F.col("doc_id"), F.explode(chunks).alias("c")).select(
+        "doc_id", "c.chunk_index", "c.start_token", "c.n_chunk_tokens", "c.chunk_text"
     )
 
 
 def length_bucket_padding_stats(
     df: DataFrame,
     weight_col: str = "n_tokens",
-    n_docs_col: str = "n_docs",
 ) -> DataFrame:
     """Padding-efficiency report for length-bucketed batching: assign
     every doc to the power-of-two bucket that covers its length and
@@ -273,18 +264,18 @@ def length_bucket_padding_stats(
         df.select(top.alias("bucket_top"), w.alias("__w"))
         .groupBy("bucket_top")
         .agg(
-            F.count(F.lit(1)).cast("long").alias(n_docs_col),
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("__w").cast("long").alias("sum_tokens"),
         )
     )
-    padded = F.col(n_docs_col) * F.col("bucket_top") - F.col("sum_tokens")
+    padded = F.col("n_docs") * F.col("bucket_top") - F.col("sum_tokens")
     return agg.select(
         "bucket_top",
-        n_docs_col,
+        "n_docs",
         "sum_tokens",
         padded.alias("pad_tokens"),
         (
             padded.cast("double")
-            / (F.col(n_docs_col) * F.col("bucket_top")).cast("double")
+            / (F.col("n_docs") * F.col("bucket_top")).cast("double")
         ).alias("pad_fraction"),
     )

@@ -50,7 +50,6 @@ def dp_laplace_counts(
     df: DataFrame,
     group_cols: list[str],
     epsilon: float = 1.0,
-    salt: str = "dp-v1",
 ) -> DataFrame:
     """Laplace-mechanism count release (Dwork et al. 2006): per-group
     counts plus Laplace(1/epsilon) noise — counting queries have
@@ -88,7 +87,7 @@ def dp_laplace_counts(
                 F.md5(
                     F.concat_ws(
                         "|",
-                        F.lit(salt),
+                        F.lit("dp-v1"),
                         *[F.col(c).cast("string") for c in group_cols],
                     )
                 ),

@@ -19,36 +19,29 @@ from pyspark.sql import functions as F
 from nhl_data_warehouse_spark.operators.caching import cache_scope
 
 
-def range_join_pairs(
-    events: DataFrame,
-    *,
-    key: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    gap_minutes: int = 5,
-) -> DataFrame:
-    """All ordered pairs (a, b) with the same ``key`` and
-    ``a.ts < b.ts <= a.ts + gap``; dedup by requiring the pair be
+def range_join_pairs(events: DataFrame) -> DataFrame:
+    """All ordered event pairs (a, b) with the same ``user_id`` and
+    ``a.ts < b.ts <= a.ts + 5 minutes``; dedup by requiring the pair be
     counted once from a's side. Returns one row per pair with both
     ids and the gap in seconds.
     """
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 5 * 60 * 1_000_000
     a = events.select(
-        F.col(key).alias("k"),
-        F.col(id_col).alias("a_id"),
-        F.col(time_col).alias("a_ts"),
-        (F.unix_micros(time_col) / F.lit(gap_us)).cast("long").alias("bucket"),
+        F.col("user_id").alias("k"),
+        F.col("event_id").alias("a_id"),
+        F.col("ts").alias("a_ts"),
+        (F.unix_micros("ts") / F.lit(gap_us)).cast("long").alias("bucket"),
     )
     # replicate b into its own bucket and the previous one: a pair with
     # b.ts in (a.ts, a.ts+gap] has bucket(b) in {bucket(a), bucket(a)+1}
     b = events.select(
-        F.col(key).alias("k"),
-        F.col(id_col).alias("b_id"),
-        F.col(time_col).alias("b_ts"),
+        F.col("user_id").alias("k"),
+        F.col("event_id").alias("b_id"),
+        F.col("ts").alias("b_ts"),
         F.explode(
             F.array(
-                (F.unix_micros(time_col) / F.lit(gap_us)).cast("long"),
-                (F.unix_micros(time_col) / F.lit(gap_us)).cast("long") - 1,
+                (F.unix_micros("ts") / F.lit(gap_us)).cast("long"),
+                (F.unix_micros("ts") / F.lit(gap_us)).cast("long") - 1,
             )
         ).alias("bucket"),
     )
@@ -59,7 +52,7 @@ def range_join_pairs(
             & (F.unix_micros("b_ts") <= F.unix_micros("a_ts") + F.lit(gap_us))
         )
         .select(
-            F.col("k").alias(key),
+            F.col("k").alias("user_id"),
             "a_id",
             "b_id",
             ((F.unix_micros("b_ts") - F.unix_micros("a_ts")) / 1_000_000.0).alias(
@@ -74,8 +67,6 @@ def interval_lookup_join(
     ranges: DataFrame,
     *,
     value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     cell_width: float,
 ) -> DataFrame:
     """Join each point row to every range row whose half-open interval
@@ -99,7 +90,7 @@ def interval_lookup_join(
     governed by cell population, not table size.
     """
     w = float(cell_width)
-    lo, hi, v = F.col(lo_col), F.col(hi_col), F.col(value_col)
+    lo, hi, v = F.col("lo"), F.col("hi"), F.col(value_col)
     r = ranges.withColumn(
         "__cell",
         F.explode(
@@ -193,8 +184,6 @@ def interval_overlap_join(
     start_col: str,
     end_col: str,
     cell_minutes: int | None = 60,
-    left_prefix: str = "a_",
-    right_prefix: str = "b_",
 ) -> DataFrame:
     """Interval-x-interval overlap join without a theta join: both
     sides explode to fixed time CELLS, pairs meet on a cell equi-join,
@@ -215,8 +204,8 @@ def interval_overlap_join(
     as-of (asof.py), point-in-interval (price_band_lookup_join),
     event-gap pairs (range_join_pairs), and now interval overlap.
 
-    Output: all left columns prefixed ``left_prefix``, all right
-    columns prefixed ``right_prefix``, plus ``overlap_us`` (exact
+    Output: all left columns prefixed ``a_``, all right columns
+    prefixed ``b_``, plus ``overlap_us`` (exact
     microseconds, inclusive bounds).
     """
     if cell_minutes is None:
@@ -239,18 +228,18 @@ def interval_overlap_join(
             ),
         )
 
-    lc = cells(left, left_prefix)
-    rc = cells(right, right_prefix)
-    a_s, a_e = f"{left_prefix}_us_s", f"{left_prefix}_us_e"
-    b_s, b_e = f"{right_prefix}_us_s", f"{right_prefix}_us_e"
+    lc = cells(left, "a_")
+    rc = cells(right, "b_")
+    a_s, a_e = "a__us_s", "a__us_e"
+    b_s, b_e = "b__us_s", "b__us_e"
     joined = lc.join(rc, on="cell").where(
         (F.col(a_s) <= F.col(b_e))
         & (F.col(b_s) <= F.col(a_e))
         # responsibility: only the later-start's cell emits the pair
         & (F.col("cell") == F.expr(f"greatest({a_s}, {b_s}) DIV {w_us}"))
     )
-    out_cols = [f"{left_prefix}{c}" for c in left.columns] + [
-        f"{right_prefix}{c}" for c in right.columns
+    out_cols = [f"a_{c}" for c in left.columns] + [
+        f"b_{c}" for c in right.columns
     ]
     return joined.select(
         *out_cols,

@@ -40,8 +40,6 @@ def rrf_fuse(
     score_a: str,
     arm_b: DataFrame,
     score_b: str,
-    id_col: str = "doc_id",
-    k_rrf: int = 60,
     top_n: int = 20,
 ) -> DataFrame:
     """Reciprocal Rank Fusion of two retrieval arms — the standard
@@ -65,34 +63,28 @@ def rrf_fuse(
     touches corpus-scale data; fusing F arms generalizes to F-1
     bounded joins.
     """
-    wa = Window.orderBy(F.col(score_a).desc(), F.col(id_col).asc())
-    wb = Window.orderBy(F.col(score_b).desc(), F.col(id_col).asc())
-    ra = arm_a.select(
-        F.col(id_col), F.row_number().over(wa).alias("rank_a")
-    )
+    wa = Window.orderBy(F.col(score_a).desc(), F.col("doc_id").asc())
+    wb = Window.orderBy(F.col(score_b).desc(), F.col("doc_id").asc())
+    ra = arm_a.select(F.col("doc_id"), F.row_number().over(wa).alias("rank_a"))
     rb = arm_b.select(
-        F.col(id_col).alias("_idb"), F.row_number().over(wb).alias("rank_b")
+        F.col("doc_id").alias("_idb"), F.row_number().over(wb).alias("rank_b")
     )
-    fused = ra.join(
-        rb, on=F.col(id_col) == F.col("_idb"), how="full_outer"
-    ).select(
-        F.coalesce(F.col(id_col), F.col("_idb")).alias(id_col),
+    fused = ra.join(rb, on=F.col("doc_id") == F.col("_idb"), how="full_outer").select(
+        F.coalesce(F.col("doc_id"), F.col("_idb")).alias("doc_id"),
         "rank_a",
         "rank_b",
         (
             F.expr(
-                f"CASE WHEN rank_a IS NULL THEN 0.0"
-                f" ELSE 1.0 / CAST({k_rrf} + rank_a AS DOUBLE) END"
+                "CASE WHEN rank_a IS NULL THEN 0.0"
+                " ELSE 1.0 / CAST(60 + rank_a AS DOUBLE) END"
             )
             + F.expr(
-                f"CASE WHEN rank_b IS NULL THEN 0.0"
-                f" ELSE 1.0 / CAST({k_rrf} + rank_b AS DOUBLE) END"
+                "CASE WHEN rank_b IS NULL THEN 0.0"
+                " ELSE 1.0 / CAST(60 + rank_b AS DOUBLE) END"
             )
         ).alias("rrf_score"),
     )
-    return fused.orderBy(
-        F.col("rrf_score").desc(), F.col(id_col).asc()
-    ).limit(top_n)
+    return fused.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc()).limit(top_n)
 
 
 def ndcg_mrr_at_k(

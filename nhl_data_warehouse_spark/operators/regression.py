@@ -72,9 +72,7 @@ def grouped_ols(
     )
 
 
-def mad_by_group(
-    df: DataFrame, group_col: str, value_col: str, out_col: str = "mad"
-) -> DataFrame:
+def mad_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Median absolute deviation per group via a GROUPED_AGG pandas
     UDF — the vectorized-UDAF surface (SQL can nest
     ``median(abs(x - median(x)))`` only with a self-join; the Arrow
@@ -116,7 +114,7 @@ def mad_by_group(
 
     return df.groupBy(group_col).agg(
         _n(F.col(value_col)).alias("n"),
-        _mad(F.col(value_col)).alias(out_col),
+        _mad(F.col(value_col)).alias("mad"),
     )
 
 
@@ -143,7 +141,6 @@ def grouped_moments(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    scale_factor: int = 100,
 ) -> DataFrame:
     """Per-group mean / population variance / skewness that are
     bit-identical on ANY engine and ANY aggregation order — the
@@ -151,7 +148,7 @@ def grouped_moments(
     accumulate doubles whose summation order the engine picks, so two
     runs (or two engines) legally disagree in the last ulps.
 
-    Method: values scale to exact integers (``value * scale_factor``
+    Method: values scale to exact integers (``value * 100``
     via DECIMAL — cents for money), the three power sums S1, S2, S3
     accumulate as wide decimals (exact under any order; S3 of 1e7-cent
     values fits DECIMAL(38) past 1e12 rows), and the moments come from
@@ -172,7 +169,7 @@ def grouped_moments(
     One keyed aggregate, map-side combined; per-group state is three
     decimals + a count regardless of group size.
     """
-    f, c = _scaled_int("grouped_moments", value_col, scale_factor)
+    f, c = _scaled_int("grouped_moments", value_col, 100)
     agg = df.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(c).cast("decimal(38,0)").alias("_s1"),
@@ -249,8 +246,6 @@ def weighted_median(
 
 def welch_ab_stats(
     df: DataFrame,
-    variant_col: str,
-    value_col: str,
     scale_factor: int = 100,
 ) -> DataFrame:
     """Two-sample Welch z statistic between exactly two variants —
@@ -264,12 +259,12 @@ def welch_ab_stats(
 
     One conditional aggregate over the frame: map-side combined,
     constant state, no per-variant shuffle beyond the single global
-    reduce. ``variant_col`` must take exactly the values 'A' and 'B'
+    reduce. ``variant`` must take exactly the values 'A' and 'B'
     for rows that participate.
     """
-    f, c = _scaled_int("welch_ab_stats", value_col, scale_factor)
-    is_a = F.col(variant_col) == "A"
-    is_b = F.col(variant_col) == "B"
+    f, c = _scaled_int("welch_ab_stats", "value", scale_factor)
+    is_a = F.col("variant") == "A"
+    is_b = F.col("variant") == "B"
     agg = df.agg(
         F.sum(is_a.cast("long")).alias("n_a"),
         F.sum(is_b.cast("long")).alias("n_b"),
@@ -300,14 +295,7 @@ def welch_ab_stats(
     )
 
 
-def cuped_adjusted_ab(
-    df: DataFrame,
-    user_col: str,
-    value_col: str,
-    time_col: str,
-    split_ts: str,
-    scale: int = 100,
-) -> DataFrame:
+def cuped_adjusted_ab(df: DataFrame) -> DataFrame:
     """CUPED variance-reduced A/B comparison (Deng et al.): adjust
     each variant's post-period mean by theta * (its pre-period mean -
     the pooled pre-period mean), theta = cov(pre, post)/var(pre)
@@ -334,14 +322,14 @@ def cuped_adjusted_ab(
     pooled moments are sums of per-variant moments — exact decimal
     adds, no second pass.
     """
-    c = F.round(F.col(value_col) * scale).cast("long")
+    c = F.round(F.col("value") * 100).cast("long")
     pre = F.when(
-        F.col(time_col) < F.lit(split_ts).cast("timestamp"), c
+        F.col("ts") < F.lit("2024-01-16 00:00:00").cast("timestamp"), c
     ).otherwise(F.lit(0))
     post = F.when(
-        F.col(time_col) >= F.lit(split_ts).cast("timestamp"), c
+        F.col("ts") >= F.lit("2024-01-16 00:00:00").cast("timestamp"), c
     ).otherwise(F.lit(0))
-    per_user = df.groupBy(F.col(user_col).alias("_u")).agg(
+    per_user = df.groupBy(F.col("user_id").alias("_u")).agg(
         F.sum(pre).cast("long").alias("x"),
         F.sum(post).cast("long").alias("y"),
     )
@@ -362,7 +350,7 @@ def cuped_adjusted_ab(
         F.sum(xd * xd).cast("decimal(38,0)").alias("sxx"),
         F.sum(yd * yd).cast("decimal(38,0)").alias("syy"),
     )
-    fd = float(scale)
+    fd = 100.0
     # pooled exact integers (decimal adds), then fixed-order doubles
     n = F.col("n_a") + F.col("n_b")
     sx = F.col("sxa") + F.col("sxb")

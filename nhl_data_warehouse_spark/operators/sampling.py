@@ -44,15 +44,13 @@ def rate_threshold(rate: float) -> str:
     return format(min(int(rate * _HEX_SPACE), _HEX_SPACE - 1), f"0{_HEX_DIGITS}x")
 
 
-def hash_sample(
-    df: DataFrame, key_cols: list[str], rate: float, salt: str = ""
-) -> DataFrame:
+def hash_sample(df: DataFrame, rate: float, salt: str = "") -> DataFrame:
     """Deterministic Bernoulli(rate) sample keyed on row content.
     Narrow per-row filter — no shuffle, no RNG, pushes down to the scan
     when the key is a stored column."""
     if rate >= 1.0:
         return df
-    return df.filter(hash_bucket(key_cols, salt) < rate_threshold(rate))
+    return df.filter(hash_bucket(["doc_id"], salt) < rate_threshold(rate))
 
 
 def hash_split(
@@ -60,7 +58,6 @@ def hash_split(
     key_cols: list[str],
     splits: dict[str, float],
     salt: str = "",
-    col_name: str = "split",
 ) -> DataFrame:
     """Assign every row to exactly one named split (e.g. train/val/test
     80/10/10) by hash range. Disjoint and exhaustive by construction;
@@ -77,12 +74,10 @@ def hash_split(
         cond = bucket < rate_threshold(cum)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     expr = F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
-    return df.withColumn(col_name, expr)
+    return df.withColumn("split", expr)
 
 
-def group_cap(
-    df: DataFrame, group_col: str, cap: int, id_cols: list[str], salt: str = ""
-) -> DataFrame:
+def group_cap(df: DataFrame, cap: int, salt: str = "") -> DataFrame:
     """Keep at most ``cap`` rows per group, chosen by hash order — a
     deterministic uniform subsample of each oversized group (the
     standard per-domain cap in corpus curation).
@@ -94,9 +89,9 @@ def group_cap(
     for pathological domains pre-filter with ``hash_sample`` at
     ~cap/|group| to bound the sorted set, then cap exactly.
     """
-    parts = [F.lit(salt), *[F.col(c).cast("string") for c in id_cols]]
-    order = [F.md5(F.concat_ws("|", *parts)), *[F.col(c) for c in id_cols]]
-    w = Window.partitionBy(group_col).orderBy(*order)
+    parts = [F.lit(salt), F.col("doc_id").cast("string")]
+    order = [F.md5(F.concat_ws("|", *parts)), F.col("doc_id")]
+    w = Window.partitionBy("source").orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= cap)
@@ -106,9 +101,7 @@ def group_cap(
 
 def proportional_rebalance(
     df: DataFrame,
-    group_col: str,
     target_shares: dict[str, float],
-    id_cols: list[str],
     salt: str = "",
 ) -> DataFrame:
     """Downsample groups so the surviving corpus approximates the
@@ -132,29 +125,29 @@ def proportional_rebalance(
     shares_df = F.broadcast(
         df.sparkSession.createDataFrame(
             [(k, float(v)) for k, v in target_shares.items()],
-            f"{group_col} string, _share double",
+            "lang string, _share double",
         )
     )
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
+    counts = df.groupBy("lang").agg(F.count(F.lit(1)).alias("_n"))
     # the global min over the per-group counts runs as an unpartitioned
     # window: the frame at this point is one row per group (bounded,
     # tiny at any data scale), so single-partition is correct, and it
     # costs one shuffle instead of a chain of broadcast rounds
     scale = F.min(F.col("_n") / F.col("_share")).over(Window.partitionBy())
     rates = (
-        counts.join(shares_df, on=group_col)
+        counts.join(shares_df, on="lang")
         .select(
-            group_col,
+            "lang",
             F.col("_n"),
             F.col("_share"),
             scale.alias("_scale"),
         )
         .select(
-            group_col,
+            "lang",
             ((F.col("_scale") * F.col("_share")) / F.col("_n")).alias("_rate"),
         )
     )
-    return _keep_at_rate(df, rates, group_col, id_cols, salt)
+    return _keep_at_rate(df, rates, "lang", ["doc_id"], salt)
 
 
 def _keep_at_rate(
@@ -225,7 +218,6 @@ def temperature_rebalance(
 def weighted_sample_keys(
     df: DataFrame,
     weight_col: str,
-    key_cols: list[str],
     salt: str = "wsample",
 ) -> F.Column:
     """Efraimidis–Spirakis weighted-reservoir key: ``u^(1/w)`` with
@@ -240,7 +232,7 @@ def weighted_sample_keys(
     top-k (same convention as the suite's ln()/cosine rounding);
     downstream top-k must tie-break on the key columns.
     """
-    h = F.md5(F.concat(F.lit(salt), *[F.col(c).cast("string") for c in key_cols]))
+    h = F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
     v = F.conv(F.substring(h, 1, 6), 16, 10).cast("long")
     u = (v + 1).cast("double") / F.lit(float(16**6))
     w = F.greatest(F.col(weight_col).cast("double"), F.lit(1.0))
@@ -252,7 +244,6 @@ def weighted_sample_keys(
 def weighted_sample_topk(
     df: DataFrame,
     weight_col: str,
-    key_cols: list[str],
     k: int,
     salt: str = "wsample",
 ) -> DataFrame:
@@ -262,18 +253,16 @@ def weighted_sample_topk(
     merge, no global sort; the key is a narrow per-row projection, so
     the whole op is one pass over the data at any scale.
     """
-    key = weighted_sample_keys(df, weight_col, key_cols, salt)
+    key = weighted_sample_keys(df, weight_col, salt)
     out = df.withColumn("sample_key", key)
     return out.orderBy(
-        F.col("sample_key").desc(), *[F.col(c) for c in key_cols]
+        F.col("sample_key").desc(), F.col("doc_id")
     ).limit(k)
 
 
 def deterministic_shuffle(
     df: DataFrame,
-    key_cols: list[str],
     salt: str = "shuffle-v1",
-    bucket_hex_digits: int = 3,
 ) -> DataFrame:
     """Global deterministic training order: every row gets a dense
     1-based ``shuffle_pos`` by sorting on ``md5(salt|key...)`` (ties
@@ -283,26 +272,24 @@ def deterministic_shuffle(
     repartitionings, and re-shuffles are just a new salt.
 
     Scale shape: the rank comes from ``layout.two_level_rank`` — the
-    first ``bucket_hex_digits`` hex chars of the hash form 16^d
-    contiguous buckets of the lexicographic hash order (md5 is
-    uniform, so buckets are balanced by construction); per-bucket
-    ``row_number`` windows are partitioned, and only the 16^d bucket
-    totals cross a single partition. No global sort, no RNG.
+    first 3 hex chars of the hash form 16^3 contiguous buckets of the
+    lexicographic hash order (md5 is uniform, so buckets are balanced
+    by construction); per-bucket ``row_number`` windows are
+    partitioned, and only the 16^3 bucket totals cross a single
+    partition. No global sort, no RNG.
     """
     from nhl_data_warehouse_spark.operators.layout import two_level_rank
 
-    parts = [F.lit(salt), *[F.col(c).cast("string") for c in key_cols]]
+    parts = [F.lit(salt), F.col("doc_id").cast("string")]
     h = F.md5(F.concat_ws("|", *parts))
     out = df.withColumn("__shuffle_hash", h).withColumn(
         "__hbucket",
-        F.conv(F.substring("__shuffle_hash", 1, bucket_hex_digits), 16, 10).cast(
-            "long"
-        ),
+        F.conv(F.substring("__shuffle_hash", 1, 3), 16, 10).cast("long"),
     )
     ranked = two_level_rank(
         out,
         "__hbucket",
-        [F.col("__shuffle_hash"), *[F.col(c) for c in key_cols]],
+        [F.col("__shuffle_hash"), F.col("doc_id")],
     )
     return ranked.withColumn("shuffle_pos", F.col("__rn")).drop(
         "__hbucket", "__shuffle_hash", "__lr", "__off", "__rn", "__total"
@@ -311,12 +298,7 @@ def deterministic_shuffle(
 
 def stratified_kfold(
     df: DataFrame,
-    stratum_col: str,
     k: int,
-    id_cols: list[str],
-    salt: str = "kfold-v1",
-    bucket_hex_digits: int = 2,
-    fold_col: str = "fold",
 ) -> DataFrame:
     """Exactly-balanced stratified k-fold assignment: within every
     stratum the rows are ranked by content hash and folded round-robin
@@ -335,25 +317,25 @@ def stratified_kfold(
     """
     if k < 2:  # not an assert: must survive `python -O`
         raise ValueError(f"stratified_kfold: k must be >= 2, got {k}")
-    parts = [F.lit(salt), *[F.col(c).cast("string") for c in id_cols]]
+    parts = [F.lit("kfold-v1"), F.col("doc_id").cast("string")]
     h = F.md5(F.concat_ws("|", *parts))
     out = df.withColumn("__h", h).withColumn(
         "__hb",
-        F.conv(F.substring("__h", 1, bucket_hex_digits), 16, 10).cast("long"),
+        F.conv(F.substring("__h", 1, 2), 16, 10).cast("long"),
     )
-    counts = out.groupBy(stratum_col, "__hb").agg(F.count(F.lit(1)).alias("__cnt"))
+    counts = out.groupBy("lang", "__hb").agg(F.count(F.lit(1)).alias("__cnt"))
     w_off = (
-        Window.partitionBy(stratum_col)
+        Window.partitionBy("lang")
         .orderBy("__hb")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = counts.select(
-        stratum_col,
+        "lang",
         "__hb",
         F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
     )
-    w_local = Window.partitionBy(stratum_col, "__hb").orderBy(
-        "__h", *[F.col(c) for c in id_cols]
+    w_local = Window.partitionBy("lang", "__hb").orderBy(
+        "__h", F.col("doc_id")
     )
     # no broadcast hint: the offsets relation is |strata| * 16^d rows,
     # unbounded when the stratum key is high-cardinality — AQE
@@ -362,9 +344,9 @@ def stratified_kfold(
     # wrong strategy at scale)
     return (
         out.withColumn("__lr", F.row_number().over(w_local))
-        .join(offsets, on=[stratum_col, "__hb"])
+        .join(offsets, on=["lang", "__hb"])
         .withColumn(
-            fold_col,
+            "fold",
             ((F.col("__off") + F.col("__lr") - 1) % k).cast("int"),
         )
         .drop("__h", "__hb", "__lr", "__off")
@@ -375,7 +357,6 @@ def _score_buckets(
     op: str,
     scored: DataFrame,
     score_col: str,
-    id_col: str,
     salt: str,
     max_score: int,
     bucket_hex_digits: int,
@@ -386,7 +367,7 @@ def _score_buckets(
     not an integer in [0, max_score] raises (naming ``op``) at
     execution instead of silently corrupting the order."""
     n_hb = 16**bucket_hex_digits
-    h = F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string")))
+    h = F.md5(F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string")))
     s_raw = F.col(score_col)
     s_int = s_raw.cast("long")
     s_valid = (
@@ -427,10 +408,7 @@ def budget_select(
     score_col: str,
     weight_col: str,
     budget: int,
-    id_col: str = "doc_id",
-    salt: str = "tb-v1",
     max_score: int = 10,
-    bucket_hex_digits: int = 2,
 ) -> DataFrame:
     """Token-budget corpus selection: walk the corpus best-first
     (``score_col`` DESC, content-hash shuffled within each score tier)
@@ -453,8 +431,8 @@ def budget_select(
     """
     w = F.col(weight_col).cast("long")
     out = _score_buckets(
-        "budget_select", scored, score_col, id_col, salt, max_score,
-        bucket_hex_digits,
+        "budget_select", scored, score_col, "tb-v1", max_score,
+        2,
     )
     totals = out.groupBy("__cb").agg(F.sum(w).alias("__tot"))
     w_base = Window.orderBy("__cb").rowsBetween(Window.unboundedPreceding, -1)
@@ -464,7 +442,7 @@ def budget_select(
     )
     w_cum = (
         Window.partitionBy("__cb")
-        .orderBy("__h", id_col)
+        .orderBy("__h", "doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
@@ -478,10 +456,6 @@ def budget_select(
 def curriculum_order(
     scored: DataFrame,
     score_col: str,
-    id_col: str = "doc_id",
-    salt: str = "curr-v1",
-    max_score: int = 10,
-    bucket_hex_digits: int = 3,
 ) -> DataFrame:
     """Curriculum schedule: a global training order that presents
     higher-``score_col`` documents first, pseudo-randomly shuffled
@@ -490,14 +464,14 @@ def curriculum_order(
     engines and repartitionings.
 
     Scale shape: reuses ``layout.two_level_rank`` with a composite
-    bucket ``(max_score - score) * 16^d + hash_bucket`` — monotone in
+    bucket ``(10 - score) * 16^3 + hash_bucket`` — monotone in
     (score DESC, hash ASC), so bucket ranges tile the global order.
-    Rows shuffle once into partitioned windows; only the
-    (max_score+1) * 16^d bucket totals cross a single partition. No
+    Rows shuffle once into partitioned windows; only the 11 * 16^3
+    bucket totals cross a single partition. No
     global sort.
 
-    Contract: ``score_col`` must be integer-valued in
-    ``[0, max_score]`` — the composite bucket is only monotone under
+    Contract: ``score_col`` must be integer-valued in ``[0, 10]`` —
+    the composite bucket is only monotone under
     that bound. Enforced in-plan: an out-of-range / fractional / NULL
     score raises at execution instead of silently corrupting the
     global order.
@@ -505,10 +479,10 @@ def curriculum_order(
     from nhl_data_warehouse_spark.operators.layout import two_level_rank
 
     out = _score_buckets(
-        "curriculum_order", scored, score_col, id_col, salt, max_score,
-        bucket_hex_digits,
+        "curriculum_order", scored, score_col, "curr-v1", 10,
+        3,
     )
-    ranked = two_level_rank(out, "__cb", [F.col("__h"), F.col(id_col)])
+    ranked = two_level_rank(out, "__cb", [F.col("__h"), F.col("doc_id")])
     return ranked.withColumn("curriculum_pos", F.col("__rn")).drop(
         "__h", "__hb", "__cb", "__lr", "__off", "__rn", "__total"
     )
@@ -589,12 +563,12 @@ def mixture_epoch_plan(
 # or below its hash draw. Exact double literals formatted into the
 # 8-hex-digit space so Spark and any SQL oracle compare the SAME
 # strings.
-def _poisson1_cdf(max_w: int = 9) -> list[float]:
+def _poisson1_cdf() -> list[float]:
     import math
 
     p = math.exp(-1.0)
     cdf, acc = [], 0.0
-    for k in range(max_w):
+    for k in range(9):
         acc += p
         cdf.append(acc)
         p /= k + 1

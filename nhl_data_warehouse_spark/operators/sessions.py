@@ -19,23 +19,20 @@ from pyspark.sql import functions as F
 def sessionize_batch(
     events: DataFrame,
     *,
-    key: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
     gap_minutes: int = 30,
 ) -> DataFrame:
-    """One row per session: key, session_id (1-based per key), event
-    count, start/end timestamps. Ordering ties broken by ``id_col``
-    so results are deterministic."""
+    """One row per session: user_id, session_id (1-based per user),
+    event count, start/end timestamps. Ordering ties broken by
+    ``event_id`` so results are deterministic."""
     gap_us = gap_minutes * 60 * 1_000_000
-    w_order = Window.partitionBy(key).orderBy(F.col(time_col), F.col(id_col))
+    w_order = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     with_break = events.select(
-        key,
-        time_col,
-        id_col,
+        "user_id",
+        "ts",
+        "event_id",
         F.when(
-            F.unix_micros(time_col)
-            - F.unix_micros(F.lag(time_col).over(w_order))
+            F.unix_micros("ts")
+            - F.unix_micros(F.lag("ts").over(w_order))
             > F.lit(gap_us),
             F.lit(1),
         )
@@ -44,24 +41,18 @@ def sessionize_batch(
     )
     w_run = w_order.rowsBetween(Window.unboundedPreceding, 0)
     with_session = with_break.select(
-        key,
-        time_col,
+        "user_id",
+        "ts",
         (F.sum("is_break").over(w_run) + 1).alias("session_id"),
     )
-    return with_session.groupBy(key, "session_id").agg(
+    return with_session.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.min(time_col).alias("session_start"),
-        F.max(time_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     streams: for each (from_type, to_type) pair, the observed count
     and the conditional probability P(to | from) — the
@@ -78,13 +69,13 @@ def event_transitions(
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(user_col).orderBy(F.col(ts_col), F.col(tiebreak_col))
+    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     pairs = (
         events.select(
-            F.col(user_col),
-            F.col(type_col).alias("from_type"),
-            F.col(ts_col),
-            F.col(tiebreak_col),
+            F.col("user_id"),
+            F.col("event_type").alias("from_type"),
+            F.col("ts"),
+            F.col("event_id"),
         )
         .withColumn("to_type", F.lead("from_type").over(w))
         .filter(F.col("to_type").isNotNull())
@@ -105,15 +96,12 @@ def event_transitions(
 
 def window_funnel(
     events: DataFrame,
-    steps: list[str],
     window_seconds: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Windowed ordered funnel (the ClickHouse ``windowFunnel`` shape):
-    per user, the deepest step sequence completed strictly in order
-    within ``window_seconds`` of the ANCHOR (step-1) event — unlike
+    per user, the deepest step of the view -> click -> purchase
+    sequence completed strictly in order within ``window_seconds`` of
+    the ANCHOR (view) event — unlike
     the unbounded ordered funnel, a user who converts a week later
     does not count. Returns (user, funnel_level).
 
@@ -125,33 +113,31 @@ def window_funnel(
     intermediate cardinality by the step-1 event count.
     """
     w = F.expr(f"INTERVAL {int(window_seconds)} SECONDS")
-    anchors = events.filter(F.col(type_col) == steps[0]).select(
-        F.col(user_col),
-        F.col(ts_col).alias("_t1"),
-        F.col(ts_col).alias("_tprev"),
+    anchors = events.filter(F.col("event_type") == "view").select(
+        F.col("user_id"),
+        F.col("ts").alias("_t1"),
+        F.col("ts").alias("_tprev"),
     )
-    levels = anchors.select(user_col).distinct().select(
-        F.col(user_col), F.lit(1).alias("funnel_level")
+    levels = anchors.select("user_id").distinct().select(
+        F.col("user_id"), F.lit(1).alias("funnel_level")
     )
     cur = anchors
-    for depth, step in enumerate(steps[1:], start=2):
-        nxt = events.filter(F.col(type_col) == step).select(
-            F.col(user_col), F.col(ts_col).alias("_tn")
+    for depth, step in enumerate(["click", "purchase"], start=2):
+        nxt = events.filter(F.col("event_type") == step).select(
+            F.col("user_id"), F.col("ts").alias("_tn")
         )
         cur = (
-            cur.join(nxt, on=user_col)
+            cur.join(nxt, on="user_id")
             .filter(
                 (F.col("_tn") > F.col("_tprev"))
                 & (F.col("_tn") <= F.col("_t1") + w)
             )
-            .groupBy(user_col, "_t1")
+            .groupBy("user_id", "_t1")
             .agg(F.min("_tn").alias("_tprev"))
         )
         levels = levels.unionByName(
-            cur.select(user_col)
+            cur.select("user_id")
             .distinct()
-            .select(F.col(user_col), F.lit(depth).alias("funnel_level"))
+            .select(F.col("user_id"), F.lit(depth).alias("funnel_level"))
         )
-    return levels.groupBy(user_col).agg(
-        F.max("funnel_level").alias("funnel_level")
-    )
+    return levels.groupBy("user_id").agg(F.max("funnel_level").alias("funnel_level"))

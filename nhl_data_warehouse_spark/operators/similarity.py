@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 
 from nhl_data_warehouse_spark.operators.caching import pin
 
+# fixed-point grain of embedding components: micro-units
+_MICROS = 1_000_000
+
 try:
     # Hint-resolution only (ADVICE r12): under ``from __future__ import
     # annotations`` a pandas_udf's string hints (``v: pd.Series``)
@@ -61,24 +64,22 @@ def cosine_topk(
     embeddings: DataFrame,
     query_vec: Column,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine to ``query_vec`` (a literal array column,
     e.g. ``F.array(*[F.lit(x) for x in vec])`` or a 1-row broadcast).
     Ties broken by id for determinism. Cosine rounded to 6 dp so
     downstream comparisons are stable across engines.
     """
-    cos = _dot(F.col(vec_col), query_vec) / (
-        _norm(F.col(vec_col)) * _norm(query_vec)
+    cos = _dot(F.col("embedding"), query_vec) / (
+        _norm(F.col("embedding")) * _norm(query_vec)
     )
     # + 0.0 maps -0.0 to +0.0 (orthogonal vectors can round to negative
     # zero in DuckDB while Spark's round clamps it — the driver's repr
     # hash distinguishes the two)
     scored = embeddings.select(
-        F.col(id_col), (F.round(cos, 6) + F.lit(0.0)).alias("cosine")
+        F.col("vec_id"), (F.round(cos, 6) + F.lit(0.0)).alias("cosine")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def plane_signs(n_planes: int, dim: int) -> list[list[int]]:
@@ -101,14 +102,12 @@ def lsh_hyperplane_buckets(
     embeddings: DataFrame,
     n_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector an LSH bucket id in [0, 2^n_planes): bit p is
     the sign of the dot product with ±1 hyperplane p. Entirely
     JVM-side expression work — a narrow projection, no shuffle."""
-    bucket = _lsh_bucket(F.col(vec_col), n_planes, dim)
-    return embeddings.select(id_col, vec_col, bucket.alias("bucket"))
+    bucket = _lsh_bucket(F.col("embedding"), n_planes, dim)
+    return embeddings.select("vec_id", "embedding", bucket.alias("bucket"))
 
 
 def _lsh_bucket(vec: Column, n_planes: int, dim: int) -> Column:
@@ -159,8 +158,6 @@ def embedding_near_dup_pairs(
     n_planes: int = 8,
     dim: int = 64,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: candidate pairs share a
     hyperplane-LSH bucket (never all pairs), then exact cosine filters
@@ -172,8 +169,8 @@ def embedding_near_dup_pairs(
     (more planes = smaller buckets = fewer candidates, lower recall).
     Cosine is computed once per surviving candidate pair.
     """
-    bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
-    _, pairs = _normed_self_join(bucketed, "bucket", id_col, vec_col)
+    bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim)
+    _, pairs = _normed_self_join(bucketed, "bucket", "vec_id", "embedding")
     return (
         pairs.filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id", _pair_cosine().alias("cosine"))
@@ -181,11 +178,7 @@ def embedding_near_dup_pairs(
     )
 
 
-def group_centroids(
-    labeled: DataFrame,
-    label_col: str,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def group_centroids(labeled: DataFrame) -> DataFrame:
     """Per-group mean embedding — class centroids / prototype vectors
     (label-conditioned means feed few-shot classifiers, per-domain
     IVF seeds, and drift monitors over embedding spaces). One
@@ -198,11 +191,9 @@ def group_centroids(
     rare for non-dyadic data), summed exactly, and divided once as a
     6dp-rounded double.
     """
-    x = labeled.select(
-        label_col, F.posexplode(F.col(vec_col)).alias("pos", "_v")
-    )
+    x = labeled.select("lang", F.posexplode(F.col("embedding")).alias("pos", "_v"))
     return (
-        x.groupBy(label_col, "pos")
+        x.groupBy("lang", "pos")
         .agg(
             F.sum(F.col("_v").cast("double").cast("decimal(20,12)")).alias(
                 "_s"
@@ -210,7 +201,7 @@ def group_centroids(
             F.count(F.lit(1)).alias("n_vectors"),
         )
         .select(
-            label_col,
+            "lang",
             "pos",
             (
                 F.round(F.col("_s").cast("double") / F.col("n_vectors"), 6)
@@ -225,14 +216,12 @@ def _bucketed_cosine_pairs(
     embeddings: DataFrame,
     n_planes: int,
     dim: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Directed candidate pairs inside shared LSH buckets with their
     exact 6dp cosine — the common core of the kNN join and hard-negative
     mining. Fan-out is sum over buckets of n_b^2 (never all-pairs)."""
-    bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
-    _, pairs = _normed_self_join(bucketed, "bucket", id_col, vec_col)
+    bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim)
+    _, pairs = _normed_self_join(bucketed, "bucket", "vec_id", "embedding")
     cos = _pair_cosine() + F.lit(0.0)
     return pairs.filter(F.col("a_id") != F.col("b_id")).select(
         "a_id", "b_id", cos.alias("cosine")
@@ -244,8 +233,6 @@ def knn_join_bucketed(
     n_planes: int = 8,
     dim: int = 64,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Batch approximate kNN JOIN: for EVERY vector, its top-k cosine
     neighbors among vectors sharing its LSH bucket — the kNN-graph
@@ -260,7 +247,7 @@ def knn_join_bucketed(
     alone in their bucket yield no rows — recall repair is the same
     multi-probe dial as ``ann_multiprobe_topk``.
     """
-    scored = _bucketed_cosine_pairs(embeddings, n_planes, dim, id_col, vec_col)
+    scored = _bucketed_cosine_pairs(embeddings, n_planes, dim)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("a_id").orderBy(
@@ -279,8 +266,6 @@ def hard_negative_pairs(
     dim: int = 64,
     pos_threshold: float = 0.4,
     k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Contrastive-training hard-negative mining: per anchor, the most
     similar bucket-mates BELOW the positive threshold — candidates
@@ -293,7 +278,7 @@ def hard_negative_pairs(
     window input shrinks with the positive set rather than growing
     with it.
     """
-    scored = _bucketed_cosine_pairs(embeddings, n_planes, dim, id_col, vec_col)
+    scored = _bucketed_cosine_pairs(embeddings, n_planes, dim)
     negatives = scored.filter(F.col("cosine") < pos_threshold)
     from pyspark.sql.window import Window
 
@@ -311,8 +296,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     n_centroids: int = 8,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus embeddings, then within each
@@ -331,26 +314,24 @@ def semantic_dedup(
 
     Returns the KEPT rows as (id, cell_id).
     """
-    assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
+    assigned = ivf_assign(embeddings, n_centroids)
     # the pinned frame feeds the pair build (2 sides) + final anti-join
-    assigned, pairs = _normed_self_join(assigned, "cell_id", id_col, vec_col)
+    assigned, pairs = _normed_self_join(assigned, "cell_id", "vec_id", "embedding")
     dup_ids = (
         pairs.filter(F.col("a_id") < F.col("b_id"))
         .select("b_id", _pair_cosine().alias("_cos"))
         .filter(F.col("_cos") >= threshold)
-        .select(F.col("b_id").alias(id_col))
+        .select(F.col("b_id").alias("vec_id"))
         .distinct()
     )
-    return assigned.join(dup_ids, on=id_col, how="left_anti").select(
-        id_col, "cell_id"
+    return assigned.join(dup_ids, on="vec_id", how="left_anti").select(
+        "vec_id", "cell_id"
     )
 
 
 def ivf_assign(
     embeddings: DataFrame,
     n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF cell assignment with deterministic seed centroids (the first
     ``n_centroids`` vectors by id stand in for k-means centroids —
@@ -362,19 +343,19 @@ def ivf_assign(
     reads only its cell's partitions — the IVF pruning idea expressed
     as ordinary partition pruning.
     """
-    centroids = embeddings.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cell_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm(F.col(vec_col)).alias("_nc"),
+    centroids = embeddings.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cell_id"),
+        F.col("embedding").alias("_cv"),
+        _norm(F.col("embedding")).alias("_nc"),
     )
     cos = F.round(
-        _dot(F.col(vec_col), F.col("_cv")) / (F.col("_nvec") * F.col("_nc")),
+        _dot(F.col("embedding"), F.col("_cv")) / (F.col("_nvec") * F.col("_nc")),
         6,
     )
     scored = (
-        embeddings.withColumn("_nvec", _norm(F.col(vec_col)))
+        embeddings.withColumn("_nvec", _norm(F.col("embedding")))
         .crossJoin(F.broadcast(centroids))
-        .select(id_col, vec_col, "cell_id", cos.alias("_cos"))
+        .select("vec_id", "embedding", "cell_id", cos.alias("_cos"))
     )
     # argmax via min_by over struct(-cos, cell_id): lexicographic struct
     # ordering encodes the tie-break (lower cell id), and the groupBy
@@ -382,27 +363,24 @@ def ivf_assign(
     # instead of sort-shuffling all n*k scored rows (a window argmin
     # would). At 100 TB * k centroids that is the whole ballgame.
     best = (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(
             F.min_by(
-                F.struct(F.col("cell_id"), F.col(vec_col).alias("_v")),
+                F.struct(F.col("cell_id"), F.col("embedding").alias("_v")),
                 F.struct(F.negate(F.col("_cos")), F.col("cell_id")),
             ).alias("_best")
         )
-        .select(id_col, F.col("_best._v").alias(vec_col), F.col("_best.cell_id"))
+        .select("vec_id", F.col("_best._v").alias("embedding"), F.col("_best.cell_id"))
     )
-    return best.select(id_col, vec_col, "cell_id")
+    return best.select("vec_id", "embedding", "cell_id")
 
 
 def ivf_topk(
     embeddings: DataFrame,
     query_vec: Column,
-    query_id: int = 0,
     n_centroids: int = 8,
     k: int = 10,
     nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF probe: exact cosine top-k scored only within the ``nprobe``
     cells whose centroids are nearest the query — nprobe=1 is the
@@ -413,13 +391,13 @@ def ivf_topk(
     (tiny at any scale) broadcast into the candidate semi-join, so the
     scan still prunes to the probed cells' partitions.
     """
-    assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
+    assigned = ivf_assign(embeddings, n_centroids)
     assigned = pin(assigned)  # probe lookup + candidate scan share it
     if nprobe <= 1:
-        qcells = assigned.filter(F.col(id_col) == query_id).select("cell_id")
+        qcells = assigned.filter(F.col("vec_id") == 0).select("cell_id")
     else:
-        centroids = embeddings.filter(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cv")
+        centroids = embeddings.filter(F.col("vec_id") < n_centroids).select(
+            F.col("vec_id").alias("cell_id"), F.col("embedding").alias("_cv")
         )
         qcos = F.round(
             _dot(F.col("_cv"), query_vec) / (_norm(F.col("_cv")) * _norm(query_vec)),
@@ -431,19 +409,16 @@ def ivf_topk(
             .limit(nprobe)
             .select("cell_id")
         )
-    cand = assigned.join(F.broadcast(qcells), on="cell_id").select(id_col, vec_col)
-    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    cand = assigned.join(F.broadcast(qcells), on="cell_id").select("vec_id", "embedding")
+    return cosine_topk(cand, query_vec, k=k)
 
 
 def ann_bucketed_topk(
     embeddings: DataFrame,
     query_vec: Column,
-    query_bucket_df: DataFrame | None = None,
     n_planes: int = 8,
     dim: int = 64,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score only vectors in the query's LSH bucket.
 
@@ -452,15 +427,13 @@ def ann_bucketed_topk(
     tunable via n_planes (fewer planes = bigger buckets = higher
     recall, more work) or multi-probe (union adjacent buckets).
     """
-    bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
+    bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim)
     qb = _lsh_bucket(query_vec, n_planes, dim)
     candidates = bucketed.filter(F.col("bucket") == qb)
-    return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    return cosine_topk(candidates, query_vec, k=k)
 
 
-def vector_stats_pandas(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def vector_stats_pandas(df: DataFrame) -> DataFrame:
     """Per-vector stats (dim, L2 norm, max |component|) via a scalar
     **Pandas UDF** — the Arrow-vectorized Python path. The engine's
     hot relational code stays JVM-side, but embedding pipelines
@@ -491,12 +464,12 @@ def vector_stats_pandas(
         )
 
     return df.select(
-        id_col,
-        F.size(vec_col).alias("dim"),
+        "vec_id",
+        F.size("embedding").alias("dim"),
         # double, not DECIMAL: the driver floats the oracle's decimals,
         # so a Decimal in the final schema can never hash-match (W1)
-        l2_norm(F.col(vec_col)).alias("l2_norm"),
-        max_abs(F.col(vec_col)).alias("max_abs_component"),
+        l2_norm(F.col("embedding")).alias("l2_norm"),
+        max_abs(F.col("embedding")).alias("max_abs_component"),
     )
 
 
@@ -515,7 +488,7 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def _subvectors(vec_col: str, dim: int, m: int) -> Column:
+def _subvectors(dim: int, m: int) -> Column:
     """Explode the vector into one ``sv`` row (subspace, subvec) per
     each of its ``m`` equal slices."""
     d_sub = dim // m
@@ -524,7 +497,7 @@ def _subvectors(vec_col: str, dim: int, m: int) -> Column:
             *[
                 F.struct(
                     F.lit(s).alias("subspace"),
-                    F.slice(F.col(vec_col), s * d_sub + 1, d_sub).alias("subvec"),
+                    F.slice(F.col("embedding"), s * d_sub + 1, d_sub).alias("subvec"),
                 )
                 for s in range(m)
             ]
@@ -537,8 +510,6 @@ def pq_encode(
     dim: int,
     m: int = 4,
     n_codes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization encode: the vector splits into ``m``
     subvectors; each subspace has its own codebook (deterministic seed:
@@ -555,18 +526,18 @@ def pq_encode(
     each scoring touches — together they are the standard IVFPQ index.
     """
     assert dim % m == 0
-    subs = _subvectors(vec_col, dim, m)
-    vec_subs = embeddings.select(F.col(id_col), subs).select(
-        id_col, "sv.subspace", "sv.subvec"
+    subs = _subvectors(dim, m)
+    vec_subs = embeddings.select(F.col("vec_id"), subs).select(
+        "vec_id", "sv.subspace", "sv.subvec"
     )
     code_subs = (
-        embeddings.filter(F.col(id_col) < n_codes)
-        .select(F.col(id_col).alias("code_id"), subs)
+        embeddings.filter(F.col("vec_id") < n_codes)
+        .select(F.col("vec_id").alias("code_id"), subs)
         .select("code_id", "sv.subspace", F.col("sv.subvec").alias("codevec"))
     )
     sqdist = _sqdist(F.col("subvec"), F.col("codevec"))
     scored = vec_subs.join(F.broadcast(code_subs), on="subspace").select(
-        id_col,
+        "vec_id",
         "subspace",
         "code_id",
         F.round(sqdist, 6).alias("dist"),
@@ -575,7 +546,7 @@ def pq_encode(
     # shuffled row per (vec, subspace) instead of a window sort over
     # the n_codes-wide scored set (see ivf_assign).
     return (
-        scored.groupBy(id_col, "subspace")
+        scored.groupBy("vec_id", "subspace")
         .agg(
             F.min_by(
                 F.struct(F.col("code_id"), F.col("dist")),
@@ -583,7 +554,7 @@ def pq_encode(
             ).alias("_best")
         )
         .select(
-            id_col,
+            "vec_id",
             "subspace",
             F.col("_best.code_id").alias("code"),
             F.col("_best.dist").alias("dist"),
@@ -593,14 +564,11 @@ def pq_encode(
 
 def ivfpq_topk(
     embeddings: DataFrame,
-    query_id: int = 0,
     n_centroids: int = 8,
     dim: int = 64,
     m: int = 4,
     n_codes: int = 8,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVFPQ probe — the full standard ANN index: IVF prunes WHICH
     vectors to score (only the query's cell), PQ codes shrink WHAT
@@ -619,22 +587,20 @@ def ivfpq_topk(
     the ADC lookup table is a broadcast constant; the probe reads one
     cell's partitions and shuffles only the k winners.
     """
-    assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
+    assigned = ivf_assign(embeddings, n_centroids)
     assigned = pin(assigned)  # query-cell lookup + candidate scan
-    qcell = assigned.filter(F.col(id_col) == query_id).select("cell_id")
-    cand_ids = assigned.join(F.broadcast(qcell), on="cell_id").select(id_col)
-    codes = pq_encode(embeddings, dim, m, n_codes, id_col, vec_col).select(
-        id_col, "subspace", "code"
-    )
-    subs = _subvectors(vec_col, dim, m)
+    qcell = assigned.filter(F.col("vec_id") == 0).select("cell_id")
+    cand_ids = assigned.join(F.broadcast(qcell), on="cell_id").select("vec_id")
+    codes = pq_encode(embeddings, dim, m, n_codes).select("vec_id", "subspace", "code")
+    subs = _subvectors(dim, m)
     qsubs = (
-        embeddings.filter(F.col(id_col) == query_id)
+        embeddings.filter(F.col("vec_id") == 0)
         .select(subs)
         .select("sv.subspace", F.col("sv.subvec").alias("qsub"))
     )
     cbook = (
-        embeddings.filter(F.col(id_col) < n_codes)
-        .select(F.col(id_col).alias("code"), subs)
+        embeddings.filter(F.col("vec_id") < n_codes)
+        .select(F.col("vec_id").alias("code"), subs)
         .select("code", "sv.subspace", F.col("sv.subvec").alias("codevec"))
     )
     sqdist = _sqdist(F.col("qsub"), F.col("codevec"))
@@ -644,13 +610,13 @@ def ivfpq_topk(
         F.round(sqdist, 6).cast("decimal(18,6)").alias("qd"),
     )
     return (
-        codes.join(cand_ids, on=id_col)
+        codes.join(cand_ids, on="vec_id")
         .join(F.broadcast(adc), on=["subspace", "code"])
-        .groupBy(id_col)
+        .groupBy("vec_id")
         # exact decimal sum internally; final projection is double (the
         # driver floats oracle decimals, so DECIMAL outputs never match)
         .agg(F.sum("qd").cast("double").alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
+        .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -658,8 +624,6 @@ def ivfpq_topk(
 def kmeans_lloyd_step(
     embeddings: DataFrame,
     n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """One synchronous Lloyd iteration — the building block every
     iterative clustering loop (k-means, IVF centroid training, semantic
@@ -681,31 +645,29 @@ def kmeans_lloyd_step(
     partial sums only — map-side combine makes the shuffle ~k*dim rows
     per task, independent of input size.
     """
-    centroids = embeddings.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cv")
+    centroids = embeddings.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("_cv")
     )
-    sqdist = _sqdist(F.col(vec_col), F.col("_cv"))
+    sqdist = _sqdist(F.col("embedding"), F.col("_cv"))
     scored = embeddings.crossJoin(F.broadcast(centroids)).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "cell_id",
         F.round(sqdist, 6).alias("_d"),
     )
     # argmin via min_by over struct(dist, cell_id) — partial agg, one
     # shuffled row per vector instead of a window sort over n*k rows.
     assigned = (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(
             F.min_by(
-                F.struct(F.col("cell_id"), F.col(vec_col).alias("_v")),
+                F.struct(F.col("cell_id"), F.col("embedding").alias("_v")),
                 F.struct(F.col("_d"), F.col("cell_id")),
             ).alias("_best")
         )
-        .select(F.col("_best.cell_id").alias("cell_id"), F.col("_best._v").alias(vec_col))
+        .select(F.col("_best.cell_id").alias("cell_id"), F.col("_best._v").alias("embedding"))
     )
-    exploded = assigned.select(
-        "cell_id", F.posexplode(vec_col).alias("dim", "_x")
-    )
+    exploded = assigned.select("cell_id", F.posexplode("embedding").alias("dim", "_x"))
     exact = F.round(F.col("_x").cast("double"), 12).cast("decimal(20,12)")
     return exploded.groupBy("cell_id", "dim").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -717,9 +679,7 @@ def kmeans_lloyd_step(
     )
 
 
-def quantize_embeddings_int8(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings_int8(df: DataFrame) -> DataFrame:
     """Per-vector affine int8 quantization — the 4x memory/bandwidth
     reduction serving and coarse-scoring layers apply to embedding
     stores (float32 -> int8 with per-vector (min, max) dequant params).
@@ -734,15 +694,15 @@ def quantize_embeddings_int8(
     per-row projection, no shuffle, no Python — at 100 TB this is a
     single streaming pass over the vector column.
     """
-    x0 = F.element_at(F.col(vec_col), 1).cast("double")
+    x0 = F.element_at(F.col("embedding"), 1).cast("double")
     vmin = F.aggregate(
-        F.col(vec_col), x0, lambda acc, x: F.least(acc, x.cast("double"))
+        F.col("embedding"), x0, lambda acc, x: F.least(acc, x.cast("double"))
     )
     vmax = F.aggregate(
-        F.col(vec_col), x0, lambda acc, x: F.greatest(acc, x.cast("double"))
+        F.col("embedding"), x0, lambda acc, x: F.greatest(acc, x.cast("double"))
     )
     with_range = df.select(
-        F.col(id_col), F.col(vec_col), vmin.alias("vmin"), vmax.alias("vmax")
+        F.col("vec_id"), F.col("embedding"), vmin.alias("vmin"), vmax.alias("vmax")
     )
 
     def code(x):
@@ -754,12 +714,12 @@ def quantize_embeddings_int8(
         return F.when(F.col("vmax") == F.col("vmin"), F.lit(0)).otherwise(clamped)
 
     return with_range.select(
-        id_col,
+        "vec_id",
         "vmin",
         "vmax",
-        F.size(vec_col).alias("dim"),
+        F.size("embedding").alias("dim"),
         F.concat_ws(
-            ",", F.transform(F.col(vec_col), lambda x: code(x).cast("string"))
+            ",", F.transform(F.col("embedding"), lambda x: code(x).cast("string"))
         ).alias("q_codes"),
     )
 
@@ -767,51 +727,40 @@ def quantize_embeddings_int8(
 def ann_multiprobe_topk(
     embeddings: DataFrame,
     query_vec: Column,
-    n_planes: int = 8,
-    dim: int = 64,
     k: int = 10,
-    max_flips: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-probe LSH top-k (Lv et al., VLDB'07): score the query's
-    bucket AND every bucket within ``max_flips`` sign-bit flips — the
-    standard recall repair for hyperplane LSH, trading a bounded
-    candidate-set growth (sum_{i<=f} C(n_planes, i) buckets) for the
+    bucket AND every bucket one sign-bit flip away — the standard
+    recall repair for hyperplane LSH, trading a bounded candidate-set
+    growth (1 + 8 buckets of 8 planes over 64 dims) for the
     neighbors a single-bucket probe misses when the query sits near a
     hyperplane.
 
     The probe set is a pure bit-arithmetic predicate
-    (``bit_count(bucket XOR query_bucket) <= max_flips``) — at 100 TB
+    (``bit_count(bucket XOR query_bucket) <= 1``) — at 100 TB
     with the bucket as partition key this still prunes to the probed
     buckets' partitions; candidates then rank by exact cosine.
     """
-    bucketed = lsh_hyperplane_buckets(embeddings, n_planes, dim, id_col, vec_col)
-    qb = _lsh_bucket(query_vec, n_planes, dim)
-    candidates = bucketed.filter(
-        F.bit_count(F.col("bucket").bitwiseXOR(qb)) <= max_flips
-    )
-    return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    bucketed = lsh_hyperplane_buckets(embeddings, 8, 64)
+    qb = _lsh_bucket(query_vec, 8, 64)
+    candidates = bucketed.filter(F.bit_count(F.col("bucket").bitwiseXOR(qb)) <= 1)
+    return cosine_topk(candidates, query_vec, k=k)
 
 
-def gram_matrix(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def gram_matrix(embeddings: DataFrame) -> DataFrame:
     """Upper-triangular Gram matrix G[i,j] = sum_rows x_i * x_j over
     the whole corpus — the single-pass sufficient statistic behind
     PCA/whitening/covariance of an embedding table (covariance =
     G/n - mean outer mean, derivable from this plus the mean vector).
 
     Cross-engine determinism: float components are fixed-pointed first
-    (round(x * scale) as int64), so every product and every partial
+    (round(x * _MICROS) as int64), so every product and every partial
     sum is EXACT integer arithmetic — the suite's decimal convention
     applied to float vectors, immune to distributed summation order.
-    The final projection divides back by scale^2 into a rounded
+    The final projection divides back by _MICROS^2 into a rounded
     double. Bound: |sum of products| must stay under 2^63 — with
-    |x| <= 16 and scale 1e6 that allows ~3.6e4 rows per dimension
-    pair times 1e9 … i.e. ~10^10 rows; raise/lower ``scale`` to trade
+    |x| <= 16 and the 1e6 grain that allows ~3.6e4 rows per dimension
+    pair times 1e9 … i.e. ~10^10 rows; a coarser grain trades
     precision for headroom at larger corpora.
 
     Scale design: the d*(d+1)/2 cell terms are generated by a narrow
@@ -821,9 +770,9 @@ def gram_matrix(
     per-executor traffic is O(d^2) regardless of row count — the
     right 100 TB plan for X^T X at embedding dimensionality.
     """
-    s = float(scale)
+    s = float(_MICROS)
     sc = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.round(x.cast("double") * F.lit(s), 0).cast("long"),
     )
     base = embeddings.select(sc.alias("_s"))
@@ -867,8 +816,6 @@ def _recall_at_k(
     approx_pairs: Callable[[DataFrame, DataFrame], DataFrame],
     k: int,
     sample_mod: int,
-    id_col: str,
-    vec_col: str,
     prefix_dim: int | None = None,
 ) -> DataFrame:
     """Recall@k per sampled query (``id % sample_mod == 0``) of an
@@ -888,47 +835,47 @@ def _recall_at_k(
     # side before the pair join — folding them per PAIR (the naive
     # form) re-runs two 64-element folds for every candidate, ~3x the
     # expression work at eval scale
-    corpus = embeddings.withColumn("_nv", _norm(F.col(vec_col)))
+    corpus = embeddings.withColumn("_nv", _norm(F.col("embedding")))
     q_cols = [
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qe"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qe"),
         F.col("_nv").alias("_nq"),
     ]
-    approx_cos = _rounded_cos(vec_col, "_qe", "_nv", "_nq")
+    approx_cos = _rounded_cos("embedding", "_qe", "_nv", "_nq")
     if prefix_dim is not None:
-        pre = F.slice(F.col(vec_col), 1, prefix_dim)
+        pre = F.slice(F.col("embedding"), 1, prefix_dim)
         corpus = corpus.withColumn("_pv", pre).withColumn("_np", _norm(pre))
         q_cols += [F.col("_pv").alias("_qp"), F.col("_np").alias("_nqp")]
         approx_cos = _rounded_cos("_pv", "_qp", "_np", "_nqp")
-    qs = corpus.filter((F.col(id_col) % sample_mod) == 0).select(*q_cols)
+    qs = corpus.filter((F.col("vec_id") % sample_mod) == 0).select(*q_cols)
     w = W.Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
+        F.col("_cos").desc(), F.col("vec_id").asc()
     )
 
     def top_k(pairs: DataFrame, cos: Column) -> DataFrame:
         return (
-            pairs.select("query_id", id_col, cos)
+            pairs.select("query_id", "vec_id", cos)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k)
         )
 
     exact_top = top_k(
-        corpus.join(F.broadcast(qs), F.col(id_col) != F.col("query_id")),
-        _rounded_cos(vec_col, "_qe", "_nv", "_nq"),
-    ).select("query_id", id_col)
+        corpus.join(F.broadcast(qs), F.col("vec_id") != F.col("query_id")),
+        _rounded_cos("embedding", "_qe", "_nv", "_nq"),
+    ).select("query_id", "vec_id")
     # alias BOTH output columns: the exact and approx arms share
     # lineage from the corpus frame, so joining on a same-named
     # query_id would lean on Spark's ambiguous-self-join rewrite (it
     # logs "trivially true equals predicate"); distinct names make the
     # join condition unambiguous by construction
     approx_top = top_k(approx_pairs(corpus, qs), approx_cos).select(
-        F.col("query_id").alias("_q2"), F.col(id_col).alias("_hit_id")
+        F.col("query_id").alias("_q2"), F.col("vec_id").alias("_hit_id")
     )
     return (
         exact_top.join(
             approx_top,
             (F.col("query_id") == F.col("_q2"))
-            & (F.col(id_col) == F.col("_hit_id")),
+            & (F.col("vec_id") == F.col("_hit_id")),
             "left",
         )
         .groupBy("query_id")
@@ -953,8 +900,6 @@ def ann_recall_at_k(
     dim: int = 64,
     k: int = 10,
     sample_mod: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall@k of single-bucket hyperplane-LSH ANN against the exact
     scan, per sampled query — the evaluation harness every ANN
@@ -977,54 +922,49 @@ def ann_recall_at_k(
 
     def approx_pairs(corpus: DataFrame, qs: DataFrame) -> DataFrame:
         buckets = lsh_hyperplane_buckets(
-            corpus, n_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col
-        ).join(corpus.select(id_col, "_nv"), on=id_col)
+            corpus, n_planes=n_planes, dim=dim
+        ).join(corpus.select("vec_id", "_nv"), on="vec_id")
         qb = (
             buckets.join(
                 F.broadcast(qs.select("query_id", "_nq")),
-                F.col(id_col) == F.col("query_id"),
+                F.col("vec_id") == F.col("query_id"),
             )
-            .select("query_id", F.col(vec_col).alias("_qe"), "_nq", F.col("bucket"))
+            .select("query_id", F.col("embedding").alias("_qe"), "_nq", F.col("bucket"))
         )
         return buckets.join(F.broadcast(qb), "bucket").filter(
-            F.col(id_col) != F.col("query_id")
+            F.col("vec_id") != F.col("query_id")
         )
 
-    return _recall_at_k(embeddings, approx_pairs, k, sample_mod, id_col, vec_col)
+    return _recall_at_k(embeddings, approx_pairs, k, sample_mod)
 
 
-def standardize_embeddings(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def standardize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Per-dimension z-score standardization of an embedding table —
     the feature-normalization pass before clustering / linear probing
     / whitening, emitted long-form as (id, dim, zscore).
 
     Determinism without rounding: components are fixed-pointed
-    (round(x*scale) as int64); per-dim sufficient statistics (n, S,
+    (round(x*_MICROS) as int64); per-dim sufficient statistics (n, S,
     SS) are EXACT (SS summed as DECIMAL(38,0) — n*SS overflows int64
     at ~1e4 rows x 64 dims, and DuckDB's HUGEINT must be matched by
     an exact type, not a double accumulator). The z closed form
     cancels n: z = (x*n - S) / sqrt(n*SS - S^2) — one fixed sequence
     of exact-int casts and IEEE ops, bit-stable across engines.
     Constant dimensions (zero variance) emit NULL. Bound: |x*n - S|
-    must fit int64 — holds to ~1e11 rows at scale 1e6.
+    must fit int64 — holds to ~1e11 rows at the 1e6 grain.
 
     Scale design: one narrow fixed-point pass + posexplode, a
     64-key groupBy with map-side partials, and a broadcast join of
     the 64-row stats back onto the stream. No global state beyond
     d rows.
     """
-    s = float(scale)
+    s = float(_MICROS)
     sc = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.round(x.cast("double") * F.lit(s), 0).cast("long"),
     )
     ex = embeddings.select(
-        F.col(id_col), F.posexplode(sc).alias("i", "x6")
+        F.col("vec_id"), F.posexplode(sc).alias("i", "x6")
     ).withColumn("i", F.col("i").cast("long"))
     dec = "decimal(38,0)"
     stats = ex.groupBy("i").agg(
@@ -1042,7 +982,7 @@ def standardize_embeddings(
     return (
         ex.join(F.broadcast(stats), on="i")
         .select(
-            id_col,
+            "vec_id",
             "i",
             F.when(num != 0, z).alias("zscore"),
         )
@@ -1054,8 +994,6 @@ def ivf_recall_at_k(
     n_centroids: int = 8,
     k: int = 10,
     sample_mod: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall@k of the IVF nprobe=1 probe against the exact scan over
     the deterministic query sample ``id % sample_mod == 0`` — the IVF
@@ -1068,17 +1006,17 @@ def ivf_recall_at_k(
 
     def approx_pairs(corpus: DataFrame, qs: DataFrame) -> DataFrame:
         assigned = ivf_assign(
-            embeddings, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-        ).join(corpus.select(id_col, "_nv"), on=id_col)
+            embeddings, n_centroids=n_centroids
+        ).join(corpus.select("vec_id", "_nv"), on="vec_id")
         qc = assigned.join(
             F.broadcast(qs.select("query_id", "_nq")),
-            F.col(id_col) == F.col("query_id"),
-        ).select("query_id", F.col(vec_col).alias("_qe"), "_nq", F.col("cell_id"))
+            F.col("vec_id") == F.col("query_id"),
+        ).select("query_id", F.col("embedding").alias("_qe"), "_nq", F.col("cell_id"))
         return assigned.join(F.broadcast(qc), "cell_id").filter(
-            F.col(id_col) != F.col("query_id")
+            F.col("vec_id") != F.col("query_id")
         )
 
-    return _recall_at_k(embeddings, approx_pairs, k, sample_mod, id_col, vec_col)
+    return _recall_at_k(embeddings, approx_pairs, k, sample_mod)
 
 
 def matryoshka_recall_at_k(
@@ -1086,8 +1024,6 @@ def matryoshka_recall_at_k(
     prefix_dim: int = 16,
     k: int = 10,
     sample_mod: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall@k of TRUNCATED-dimension cosine search against the
     full-dimension exact scan — the Matryoshka/MRL evaluation: if the
@@ -1111,21 +1047,15 @@ def matryoshka_recall_at_k(
     return _recall_at_k(
         embeddings,
         lambda corpus, qs: corpus.join(
-            F.broadcast(qs), F.col(id_col) != F.col("query_id")
+            F.broadcast(qs), F.col("vec_id") != F.col("query_id")
         ),
         k,
         sample_mod,
-        id_col,
-        vec_col,
         prefix_dim=prefix_dim,
     )
 
 
-def gram_power_step(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def gram_power_step(embeddings: DataFrame) -> DataFrame:
     """One power-iteration step toward the corpus's top principal
     direction: v1 = G·1 / ||G·1|| on the exact fixed-point Gram
     matrix — the distributed half of PCA (the full pattern: corpus
@@ -1142,7 +1072,7 @@ def gram_power_step(
     doubles, no rounding. Scale: everything after the Gram pass
     touches only d and d^2-row relations.
     """
-    cells = gram_matrix(embeddings, vec_col=vec_col, scale=scale)
+    cells = gram_matrix(embeddings)
     full = cells.unionByName(
         cells.filter(F.col("i") < F.col("j")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), F.col("gram")

@@ -24,18 +24,18 @@ CMS_SALTS: list[str] = ["cms0", "cms1", "cms2", "cms3"]
 CMS_BUCKET_HEX = 2
 
 
-def _bucket(salt: str, col: F.Column | str) -> F.Column:
-    return F.substring(F.md5(F.concat(F.lit(salt), F.col(col))), 1, CMS_BUCKET_HEX)
+def _bucket(salt: str) -> F.Column:
+    return F.substring(F.md5(F.concat(F.lit(salt), F.col("term"))), 1, CMS_BUCKET_HEX)
 
 
-def _cms_cells(term_col: str) -> F.Column:
+def _cms_cells() -> F.Column:
     """One ``rb`` (row_id, bucket) row per CMS hash row of a term."""
     return F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("row_id"),
-                    _bucket(salt, term_col).alias("bucket"),
+                    _bucket(salt).alias("bucket"),
                 )
                 for i, salt in enumerate(CMS_SALTS)
             ]
@@ -43,37 +43,35 @@ def _cms_cells(term_col: str) -> F.Column:
     ).alias("rb")
 
 
-def countmin_counters(items: DataFrame, term_col: str = "term") -> DataFrame:
+def countmin_counters(items: DataFrame) -> DataFrame:
     """Build the CMS counter table (row_id, bucket, c) from one row
     per item occurrence. 4 x 256 counters regardless of input size —
     the partial aggregation collapses each partition to at most 1024
     rows before any shuffle."""
-    occ = items.select(_cms_cells(term_col)).select("rb.row_id", "rb.bucket")
+    occ = items.select(_cms_cells()).select("rb.row_id", "rb.bucket")
     return occ.groupBy("row_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
 
 
-def countmin_estimates(items: DataFrame, term_col: str = "term") -> DataFrame:
+def countmin_estimates(items: DataFrame) -> DataFrame:
     """Point-query every distinct term against the sketch: estimate =
     min over hash rows of that row's bucket counter. Returns
     (term, true_count, cms_estimate) so over-estimates from bucket
     collisions are visible; CMS guarantees estimate >= true."""
     items = pin(items)  # counters + truth + probe all read it
-    counters = countmin_counters(items, term_col)
-    truth = items.groupBy(term_col).agg(F.count(F.lit(1)).alias("true_count"))
-    probes = truth.select(term_col, "true_count", _cms_cells(term_col)).select(
-        term_col, "true_count", "rb.row_id", "rb.bucket"
+    counters = countmin_counters(items)
+    truth = items.groupBy("term").agg(F.count(F.lit(1)).alias("true_count"))
+    probes = truth.select("term", "true_count", _cms_cells()).select(
+        "term", "true_count", "rb.row_id", "rb.bucket"
     )
     return (
         probes.join(F.broadcast(counters), on=["row_id", "bucket"])
-        .groupBy(term_col, "true_count")
+        .groupBy("term", "true_count")
         .agg(F.min("c").alias("cms_estimate"))
     )
 
 
 def psi_drift(
     df: DataFrame,
-    value_col: str = "value",
-    time_col: str = "ts",
     n_bins: int = 10,
 ) -> DataFrame:
     """Population Stability Index between the first and second halves
@@ -94,11 +92,11 @@ def psi_drift(
     caller policy, not baked in).
     """
     stats = df.agg(
-        F.min(value_col).alias("__lo"),
-        F.max(value_col).alias("__hi"),
+        F.min("value").alias("__lo"),
+        F.max("value").alias("__hi"),
         (
-            (F.min(F.unix_micros(F.col(time_col)))
-             + F.max(F.unix_micros(F.col(time_col)))) / F.lit(2)
+            (F.min(F.unix_micros(F.col("ts")))
+             + F.max(F.unix_micros(F.col("ts")))) / F.lit(2)
         ).cast("long").alias("__mid_us"),
     )
     # explicit floor binning, not width_bucket: the identical
@@ -107,7 +105,7 @@ def psi_drift(
     # exact bin boundaries
     bin_expr = F.least(
         F.floor(
-            (F.col(value_col) - F.col("__lo"))
+            (F.col("value") - F.col("__lo"))
             / (F.col("__hi") - F.col("__lo"))
             * F.lit(n_bins)
         ),
@@ -115,7 +113,7 @@ def psi_drift(
     ).cast("long")
     binned = df.crossJoin(F.broadcast(stats)).select(
         bin_expr.alias("bin"),
-        (F.unix_micros(F.col(time_col)) < F.col("__mid_us"))
+        (F.unix_micros(F.col("ts")) < F.col("__mid_us"))
         .cast("int")
         .alias("__is_ref"),
     )
@@ -150,7 +148,6 @@ def hll_partitioned_rollup(
     group_col: str,
     partition_col: F.Column | str,
     id_col: str,
-    lgk: int = 12,
 ) -> DataFrame:
     """Two-level HyperLogLog rollup on Spark's DataSketches functions
     (``hll_sketch_agg`` / ``hll_union_agg``): build one binary sketch
@@ -161,13 +158,13 @@ def hll_partitioned_rollup(
     This is the property ``approx_count_distinct`` alone doesn't
     exercise: sketches are mergeable state, so yesterday's partials
     are never rescanned; a rolling N-day distinct is a union over N
-    stored sketches, O(groups x partitions x 2^lgk) bytes total and
+    stored sketches, O(groups x partitions x 2^12) bytes total and
     one tiny shuffle, with raw ids never crossing the wire past the
     first partial aggregation.
 
-    Estimates are engine-specific (rows-only for the driver); the
+    Estimates are engine-specific; the
     invariant pinned by tests is |estimate - exact| within the
-    published HLL error (~1.04/sqrt(2^lgk)) for BOTH the merged and
+    published HLL error (~1.04/sqrt(2^12)) for BOTH the merged and
     the single-pass sketch. (The two are not bit-identical: the
     DataSketches union operator runs in its own internal mode, so
     merged and single-pass estimates can differ within the error
@@ -177,7 +174,7 @@ def hll_partitioned_rollup(
         F.col(partition_col) if isinstance(partition_col, str) else partition_col
     )
     partial = df.groupBy(F.col(group_col), part.alias("_part")).agg(
-        F.hll_sketch_agg(F.col(id_col), F.lit(lgk)).alias("_sketch")
+        F.hll_sketch_agg(F.col(id_col), F.lit(12)).alias("_sketch")
     )
     return partial.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_partials"),

@@ -62,7 +62,6 @@ def salted_agg(
 def salted_join(
     facts: DataFrame,
     dim: DataFrame,
-    key: str,
     n_salts: int = 8,
 ) -> DataFrame:
     """Skewed equi-join without broadcast: salt the (large, skewed)
@@ -78,7 +77,7 @@ def salted_join(
     salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
     replicated_dim = dim.select("*", salts)
     return (
-        salted_facts.join(replicated_dim, on=[key, "_salt"])
+        salted_facts.join(replicated_dim, on=["k", "_salt"])
         .drop("_salt")
     )
 
@@ -144,7 +143,6 @@ def key_skew_report(df: DataFrame, key_col: str) -> DataFrame:
 def join_size_estimate(
     df: DataFrame,
     key_col: str,
-    top_k: int = 100,
 ) -> DataFrame:
     """Self-equi-join output-cardinality estimation — the
     cost-based-optimizer statistic that decides whether a blocking
@@ -180,7 +178,7 @@ def join_size_estimate(
         .cast("decimal(38,0)")
         .alias("_exact"),
     )
-    top = per.orderBy(F.col("_c").desc(), F.col("_k").asc()).limit(top_k)
+    top = per.orderBy(F.col("_c").desc(), F.col("_k").asc()).limit(100)
     topagg = top.agg(
         F.count(F.lit(1)).cast("long").alias("_tk"),
         F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("_tn"),

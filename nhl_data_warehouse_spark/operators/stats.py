@@ -28,6 +28,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# fixed-point grains: price-like doubles map onto cents, scores in
+# [0, 1] onto micro-units (6-dp-rounded scores land in distinct cells)
+_CENTS = 100
+_MICROS = 1_000_000
+# calibration bins per report
+_N_BINS = 10
+# split-conformal miscoverage alpha = 1/10, as an exact fraction
+_ALPHA_NUM = 1
+_ALPHA_DEN = 10
+
 # z-statistic pieces shared with the suite oracle (same literal text
 # keeps the operation sequence identical on both engines)
 MW_MEAN_DIFF = """
@@ -124,7 +134,6 @@ def mann_whitney_u(
     df: DataFrame,
     value_col: str,
     is_group1: Column,
-    scale: int = 100,
 ) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) of group-1 vs the rest.
 
@@ -138,7 +147,7 @@ def mann_whitney_u(
     U is a multiple of 0.5 with magnitude <= n1*n2, exactly
     representable as a double far beyond any real corpus.
     """
-    cum = _with_cum_below(_cents_histogram(df, value_col, is_group1, scale))
+    cum = _with_cum_below(_cents_histogram(df, value_col, is_group1, _CENTS))
     stats = cum.agg(
         F.sum("n1v").cast("long").alias("n1"),
         F.sum("nv").cast("long").alias("n"),
@@ -163,7 +172,6 @@ def ks_two_sample(
     df: DataFrame,
     value_col: str,
     is_group1: Column,
-    scale: int = 100,
 ) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov D = sup |F1 - F2|.
 
@@ -176,7 +184,7 @@ def ks_two_sample(
     between corpus snapshots actually runs at (ADVICE r11). One row
     out: (n1, n2, d_stat).
     """
-    cum, tot = _two_sample_cum(df, value_col, is_group1, scale)
+    cum, tot = _two_sample_cum(df, value_col, is_group1, _CENTS)
     dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
     dnum = cum.crossJoin(F.broadcast(tot)).agg(
         F.max(F.abs(dec("cum1") * dec("n2") - dec("cum2") * dec("n1")))
@@ -198,9 +206,6 @@ def split_conformal_coverage(
     df: DataFrame,
     id_col: str,
     value_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 10,
-    scale: int = 100,
 ) -> DataFrame:
     """Split-conformal prediction interval + empirical coverage — the
     distribution-free calibration gate: on a content-addressed
@@ -230,7 +235,7 @@ def split_conformal_coverage(
     broadcast scalar joins, one bounded window.
     """
     cal_hist, eval_hist, cal_tot, k_expr, r_num = _conformal_split(
-        df, id_col, value_col, alpha_num, alpha_den, scale
+        df, id_col, value_col
     )
     r_hist = (
         cal_hist.crossJoin(F.broadcast(cal_tot))
@@ -257,7 +262,7 @@ def split_conformal_coverage(
     return (
         cal_tot.crossJoin(F.broadcast(thr))
         .crossJoin(F.broadcast(ev))
-        .select("n_cal", "n_eval", *_conformal_cols(k_expr, scale))
+        .select("n_cal", "n_eval", *_conformal_cols(k_expr))
     )
 
 
@@ -265,9 +270,6 @@ def _conformal_split(
     df: DataFrame,
     id_col: str,
     value_col: str,
-    alpha_num: int,
-    alpha_den: int,
-    scale: int,
     *key: Column,
 ) -> tuple:
     """The split-conformal building blocks, per ``key`` slice ``g``:
@@ -275,7 +277,7 @@ def _conformal_split(
     ``c``), calibration totals (n_cal, exact sum s_cal), the rank
     ``k_expr`` and the residual numerator ``r_num`` of a cell."""
     keys = ["g"] if key else []
-    v_c = F.round(F.col(value_col) * scale).cast("long")
+    v_c = F.round(F.col(value_col) * _CENTS).cast("long")
     half = F.substring(F.md5(F.col(id_col).cast("string")), 1, 1).isin(
         *"01234567"
     )
@@ -296,10 +298,10 @@ def _conformal_split(
         F.sum("nv").cast("long").alias("n_cal"),
         F.sum(F.col("c") * F.col("nv")).cast("decimal(38,0)").alias("s_cal"),
     )
-    den_minus = alpha_den - alpha_num
+    den_minus = _ALPHA_DEN - _ALPHA_NUM
     k_expr = F.expr(
-        f"CAST(({den_minus} * (n_cal + 1) + {alpha_den} - 1)"
-        f" DIV {alpha_den} AS BIGINT)"
+        f"CAST(({den_minus} * (n_cal + 1) + {_ALPHA_DEN} - 1)"
+        f" DIV {_ALPHA_DEN} AS BIGINT)"
     )
     r_num = F.abs(
         F.col("c").cast("decimal(38,0)") * F.col("n_cal") - F.col("s_cal")
@@ -317,14 +319,14 @@ def _coverage_counts() -> list[Column]:
     ]
 
 
-def _conformal_cols(k_expr: Column, scale: int) -> list[Column]:
+def _conformal_cols(k_expr: Column) -> list[Column]:
     """k_rank, the interval half-width q_hat and the eval coverage."""
     return [
         k_expr.alias("k_rank"),
         F.expr(
             "CASE WHEN q_num IS NULL THEN CAST(NULL AS DOUBLE)"
             " ELSE CAST(q_num AS DOUBLE)"
-            f" / (CAST(n_cal AS DOUBLE) * {float(scale)}) END"
+            f" / (CAST(n_cal AS DOUBLE) * {float(_CENTS)}) END"
         ).alias("q_hat"),
         F.expr(
             "CASE WHEN n_eval IS NULL OR n_eval = 0"
@@ -340,9 +342,6 @@ def grouped_split_conformal_coverage(
     group_col: str,
     id_col: str,
     value_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 10,
-    scale: int = 100,
 ) -> DataFrame:
     """Per-slice split-conformal intervals + coverage — the SLICED
     twin of ``split_conformal_coverage`` (group-conditional coverage
@@ -357,8 +356,7 @@ def grouped_split_conformal_coverage(
     no eval rows report NULL coverage.
     """
     cal_hist, eval_hist, cal_tot, k_expr, r_num = _conformal_split(
-        df, id_col, value_col, alpha_num, alpha_den, scale,
-        F.col(group_col).alias("g"),
+        df, id_col, value_col, F.col(group_col).alias("g"),
     )
     r_hist = (
         cal_hist.join(cal_tot, on="g")
@@ -392,16 +390,12 @@ def grouped_split_conformal_coverage(
             F.col("g").alias(group_col),
             "n_cal",
             F.coalesce("n_eval", F.lit(0)).cast("long").alias("n_eval"),
-            *_conformal_cols(k_expr, scale),
+            *_conformal_cols(k_expr),
         )
     )
 
 
-def jsd_category_pairs(
-    df: DataFrame,
-    slice_col: str,
-    cat_col: str,
-) -> DataFrame:
+def jsd_category_pairs(df: DataFrame) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between every pair of
     slices over their CATEGORY distributions — the symmetric, bounded
     (<= ln 2) divergence a corpus pipeline uses to answer "which
@@ -428,7 +422,7 @@ def jsd_category_pairs(
     upstream (documented, the copurchase group_cap doctrine).
     """
     c = df.groupBy(
-        F.col(slice_col).alias("s"), F.col(cat_col).alias("cat")
+        F.col("source").alias("s"), F.col("lang").alias("cat")
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     t = c.groupBy("s").agg(F.sum("n").cast("long").alias("ns"))
     pairs = (
@@ -511,7 +505,6 @@ def qq_drift_deciles(
     df: DataFrame,
     value_col: str,
     is_group1: Column,
-    scale: int = 100,
 ) -> DataFrame:
     """Quantile-quantile drift table at the deciles: for each q in
     10..90, the EXACT discrete upper quantile of both samples and
@@ -524,7 +517,7 @@ def qq_drift_deciles(
     the smallest cents cell whose inclusive cumulative count reaches
     ceil(q * n_s / 100) (integer ceil-division) — the
     derive_cell_minutes discrete-upper-quantile recipe, per side.
-    Values emit as value-units doubles (one /scale division);
+    Values emit as value-units doubles (one /_CENTS division);
     differences subtract the exact integer cells first.
 
     Scale shape: one cents histogram per side (map-side combined),
@@ -534,7 +527,7 @@ def qq_drift_deciles(
     one 9-row join. Empty sides produce no rows for their deciles
     (inner join: the table needs both quantiles).
     """
-    cum, tot = _two_sample_cum(df, value_col, is_group1, scale, ("c",))
+    cum, tot = _two_sample_cum(df, value_col, is_group1, _CENTS, ("c",))
     deciles = F.explode(
         F.array(*[F.lit(q) for q in range(10, 100, 10)])
     ).alias("decile")
@@ -554,11 +547,9 @@ def qq_drift_deciles(
         qa.join(qb, on="decile")
         .select(
             F.col("decile").cast("long").alias("decile"),
-            (F.col("ca").cast("double") / scale).alias("q1"),
-            (F.col("cb").cast("double") / scale).alias("q2"),
-            ((F.col("ca") - F.col("cb")).cast("double") / scale).alias(
-                "q_diff"
-            ),
+            (F.col("ca").cast("double") / _CENTS).alias("q1"),
+            (F.col("cb").cast("double") / _CENTS).alias("q2"),
+            ((F.col("ca") - F.col("cb")).cast("double") / _CENTS).alias("q_diff"),
         )
     )
 
@@ -717,15 +708,15 @@ def _joint_histogram(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    x_scale: int,
     y_scale: int,
 ) -> DataFrame:
-    """(cx, cy, nxy) joint fixed-point histogram — rows collapse to
-    the measurement grain before anything orders or joins."""
+    """(cx, cy, nxy) joint fixed-point histogram, x at the unit grain
+    and y at ``y_scale`` — rows collapse to the measurement grain
+    before anything orders or joins."""
     return (
         df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
         .select(
-            F.round(F.col(x_col) * x_scale).cast("long").alias("cx"),
+            F.round(F.col(x_col) * 1).cast("long").alias("cx"),
             F.round(F.col(y_col) * y_scale).cast("long").alias("cy"),
         )
         .groupBy("cx", "cy")
@@ -737,7 +728,6 @@ def spearman_rho(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    x_scale: int = 1,
     y_scale: int = 100,
 ) -> DataFrame:
     """Exact tie-aware Spearman rank correlation from all-integer
@@ -759,7 +749,7 @@ def spearman_rho(
     is map-side-combined aggregation. Degenerate (all-tied) marginals
     yield explicit NULL on both engines.
     """
-    joint = _joint_histogram(df, x_col, y_col, x_scale, y_scale)
+    joint = _joint_histogram(df, x_col, y_col, y_scale)
     joint = pin(joint)
     joint.count()  # two marginal consumers + the final join share it
 
@@ -807,7 +797,6 @@ def kendall_tau_b(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    x_scale: int = 1,
     y_scale: int = 100,
 ) -> DataFrame:
     """Exact Kendall tau-b from the joint histogram of two BOUNDED
@@ -825,7 +814,7 @@ def kendall_tau_b(
     The two sqrt factors multiply as doubles (fixed op order) to stay
     inside BIGINT exactness.
     """
-    joint = _joint_histogram(df, x_col, y_col, x_scale, y_scale)
+    joint = _joint_histogram(df, x_col, y_col, y_scale)
     joint = pin(joint)
     joint.count()
     a = joint.select(
@@ -895,7 +884,6 @@ def prefix_sum_cells(
     order_col: str = "c",
     val_col: str = "nv",
     num_ranges: int = 32,
-    out_col: str = "cum",
     pin_input: bool = False,
 ) -> DataFrame:
     """Exclusive prefix sum over ordered cells WITHOUT an
@@ -999,7 +987,7 @@ def prefix_sum_cells(
     )
     return (
         local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_lcum") + F.col("_off"))
+        .withColumn("cum", F.col("_lcum") + F.col("_off"))
         .drop("_pid", "_lcum")
     )
 
@@ -1057,7 +1045,6 @@ def grouped_rank_auc(
     group_col: str,
     score_col: str,
     is_positive: Column,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-slice exact ROC AUC — ``rank_auc`` with every stage keyed
     by ``group_col``: the histogram groups by (slice, cell), the
@@ -1067,14 +1054,14 @@ def grouped_rank_auc(
     scorecard needs (AUC per language, per source, per time bucket);
     degenerate slices (single class) yield explicit NULL.
     """
-    return _rank_auc(df, score_col, is_positive, scale, group_col)
+    return _rank_auc(df, score_col, is_positive, _MICROS, group_col)
 
 
-def _score_bin(score_col: str, n_bins: int) -> Column:
+def _score_bin(score_col: str) -> Column:
     """Equal-width bin 0..n_bins-1 of a score in [0, 1]."""
     return F.least(
-        F.floor(F.col(score_col) * n_bins).cast("long"),
-        F.lit(n_bins - 1),
+        F.floor(F.col(score_col) * _N_BINS).cast("long"),
+        F.lit(_N_BINS - 1),
     ).cast("int")
 
 
@@ -1119,7 +1106,6 @@ def isotonic_calibration_bins(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    n_bins: int = 10,
 ) -> DataFrame:
     """Isotonic (PAV) calibration map over equal-width score bins —
     the monotone-regression fit of empirical positive rate vs score
@@ -1130,10 +1116,10 @@ def isotonic_calibration_bins(
         iso_i = max_{j<=i} min_{k>=i} ( positives(j..k) / count(j..k) )
 
     which is exactly SQL-expressible because the bin count is BOUNDED
-    (<= n_bins): interval sums come from exclusive/inclusive prefix
-    sums over the n_bins histogram rows, the (j, k) interval grid has
-    n_bins*(n_bins+1)/2 rows, and the per-bin minimax is two bounded
-    theta joins (broadcast nested-loop over <= n_bins^2 rows by
+    (<= _N_BINS): interval sums come from exclusive/inclusive prefix
+    sums over the _N_BINS histogram rows, the (j, k) interval grid has
+    _N_BINS*(_N_BINS+1)/2 rows, and the per-bin minimax is two bounded
+    theta joins (broadcast nested-loop over <= _N_BINS^2 rows by
     construction — the benford/ece bounded-grid class, NOT a
     data-sized cartesian). Every interval average is ONE double
     division of exact integer sums; min/max over doubles is exact, so
@@ -1146,7 +1132,7 @@ def isotonic_calibration_bins(
     # (same declared class as the benford digit fold)
     bins, jside, kside = _bin_prefix_sums(
         df.select(
-            _score_bin(score_col, n_bins).alias("bin"),
+            _score_bin(score_col).alias("bin"),
             F.col(label_col).cast("long").alias("y"),
         )
     )
@@ -1184,16 +1170,14 @@ def isotonic_calibration_bins(
 
 
 def _calibration_bins(
-    df: DataFrame, score_col: str, label_col: str, n_bins: int, scale: int
+    df: DataFrame, score_col: str, label_col: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Rows (bin, pi, y) — score bin, score in exact 1/scale units,
+    """Rows (bin, pi, y) — score bin, score in exact 1/_MICROS units,
     label — and per bin the rows ``nb``, exact score sum ``spi`` and
     positives ``ng``."""
-    pi = F.round(F.col(score_col) * scale).cast("long")
+    pi = F.round(F.col(score_col) * _MICROS).cast("long")
     y = F.col(label_col).cast("long")
-    base = df.select(
-        _score_bin(score_col, n_bins).alias("bin"), pi.alias("pi"), y.alias("y")
-    )
+    base = df.select(_score_bin(score_col).alias("bin"), pi.alias("pi"), y.alias("y"))
     bins = base.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("nb"),
         F.sum(F.col("pi").cast("decimal(38,0)"))
@@ -1204,18 +1188,18 @@ def _calibration_bins(
     return base, bins
 
 
-def _ssq(scale: int) -> Column:
-    """Exact sum of squared errors, in (1/scale)^2 units, of rows
+def _ssq() -> Column:
+    """Exact sum of squared errors, in (1/_MICROS)^2 units, of rows
     (pi, y)."""
-    sq = F.col("pi") - F.col("y") * scale
+    sq = F.col("pi") - F.col("y") * _MICROS
     return F.sum(sq.cast("decimal(38,0)") * sq).cast("decimal(38,0)").alias("ssq")
 
 
-def _brier(scale: int) -> Column:
+def _brier() -> Column:
     """Brier score from ``ssq`` over ``n_docs``."""
     return F.expr(
         "CAST(ssq AS DOUBLE)"
-        f" / (CAST(n_docs AS DOUBLE) * {float(scale) * float(scale)})"
+        f" / (CAST(n_docs AS DOUBLE) * {float(_MICROS) * float(_MICROS)})"
     ).alias("brier")
 
 
@@ -1223,8 +1207,6 @@ def expected_calibration_error(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    n_bins: int = 10,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Reliability-weighted ECE + MCE + Brier score of a probability
     column against a boolean label — the scalar calibration scorecard
@@ -1236,27 +1218,25 @@ def expected_calibration_error(
         Brier = mean((p - y)^2)
 
     Determinism doctrine: scores quantize to exact micro-units
-    (``round(p * scale)`` as BIGINT — the grouped_rank_auc grain), so
+    (``round(p * _MICROS)`` as BIGINT — the grouped_rank_auc grain), so
     per-bin confidence sums and the per-example Brier squares are
     exact integers (DECIMAL(38,0) accumulators); every double is ONE
     fixed-order expression, and the 10-term ECE sum folds in bin
     order (F.aggregate over a bin-sorted array == DuckDB's
     ``SUM(term ORDER BY bin)`` — the DCG recipe).
 
-    Scale: one map-side-combined groupBy to ``n_bins`` rows + one
-    global agg for (N, Brier); the fold runs over n_bins elements on
+    Scale: one map-side-combined groupBy to ``_N_BINS`` rows + one
+    global agg for (N, Brier); the fold runs over _N_BINS elements on
     one row. No windows, no per-pair work.
     """
-    base, bins = _calibration_bins(df, score_col, label_col, n_bins, scale)
-    tot = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"), _ssq(scale)
-    )
+    base, bins = _calibration_bins(df, score_col, label_col)
+    tot = base.agg(F.count(F.lit(1)).cast("long").alias("n_docs"), _ssq())
     terms = bins.crossJoin(F.broadcast(tot)).select(
         "bin",
         "nb",
         F.expr(
             "abs(CAST(ng AS DOUBLE) / CAST(nb AS DOUBLE)"
-            f" - CAST(spi AS DOUBLE) / (CAST(nb AS DOUBLE) * {float(scale)}))"
+            f" - CAST(spi AS DOUBLE) / (CAST(nb AS DOUBLE) * {float(_MICROS)}))"
         ).alias("dev"),
         F.expr("CAST(nb AS DOUBLE) / CAST(n_docs AS DOUBLE)").alias("w"),
         "n_docs",
@@ -1275,7 +1255,7 @@ def expected_calibration_error(
         F.col("n_docs"),
         ece.alias("ece"),
         mce.alias("mce"),
-        _brier(scale),
+        _brier(),
     )
 
 
@@ -1283,8 +1263,6 @@ def murphy_decomposition(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    n_bins: int = 10,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Murphy decomposition of the (binned) Brier score — the
     calibration scorecard that separates WHY a quality classifier's
@@ -1305,25 +1283,25 @@ def murphy_decomposition(
     Determinism doctrine (the ECE recipe): scores quantize to exact
     micro-units, per-bin sufficient statistics are integers in
     DECIMAL(38,0), every double is one fixed-order expression, and
-    both n_bins-term sums fold in bin order (F.aggregate over a
+    both _N_BINS-term sums fold in bin order (F.aggregate over a
     bin-sorted array == DuckDB ``SUM(term ORDER BY bin)``).
 
-    Scale: one map-side-combined groupBy to n_bins rows + one global
-    agg; the folds run over n_bins elements on one row. No windows,
+    Scale: one map-side-combined groupBy to _N_BINS rows + one global
+    agg; the folds run over _N_BINS elements on one row. No windows,
     no per-pair work.
     """
-    base_rows, bins = _calibration_bins(df, score_col, label_col, n_bins, scale)
+    base_rows, bins = _calibration_bins(df, score_col, label_col)
     tot = base_rows.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("y").cast("long").alias("n_pos"),
-        _ssq(scale),
+        _ssq(),
     )
     terms = bins.crossJoin(F.broadcast(tot)).select(
         "bin",
         F.expr("CAST(nb AS DOUBLE) / CAST(n_docs AS DOUBLE)").alias("w"),
         F.expr(
             "CAST(ng AS DOUBLE) / CAST(nb AS DOUBLE)"
-            f" - CAST(spi AS DOUBLE) / (CAST(nb AS DOUBLE) * {float(scale)})"
+            f" - CAST(spi AS DOUBLE) / (CAST(nb AS DOUBLE) * {float(_MICROS)})"
         ).alias("dra"),
         F.expr(
             "CAST(ng AS DOUBLE) / CAST(nb AS DOUBLE)"
@@ -1357,7 +1335,7 @@ def murphy_decomposition(
         rel.alias("reliability"),
         res.alias("resolution"),
         unc.alias("uncertainty"),
-        _brier(scale),
+        _brier(),
     )
 
 
@@ -1366,7 +1344,6 @@ def grouped_ks_two_sample(
     group_col: str,
     value_col: str,
     is_group1: Column,
-    scale: int = 100,
 ) -> DataFrame:
     """``ks_two_sample`` with every stage keyed by ``group_col`` — the
     sliced drift scorecard (one exact KS D per source / priority /
@@ -1381,7 +1358,7 @@ def grouped_ks_two_sample(
     """
     vals = df.where(F.col(value_col).isNotNull()).select(
         F.col(group_col).alias("g"),
-        F.round(F.col(value_col) * scale).cast("long").alias("c"),
+        F.round(F.col(value_col) * _CENTS).cast("long").alias("c"),
         F.when(is_group1, 1).otherwise(0).alias("is1"),
     )
     hist = vals.groupBy("g", "c").agg(
@@ -1512,7 +1489,6 @@ def grouped_isotonic_calibration_bins(
     group_col: str,
     score_col: str,
     label_col: str,
-    n_bins: int = 10,
 ) -> DataFrame:
     """``isotonic_calibration_bins`` with every stage keyed by
     ``group_col`` — one PAV monotone fit per slice (per-language /
@@ -1528,7 +1504,7 @@ def grouped_isotonic_calibration_bins(
     bins, jside, kside = _bin_prefix_sums(
         df.select(
             F.col(group_col).alias("g"),
-            _score_bin(score_col, n_bins).alias("bin"),
+            _score_bin(score_col).alias("bin"),
             F.col(label_col).cast("long").alias("y"),
         ),
         "g",
@@ -1573,12 +1549,12 @@ def grouped_isotonic_calibration_bins(
 
 
 def _threshold_sweep(
-    df: DataFrame, score_col: str, is_positive: Column, scale: int, *carry: str
+    df: DataFrame, score_col: str, is_positive: Column, *carry: str
 ) -> tuple[DataFrame, DataFrame]:
     """Per score cell ``c`` (with the ``carry`` histogram columns):
     the cumulative TP/FP of classifying positive at score >= cell, and
     the one-row class totals (n_pos, n_neg)."""
-    hist = _cents_histogram(df, score_col, is_positive, scale)
+    hist = _cents_histogram(df, score_col, is_positive, _MICROS)
     w = (
         Window.orderBy(F.col("c").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -1600,7 +1576,6 @@ def average_precision(
     df: DataFrame,
     score_col: str,
     is_positive: Column,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Exact average precision (area under the precision-recall curve,
     step-wise threshold-sweep definition): AP = sum over distinct
@@ -1613,7 +1588,7 @@ def average_precision(
 
     Determinism doctrine: scores collapse to the fixed-point cell
     grain (the rank_auc contract — the one ordering window runs over
-    <= scale+1 CELLS, never rows); cumulative TP/FP are exact
+    <= _MICROS+1 CELLS, never rows); cumulative TP/FP are exact
     integers; each cell's term is ONE fixed-order double expression
     rounded to 12dp and summed as DECIMAL(28,12) — round-then-sum in
     decimal is ORDER-FREE (the km_survival recipe), which is what
@@ -1623,7 +1598,7 @@ def average_precision(
     DuckDB's double-multiply rounding agree. Single-class inputs
     yield explicit NULL.
     """
-    cum, tot = _threshold_sweep(df, score_col, is_positive, scale, "n1v")
+    cum, tot = _threshold_sweep(df, score_col, is_positive, "n1v")
     terms = (
         cum.where(F.col("n1v") > 0)
         .crossJoin(F.broadcast(tot))
@@ -1663,7 +1638,6 @@ def youden_j_threshold(
     df: DataFrame,
     score_col: str,
     is_positive: Column,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Optimal operating point by Youden's J = TPR - FPR: the score
     threshold a corpus filter should deploy when false accepts and
@@ -1674,7 +1648,7 @@ def youden_j_threshold(
     the argmax can never flip on a double ulp; candidate thresholds
     are the distinct score cells (classify positive at score >= cell),
     swept via the same descending cumulative TP/FP as
-    ``average_precision`` — one window over <= scale+1 CELLS, never
+    ``average_precision`` — one window over <= _MICROS+1 CELLS, never
     rows. Ties take the LOWEST threshold (the most inclusive cut).
     The tp*N / fp*P cross-products are computed with the factors cast
     to DECIMAL(19,0) (exact past the int64 bound at ~3e9 rows per
@@ -1688,7 +1662,7 @@ def youden_j_threshold(
     (``classifier_gate_report`` does exactly this). An empty score
     histogram emits ZERO rows.
     """
-    cum, tot = _threshold_sweep(df, score_col, is_positive, scale)
+    cum, tot = _threshold_sweep(df, score_col, is_positive)
     scored = cum.crossJoin(F.broadcast(tot)).select(
         "c",
         "tp",
@@ -1717,7 +1691,7 @@ def youden_j_threshold(
     ).select(
         "n_pos",
         "n_neg",
-        F.expr(f"CAST(cth AS DOUBLE) / {float(scale)}").alias("threshold"),
+        F.expr(f"CAST(cth AS DOUBLE) / {float(_MICROS)}").alias("threshold"),
         F.expr(
             "CASE WHEN n_pos = 0 OR n_neg = 0 THEN CAST(NULL AS DOUBLE)"
             " ELSE CAST(jbest AS DOUBLE)"
@@ -1747,7 +1721,6 @@ def classifier_gate_report(
     is_positive: Column,
     group_col: str,
     weight_col: str | None = None,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Apply the Youden-selected operating point to the corpus — the
     link from "a classifier exists" to "the classifier GATES the
@@ -1759,8 +1732,8 @@ def classifier_gate_report(
     quality filter on: which sources lose how much.
 
     Gate semantics at the integer grain: a row is kept iff
-    round(score*scale) >= the selected threshold CELL (recovered
-    exactly from the one-row threshold via round(threshold*scale) —
+    round(score*_MICROS) >= the selected threshold CELL (recovered
+    exactly from the one-row threshold via round(threshold*_MICROS) —
     cells are integers, so the double round-trip is exact inside
     2^53). Fail-OPEN contract: when the operating point is UNDEFINED
     — single-class labels (``youden_j_threshold`` then emits a
@@ -1784,12 +1757,12 @@ def classifier_gate_report(
     the broadcast scalar.
     """
     thr = (
-        youden_j_threshold(df, score_col, is_positive, scale)
+        youden_j_threshold(df, score_col, is_positive)
         .select(
             F.when(
                 F.col("j_stat").isNull(), F.lit(None).cast("long")
             )
-            .otherwise(F.round(F.col("threshold") * scale).cast("long"))
+            .otherwise(F.round(F.col("threshold") * _MICROS).cast("long"))
             .alias("_tc")
         )
         # min over <=1 rows: always exactly ONE row out (NULL when the
@@ -1798,7 +1771,7 @@ def classifier_gate_report(
         .agg(F.min("_tc").alias("_thr_c"))
     )
     wexpr = _row_weight(weight_col)
-    cell = F.round(F.col(score_col) * scale).cast("long")
+    cell = F.round(F.col(score_col) * _MICROS).cast("long")
     gated = df.select(
         F.col(group_col), wexpr.alias("_w"), cell.alias("_c")
     ).crossJoin(F.broadcast(thr))
@@ -1837,17 +1810,15 @@ def quantile_bucket_report(
     group_col: str,
     score_col: str,
     weight_col: str | None = None,
-    n_buckets: int = 3,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group quantile bucketing of a score with doc/weight mass
     per bucket — the CCNet head/middle/tail split (Wenzek et al.,
     LREC'20 §4.3: each language's documents are cut into perplexity
     terciles, and downstream sampling keeps head > middle > tail).
-    ``n_buckets=3`` IS that split; any B works.
+    B = 3 buckets IS that split.
 
     Bucket semantics at the integer grain: scores collapse to cells
-    ``round(score * scale)``; boundary cell b_i (i = 1..B-1) is the
+    ``round(score * _MICROS)``; boundary cell b_i (i = 1..B-1) is the
     smallest cell whose cumulative count covers fraction i/B of the
     group (``cum * B >= i * n``); a row lands in bucket i+1 iff its
     cell is above b_i for exactly i boundaries. All rows sharing a
@@ -1859,7 +1830,7 @@ def quantile_bucket_report(
 
     Scale shape (the KS/W1 bounded-grain contract): rows collapse
     map-side to a (group, cell) histogram — bounded by group count x
-    score RANGE x scale, not by rows; the cumulative window runs over
+    score RANGE x _MICROS, not by rows; the cumulative window runs over
     that bounded grain partitioned by group; boundaries are one
     B-column aggregate per group, broadcast back onto the histogram
     (never onto rows); the final report aggregates the histogram, so
@@ -1872,7 +1843,7 @@ def quantile_bucket_report(
     caller's ``cache_scope`` or the session sweep.
     """
     wexpr = _row_weight(weight_col)
-    cell = F.round(F.col(score_col) * scale).cast("long")
+    cell = F.round(F.col(score_col) * _MICROS).cast("long")
     hist = (
         df.select(
             F.col(group_col).alias("_g"), cell.alias("_c"), wexpr.alias("_w")
@@ -1899,11 +1870,11 @@ def quantile_bucket_report(
             *[
                 F.min(
                     F.when(
-                        F.col("_cum") * n_buckets >= i * F.col("_ng"),
+                        F.col("_cum") * 3 >= i * F.col("_ng"),
                         F.col("_c"),
                     )
                 ).alias(f"_b{i}")
-                for i in range(1, n_buckets)
+                for i in range(1, 3)
             ]
         )
     )
@@ -1911,7 +1882,7 @@ def quantile_bucket_report(
         add,
         [
             (F.col("_c") > F.col(f"_b{i}")).cast("int")
-            for i in range(1, n_buckets)
+            for i in range(1, 3)
         ],
     )
     return (
@@ -1963,7 +1934,6 @@ def kruskal_wallis_h(
     value_col: str,
     group_col: str,
     groups: list[str],
-    scale: int = 100,
 ) -> DataFrame:
     """Kruskal-Wallis H (one-way ANOVA on ranks, Kruskal & Wallis
     1952) across a DECLARED group enumeration, tie-corrected, from
@@ -1982,7 +1952,7 @@ def kruskal_wallis_h(
 
     Scale shape (the MW/KS bounded-grain contract): rows collapse
     map-side to the value histogram — bounded by the value RANGE x
-    scale, not the corpus; the one unpartitioned cumulative window
+    _CENTS, not the corpus; the one unpartitioned cumulative window
     runs over that bounded grain; everything after is a single
     k-column conditional aggregate. Rank-sum and tie cross-products
     accumulate in DECIMAL(38,0) (2R <= N(N+1), t^3 <= N^3 — the int64
@@ -1999,7 +1969,7 @@ def kruskal_wallis_h(
     vals = df.where(
         F.col(value_col).isNotNull() & F.col(group_col).isin(list(groups))
     ).select(
-        F.round(F.col(value_col) * scale).cast("long").alias("c"),
+        F.round(F.col(value_col) * _CENTS).cast("long").alias("c"),
         *[
             F.when(F.col(group_col) == g, 1).otherwise(0).alias(f"g{i}")
             for i, g in enumerate(groups, start=1)
@@ -2068,7 +2038,6 @@ def brown_forsythe_w(
     value_col: str,
     group_col: str,
     groups: list[str],
-    scale: int = 100,
 ) -> DataFrame:
     """Brown-Forsythe test of variance homogeneity (Brown & Forsythe
     1974): one-way ANOVA F on Z_ij = |x_ij - median_i|, the
@@ -2088,7 +2057,7 @@ def brown_forsythe_w(
     (same mean, fatter tail).
 
     Scale shape: one map-side collapse to the (group, cell) histogram
-    (bounded by k x value range x scale); the cumulative window is
+    (bounded by k x value range x _CENTS); the cumulative window is
     partitioned BY GROUP over that bounded grain; medians broadcast
     back onto the histogram, never onto rows. One row out:
     (n, k_groups, w_statistic); df = (k - 1, n - k).
@@ -2099,7 +2068,7 @@ def brown_forsythe_w(
         F.col(value_col).isNotNull() & F.col(group_col).isin(list(groups))
     ).select(
         F.col(group_col).alias("g"),
-        F.round(F.col(value_col) * scale).cast("long").alias("c"),
+        F.round(F.col(value_col) * _CENTS).cast("long").alias("c"),
     )
     hist = vals.groupBy("g", "c").agg(F.count(F.lit(1)).alias("cnt"))
     wcum = Window.partitionBy("g").orderBy("c").rowsBetween(
@@ -2277,7 +2246,6 @@ def mwu_screen_by_group(
     df: DataFrame,
     value_col: str,
     group_col: str,
-    scale: int = 100,
 ) -> DataFrame:
     """One-vs-rest Mann-Whitney U per group over a SHARED combined
     ranking — the screening stage of a multiple-testing drift scan
@@ -2290,7 +2258,7 @@ def mwu_screen_by_group(
     Rank-sum and tie cross-products accumulate in DECIMAL(38,0).
 
     Scale shape: one map-side collapse to the combined histogram
-    (bounded by value range x scale) + one to the (group, cell) grain;
+    (bounded by value range x _CENTS) + one to the (group, cell) grain;
     the single unpartitioned cumulative window runs over the bounded
     combined grain; the (group, cell) relation joins it ON THE CELL
     KEY and collapses immediately to one row per group. Output: one
@@ -2301,7 +2269,7 @@ def mwu_screen_by_group(
         F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
     ).select(
         F.col(group_col).alias("g"),
-        F.round(F.col(value_col) * scale).cast("long").alias("c"),
+        F.round(F.col(value_col) * _CENTS).cast("long").alias("c"),
     )
     comb = _with_cum_below(vals.groupBy("c").agg(F.count(F.lit(1)).alias("nv")))
     glob = comb.agg(
@@ -2334,13 +2302,11 @@ def mwu_screen_by_group(
 
 def bh_fdr_select(
     df: DataFrame,
-    z_col: str,
-    key_col: str,
     z_crits: list[float],
 ) -> DataFrame:
     """Benjamini-Hochberg step-up selection (Benjamini & Hochberg
     1995) over per-test z statistics: rank tests by |z| descending
-    (= p ascending, ties broken by ``key_col``), find k* = max{k :
+    (= p ascending, ties broken by ``g``), find k* = max{k :
     |z|_(k) >= z_crit(k)} against the precomputed ``z_crits`` ladder
     (``bh_z_thresholds`` — entry k is the |z| whose two-sided p
     equals k*alpha/m), and reject ranks 1..k* — FDR control at alpha
@@ -2360,18 +2326,14 @@ def bh_fdr_select(
     arr = "array(" + ", ".join(
         f"CAST('{float(z)!r}' AS DOUBLE)" for z in z_crits
     ) + ")"
-    wr = Window.orderBy(
-        F.abs(F.col(z_col)).desc_nulls_last(), F.col(key_col)
-    )
+    wr = Window.orderBy(F.abs(F.col("z_value")).desc_nulls_last(), F.col("g"))
     d = df.withColumn("p_rank", F.row_number().over(wr))
     # nested CASE keeps element_at's index in [1, m] even if more
     # groups than planned tests show up (ANSI element_at throws OOB)
     zc = F.when(F.col("p_rank") <= m, F.expr(f"element_at({arr}, p_rank)"))
     d = d.withColumn(
         "_ok",
-        F.when(F.abs(F.col(z_col)) >= zc, F.col("p_rank")).otherwise(
-            F.lit(0)
-        ),
+        F.when(F.abs(F.col("z_value")) >= zc, F.col("p_rank")).otherwise(F.lit(0)),
     )
     wall = Window.partitionBy(F.lit(1)).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing

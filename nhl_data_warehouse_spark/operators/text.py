@@ -15,6 +15,13 @@ from pyspark.sql import functions as F
 from nhl_data_warehouse_spark.operators.caching import pin
 from pyspark.sql.window import Window
 
+# hashed feature buckets of the linear scorers
+_N_BUCKETS = 256
+# contamination flag threshold: percent of a doc's n-grams seen
+_FLAG_PCT = 20
+# add-k smoothing count of the held-out language models
+_ADD_K = 1
+
 # whitespace tokens vs BPE-ish units: words OR single non-space symbols
 BPE_ISH_PATTERN = r"\w+|[^\w\s]"
 
@@ -30,25 +37,21 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def token_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token counting both ways: whitespace tokens and BPE-ish regex
     units, plus char length — the standard size gates for corpus
     filtering."""
-    ws_tokens = F.split(F.col(text_col), r"\s+")
-    bpe_tokens = F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0)
+    ws_tokens = F.split(F.col("text"), r"\s+")
+    bpe_tokens = F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_PATTERN), 0)
     return df.select(
-        id_col,
-        F.length(text_col).alias("n_chars"),
+        "doc_id",
+        F.length("text").alias("n_chars"),
         F.size(F.filter(ws_tokens, lambda t: t != "")).alias("n_ws_tokens"),
         F.size(bpe_tokens).alias("n_bpe_tokens"),
     )
 
 
-def quality_score(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality features + a composite 0-10 score: length
     band, punctuation density, stopword presence, mean token length —
     the usual cheap pre-filters before model-based scoring.
@@ -59,7 +62,7 @@ def quality_score(
     floating-point rounding to disagree about. Consumers derive float
     ratios from the counts when they want them.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     tokens = F.filter(F.split(text, r"\s+"), lambda t: t != "")
     n_tokens = F.size(tokens)
     n_chars = F.length(text)
@@ -79,7 +82,7 @@ def quality_score(
         + tok_len_ok.cast("long") * 2
     )
     return df.select(
-        id_col,
+        "doc_id",
         n_chars.cast("long").alias("n_chars"),
         n_tokens.cast("long").alias("n_tokens"),
         n_punct.cast("long").alias("n_punct"),
@@ -89,14 +92,12 @@ def quality_score(
     )
 
 
-def lang_id(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-marker language ID: score each language by how many of
     its marker words occur (distinct presence), predict the argmax
     (ties broken by language code order, deterministic)."""
     tokens = F.array_distinct(
-        F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+        F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
     )
     scores = [
         F.size(F.array_intersect(tokens, F.array(*[F.lit(m) for m in markers]))).alias(
@@ -104,7 +105,7 @@ def lang_id(
         )
         for lang, markers in LANG_MARKERS.items()
     ]
-    scored = df.select(id_col, *scores)
+    scored = df.select("doc_id", *scores)
     langs = list(LANG_MARKERS)
     best = F.greatest(*[F.col(f"score_{l}") for l in langs])
     pred = F.lit("und")
@@ -113,24 +114,22 @@ def lang_id(
     for lang in reversed(langs):
         pred = F.when(F.col(f"score_{lang}") == best, F.lit(lang)).otherwise(pred)
     pred = F.when(best == 0, F.lit("und")).otherwise(pred)
-    return scored.select(id_col, *[f"score_{l}" for l in langs], pred.alias("pred_lang"))
+    return scored.select("doc_id", *[f"score_{l}" for l in langs], pred.alias("pred_lang"))
 
 
-def fingerprint(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 12
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprints: md5 of normalized text (exact identity)
-    plus the minimum hashed char k-gram (a 1-hash MinHash — the
+    plus the minimum hashed char 12-gram (a 1-hash MinHash — the
     rolling-hash winnowing idea reduced to its portable core)."""
     from nhl_data_warehouse_spark.operators.dedup import normalized_text, scale_out
 
-    norm = normalized_text(text_col)
-    positions = F.sequence(F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1)))
+    norm = normalized_text()
+    positions = F.sequence(F.lit(1), F.greatest(F.length("text") - 11, F.lit(1)))
     shingle_hashes = F.transform(
-        positions, lambda i: F.md5(F.substring(F.col(text_col), i, k))
+        positions, lambda i: F.md5(F.substring(F.col("text"), i, 12))
     )
     return scale_out(df).select(
-        id_col,
+        "doc_id",
         F.md5(norm).alias("content_fingerprint"),
         F.array_min(shingle_hashes).alias("min_shingle_hash"),
     )
@@ -150,12 +149,7 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def redact_pii(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "clean_text",
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Scrub PII-shaped spans (URLs, emails, IPv4s, phone numbers) to
     typed placeholders (``<URL>`` etc.), with a per-row count of each
     redaction type — the audit trail a corpus pipeline keeps.
@@ -166,21 +160,19 @@ def redact_pii(
     never counts twice (an email inside an already-redacted URL is
     gone before the email pass looks).
     """
-    cur = F.col(text_col)
-    cols = [F.col(id_col)]
+    cur = F.col("text")
+    cols = [F.col("doc_id")]
     for name, pat in PII_PATTERNS:
         cols.append(F.size(F.regexp_extract_all(cur, F.lit(pat), 0)).alias(f"n_{name}"))
         cur = F.regexp_replace(cur, pat, f"<{name.upper()}>")
-    cols.append(cur.alias(out_col))
+    cols.append(cur.alias("clean_text"))
     return df.select(*cols)
 
 
 def remove_boilerplate(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int = 10,
-    sep: str = ". ",
 ) -> DataFrame:
     """Cross-document boilerplate removal (the CCNet/RefinedWeb trick):
     split docs into sentences, drop every sentence that appears in more
@@ -197,7 +189,7 @@ def remove_boilerplate(
     sents = (
         df.select(
             F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), r"[.!?]")).alias("pos", "sent"),
+            F.posexplode(F.split(F.col("text"), r"[.!?]")).alias("pos", "sent"),
         )
         .select(id_col, "pos", F.trim("sent").alias("sent"))
         .filter(F.col("sent") != "")
@@ -217,7 +209,7 @@ def remove_boilerplate(
                 F.array_sort(F.collect_list(F.struct("pos", "sent"))),
                 lambda x: x["sent"],
             ),
-            sep,
+            ". ",
         ).alias("clean_text"),
         F.count(F.lit(1)).alias("n_sentences"),
     )
@@ -229,9 +221,7 @@ def _ws_tokens(text_col: str):
     return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
 
 
-def tfidf_top_terms(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Top-k salient terms per document by TF-IDF — the keyword/topic
     extraction pass a corpus pipeline runs for routing and mixing.
 
@@ -247,7 +237,7 @@ def tfidf_top_terms(
     no count_distinct shuffle); N broadcasts as a 1-row join; top-k is
     a window partitioned by doc (parallel).
     """
-    toks = df.select(F.col(id_col), F.explode(_ws_tokens(text_col)).alias("term"))
+    toks = df.select(F.col(id_col), F.explode(_ws_tokens("text")).alias("term"))
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     tf = pin(tf)  # feeds df-counts AND the scored join
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_docs"))
@@ -297,13 +287,13 @@ def _mean_nll(logp_col: str, name: str) -> Column:
 
 
 def _nll_report(
-    scored: DataFrame, id_col: str, miss_col: str, names: tuple[str, str, str]
+    scored: DataFrame, miss_col: str, names: tuple[str, str, str]
 ) -> DataFrame:
     """Per doc of ``scored``: its rows, the rows flagged ``miss_col``
     (unseen in the reference) and the mean NLL of ``_logp``, named by
     ``names``."""
     n_name, miss_name, nll_name = names
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias(n_name),
         F.sum(miss_col).cast("long").alias(miss_name),
         _mean_nll("_logp", nll_name),
@@ -327,14 +317,12 @@ def _ref_vocab(ref_df: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
     return vocab, totals
 
 
-def word_ngrams(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5
-) -> DataFrame:
+def word_ngrams(df: DataFrame, id_col: str = "doc_id", n: int = 5) -> DataFrame:
     """Distinct word n-grams per document, one row per (id, gram).
     Docs shorter than ``n`` tokens produce no rows. Pure array
     expressions (sequence/transform/slice) inside codegen — the
     shuffle-free building block for overlap/contamination checks."""
-    grams = _ngram_slots(_ws_tokens(text_col), n)
+    grams = _ngram_slots(_ws_tokens("text"), n)
     return df.select(
         F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram")
     )
@@ -343,25 +331,23 @@ def word_ngrams(
 def contamination_check(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
     benchmark_every: int = 50,
-    flag_pct: int = 20,
 ) -> DataFrame:
     """Benchmark decontamination by n-gram overlap (the PaLM/GPT-3
     eval-leakage check): docs with ``id % benchmark_every == 0`` stand
     in for the held-out benchmark; every other doc is scored by how
     many of its distinct word n-grams also appear anywhere in the
-    benchmark set, and flagged when >= ``flag_pct`` percent overlap.
+    benchmark set, and flagged when >= ``_FLAG_PCT`` percent overlap.
 
     Counts are integers and the flag is an integer cross-
-    multiplication (``n_shared*100 >= n_grams*flag_pct``) — exact in
+    multiplication (``n_shared*100 >= n_grams*_FLAG_PCT``) — exact in
     any engine; the reported ratio is one double division of exact
     ints. Scale: the benchmark gram set is tiny relative to the corpus
     -> broadcast it; the corpus side is a shuffle-free scan + explode,
     then one aggregate keyed on the doc.
     """
-    grams = word_ngrams(df, id_col, text_col, n)
+    grams = word_ngrams(df, id_col, n)
     grams = pin(grams)  # bench subset + corpus subset both read it
     bench = (
         grams.filter(F.col(id_col) % benchmark_every == 0).select("gram").distinct()
@@ -381,7 +367,7 @@ def contamination_check(
         (n_shared.cast("double") / F.col("n_grams").cast("double")).alias(
             "contamination_ratio"
         ),
-        (n_shared * 100 >= F.col("n_grams") * flag_pct)
+        (n_shared * 100 >= F.col("n_grams") * _FLAG_PCT)
         .cast("int")
         .alias("is_contaminated"),
     )
@@ -389,16 +375,13 @@ def contamination_check(
 
 def novelty_curve(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
     n_batches: int = 8,
 ) -> DataFrame:
     """Marginal-novelty curve of a growing corpus — the
     diminishing-returns diagnostic a data-acquisition pipeline runs
     before paying for more of the same source: docs arrive in id
     order, split into ``n_batches`` equal id-range batches, and each
-    batch is scored by how many of its distinct word n-grams were
+    batch is scored by how many of its distinct word 5-grams were
     NEVER seen in any earlier batch (Heaps-law vocabulary growth at
     the n-gram grain; a flattening cum_vocab / falling novelty_rate
     says new data is redundant with what is already held).
@@ -414,21 +397,21 @@ def novelty_curve(
     Output per batch: n_docs, distinct_grams, new_grams,
     novelty_rate, cum_vocab.
     """
-    mx = df.agg(F.max(id_col).alias("mx"))
+    mx = df.agg(F.max("doc_id").alias("mx"))
     # batch is a pure function of (id, max_id): attach it to the GRAM
     # relation directly — no id-keyed join back to the docs, and the
     # 1-row scalar broadcast appears exactly twice (grams + doc
     # counts), not once per downstream branch
     batch_expr = (
         F.least(
-            F.expr(f"({id_col} * {n_batches}) DIV (mx + 1)"),
+            F.expr(f"(doc_id * {n_batches}) DIV (mx + 1)"),
             F.lit(n_batches - 1),
         )
         .cast("int")
         .alias("batch")
     )
     bg = (
-        word_ngrams(df, id_col, text_col, n)
+        word_ngrams(df, "doc_id", 5)
         .crossJoin(F.broadcast(mx))
         .select(batch_expr, "gram")
         .distinct()
@@ -475,14 +458,7 @@ def novelty_curve(
     )
 
 
-def span_contamination(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 50,
-    benchmark_mod: int = 2,
-    flag_pct: int = 20,
-) -> DataFrame:
+def span_contamination(df: DataFrame) -> DataFrame:
     """Exact substring contamination at the long-n-gram grain with
     TOKEN-SPAN COVERAGE — the decontamination recipe real training
     corpora use (VERDICT r8 item 8, extending ``contamination_check``):
@@ -507,41 +483,37 @@ def span_contamination(
     without an explicit broadcast hint — a REAL benchmark is tiny and
     AQE broadcasts it, while the parity split used by the suite query
     keeps both sides large enough that a forced broadcast would be
-    wrong. Docs shorter than ``n`` tokens have no grams and are
+    wrong. Docs shorter than 50 tokens have no grams and are
     excluded (they cannot contain a 50-token substring).
 
     Output per eval doc: n_tokens, n_grams, n_matched (matched gram
     positions), covered_tokens, covered_frac, is_contaminated
-    (integer cross-multiplication at ``flag_pct``%).
+    (integer cross-multiplication at ``_FLAG_PCT``%).
     """
-    grams = _gram_positions(df, id_col, text_col, n)
-    bench = (
-        grams.where(F.col(id_col) % benchmark_mod == 0).select("g").distinct()
-    )
-    ev = grams.where(F.col(id_col) % benchmark_mod != 0)
-    matched = ev.join(bench, on="g").select(id_col, "i")
+    grams = _gram_positions(df, 50)
+    bench = (grams.where(F.col("doc_id") % 2 == 0).select("g").distinct())
+    ev = grams.where(F.col("doc_id") % 2 != 0)
+    matched = ev.join(bench, on="g").select("doc_id", "i")
     return _span_report(
         ev,
         matched,
-        id_col,
-        n,
-        flag_pct,
+        50,
         ("n_matched", "covered_frac", "is_contaminated"),
     )
 
 
-def _gram_positions(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def _gram_positions(df: DataFrame, n: int) -> DataFrame:
     """(id, n_tokens, i, g) per n-token window of each doc with at
     least ``n`` whitespace tokens: ``i`` its 1-based start, ``g`` the
     md5 of its text."""
-    arr = _ws_tokens(text_col)
+    arr = _ws_tokens("text")
     docs = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         arr.alias("arr"),
         F.size(arr).cast("long").alias("n_tokens"),
     ).where(F.size(F.col("arr")) >= n)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_tokens"),
         F.explode(
             F.transform(
@@ -552,48 +524,44 @@ def _gram_positions(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
                 ),
             )
         ).alias("ig"),
-    ).select(
-        id_col, "n_tokens", F.col("ig.i").alias("i"), F.col("ig.g").alias("g")
-    )
+    ).select("doc_id", "n_tokens", F.col("ig.i").alias("i"), F.col("ig.g").alias("g"))
 
 
 def _span_report(
     grams: DataFrame,
     matched: DataFrame,
-    id_col: str,
     n: int,
-    flag_pct: int,
     names: tuple[str, str, str],
 ) -> DataFrame:
     """Per doc of ``grams``: n_tokens, n_grams, the count of its
     ``matched`` (id, i) gram positions, the tokens their n-token spans
-    cover, the covered share, and the flag at ``flag_pct``% (integer
+    cover, the covered share, and the flag at ``_FLAG_PCT``% (integer
     cross-multiplication). ``names`` are the output names of the
     match count, the share and the flag."""
     n_name, frac_name, flag_name = names
-    counts = grams.groupBy(id_col).agg(
+    counts = grams.groupBy("doc_id").agg(
         F.first("n_tokens").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_grams"),
     )
-    n_matched = matched.groupBy(id_col).agg(F.count(F.lit(1)).alias(n_name))
+    n_matched = matched.groupBy("doc_id").agg(F.count(F.lit(1)).alias(n_name))
     covered = (
         matched.select(
-            id_col,
+            "doc_id",
             F.explode(F.sequence(F.col("i"), F.col("i") + (n - 1))).alias(
                 "pos"
             ),
         )
         .distinct()
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("covered_tokens"))
     )
     cov = F.coalesce(F.col("covered_tokens"), F.lit(0))
     nm = F.coalesce(F.col(n_name), F.lit(0))
     return (
-        counts.join(n_matched, on=id_col, how="left")
-        .join(covered, on=id_col, how="left")
+        counts.join(n_matched, on="doc_id", how="left")
+        .join(covered, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "n_grams",
             nm.alias(n_name),
@@ -601,7 +569,7 @@ def _span_report(
             (cov.cast("double") / F.col("n_tokens").cast("double")).alias(
                 frac_name
             ),
-            (cov * 100 >= F.col("n_tokens") * flag_pct)
+            (cov * 100 >= F.col("n_tokens") * _FLAG_PCT)
             .cast("int")
             .alias(flag_name),
         )
@@ -611,9 +579,6 @@ def _span_report(
 def tf_norm_scores(
     df: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 20,
 ) -> DataFrame:
     """Length-normalized term-frequency retrieval arm: score =
     round(query-term hits / doc length, 6) — the deliberately simple
@@ -625,11 +590,11 @@ def tf_norm_scores(
     distributed TakeOrdered; docs with zero hits drop out (they have
     no rank in this arm).
     """
-    arr = _ws_tokens(text_col)
+    arr = _ws_tokens("text")
     terms_arr = F.array(*[F.lit(t) for t in query_terms])
     scored = (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size(arr).alias("dl"),
             F.size(
                 F.filter(arr, lambda t: F.array_contains(terms_arr, t))
@@ -637,7 +602,7 @@ def tf_norm_scores(
         )
         .where((F.col("dl") > 0) & (F.col("tf_hits") > 0))
         .select(
-            id_col,
+            "doc_id",
             "dl",
             "tf_hits",
             (
@@ -650,18 +615,11 @@ def tf_norm_scores(
             ).alias("tf_norm"),
         )
     )
-    return scored.orderBy(
-        F.col("tf_norm").desc(), F.col(id_col).asc()
-    ).limit(k)
+    return scored.orderBy(F.col("tf_norm").desc(), F.col("doc_id").asc()).limit(50)
 
 
 def bloom_span_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 13,
-    history_mod: int = 2,
-    flag_pct: int = 20,
     m_bits: int = 1 << 20,
     k: int = 3,
 ) -> DataFrame:
@@ -699,18 +657,16 @@ def bloom_span_dedup(
     the position explode is O(duplicated tokens), not O(corpus) —
     the span_contamination doctrine.
 
-    Output per batch doc (>= n tokens): n_tokens, n_grams,
+    Output per batch doc (>= 13 tokens): n_tokens, n_grams,
     n_dup_grams (exact-verified gram positions shared with history),
-    covered_tokens (union of their n-token spans), dup_frac,
-    is_flagged (integer cross-multiplication at ``flag_pct``%).
+    covered_tokens (union of their 13-token spans), dup_frac,
+    is_flagged (integer cross-multiplication at ``_FLAG_PCT``%).
     """
     from .membership import bloom_build, bloom_probe
 
-    grams = _gram_positions(df, id_col, text_col, n)
-    hist = (
-        grams.where(F.col(id_col) % history_mod == 0).select("g").distinct()
-    )
-    batch = grams.where(F.col(id_col) % history_mod != 0)
+    grams = _gram_positions(df, 13)
+    hist = (grams.where(F.col("doc_id") % 2 == 0).select("g").distinct())
+    batch = grams.where(F.col("doc_id") % 2 != 0)
     bloom = bloom_build(hist, "g", m_bits=m_bits, k=k)
     maybe = (
         bloom_probe(
@@ -726,39 +682,32 @@ def bloom_span_dedup(
     )
     # exact verify: only the maybe-seen grams meet the history set
     dup_g = maybe.join(hist, on="g")
-    matched = batch.join(dup_g, on="g").select(id_col, "i")
+    matched = batch.join(dup_g, on="g").select("doc_id", "i")
     return _span_report(
         batch,
         matched,
-        id_col,
-        n,
-        flag_pct,
+        13,
         ("n_dup_grams", "dup_frac", "is_flagged"),
     )
 
 
-def inverted_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_postings: int = 20,
-) -> DataFrame:
+def inverted_index(df: DataFrame) -> DataFrame:
     """Inverted index build: term -> document frequency, total term
-    frequency, and the first ``max_postings`` doc ids (ascending) as a
+    frequency, and the first 20 doc ids (ascending) as a
     comma-joined posting string. ``collect_list`` order is partition-
     nondeterministic, so the list is sorted before slicing — output is
     exact. One aggregate keyed on the term; posting truncation bounds
     per-term state, and hot terms (stopwords) are exactly the rows a
     real indexer drops via a df cap."""
-    toks = df.select(F.col(id_col), F.explode(_ws_tokens(text_col)).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    toks = df.select(F.col("doc_id"), F.explode(_ws_tokens("text")).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     return tf.groupBy("term").agg(
         F.count(F.lit(1)).alias("df_docs"),
         F.sum("tf").alias("total_tf"),
         F.concat_ws(
             ",",
             F.transform(
-                F.slice(F.array_sort(F.collect_list(id_col)), 1, max_postings),
+                F.slice(F.array_sort(F.collect_list("doc_id")), 1, 20),
                 lambda d: d.cast("string"),
             ),
         ).alias("postings"),
@@ -768,7 +717,6 @@ def inverted_index(
 def unigram_logprob_score(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Perplexity-style quality score from a unigram LM trained on the
     corpus itself (the CCNet idea with the KenLM swapped for the
@@ -789,7 +737,7 @@ def unigram_logprob_score(
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(F.filter(F.split(F.col(text_col), " "), lambda t: t != "")).alias(
+        F.explode(F.filter(F.split(F.col("text"), " "), lambda t: t != "")).alias(
             "tok"
         ),
     )
@@ -812,9 +760,7 @@ def unigram_logprob_score(
     )
 
 
-def token_entropy(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_entropy(df: DataFrame) -> DataFrame:
     """Per-doc Shannon entropy of the token distribution (nats) — the
     repetitiveness axis of quality filtering: near-zero entropy is
     keyword stuffing / boilerplate loops, high entropy is diverse
@@ -826,19 +772,19 @@ def token_entropy(
     convention. Everything shuffles on ids/terms, never text.
     """
     toks = df.select(
-        F.col(id_col),
-        F.explode(_ws_tokens(text_col)).alias("term"),
+        F.col("doc_id"),
+        F.explode(_ws_tokens("text")).alias("term"),
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    totals = tf.groupBy(id_col).agg(
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    totals = tf.groupBy("doc_id").agg(
         F.sum("tf").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_distinct_terms"),
     )
     p = F.col("tf").cast("double") / F.col("n_tokens").cast("double")
     term_h = F.round(p * F.log(p), 12).cast("decimal(24,12)")
     return (
-        tf.join(totals, on=id_col)
-        .groupBy(id_col, "n_tokens", "n_distinct_terms")
+        tf.join(totals, on="doc_id")
+        .groupBy("doc_id", "n_tokens", "n_distinct_terms")
         .agg(
             # + 0.0 maps IEEE -0.0 to +0.0: Spark's round() clamps tiny
             # negatives to 0.0 while DuckDB's keeps -0.0, and the
@@ -848,17 +794,13 @@ def token_entropy(
                 "entropy_nats"
             )
         )
-        .select(id_col, "n_tokens", "n_distinct_terms", "entropy_nats")
+        .select("doc_id", "n_tokens", "n_distinct_terms", "entropy_nats")
     )
 
 
 def bm25_scores(
     df: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
     k: int = 20,
 ) -> DataFrame:
     """BM25 retrieval scoring of every document against a fixed query
@@ -868,8 +810,8 @@ def bm25_scores(
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (the Robertson-Sparck
     Jones form, always positive), rounded to 6 dp and carried as
     DECIMAL; each term's contribution idf * tf(k1+1)/(tf + k1(1-b +
-    b·dl/avgdl)) is one fixed-association chain of IEEE double ops
-    rounded to 12 dp, summed as DECIMAL so the distributed sum is
+    b·dl/avgdl)), with k1 = 1.2 and b = 0.75, is one fixed-association
+    chain of IEEE double ops rounded to 12 dp, summed as DECIMAL so the distributed sum is
     order-free (suite libm-proofing convention).
 
     Scale: tokens are filtered to the query terms BEFORE the (doc,
@@ -882,17 +824,17 @@ def bm25_scores(
     tf relation; the final top-k is TakeOrderedAndProject (no global
     sort).
     """
-    arr = _ws_tokens(text_col)
-    base = df.select(F.col(id_col), arr.alias("toks"))
+    arr = _ws_tokens("text")
+    base = df.select(F.col("doc_id"), arr.alias("toks"))
     base = pin(base)  # corpus stats + per-doc tf both read it
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("toks")).alias("sum_dl"),
     )
     toks = base.select(
-        F.col(id_col), F.size("toks").alias("dl"), F.explode("toks").alias("term")
+        F.col("doc_id"), F.size("toks").alias("dl"), F.explode("toks").alias("term")
     ).filter(F.col("term").isin(*query_terms))
-    tf = toks.groupBy(id_col, "dl", "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "dl", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_docs"))
     n_d = F.col("n_docs").cast("double")
     df_d = F.col("df_docs").cast("double")
@@ -905,30 +847,30 @@ def bm25_scores(
     tf_d = F.col("tf").cast("double")
     dl_d = F.col("dl").cast("double")
     contrib = F.round(
-        (F.col("idf").cast("double") * (tf_d * (k1 + 1.0)))
-        / (tf_d + k1 * ((1.0 - b) + (b * dl_d) / avgdl)),
+        (F.col("idf").cast("double") * (tf_d * (1.2 + 1.0)))
+        / (tf_d + 1.2 * ((1.0 - 0.75) + (0.75 * dl_d) / avgdl)),
         12,
     ).cast("decimal(24,12)")
     idf_by_term = dfreq.join(F.broadcast(stats)).select("term", idf)
     scored = (
         tf.join(F.broadcast(idf_by_term), on="term")
         .join(F.broadcast(stats))
-        .select(F.col(id_col), F.col("dl"), contrib.alias("contrib"))
+        .select(F.col("doc_id"), F.col("dl"), contrib.alias("contrib"))
     )
     return (
-        scored.groupBy(id_col, "dl")
+        scored.groupBy("doc_id", "dl")
         .agg(
             F.count(F.lit(1)).alias("n_hit_terms"),
             F.round(F.sum("contrib").cast("double"), 6).alias("bm25"),
         )
-        .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
+        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
         .limit(k)
     )
 
 
-def _word_bigrams(text_col: str):
+def _word_bigrams():
     """Consecutive (not distinct) word bigrams as 'w1 w2' strings."""
-    arr = _ws_tokens(text_col)
+    arr = _ws_tokens("text")
     return F.when(
         F.size(arr) >= 2,
         F.transform(
@@ -941,7 +883,6 @@ def _word_bigrams(text_col: str):
 def pmi_bigrams(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     min_count: int = 5,
     k: int = 30,
 ) -> DataFrame:
@@ -960,9 +901,9 @@ def pmi_bigrams(
     phrases BEFORE the unigram-count joins, and corpus totals ride a
     1-row broadcast. Nothing shuffles raw text.
     """
-    uni = df.select(F.explode(_ws_tokens(text_col)).alias("w"))
+    uni = df.select(F.explode(_ws_tokens("text")).alias("w"))
     uni = pin(uni)  # total count + per-term counts
-    bi = df.select(F.explode(_word_bigrams(text_col)).alias("gram"))
+    bi = df.select(F.explode(_word_bigrams()).alias("gram"))
     bi = pin(bi)  # per-gram counts + corpus total (one tokenize pass)
     c_uni = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c_w"))
     c_bi = (
@@ -995,17 +936,15 @@ def pmi_bigrams(
     )
 
 
-def repetition_signals(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition metrics: the fraction
-    of word ``n``-grams that are duplicates of an earlier occurrence,
+    of word 5-grams that are duplicates of an earlier occurrence,
     and the share of bigram slots taken by the single most frequent
     bigram — the two strongest cheap signals for looped boilerplate
     and keyword stuffing (Rae et al. 2021 repetition filters).
 
     Fractions are one double division of exact integer counts
-    (deterministic cross-engine). Docs shorter than ``n`` tokens have
+    (deterministic cross-engine). Docs shorter than 5 tokens have
     no n-gram slots and are excluded (nothing to measure).
 
     Scale: both metrics are (doc, gram) map-side-combined aggregates
@@ -1013,22 +952,22 @@ def repetition_signals(
     movement, and the two per-doc summaries co-partition on the doc
     id for the final join.
     """
-    grams_n = _ngram_slots(_ws_tokens(text_col), n)
-    gn = df.select(F.col(id_col), F.explode(grams_n).alias("gram"))
+    grams_n = _ngram_slots(_ws_tokens("text"), 5)
+    gn = df.select(F.col("doc_id"), F.explode(grams_n).alias("gram"))
     ng = (
-        gn.groupBy(id_col, "gram")
+        gn.groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_grams"),
             F.count(F.lit(1)).alias("n_distinct_grams"),
         )
     )
-    bg = df.select(F.col(id_col), F.explode(_word_bigrams(text_col)).alias("gram"))
+    bg = df.select(F.col("doc_id"), F.explode(_word_bigrams()).alias("gram"))
     nb = (
-        bg.groupBy(id_col, "gram")
+        bg.groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("c").alias("n_bigrams"), F.max("c").alias("top_bigram_count"))
     )
     dup_frac = (F.col("n_grams") - F.col("n_distinct_grams")).cast(
@@ -1037,8 +976,8 @@ def repetition_signals(
     top_bi_frac = F.col("top_bigram_count").cast("double") / F.col(
         "n_bigrams"
     ).cast("double")
-    return ng.join(nb, on=id_col).select(
-        id_col,
+    return ng.join(nb, on="doc_id").select(
+        "doc_id",
         "n_grams",
         "n_distinct_grams",
         dup_frac.alias("dup_ngram_frac"),
@@ -1050,8 +989,6 @@ def repetition_signals(
 
 def bpe_merge_candidates(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 50,
     min_count: int = 2,
 ) -> DataFrame:
@@ -1071,7 +1008,7 @@ def bpe_merge_candidates(
     the same aggregate shape a 100 TB corpus pass needs; top-k plans
     as TakeOrderedAndProject.
     """
-    words = df.select(F.explode(_ws_tokens(text_col)).alias("w"))
+    words = df.select(F.explode(_ws_tokens("text")).alias("w"))
     chars = F.split(F.col("w"), "")
     pairs = F.when(
         F.length("w") >= 2,
@@ -1090,27 +1027,19 @@ def bpe_merge_candidates(
     )
 
 
-def hashed_linear_quality(
-    df: DataFrame,
-    n_buckets: int = 256,
-    bias: float = 0.0,
-    threshold: float = 0.5,
-    salt: str = "hlq-v1",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hashed_linear_quality(df: DataFrame) -> DataFrame:
     """fastText/CCNet-style hashed-feature linear quality classifier:
-    score = sigmoid(mean over tokens of w[bucket(token)] + bias), with
-    the hashing trick collapsing the unbounded vocabulary into
-    ``n_buckets`` feature dimensions. The weight vector here is a
+    score = sigmoid(mean over tokens of w[bucket(token)]), with the
+    hashing trick collapsing the unbounded vocabulary into
+    ``_N_BUCKETS`` feature dimensions, and keep = score >= 0.5. The weight vector here is a
     deterministic stand-in derived from the bucket id (hash -> [-1, 1],
     6dp); swap in trained weights as a broadcast lookup table without
     touching the plan shape — this operator is the *serving* half every
     model-based quality filter needs at corpus scale.
 
-    Determinism: bucket = hex4(md5(salt|token)) mod n_buckets; weight =
-    2*hex6(md5(salt|'w'|bucket))/16^6 - 1 rounded 6dp and carried as
-    DECIMAL so the per-doc sum is exact on any engine/partitioning; the
+    Determinism: bucket = hex4(md5('hlq-v1|'||token)) mod
+    _N_BUCKETS; weight = 2*hex6(md5('hlq-v1|w|'||bucket))/16^6 - 1
+    rounded 6dp and carried as DECIMAL so the per-doc sum is exact on any engine/partitioning; the
     mean-margin is rounded 9dp BEFORE the sigmoid so a 1-ulp division
     difference cannot flip the rounded score (suite libm convention).
 
@@ -1118,19 +1047,17 @@ def hashed_linear_quality(
     the per-doc partial-aggregated sum; weights need no join at all
     (hash-derived) — one pass however large the corpus.
     """
-    toks = df.select(id_col, F.explode(_ws_tokens(text_col)).alias("tok"))
+    toks = df.select("doc_id", F.explode(_ws_tokens("text")).alias("tok"))
     bucket = (
         F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt + "|"), F.col("tok"))), 1, 4),
+            F.substring(F.md5(F.concat(F.lit("hlq-v1|"), F.col("tok"))), 1, 4),
             16,
             10,
         ).cast("long")
-        % n_buckets
+        % _N_BUCKETS
     )
     wv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt + "|w|"), bucket.cast("string"))), 1, 6
-        ),
+        F.substring(F.md5(F.concat(F.lit("hlq-v1|w|"), bucket.cast("string"))), 1, 6),
         16,
         10,
     ).cast("long")
@@ -1138,18 +1065,18 @@ def hashed_linear_quality(
         wv.cast("double") / F.lit(float(16**6)) * 2 - 1, 6
     ).cast("decimal(12,6)")
     per_doc = (
-        toks.select(id_col, weight.alias("_w"))
-        .groupBy(id_col)
+        toks.select("doc_id", weight.alias("_w"))
+        .groupBy("doc_id")
         .agg(F.sum("_w").alias("_sw"), F.count(F.lit(1)).alias("n_tokens"))
     )
-    out = df.select(id_col).join(per_doc, on=id_col, how="left")
+    out = df.select("doc_id").join(per_doc, on="doc_id", how="left")
     margin = F.round(
         F.coalesce(F.col("_sw").cast("double") / F.col("n_tokens"), F.lit(0.0))
-        + F.lit(bias),
+        + F.lit(0.0),
         9,
     )
     out = out.select(
-        id_col,
+        "doc_id",
         F.coalesce(F.col("n_tokens"), F.lit(0).cast("long")).alias("n_tokens"),
         margin.alias("margin"),
     )
@@ -1157,45 +1084,39 @@ def hashed_linear_quality(
         0.0
     )
     return out.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "margin",
         score.alias("quality_score"),
-        (score >= F.lit(threshold)).alias("keep"),
+        (score >= F.lit(0.5)).alias("keep"),
     )
 
 
 def chi2_term_selection(
     df: DataFrame,
-    label_col: str = "lang",
-    k: int = 3,
     min_df: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Chi-square term-label association — the feature-selection pass a
     corpus pipeline runs to find terms characteristic of a label
     (language, domain, quality tier): for each (term, label) the 2x2
     presence contingency [a=docs with term in label, b=with term
     elsewhere, c=label without term, d=rest] scores
-    chi2 = N*(ad-bc)^2 / ((a+b)(c+d)(a+c)(b+d)); top-k terms per
+    chi2 = N*(ad-bc)^2 / ((a+b)(c+d)(a+c)(b+d)); top-3 terms per
     label by score. ``min_df`` drops rare terms (their chi2 is noise).
 
     All contingency cells are exact integer counts assembled from
     three aggregates (term-label, term, label) joined on their keys —
     the per-doc presence explode is the only row-scale work, and every
     aggregate is map-side combined. chi2 is one fixed-order double
-    expression rounded 6dp; the top-k window partitions by label.
+    expression rounded 6dp; the top-3 window partitions by label.
     """
     from pyspark.sql.window import Window
 
     present = df.select(
-        id_col, label_col, F.explode(F.array_distinct(_ws_tokens(text_col))).alias("term")
+        "doc_id", "lang", F.explode(F.array_distinct(_ws_tokens("text"))).alias("term")
     )
     n_total = df.select(F.count(F.lit(1)).alias("__n"))
-    tl = present.groupBy("term", label_col).agg(
-        F.count(F.lit(1)).alias("a")
-    )
+    tl = present.groupBy("term", "lang").agg(F.count(F.lit(1)).alias("a"))
     # terms in EVERY doc (and labels covering every doc) make a
     # zero-width margin — chi2 is undefined and the feature carries no
     # information; exclude them rather than divide by zero under ANSI
@@ -1207,7 +1128,7 @@ def chi2_term_selection(
         .drop("__n")
     )
     lab = (
-        df.groupBy(label_col)
+        df.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_label"))
         .crossJoin(F.broadcast(n_total))
         .filter(F.col("n_label") < F.col("__n"))
@@ -1215,7 +1136,7 @@ def chi2_term_selection(
     )
     j = (
         tl.join(t, on="term")
-        .join(F.broadcast(lab), on=label_col)
+        .join(F.broadcast(lab), on="lang")
         .crossJoin(F.broadcast(n_total))
     )
     a = F.col("a")
@@ -1230,23 +1151,19 @@ def chi2_term_selection(
         6,
     ) + F.lit(0.0)
     scored = j.select(
-        label_col, "term", a.alias("n_with"), "n_term", "n_label",
+        "lang", "term", a.alias("n_with"), "n_term", "n_label",
         chi2.alias("chi2"),
     )
-    w = Window.partitionBy(label_col).orderBy(
-        F.col("chi2").desc(), F.col("term").asc()
-    )
+    w = Window.partitionBy("lang").orderBy(F.col("chi2").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(label_col, "term", "n_with", "n_term", "n_label", "chi2", "rank")
+        .filter(F.col("rank") <= 3)
+        .select("lang", "term", "n_with", "n_term", "n_label", "chi2", "rank")
     )
 
 
 def oov_rate(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     vocab_size: int = 64,
 ) -> DataFrame:
     """Per-document out-of-vocabulary rate against the corpus's own
@@ -1262,9 +1179,7 @@ def oov_rate(
     shuffle. Ties at the vocabulary boundary break lexicographically
     so the vocab set is engine-deterministic.
     """
-    toks = df.select(
-        F.col(id_col), F.explode(_ws_tokens(text_col)).alias("term")
-    )
+    toks = df.select(F.col("doc_id"), F.explode(_ws_tokens("text")).alias("term"))
     vocab = (
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1274,7 +1189,7 @@ def oov_rate(
     )
     return (
         toks.join(F.broadcast(vocab), "term", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum(F.when(F.col("_inv").isNull(), 1).otherwise(0))
@@ -1282,7 +1197,7 @@ def oov_rate(
             .alias("n_oov"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "n_oov",
             (F.round(F.col("n_oov") / F.col("n_tokens"), 6) + F.lit(0.0)).alias(
@@ -1295,7 +1210,6 @@ def oov_rate(
 def bigram_logprob_score(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-doc average negative log-probability under an add-one-
     smoothed bigram LM trained on the corpus itself — one model order
@@ -1315,16 +1229,14 @@ def bigram_logprob_score(
     shuffles on the bigram key — broadcast the frequent head for a
     Zipf-heavy corpus, as with the unigram scorer.
     """
-    bi = df.select(
-        F.col(id_col), F.explode(_word_bigrams(text_col)).alias("gram")
-    )
+    bi = df.select(F.col(id_col), F.explode(_word_bigrams()).alias("gram"))
     bi = pin(bi)  # corpus counts AND the score join
     c_bi = bi.groupBy("gram").agg(F.count(F.lit(1)).alias("c_ab"))
     c_left = (
         c_bi.groupBy(F.split("gram", " ").getItem(0).alias("w1"))
         .agg(F.sum("c_ab").alias("c_w1"))
     )
-    v = df.select(F.explode(_ws_tokens(text_col)).alias("t")).agg(
+    v = df.select(F.explode(_ws_tokens("text")).alias("t")).agg(
         F.count_distinct("t").alias("v")
     )
     logp = (
@@ -1356,7 +1268,6 @@ def bigram_logprob_score(
 
 def zipf_fit(
     df: DataFrame,
-    text_col: str = "text",
     top_n: int = 128,
 ) -> DataFrame:
     """Zipf's-law fit of the corpus token distribution: OLS slope of
@@ -1377,7 +1288,7 @@ def zipf_fit(
     from nhl_data_warehouse_spark.operators.regression import grouped_ols
 
     counts = (
-        df.select(F.explode(_ws_tokens(text_col)).alias("term"))
+        df.select(F.explode(_ws_tokens("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), F.col("term").asc())
@@ -1404,9 +1315,6 @@ def zipf_fit(
 def dsir_logratio_weights(
     df: DataFrame,
     target_pred: F.Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every
@@ -1417,7 +1325,7 @@ def dsir_logratio_weights(
     both distributions are estimated from the corpus itself, so no
     side model is needed.
 
-    Tokens hash into ``n_buckets`` buckets (first 4 hex chars of md5,
+    Tokens hash into ``_N_BUCKETS`` buckets (first 4 hex chars of md5,
     mod B — collisions are the point: the feature space stays bounded
     regardless of vocabulary size). Bucket log-probs are add-one
     smoothed, each ln rounded to 6 dp (the suite's decimal-ln
@@ -1432,11 +1340,11 @@ def dsir_logratio_weights(
     No vocabulary-sized state crosses the wire, unlike the
     unsmoothed-vocab variant in ``unigram_logprob_score``.
     """
-    b_total = int(n_buckets)
+    b_total = int(_N_BUCKETS)
     toks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         target_pred.alias("_is_t"),
-        F.explode(_ws_tokens(text_col)).alias("tok"),
+        F.explode(_ws_tokens("text")).alias("tok"),
     ).withColumn(
         "_b",
         F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("long")
@@ -1471,7 +1379,7 @@ def dsir_logratio_weights(
     )
     return (
         toks.join(F.broadcast(lr), on="_b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("_lr").cast("double").alias("dsir_logratio"),
@@ -1480,12 +1388,7 @@ def dsir_logratio_weights(
     )
 
 
-def nfc_normalize(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "norm_text",
-) -> DataFrame:
+def nfc_normalize(df: DataFrame) -> DataFrame:
     """Unicode NFC normalization — the canonical-composition pass a
     multilingual corpus needs before ANY hashing/dedup/tokenization
     (the same text can arrive composed or decomposed; é as one
@@ -1514,19 +1417,17 @@ def nfc_normalize(
         return s.str.normalize("NFC")
 
     out = df.select(
-        F.col(id_col), F.col(text_col), _nfc(F.col(text_col)).alias(out_col)
+        F.col("doc_id"), F.col("text"), _nfc(F.col("text")).alias("norm_text")
     )
     return out.select(
-        id_col,
-        out_col,
-        (F.col(out_col) != F.col(text_col)).alias("changed"),
+        "doc_id",
+        "norm_text",
+        (F.col("norm_text") != F.col("text")).alias("changed"),
     )
 
 
 def fim_split(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_len: int = 20,
 ) -> DataFrame:
     """Deterministic fill-in-the-middle (FIM) transformation — the
@@ -1546,7 +1447,7 @@ def fim_split(
     (md5, conv, substring, concat) is JVM codegen and has an exact
     SQL mirror.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     L = F.length(t)
     h = F.md5(t)
     a = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % (L + 1)
@@ -1557,7 +1458,7 @@ def fim_split(
     middle = F.when(is_fim, t.substr(c1 + 1, c2 - c1)).otherwise(F.lit(""))
     suffix = F.when(is_fim, t.substr(c2 + 1, L - c2)).otherwise(F.lit(""))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(is_fim, F.lit("fim")).otherwise(F.lit("plain")).alias("mode"),
         prefix.alias("prefix"),
         middle.alias("middle"),
@@ -1574,9 +1475,7 @@ def fim_split(
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
-def gopher_gates(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_gates(df: DataFrame) -> DataFrame:
     """Gopher-style rule gates per document (the published pre-filter
     recipe for web-scale training corpora): word-count band, mean word
     length band, alphabetic-word fraction, symbol-to-word ratio, and
@@ -1595,7 +1494,7 @@ def gopher_gates(
     split, no shuffle, no UDF; filters on the output push down to the
     parquet scan of the boolean columns once materialized.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     tokens = F.filter(F.split(text, r"\s+"), lambda t: t != "")
     n_words = F.size(tokens).cast("long")
     sum_tok_len = F.aggregate(
@@ -1620,7 +1519,7 @@ def gopher_gates(
     g_sym = 10 * n_symbols <= n_words
     g_stop = stop_hits >= 2
     return df.select(
-        id_col,
+        "doc_id",
         n_words.alias("n_words"),
         n_alpha.alias("n_alpha_words"),
         n_symbols.alias("n_symbols"),
@@ -1634,9 +1533,7 @@ def gopher_gates(
     )
 
 
-def type_token_ratio(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def type_token_ratio(df: DataFrame) -> DataFrame:
     """Lexical-diversity features per document: type-token ratio
     (distinct lowercased tokens / tokens) and hapax fraction (tokens
     occurring exactly once / types) — low TTR flags template/spam
@@ -1650,22 +1547,20 @@ def type_token_ratio(
     counts (engine-stable), NULL on empty docs.
     """
     toks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-            )
+            F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
         ).alias("tok"),
     )
-    tf = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
-    per = tf.groupBy(id_col).agg(
+    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+    per = tf.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_types"),
         F.sum((F.col("c") == 1).cast("long")).cast("long").alias("n_hapax"),
     )
-    joined = df.select(id_col).join(per, on=id_col, how="left")
+    joined = df.select("doc_id").join(per, on="doc_id", how="left")
     return joined.select(
-        id_col,
+        "doc_id",
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
         F.coalesce("n_types", F.lit(0)).alias("n_types"),
         F.coalesce("n_hapax", F.lit(0)).alias("n_hapax"),
@@ -1680,15 +1575,9 @@ def type_token_ratio(
     )
 
 
-def cross_lang_gram_overlap(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    n: int = 4,
-) -> DataFrame:
+def cross_lang_gram_overlap(df: DataFrame) -> DataFrame:
     """Cross-language n-gram overlap: for every unordered language
-    pair, the count and Jaccard of distinct word n-grams occurring in
+    pair, the count and Jaccard of distinct word 4-grams occurring in
     BOTH languages' documents — the translation-leak / boilerplate
     screen that per-split decontamination misses (a benchmark
     translated into another language shares no 8-gram with the
@@ -1707,10 +1596,9 @@ def cross_lang_gram_overlap(
     # to pick up one dim column that was sitting on the source row all
     # along (guide §2.4: remove shuffles outright)
     gl = word_ngrams(
-        df.select(F.col(lang_col).alias("lg"), F.col(text_col)),
+        df.select(F.col("lang").alias("lg"), F.col("text")),
         id_col="lg",
-        text_col=text_col,
-        n=n,
+        n=4,
     ).distinct()
     counts = gl.groupBy("lg").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams")
@@ -1749,9 +1637,6 @@ def cross_lang_gram_overlap(
 def heldout_unigram_nll(
     df: DataFrame,
     ref_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    add_k: int = 1,
 ) -> DataFrame:
     """Per-doc mean negative log-likelihood under an add-k-smoothed
     unigram LM trained on a HELD-OUT reference corpus — the CCNet
@@ -1782,24 +1667,18 @@ def heldout_unigram_nll(
     and join only the tail, as with the in-corpus scorers. OOV
     handling is a LEFT join + coalesce, not a second pass.
     """
-    vocab, totals = _ref_vocab(ref_df, text_col)
-    toks = df.select(
-        F.col(id_col), F.explode(_ws_tokens(text_col)).alias("tok")
-    )
-    denom = (
-        F.col("n_ref") + F.lit(add_k) * (F.col("v_ref") + 1)
-    ).cast("double")
+    vocab, totals = _ref_vocab(ref_df, "text")
+    toks = df.select(F.col("doc_id"), F.explode(_ws_tokens("text")).alias("tok"))
+    denom = (F.col("n_ref") + F.lit(_ADD_K) * (F.col("v_ref") + 1)).cast("double")
     scored = (
         toks.join(vocab, on="tok", how="left")
         .crossJoin(F.broadcast(totals))
         .select(
-            id_col,
+            "doc_id",
             F.col("c").isNull().cast("long").alias("_oov"),
             F.round(
                 F.log(
-                    (F.coalesce(F.col("c"), F.lit(0)) + F.lit(add_k)).cast(
-                        "double"
-                    )
+                    (F.coalesce(F.col("c"), F.lit(0)) + F.lit(_ADD_K)).cast("double")
                     / denom
                 ),
                 6,
@@ -1808,16 +1687,12 @@ def heldout_unigram_nll(
             .alias("_logp"),
         )
     )
-    return _nll_report(scored, id_col, "_oov", ("n_tokens", "oov_tokens", "avg_nll"))
+    return _nll_report(scored, "_oov", ("n_tokens", "oov_tokens", "avg_nll"))
 
 
 def heldout_interp_bigram_nll(
     df: DataFrame,
     ref_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lam: float = 0.75,
-    add_k: int = 1,
 ) -> DataFrame:
     """Per-doc mean NLL under a Jelinek-Mercer INTERPOLATED bigram LM
     trained on a held-out reference — one model order beyond
@@ -1831,7 +1706,7 @@ def heldout_interp_bigram_nll(
     Kneser-Ney; the interpolation structure, context sparsity, and
     OOV handling — the parts that change the PLAN — are all here).
 
-    ``lam`` should be dyadic (default 0.75) so lam and 1-lam are
+    lam = 0.75 is dyadic, so lam and 1-lam are
     exact doubles; every probability is a single division of exact
     integer counts and the interpolation is one fixed-order
     fused-free expression, identical on any engine; ln rounds to
@@ -1846,10 +1721,10 @@ def heldout_interp_bigram_nll(
     context, unigram) — the Zipf-head broadcast stance of the other
     LM scorers applies to all three.
     """
-    one_minus = 1.0 - lam
-    vocab, totals = _ref_vocab(ref_df, text_col)
+    one_minus = 1.0 - 0.75
+    vocab, totals = _ref_vocab(ref_df, "text")
     cb = (
-        ref_df.select(F.explode(_word_bigrams(text_col)).alias("gram"))
+        ref_df.select(F.explode(_word_bigrams()).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("c_ab"))
     )
@@ -1857,10 +1732,8 @@ def heldout_interp_bigram_nll(
     cl = cb.groupBy(
         F.split("gram", " ").getItem(0).alias("w1")
     ).agg(F.sum("c_ab").alias("c_w1"))
-    tgt = df.select(
-        F.col(id_col), F.explode(_word_bigrams(text_col)).alias("gram")
-    ).select(
-        id_col,
+    tgt = df.select(F.col("doc_id"), F.explode(_word_bigrams()).alias("gram")).select(
+        "doc_id",
         "gram",
         F.split("gram", " ").getItem(0).alias("w1"),
         F.split("gram", " ").getItem(1).alias("w2"),
@@ -1868,10 +1741,8 @@ def heldout_interp_bigram_nll(
     p_bi = F.coalesce(F.col("c_ab"), F.lit(0)).cast("double") / F.coalesce(
         F.col("c_w1"), F.lit(1)
     ).cast("double")
-    p_uni = (
-        F.coalesce(F.col("c"), F.lit(0)) + F.lit(add_k)
-    ).cast("double") / (
-        F.col("n_ref") + F.lit(add_k) * (F.col("v_ref") + 1)
+    p_uni = (F.coalesce(F.col("c"), F.lit(0)) + F.lit(_ADD_K)).cast("double") / (
+        F.col("n_ref") + F.lit(_ADD_K) * (F.col("v_ref") + 1)
     ).cast("double")
     scored = (
         tgt.join(cb, on="gram", how="left")
@@ -1879,15 +1750,13 @@ def heldout_interp_bigram_nll(
         .join(vocab.withColumnRenamed("tok", "w2"), on="w2", how="left")
         .crossJoin(F.broadcast(totals))
         .select(
-            id_col,
+            "doc_id",
             F.col("c_ab").isNull().cast("long").alias("_unseen"),
-            F.round(
-                F.log(F.lit(lam) * p_bi + F.lit(one_minus) * p_uni), 6
-            )
+            F.round(F.log(F.lit(0.75) * p_bi + F.lit(one_minus) * p_uni), 6)
             .cast("decimal(12,6)")
             .alias("_logp"),
         )
     )
     return _nll_report(
-        scored, id_col, "_unseen", ("n_bigrams", "unseen_bigrams", "avg_interp_nll")
+        scored, "_unseen", ("n_bigrams", "unseen_bigrams", "avg_interp_nll")
     )

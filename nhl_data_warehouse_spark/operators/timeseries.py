@@ -23,6 +23,13 @@ from pyspark.sql.window import Window
 from nhl_data_warehouse_spark.operators.caching import pin
 from nhl_data_warehouse_spark.operators.stats import ordered_sum
 
+# fixed-point grain of the money-valued series: cents
+_CENTS = 100
+# hash buckets the per-key recursions are grouped into (one pandas
+# frame each), and the smoothing factor of both recursions
+_N_BUCKETS = 256
+_ALPHA = 0.5
+
 
 def gap_fill(
     daily: DataFrame,
@@ -73,9 +80,8 @@ def rolling_days(
     key_col: str,
     day_col: str,
     value_col: str,
-    days: int = 7,
 ) -> DataFrame:
-    """Trailing ``days``-day rolling sum/count/avg of ``value_col``
+    """Trailing 7-day rolling sum/count/avg of ``value_col``
     per key — a RANGE window over epoch days, so gaps in the calendar
     shorten the frame (true time-range semantics, not N-rows). The
     average divides the exact windowed sum once, as double.
@@ -84,7 +90,7 @@ def rolling_days(
     w = (
         Window.partitionBy(key_col)
         .orderBy(day_num)
-        .rangeBetween(-(days - 1), 0)
+        .rangeBetween(-6, 0)
     )
     rsum = F.sum(F.col(value_col).cast("decimal(18,2)")).over(w)
     rcnt = F.count(F.col(value_col)).over(w)
@@ -92,19 +98,13 @@ def rolling_days(
         key_col,
         day_col,
         F.col(value_col),
-        rsum.alias(f"rolling_{days}d_sum"),
-        rcnt.alias(f"rolling_{days}d_n"),
-        (rsum.cast("double") / rcnt).alias(f"rolling_{days}d_avg"),
+        rsum.alias("rolling_7d_sum"),
+        rcnt.alias("rolling_7d_n"),
+        (rsum.cast("double") / rcnt).alias("rolling_7d_avg"),
     )
 
 
-def time_weighted_avg(
-    events: DataFrame,
-    key_col: str = "user_id",
-    time_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def time_weighted_avg(events: DataFrame) -> DataFrame:
     """Time-weighted average per key (the TimescaleDB ``time_weight``
     shape, LOCF weighting): each observation holds its value until the
     next one, so the mean weights every value by how LONG it was
@@ -118,23 +118,21 @@ def time_weighted_avg(
     exact integer microseconds, value carried as DECIMAL through the
     weighted sum; ONE double division at the end.
     """
-    w = Window.partitionBy(key_col).orderBy(time_col, tiebreak_col)
-    dur_us = F.unix_micros(F.lead(time_col).over(w)) - F.unix_micros(
-        F.col(time_col)
-    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    dur_us = F.unix_micros(F.lead("ts").over(w)) - F.unix_micros(F.col("ts"))
     weighted = events.select(
-        key_col,
-        F.col(value_col).cast("decimal(18,2)").alias("_v"),
+        "user_id",
+        F.col("value").cast("decimal(18,2)").alias("_v"),
         dur_us.alias("_dur_us"),
     ).filter(F.col("_dur_us").isNotNull())
     return (
-        weighted.groupBy(key_col)
+        weighted.groupBy("user_id")
         .agg(
             F.sum(F.col("_v") * F.col("_dur_us")).alias("_wsum"),
             F.sum("_dur_us").alias("_tot_us"),
         )
         .select(
-            key_col,
+            "user_id",
             # 6dp-rounded: the weighted sum exceeds 2^53, and DuckDB's
             # decimal->double cast double-rounds there (int128 then
             # /scale) while the JVM's BigDecimal cast rounds once — a
@@ -150,11 +148,7 @@ def time_weighted_avg(
     )
 
 
-def km_survival(
-    df: DataFrame,
-    duration_col: str = "duration",
-    event_col: str = "observed",
-) -> DataFrame:
+def km_survival(df: DataFrame) -> DataFrame:
     """Kaplan-Meier survival estimator over (duration, observed)
     spells — observed=1 is a completed event, 0 a right-censored
     spell. Emits one row per distinct duration t with the at-risk
@@ -172,11 +166,11 @@ def km_survival(
     """
     from pyspark.sql.window import Window
 
-    t = F.col(duration_col)
-    per_t = df.groupBy(duration_col).agg(
+    t = F.col("duration")
+    per_t = df.groupBy("duration").agg(
         F.count(F.lit(1)).alias("_m"),
-        F.sum(F.col(event_col).cast("long")).alias("n_events"),
-        F.sum(F.lit(1) - F.col(event_col).cast("long")).alias("n_censored"),
+        F.sum(F.col("observed").cast("long")).alias("n_events"),
+        F.sum(F.lit(1) - F.col("observed").cast("long")).alias("n_censored"),
     )
     # windows over the distinct-durations relation only
     w = Window.orderBy(t)
@@ -222,15 +216,13 @@ def ewma(
     key_col: str,
     order_col: str,
     value_col: str,
-    alpha: float = 0.5,
     out_col: str = "ewma",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Exponentially weighted moving average per key, seeded at the
     first observation: ``y_t = alpha*x_t + (1-alpha)*y_{t-1}`` with
-    ``y_0 = x_0`` (pandas ``ewm(adjust=False)`` semantics) — the
-    smoothing/anomaly-baseline primitive SQL windows cannot express
-    (the recursion has unbounded depth).
+    ``y_0 = x_0`` and alpha = ``_ALPHA`` (pandas ``ewm(adjust=False)``
+    semantics) — the smoothing/anomaly-baseline primitive SQL windows
+    cannot express (the recursion has unbounded depth).
 
     Implemented as ``applyInPandas`` over COARSE key buckets, not raw
     keys: per-group Python dispatch costs ~1 ms, so millions of tiny
@@ -241,7 +233,7 @@ def ewma(
     which reproduces the explicit loop bit-for-bit: per step it forms
     the same two products and one commutative IEEE add. Buckets
     partition the shuffle; a bucket (not just a key) must fit one
-    task — size ``n_buckets`` to the cluster (same contract as any
+    task — size ``_N_BUCKETS`` to the cluster (same contract as any
     hash-partitioned grouped-map).
 
     Determinism: the recursion is evaluated left-to-right in every
@@ -251,15 +243,14 @@ def ewma(
     (NaN propagation differs between pandas' ignore_na handling and a
     plain recursion).
 
-    Caveat — the bit-for-bit contract holds only for alphas where
-    ``alpha`` and ``1-alpha`` are both exactly representable AND sum
-    to exactly 1.0 in doubles (0.5, 0.25, 0.75, ...). pandas'
+    The bit-for-bit contract holds only for alphas where ``alpha`` and
+    ``1-alpha`` are both exactly representable AND sum to exactly 1.0
+    in doubles (0.5, 0.25, 0.75, ...). pandas'
     ``adjust=False`` Cython kernel divides each step by
     ``(1-alpha)+alpha``, which is a no-op only when that sum is
     exactly 1.0; for e.g. alpha=0.3 it is 0.99999999999999989 and the
     result can differ in the last ulp from the plain recursion an
-    oracle runs. Callers needing cross-engine exactness at arbitrary
-    alpha should compare with a tolerance or pick an FP-exact alpha.
+    oracle runs — why ``_ALPHA`` is 0.5.
     """
     import pandas as pd  # noqa: F401 — applyInPandas contract
 
@@ -270,14 +261,14 @@ def ewma(
         pdf = pdf.sort_values([key_col, order_col]).reset_index(drop=True)
         pdf[out_col] = (
             pdf.groupby(key_col, sort=False)[value_col]
-            .ewm(alpha=alpha, adjust=False)
+            .ewm(alpha=_ALPHA, adjust=False)
             .mean()
             .to_numpy()
         )
         return pdf
 
     bucketed = df.withColumn(
-        "__kb", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+        "__kb", F.pmod(F.xxhash64(F.col(key_col)), F.lit(_N_BUCKETS))
     )
     out = bucketed.groupBy("__kb").applyInPandas(smooth, f"__kb bigint, {schema}")
     return out.drop("__kb")
@@ -286,18 +277,14 @@ def ewma(
 def holt_linear(
     df: DataFrame,
     key_col: str,
-    order_col: str,
     value_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Holt's linear (double-exponential) smoothing per key — the
     level+trend extension of ``ewma`` for series that drift: l_t =
     alpha*y_t + (1-alpha)*(l_{t-1} + b_{t-1}), b_t = beta*(l_t -
-    l_{t-1}) + (1-beta)*b_{t-1}, seeded l_1 = y_1, b_1 = 0. Emits
-    the running level, trend, and the one-step forecast l + b per
-    observation — the anomaly baseline that keeps up with a trending
+    l_{t-1}) + (1-beta)*b_{t-1}, seeded l_1 = y_1, b_1 = 0, with
+    alpha = ``_ALPHA`` and beta = 0.25. Emits the running level,
+    trend, and the one-step forecast l + b per observation — the anomaly baseline that keeps up with a trending
     series where plain EWMA lags by a constant.
 
     Same dispatch economics as ``ewma``: ``applyInPandas`` over
@@ -312,8 +299,8 @@ def holt_linear(
     updates fields in place mid-lambda, silently corrupting any
     recursion whose fields read each other's old values).
 
-    Alpha/beta must be FP-exact pairs (0.5/0.25 etc.) for the
-    bit-for-bit contract — the ewma caveat verbatim.
+    Alpha and beta are FP-exact (0.5 and 0.25) for the bit-for-bit
+    contract — the ewma caveat verbatim.
     """
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema
@@ -322,12 +309,12 @@ def holt_linear(
         f"{fields}, holt_level double, holt_trend double,"
         " holt_forecast double"
     )
-    a, bt = float(alpha), float(beta)
+    a, bt = _ALPHA, 0.25
 
     def smooth(pdf):
         import numpy as np
 
-        pdf = pdf.sort_values([key_col, order_col]).reset_index(drop=True)
+        pdf = pdf.sort_values([key_col, "month"]).reset_index(drop=True)
         vals = pdf[value_col].to_numpy(dtype="float64")
         keys = pdf[key_col].to_numpy()
         lev = np.empty(len(pdf))
@@ -351,7 +338,7 @@ def holt_linear(
         return pdf
 
     bucketed = df.withColumn(
-        "__kb", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+        "__kb", F.pmod(F.xxhash64(F.col(key_col)), F.lit(_N_BUCKETS))
     )
     out = bucketed.groupBy("__kb").applyInPandas(
         smooth, f"__kb bigint, {schema}"
@@ -363,8 +350,6 @@ def cusum_positive(
     df: DataFrame,
     order_col: str,
     value_col: str,
-    k_col: str = "k",
-    out_col: str = "cusum",
 ) -> DataFrame:
     """One-sided (positive) CUSUM drift statistic over an ORDERED,
     BOUNDED relation (daily/monthly aggregates — reduce the row-scale
@@ -383,21 +368,19 @@ def cusum_positive(
     reduction has already happened — same bounded-relation pattern as
     the suite's month-over-month queries, not a row-scale window.
     """
-    x, k = F.col(value_col), F.col(k_col)
+    x, k = F.col(value_col), F.col("k")
     w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
     c = F.sum(x - k).over(w)
     out = df.withColumn("__c", c).withColumn(
         "__trough", F.least(F.lit(0).cast("long"), F.min("__c").over(w))
     )
-    return out.withColumn(out_col, F.col("__c") - F.col("__trough")).drop(
+    return out.withColumn("cusum", F.col("__c") - F.col("__trough")).drop(
         "__c", "__trough"
     )
 
 
 def day_bitmask_retention(
     df: DataFrame,
-    user_col: str,
-    ts_col: str,
     n_days: int = 29,
 ) -> DataFrame:
     """Day-over-day retention from per-user activity BITMASKS.
@@ -414,10 +397,8 @@ def day_bitmask_retention(
     Output: (day_of_month, n_active, n_retained, retention) for days
     1..n_days, retention = retained/active as one raw division.
     """
-    masks = df.groupBy(user_col).agg(
-        F.expr(
-            f"bit_or(shiftleft(CAST(1 AS BIGINT), day({ts_col}) - 1))"
-        ).alias("mask")
+    masks = df.groupBy("user_id").agg(
+        F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), day(ts) - 1))").alias("mask")
     )
     flags = masks.select(
         F.explode(F.sequence(F.lit(1), F.lit(n_days))).alias("d"), "mask"
@@ -518,8 +499,6 @@ def linear_interpolate(
 
 def cusum_peak(
     df: DataFrame,
-    time_col: str,
-    value_col: str,
     cents_scale: int = 100,
 ) -> DataFrame:
     """CUSUM drift/changepoint screen over an integer-valued series
@@ -544,7 +523,7 @@ def cusum_peak(
     Output (one row): n_days, peak_day, peak_cusum (signed, in
     value units — cents/``cents_scale``), mean_daily (same units).
     """
-    cum, tot = _cusum_parts(df, time_col, value_col)
+    cum, tot = _cusum_parts(df)
     scaled = cum.crossJoin(F.broadcast(tot)).select(
         "d", "n_days", "t", _cusum_sc()
     )
@@ -557,27 +536,25 @@ def cusum_peak(
     return _cusum_report(at_peak, cents_scale)
 
 
-def _cusum_parts(
-    df: DataFrame, time_col: str, value_col: str, *group_cols: str
-) -> tuple[DataFrame, DataFrame]:
+def _cusum_parts(df: DataFrame, *group_cols: str) -> tuple[DataFrame, DataFrame]:
     """Per day ``d`` (within slice ``g`` of ``group_cols``): the
     running value sum ``s`` and day index ``idx`` in DECIMAL(38,0);
     and per slice the day count ``n_days`` and value total ``t``."""
     w = (
         Window.partitionBy(*group_cols)
-        .orderBy(time_col)
+        .orderBy("d")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     g = [F.col(c).alias("g") for c in group_cols]
     cum = df.select(
         *g,
-        F.col(time_col).alias("d"),
-        F.sum(value_col).over(w).cast("decimal(38,0)").alias("s"),
+        F.col("d").alias("d"),
+        F.sum("x").over(w).cast("decimal(38,0)").alias("s"),
         F.count(F.lit(1)).over(w).cast("decimal(38,0)").alias("idx"),
     )
     tot = df.groupBy(*g).agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum(value_col).cast("long").alias("t"),
+        F.sum("x").cast("long").alias("t"),
     )
     return cum, tot
 
@@ -615,8 +592,6 @@ def _cusum_report(at_peak: DataFrame, cents_scale: int, *keys: str) -> DataFrame
 def grouped_cusum_peak(
     df: DataFrame,
     group_col: str,
-    time_col: str,
-    value_col: str,
     cents_scale: int = 100,
 ) -> DataFrame:
     """``cusum_peak`` with every stage keyed by ``group_col`` — the
@@ -635,7 +610,7 @@ def grouped_cusum_peak(
     ``group_col`` where a forced broadcast would ship a data-sized
     relation to every executor (ADVICE r9).
     """
-    cum, tot = _cusum_parts(df, time_col, value_col, group_col)
+    cum, tot = _cusum_parts(df, group_col)
     scaled = cum.join(tot, on="g").select("g", "d", "n_days", "t", _cusum_sc())
     peak = scaled.groupBy("g").agg(F.max(F.abs(F.col("sc"))).alias("pk"))
     at_peak = scaled.join(peak, on="g").where(
@@ -646,11 +621,7 @@ def grouped_cusum_peak(
     )
 
 
-def theil_sen_trend(
-    df: DataFrame,
-    time_col: str,
-    value_col: str,
-) -> DataFrame:
+def theil_sen_trend(df: DataFrame) -> DataFrame:
     """Theil-Sen robust trend of a day-grain series — the median of
     all pairwise slopes, with the median intercept of the residuals:
     the outlier-proof alternative to OLS (a single corrupted day
@@ -678,8 +649,8 @@ def theil_sen_trend(
 
     q = 1_000_000.0
     daily = df.select(
-        F.unix_date(F.col(time_col).cast("date")).cast("long").alias("de"),
-        F.col(value_col).cast("long").alias("x"),
+        F.unix_date(F.col("d").cast("date")).cast("long").alias("de"),
+        F.col("x").cast("long").alias("x"),
     )
     # The pair theta-join fans every probe row out against the whole
     # broadcast day relation: D rows of input become D(D-1)/2 slope
@@ -755,7 +726,6 @@ def theil_sen_trend(
 def autocorrelation(
     series: DataFrame,
     t_col: str,
-    value_col: str,
     max_lag: int = 7,
 ) -> DataFrame:
     """Sample autocorrelation r_k for k = 1..max_lag over an integer-
@@ -782,7 +752,7 @@ def autocorrelation(
     """
     w = Window.orderBy(t_col)
     x = series.select(
-        F.col(value_col).cast("long").alias("x"),
+        F.col("x").cast("long").alias("x"),
         F.row_number().over(w).alias("t"),
     )
     leads = x.select(
@@ -829,22 +799,21 @@ def seasonal_naive_backtest(
     df: DataFrame,
     date_col: str,
     value_col: str,
-    season: int = 7,
     split_date: str = "1997-01-01",
-    scale: int = 100,
 ) -> DataFrame:
     """Forecast-quality gate: MASE and sMAPE of the seasonal-naive
-    forecast (f(d) = y(d - season)) on a train/eval date split — the
-    standard backtest a pipeline runs BEFORE trusting any fancier
-    model, and the denominator convention (MASE scales eval error by
-    the train-period naive error) every forecasting benchmark uses.
+    forecast (f(d) = y(d - 7), a weekly season) on a train/eval date
+    split — the standard backtest a pipeline runs BEFORE trusting any
+    fancier model, and the denominator convention (MASE scales eval
+    error by the train-period naive error) every forecasting
+    benchmark uses.
     MASE < 1 means the candidate beats persistence; this operator
     scores persistence itself so the threshold is calibrated on the
     actual series.
 
     Determinism: daily totals are exact integer cents; the forecast
     join is an equi-join on the shifted DATE key (no window at all —
-    day d meets day d-season by key, so gaps self-exclude
+    day d meets day d-7 by key, so gaps self-exclude
     identically on both engines); absolute errors are integers; MASE
     is one fixed-order double expression of four exact integers.
     sMAPE terms 2|e|/(y+f) are per-day single divisions rounded 12dp
@@ -857,13 +826,11 @@ def seasonal_naive_backtest(
     aggregate. Nothing row-scale crosses a window.
     """
     daily = df.groupBy(F.col(date_col).cast("date").alias("d")).agg(
-        F.sum(F.round(F.col(value_col) * scale).cast("long"))
+        F.sum(F.round(F.col(value_col) * _CENTS).cast("long"))
         .cast("long")
         .alias("v")
     )
-    fc = daily.select(
-        F.date_add("d", season).alias("d"), F.col("v").alias("f")
-    )
+    fc = daily.select(F.date_add("d", 7).alias("d"), F.col("v").alias("f"))
     j = daily.join(fc, on="d")
     e = F.abs(F.col("v") - F.col("f"))
     is_eval = F.col("d") >= F.lit(split_date).cast("date")
@@ -907,8 +874,6 @@ def dow_seasonal_anomalies(
     df: DataFrame,
     time_col: str,
     value_col: str,
-    z_threshold: float = 1.5,
-    cents_scale: int = 100,
 ) -> DataFrame:
     """Seasonal-naive anomaly detection on a daily series: each day's
     total is z-scored against ITS DAY-OF-WEEK's population moments, so
@@ -929,7 +894,7 @@ def dow_seasonal_anomalies(
     broadcasts it. No windows, no unpartitioned stages.
     """
     daily = df.groupBy(F.col(time_col).cast("date").alias("d")).agg(
-        F.sum(F.round(F.col(value_col) * cents_scale).cast("long"))
+        F.sum(F.round(F.col(value_col) * _CENTS).cast("long"))
         .cast("long")
         .alias("v")
     )
@@ -961,12 +926,10 @@ def dow_seasonal_anomalies(
         .select(
             "d",
             "dow",
-            F.expr(f"CAST(v AS DOUBLE) / {float(cents_scale)}").alias(
-                "day_total"
-            ),
+            F.expr(f"CAST(v AS DOUBLE) / {float(_CENTS)}").alias("day_total"),
             z.alias("z"),
         )
-        .filter(F.abs(F.col("z")) > z_threshold)
+        .filter(F.abs(F.col("z")) > 1.5)
     )
 
 
@@ -974,7 +937,6 @@ def seasonal_decompose_daily(
     df: DataFrame,
     time_col: str,
     value_col: str,
-    cents_scale: int = 100,
 ) -> DataFrame:
     """Classical additive decomposition of a daily series into trend +
     weekly seasonal + residual: trend is the 7-day CENTERED moving
@@ -995,7 +957,7 @@ def seasonal_decompose_daily(
     ACF/CUSUM contract: days don't multiply as rows grow).
     """
     daily = df.groupBy(F.col(time_col).cast("date").alias("d")).agg(
-        F.sum(F.round(F.col(value_col) * cents_scale).cast("long"))
+        F.sum(F.round(F.col(value_col) * _CENTS).cast("long"))
         .cast("long")
         .alias("v")
     )
@@ -1022,7 +984,7 @@ def seasonal_decompose_daily(
             "dow",
             F.expr(
                 f"CAST(sd7 AS DOUBLE) / (CAST(nd AS DOUBLE) * 7.0"
-                f" * {float(cents_scale)})"
+                f" * {float(_CENTS)})"
             ).alias("raw_seasonal"),
         )
     )
@@ -1041,28 +1003,19 @@ def seasonal_decompose_daily(
         .select(
             "d",
             "dow",
-            F.expr(f"CAST(v AS DOUBLE) / {float(cents_scale)}").alias(
-                "day_total"
-            ),
-            F.expr(
-                f"CAST(s7 AS DOUBLE) / (7.0 * {float(cents_scale)})"
-            ).alias("trend"),
+            F.expr(f"CAST(v AS DOUBLE) / {float(_CENTS)}").alias("day_total"),
+            F.expr(f"CAST(s7 AS DOUBLE) / (7.0 * {float(_CENTS)})").alias("trend"),
             "seasonal",
             F.expr(
-                f"CAST(v AS DOUBLE) / {float(cents_scale)}"
-                f" - CAST(s7 AS DOUBLE) / (7.0 * {float(cents_scale)})"
+                f"CAST(v AS DOUBLE) / {float(_CENTS)}"
+                f" - CAST(s7 AS DOUBLE) / (7.0 * {float(_CENTS)})"
                 " - seasonal"
             ).alias("resid"),
         )
     )
 
 
-def logrank_two_sample(
-    df: DataFrame,
-    duration_col: str = "duration",
-    event_col: str = "observed",
-    group1_col: str = "g1",
-) -> DataFrame:
+def logrank_two_sample(df: DataFrame) -> DataFrame:
     """Two-sample log-rank test (Mantel-Cox) over right-censored
     (duration, observed, group) spells — does group 1's survival
     curve differ from the rest's? The hypothesis test COMPANION of
@@ -1089,14 +1042,12 @@ def logrank_two_sample(
     """
     from pyspark.sql.window import Window
 
-    t = F.col(duration_col)
-    per_t = df.groupBy(duration_col).agg(
+    t = F.col("duration")
+    per_t = df.groupBy("duration").agg(
         F.count(F.lit(1)).alias("_m"),
-        F.sum(F.col(group1_col).cast("long")).alias("_m1"),
-        F.sum(F.col(event_col).cast("long")).alias("_d"),
-        F.sum(
-            (F.col(event_col) * F.col(group1_col)).cast("long")
-        ).alias("_d1"),
+        F.sum(F.col("g1").cast("long")).alias("_m1"),
+        F.sum(F.col("observed").cast("long")).alias("_d"),
+        F.sum((F.col("observed") * F.col("g1")).cast("long")).alias("_d1"),
     )
     w = Window.orderBy(t).rowsBetween(
         Window.currentRow, Window.unboundedFollowing

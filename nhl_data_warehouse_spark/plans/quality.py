@@ -17,9 +17,9 @@ class QualityCheckError(AssertionError):
     """A data-quality gate failed; carries the offending counts."""
 
 
-def null_check(df: DataFrame, columns: list[str], equal_to: int = 0) -> dict[str, int]:
+def null_check(df: DataFrame, columns: list[str]) -> dict[str, int]:
     """Count NULLs per column in a single pass; raise if any count
-    differs from ``equal_to`` (reference semantics: the
+    is not 0 (reference semantics: the
     SQLColumnCheckOperator null_check with equal_to=0).
     """
     aggs = [
@@ -27,11 +27,9 @@ def null_check(df: DataFrame, columns: list[str], equal_to: int = 0) -> dict[str
     ]
     row = df.agg(*aggs).collect()[0]
     counts = {c: (row[c] or 0) for c in columns}
-    bad = {c: n for c, n in counts.items() if n != equal_to}
+    bad = {c: n for c, n in counts.items() if n != 0}
     if bad:
-        raise QualityCheckError(
-            f"null_check failed (expected {equal_to}): {bad}"
-        )
+        raise QualityCheckError(f"null_check failed (expected 0): {bad}")
     return counts
 
 
@@ -157,7 +155,6 @@ def observed_write(
     df: DataFrame,
     action,
     null_cols: list[str] | None = None,
-    name: str = "quality",
 ):
     """Quality metrics that ride the MAIN action via ``df.observe``:
     row count + per-column null counts are accumulated DURING whatever
@@ -175,7 +172,7 @@ def observed_write(
     from pyspark.sql import Observation
 
     null_cols = null_cols or []
-    obs = Observation(name)
+    obs = Observation("quality")
     aggs = [F.count(F.lit(1)).alias("n_rows")] + [
         F.sum(F.col(c).isNull().cast("long")).alias(f"n_null_{c}")
         for c in null_cols

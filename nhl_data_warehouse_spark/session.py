@@ -101,29 +101,3 @@ def release_cached(spark: SparkSession) -> None:
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist(False)
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Read the driver's parquet tables and register temp views.
-
-    Returns ``{name: DataFrame}``. Registering views lets operators be
-    written in either DataFrame or SQL form against the same catalog
-    names the DuckDB oracle uses.
-    """
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    from nhl_data_warehouse_spark.suite.registry import load
-
-    out = dict(zip(names, load(spark, sf_dir, *names)))
-    for name, df in out.items():
-        df.createOrReplaceTempView(name)
-    return out

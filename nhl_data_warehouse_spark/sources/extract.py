@@ -152,21 +152,18 @@ def extract_api_endpoint(
     landing_dir: str,
     fetch_json: Callable[[str], dict],
     date_tag: str,
-    require_games: bool | None = None,
 ) -> str | None:
     """S2: fetch one API endpoint document and land it pretty-printed.
 
-    ``require_games`` defaults to True for the schedule endpoints —
-    the reference's empty-payload guard (``nhl_api_dag.py:97-98``
-    skips writing when ``'games'`` is absent). Returns the landed
-    path, or None when the guard skipped the document.
+    The schedule endpoints carry the reference's empty-payload guard
+    (``nhl_api_dag.py:97-98`` skips writing when ``'games'`` is
+    absent). Returns the landed path, or None when the guard skipped
+    the document.
     """
     if endpoint not in API_ENDPOINTS:
         raise ValueError(f"unknown endpoint {endpoint!r}")
-    if require_games is None:
-        require_games = endpoint in ("regular_season", "post_season")
     payload = fetch_json(endpoint)
-    if require_games and "games" not in payload:
+    if endpoint in ("regular_season", "post_season") and "games" not in payload:
         return None
     prefix = os.path.join(landing_dir, API_ENDPOINTS[endpoint])
     os.makedirs(prefix, exist_ok=True)

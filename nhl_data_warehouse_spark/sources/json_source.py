@@ -22,13 +22,12 @@ def load_json_raw(
     spark: SparkSession,
     path_glob: str,
     schema: T.StructType,
-    top_keys: list[str] | None = None,
 ) -> DataFrame:
     """Load staged JSON documents with audit columns + typed projection.
 
     Output columns mirror the reference raw tables
     (``copy_into_nhl_api_seasons.sql:3-9``): ``updated_at, raw_json,
-    unique_key, source_file`` + one column per projected top-level key.
+    unique_key, source_file`` + one column per top-level key of ``schema``.
     ``unique_key = md5(filename || document)`` (reference line 6).
     """
     raw = (
@@ -45,13 +44,12 @@ def load_json_raw(
         "source_file",
         F.from_json("raw_json", schema).alias("doc"),
     )
-    keys = top_keys if top_keys is not None else [f.name for f in schema.fields]
     return parsed.select(
         "updated_at",
         "raw_json",
         "unique_key",
         "source_file",
-        *[F.col(f"doc.{k}").alias(k) for k in keys],
+        *[F.col(f"doc.{f.name}").alias(f.name) for f in schema.fields],
     )
 
 

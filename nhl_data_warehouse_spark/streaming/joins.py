@@ -23,21 +23,18 @@ from pyspark.sql import functions as F
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "r_ts",
     upper: str = "15 minutes",
-    watermark: str = "30 minutes",
     streaming: bool = True,
     how: str = "inner",
 ) -> DataFrame:
-    """Event-time interval join: pair a left event with right events on
-    the same key arriving within (left_ts, left_ts + upper]. State
-    note: the watermark on BOTH inputs plus the bounded time range is
-    what lets the stream-stream join evict buffered rows; choose
-    ``watermark`` >= ``upper`` + max expected skew between streams.
-    On batch frames the same expression is a plain range join
-    (watermarks are no-ops), which the tests use as the twin.
+    """Event-time interval join: pair a left event with the right
+    events of the same ``user_id`` whose ``r_ts`` falls within (ts,
+    ts + upper]. State note: the watermark on BOTH inputs plus the
+    bounded time range is what lets the stream-stream join evict
+    buffered rows; the 30-minute watermark must cover ``upper`` + max
+    expected skew between streams. On batch frames the same expression
+    is a plain range join (watermarks are no-ops), which the tests use
+    as the twin.
 
     ``how="leftOuter"`` additionally emits null-padded left rows whose
     interval produced no match — but ONLY once the watermark passes
@@ -46,19 +43,19 @@ def interval_join_streams(
     watermark past the data (e.g. a far-future heartbeat row in a
     final micro-batch — the sentinel-flush pattern) or the trailing
     unmatched rows stay buffered forever."""
-    lhs = left.withWatermark(left_ts, watermark) if streaming else left
-    rhs = right.withWatermark(right_ts, watermark) if streaming else right
+    lhs = left.withWatermark("ts", "30 minutes") if streaming else left
+    rhs = right.withWatermark("r_ts", "30 minutes") if streaming else right
     cond = (
-        (lhs[key] == rhs[f"r_{key}"])
-        & (rhs[right_ts] > lhs[left_ts])
-        & (rhs[right_ts] <= lhs[left_ts] + F.expr(f"INTERVAL {upper}"))
+        (lhs["user_id"] == rhs["r_user_id"])
+        & (rhs["r_ts"] > lhs["ts"])
+        & (rhs["r_ts"] <= lhs["ts"] + F.expr(f"INTERVAL {upper}"))
     )
     return lhs.join(rhs, cond, how)
 
 
-def enrich_stream(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
+def enrich_stream(stream: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static join: broadcast the dimension under every
     micro-batch so the stream never shuffles. The dim is re-planned
     per batch — updates to the underlying table are visible without
     restarting the query."""
-    return stream.join(F.broadcast(dim), on=on, how="left")
+    return stream.join(F.broadcast(dim), on="user_id", how="left")

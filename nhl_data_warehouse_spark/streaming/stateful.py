@@ -23,7 +23,7 @@ RUNNING_TOTALS_SCHEMA = "user_id long, n_events long, sum_value double"
 _STATE_SCHEMA = "n long, s double"
 
 
-def running_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
+def running_user_totals(events: DataFrame) -> DataFrame:
     """Per-user lifetime event count + value sum, updated every
     micro-batch — the canonical custom-state shape (a feature-store
     style running profile). Input must be a *streaming* DataFrame with
@@ -52,7 +52,7 @@ def running_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFr
         outputStructType=RUNNING_TOTALS_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
+        timeoutConf=getattr(GroupStateTimeout, "NoTimeout"),
     )
 
 

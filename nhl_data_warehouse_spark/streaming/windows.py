@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 def windowed_event_counts(
     events: DataFrame,
-    window_duration: str = "1 hour",
     watermark: str = "2 hours",
     streaming: bool = False,
 ) -> DataFrame:
@@ -25,7 +24,7 @@ def windowed_event_counts(
     expression is a plain group-by (watermark is a no-op)."""
     src = events.withWatermark("ts", watermark) if streaming else events
     return (
-        src.groupBy(F.window("ts", window_duration).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),
@@ -41,19 +40,16 @@ def windowed_event_counts(
 
 def sliding_event_counts(
     events: DataFrame,
-    window_duration: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
     streaming: bool = False,
 ) -> DataFrame:
-    """Sliding (hopping) event-time window: each event lands in
-    window_duration/slide overlapping windows — the moving-average /
-    rate-monitor shape. Same watermark semantics as the tumbling form;
-    state scales with the number of open windows per key, i.e.
-    duration/slide times the tumbling state."""
-    src = events.withWatermark("ts", watermark) if streaming else events
+    """Sliding (hopping) event-time window: 1-hour windows every 30
+    minutes, so each event lands in two overlapping windows — the
+    moving-average / rate-monitor shape. Same watermark semantics as
+    the tumbling form; state scales with the number of open windows
+    per key, i.e. twice the tumbling state."""
+    src = events.withWatermark("ts", "2 hours") if streaming else events
     return (
-        src.groupBy(F.window("ts", window_duration, slide).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
@@ -61,32 +57,28 @@ def sliding_event_counts(
 
 def dedup_events_stream(
     events: DataFrame,
-    keys: list[str] | None = None,
     watermark: str = "1 hour",
-    time_col: str = "ts",
 ) -> DataFrame:
-    """Streaming exactly-once event dedup: drop rows whose ``keys``
-    were already seen, keeping state only within the watermark —
+    """Streaming exactly-once event dedup: drop rows whose ``event_id``
+    was already seen, keeping state only within the watermark —
     ``dropDuplicatesWithinWatermark`` bounds the seen-keys state (the
     unbounded-state problem plain dropDuplicates has on a stream).
     The at-least-once -> exactly-once repair every event pipeline
     needs in front of its sinks."""
-    keys = keys or ["event_id"]
-    return events.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
 def sessionize(
     events: DataFrame,
-    gap: str = "30 minutes",
     streaming: bool = False,
 ) -> DataFrame:
     """Gap-based sessions per user via ``session_window`` — state
-    merges windows closer than ``gap``; the canonical stateful
+    merges windows closer than 30 minutes; the canonical stateful
     streaming op (replaces a hand-rolled applyInPandasWithState for
     this shape, which Spark already expresses natively)."""
-    src = events.withWatermark("ts", gap) if streaming else events
+    src = events.withWatermark("ts", "30 minutes") if streaming else events
     return (
-        src.groupBy(F.session_window("ts", gap).alias("s"), "user_id")
+        src.groupBy(F.session_window("ts", "30 minutes").alias("s"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("s.start").alias("session_start"),

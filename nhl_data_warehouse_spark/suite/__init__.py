@@ -27,6 +27,11 @@ distributed aggregation and DuckDB's sequential one agree bit-for-bit):
   is an argument, and the helper never branches on its caller.
   ``tests/test_oracle_fragments.py`` fails on a copied fragment of
   either kind.
+- An operator parameter exists only when two non-test callers pass
+  different values; a value every caller shares is a constant (a
+  literal at its use, or a private module constant when several
+  functions share it). ``tests/test_options.py`` fails on a parameter
+  with one value in use.
 """
 
 from nhl_data_warehouse_spark.suite.registry import REGISTRY, QuerySpec, register

@@ -184,9 +184,7 @@ def rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _priority_days(
         orders, "1996-01-01", F.sum(F.col("o_totalprice").cast(DEC)).alias("revenue")
     )
-    out = timeseries.rolling_days(
-        daily, "o_orderpriority", "order_day", "revenue", days=7
-    )
+    out = timeseries.rolling_days(daily, "o_orderpriority", "order_day", "revenue")
     # exact decimal window sums internally; double final schema (W1)
     return out.withColumn("revenue", F.col("revenue").cast("double")).withColumn(
         "rolling_7d_sum", F.col("rolling_7d_sum").cast("double")
@@ -276,7 +274,7 @@ def time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load(spark, sf_dir, "events")
-    return sketches.psi_drift(events, value_col="value", time_col="ts", n_bins=10)
+    return sketches.psi_drift(events, n_bins=10)
 
 
 @register(
@@ -404,8 +402,7 @@ _ORDERS_ZXY_SQL = f"""(
            o_custkey & 65535 AS x,
            date_diff('day', DATE '1992-01-01',
                      CAST(o_orderdate AS DATE)) & 65535 AS y,
-           {layout.z_value_sql('o_custkey & 65535',
-                               "date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) & 65535")}
+           {layout.z_value_sql()}
                AS z_key
     FROM orders
 )"""
@@ -433,9 +430,7 @@ def zorder_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .bitwiseAND(F.lit(65535))
         .alias("y"),
     )
-    return layout.zorder_file_assignment(
-        xy, "x", "y", "o_orderkey", n_files=32, bits=16
-    )
+    return layout.zorder_file_assignment(xy, "o_orderkey", n_files=32)
 
 
 @register(
@@ -467,8 +462,6 @@ def zorder_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = zorder_assignment(spark, sf_dir).select("file_id", "x", "y")
     return layout.skipping_manifest(
         assigned,
-        "file_id",
-        dims=["x", "y"],
         pred_ranges={"x": (0, 500), "y": (1100, 1500)},
     )
 
@@ -512,7 +505,7 @@ def countmin_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.filter(F.split("text", " "), lambda t: t != "")
         ).alias("term")
     )
-    return sketches.countmin_estimates(toks, "term")
+    return sketches.countmin_estimates(toks)
 
 
 # lineitem count per (customer nation, supplier nation) trade edge
@@ -525,11 +518,11 @@ _NATION_TRADE_SQL = """SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
     GROUP BY 1, 2"""
 
 
-def _pagerank_oracle(n_iter: int = 3) -> str:
+def _pagerank_oracle() -> str:
     # unrolled iterations, mirroring operators/graph.py round-for-round
     its = []
     prev = "r0"
-    for i in range(1, n_iter + 1):
+    for i in range(1, 4):
         its.append(f"""
         c{i} AS (
             SELECT t.dst AS node,
@@ -569,7 +562,7 @@ def _pagerank_oracle(n_iter: int = 3) -> str:
     description="nation-level trade graph (customer nation -> supplier "
     "nation, lineitem-count weights); each iteration is one broadcast "
     "join + aggregate, the edge list never re-shuffles",
-    oracle=_pagerank_oracle(3),
+    oracle=_pagerank_oracle(),
 )
 def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.graph import pagerank
@@ -590,7 +583,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = pagerank(
         nation.select(F.col("n_nationkey").alias("node")),
         edges,
-        n_iter=3,
     )
     return ranks.withColumnRenamed("rank", "pr")
 
@@ -630,7 +622,6 @@ def ivm_join_view_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim_key="c_custkey",
         group_col="c_nationkey",
         value_col=F.col("o_totalprice").cast("decimal(18,2)"),
-        out_col="revenue",
     )
 
 
@@ -820,7 +811,7 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (lineitem,) = load(spark, sf_dir, "lineitem")
     return graph.degree_assortativity(
-        lineitem, group_col="l_orderkey", item_col="l_partkey", min_shared=2
+        lineitem, group_col="l_orderkey", item_col="l_partkey"
     )
 
 
@@ -868,7 +859,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     (lineitem,) = load(spark, sf_dir, "lineitem")
     return graph.label_propagation(
         lineitem, group_col="l_orderkey", item_col="l_partkey",
-        min_shared=2, rounds=3,
     )
 
 
@@ -928,7 +918,7 @@ def copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators import graph
 
     (lineitem,) = load(spark, sf_dir, "lineitem")
-    edges = graph._shared_group_edges(lineitem, "l_orderkey", "l_partkey", 2)
+    edges = graph._shared_group_edges(lineitem, "l_orderkey", "l_partkey")
     return graph.kcore_peel(
         edges.select(F.col("_i").alias("a"), F.col("_j").alias("b")), k=2, rounds=4
     )
@@ -1056,7 +1046,10 @@ _COSUPPLY_EDGES_SQL = """
 def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of ``_COSUPPLY_EDGES_SQL``: supplier pairs (a < b)
     sharing more parts than 1.1x the mean over all co-supplying
-    pairs."""
+    pairs, as ``(_a, _b)``. They come from a groupBy(a, b) over an
+    a < b self-join, so they are canonical by construction and go to
+    the triangle core (``graph._deg_tri``) without the canonicalize
+    exchange and distinct."""
     (lineitem,) = load(spark, sf_dir, "lineitem")
     ps = lineitem.select("l_partkey", "l_suppkey").distinct()
     shared = (
@@ -1083,6 +1076,7 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         shared.join(F.broadcast(mean_shared))
         .filter(F.col("n_shared").cast("double") > 1.1 * F.col("m"))
         .select("a", "b")
+        .select(F.col("a").alias("_a"), F.col("b").alias("_b"))
     )
 
 
@@ -1124,14 +1118,9 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cosupply_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nhl_data_warehouse_spark.operators.graph import (
-        clustering_coefficients,
-    )
+    from nhl_data_warehouse_spark.operators.graph import _coefficients
 
-    edges = _cosupply_edges(spark, sf_dir)
-    # edges come from a groupBy(a, b) over an a < b self-join — already
-    # canonical, so the operator skips its distinct (one exchange fewer)
-    return clustering_coefficients(edges, "a", "b", assume_canonical=True)
+    return _coefficients(_cosupply_edges(spark, sf_dir))
 
 
 @register(
@@ -1153,11 +1142,9 @@ def cosupply_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def triangle_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nhl_data_warehouse_spark.operators.graph import triangle_counts
+    from nhl_data_warehouse_spark.operators.graph import _deg_tri
 
-    edges = _cosupply_edges(spark, sf_dir)
-    # same canonical-by-construction argument as the coefficient query
-    return triangle_counts(edges, assume_canonical=True)
+    return _deg_tri(_cosupply_edges(spark, sf_dir))[1]
 
 
 @register(
@@ -1452,7 +1439,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def km_order_gap_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load(spark, sf_dir, "orders")
     spells = _order_gap_spells(orders, orders, "o_custkey")
-    return timeseries.km_survival(spells, "duration", "observed")
+    return timeseries.km_survival(spells)
 
 
 def _order_gap_spells(src: DataFrame, orders: DataFrame, key: str) -> DataFrame:
@@ -1518,7 +1505,7 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineitem,) = load(spark, sf_dir, "lineitem")
     return graph.association_rules(
         lineitem, group_col="l_orderkey", item_col="l_partkey",
-        min_pair_count=3, top_k=30,
+        min_pair_count=3,
     )
 
 
@@ -1704,9 +1691,7 @@ def window_funnel_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.sessions import window_funnel
 
     (events,) = load(spark, sf_dir, "events")
-    lv = window_funnel(
-        events, steps=["view", "click", "purchase"], window_seconds=6 * 3600
-    )
+    lv = window_funnel(events, window_seconds=6 * 3600)
     return lv.groupBy("funnel_level").agg(F.count(F.lit(1)).alias("n_users"))
 
 
@@ -1747,9 +1732,7 @@ def ewma_monthly_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
     ).agg(F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("spend"))
-    return timeseries.ewma(
-        monthly, "o_custkey", "month", "spend", alpha=0.5, out_col="ewma_spend"
-    )
+    return timeseries.ewma(monthly, "o_custkey", "month", "spend", out_col="ewma_spend")
 
 
 @register(
@@ -1798,9 +1781,7 @@ def holt_monthly_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
     ).agg(F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("spend"))
-    return timeseries.holt_linear(
-        monthly, "o_custkey", "month", "spend", alpha=0.5, beta=0.25
-    )
+    return timeseries.holt_linear(monthly, "o_custkey", "spend")
 
 
 @register(
@@ -2111,9 +2092,7 @@ def ab_value_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit("A"),
     ).otherwise(F.lit("B"))
-    return welch_ab_stats(
-        events.withColumn("variant", variant), "variant", "value"
-    )
+    return welch_ab_stats(events.withColumn("variant", variant))
 
 
 @register(
@@ -2226,10 +2205,7 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.regression import cuped_adjusted_ab
 
     (events,) = load(spark, sf_dir, "events")
-    return cuped_adjusted_ab(
-        events, user_col="user_id", value_col="value", time_col="ts",
-        split_ts="2024-01-16 00:00:00",
-    )
+    return cuped_adjusted_ab(events)
 
 
 @register(
@@ -2419,9 +2395,7 @@ def logrank_segment_gap_survival(
     )
     joined = orders.join(F.broadcast(seg), orders["o_custkey"] == seg["c_custkey"])
     spells = _order_gap_spells(joined, orders, "g1")
-    return timeseries.logrank_two_sample(
-        spells, "duration", "observed", "g1"
-    )
+    return timeseries.logrank_two_sample(spells)
 
 
 # round 13: privacy / governance release passes
@@ -2471,9 +2445,7 @@ def dp_laplace_priority_counts(
         "o_orderpriority",
         F.year(F.col("o_orderdate")).cast("int").alias("oyear"),
     )
-    return privacy.dp_laplace_counts(
-        base, ["o_orderpriority", "oyear"], epsilon=1.0, salt="dp-v1"
-    )
+    return privacy.dp_laplace_counts(base, ["o_orderpriority", "oyear"], epsilon=1.0)
 
 
 @register(

@@ -350,13 +350,11 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.select("o_orderkey", "o_orderpriority"),
         "nhl_suite_bkt.bkt_orders",
         "o_orderkey",
-        n_buckets=8,
     )
     write_bucketed(
         lineitem.select("l_orderkey", "l_extendedprice"),
         "nhl_suite_bkt.bkt_lineitem",
         "l_orderkey",
-        n_buckets=8,
     )
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     old_bucketing = spark.conf.get("spark.sql.sources.bucketing.enabled")
@@ -759,7 +757,7 @@ def _asof_event_orders(spark: SparkSession, sf_dir: str, direction: str) -> Data
 )
 def range_join_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load(spark, sf_dir, "events")
-    return range_join_pairs(events, key="user_id", gap_minutes=5)
+    return range_join_pairs(events)
 
 
 # 30-minute-gap sessions of each user's events; ``numbered`` carries

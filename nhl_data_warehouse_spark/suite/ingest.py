@@ -66,7 +66,7 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def _stateful_shuffle(spark: SparkSession, n: int = 8):
+def _stateful_shuffle(spark: SparkSession):
     """Pin a small shuffle-partition count around a stateful streaming
     run. Every stateful operator opens/commits one state store PER
     shuffle partition PER micro-batch, so partition count — not data
@@ -77,21 +77,21 @@ def _stateful_shuffle(spark: SparkSession, n: int = 8):
     restored after the drain. At production volume the same dial is
     sized UP with the key cardinality."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _drain(q, timeout_s: int = 300) -> None:
+def _drain(q) -> None:
     """availableNow queries must fully drain before the sink is read;
     awaitTermination returns False (it does not raise) on timeout, and
     a partially-drained memory sink would fail the comparison with a
     confusing value mismatch instead of a loud error."""
-    if not q.awaitTermination(timeout_s):
+    if not q.awaitTermination(300):
         q.stop()
-        raise TimeoutError(f"streaming drain exceeded {timeout_s}s")
+        raise TimeoutError("streaming drain exceeded 300s")
 
 
 def _events_dir(sf_dir: str, tag: str, *names: str) -> str:
@@ -479,7 +479,7 @@ def streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _event_stream(
         spark, sf_dir, _events_dir(sf_dir, "hourly")
     ).withColumn("value", F.col("value").cast("decimal(18,2)"))
-    agg = windowed_event_counts(stream, window_duration="1 hour", streaming=True)
+    agg = windowed_event_counts(stream, streaming=True)
     # exact decimal sums inside the stream; double in the final schema
     return _to_memory(spark, agg, "hourly", "complete").select(
         "window_start",
@@ -608,7 +608,7 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-batch replay no duplicate's state has expired when its
     # twin arrives.
     stream = _event_stream(spark, sf_dir, src_dir, max_files=64)
-    deduped = dedup_events_stream(stream, keys=["event_id"], watermark="2400 hours")
+    deduped = dedup_events_stream(stream, watermark="2400 hours")
     return _to_memory(
         spark,
         deduped.select("event_id", "ts", "user_id", "event_type", "value"),
@@ -648,7 +648,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _event_stream(spark, sf_dir, _events_dir(sf_dir, "enr")).select(
         "event_id", "user_id"
     )
-    enriched = enrich_stream(stream, dim, on="user_id")
+    enriched = enrich_stream(stream, dim)
     return _to_memory(spark, enriched, "enr", "append").select(
         "event_id", "user_id", "nation_name"
     )
@@ -757,7 +757,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complete mode: every session is in the final sink regardless of
     # where the closing watermark lands (append would hold back any
     # session still open against the final watermark)
-    sessions = sessionize(stream, gap="30 minutes", streaming=True)
+    sessions = sessionize(stream, streaming=True)
     return _to_memory(spark, sessions, "sess", "complete").select(
         "session_start",
         "session_end",
@@ -818,9 +818,7 @@ def _interval_pairs(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
             F.col("ts").alias("r_ts"),
             F.col("event_id").alias("r_event_id"),
         ),
-        key="user_id",
         upper="5 minutes",
-        watermark="30 minutes",
         how=how,
     )
     gap_us = F.unix_micros(F.col("r_ts")) - F.unix_micros(F.col("ts"))

@@ -15,7 +15,7 @@ from pyspark.sql.types import StructType
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB-runnable ANSI SQL; None -> rows-only check
+    oracle: str  # DuckDB-runnable ANSI SQL
     op_ids: str  # SURVEY.md §2 operator ids exercised
     description: str
 
@@ -23,7 +23,7 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, *, oracle: str | None, op_ids: str, description: str):
+def register(name: str, *, oracle: str, op_ids: str, description: str):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             # silent overwrite shrank the registry twice in round 12

@@ -283,7 +283,6 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(
         lineitem.select(F.col("l_orderkey").alias("k"), "l_extendedprice"),
         orders.select(F.col("o_orderkey").alias("k"), "o_orderpriority"),
-        key="k",
         n_salts=8,
     )
     return joined.groupBy("o_orderpriority").agg(
@@ -663,9 +662,6 @@ def scd2_segment_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
         upd_existing.unionByName(upd_new),
         keys=["c_custkey"],
         tracked=["segment"],
-        effective_col="effective_ts",
-        start_col="valid_from",
-        end_col="valid_to",
     )
     return out.select("c_custkey", "segment", "valid_from", "valid_to")
 

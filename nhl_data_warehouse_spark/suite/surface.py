@@ -576,7 +576,6 @@ def conformal_value_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load(spark, sf_dir, "events")
     return split_conformal_coverage(
         events, id_col="event_id", value_col="value",
-        alpha_num=1, alpha_den=10,
     )
 
 
@@ -665,7 +664,7 @@ def conformal_coverage_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load(spark, sf_dir, "events")
     return grouped_split_conformal_coverage(
         events, group_col="event_type", id_col="event_id",
-        value_col="value", alpha_num=1, alpha_den=10,
+        value_col="value",
     )
 
 
@@ -837,7 +836,6 @@ def ks_drift_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_col="o_orderpriority",
         value_col="o_totalprice",
         is_group1=F.col("o_orderdate") < F.lit("1995-01-01").cast("timestamp"),
-        scale=100,
     )
 
 
@@ -882,7 +880,7 @@ def bitmap_retention_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = load(spark, sf_dir, "events")
-    return day_bitmask_retention(events, "user_id", "ts", n_days=29)
+    return day_bitmask_retention(events, n_days=29)
 
 
 @register(
@@ -1604,9 +1602,7 @@ def spearman_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.stats import spearman_rho
 
     (lineitem,) = load(spark, sf_dir, "lineitem")
-    return spearman_rho(
-        lineitem, "l_quantity", "l_extendedprice", x_scale=1, y_scale=100
-    )
+    return spearman_rho(lineitem, "l_quantity", "l_extendedprice", y_scale=100)
 
 
 @register(
@@ -1659,9 +1655,7 @@ def kendall_tau_quantity_discount(spark: SparkSession, sf_dir: str) -> DataFrame
     from nhl_data_warehouse_spark.operators.stats import kendall_tau_b
 
     (lineitem,) = load(spark, sf_dir, "lineitem")
-    return kendall_tau_b(
-        lineitem, "l_quantity", "l_discount", x_scale=1, y_scale=100
-    )
+    return kendall_tau_b(lineitem, "l_quantity", "l_discount", y_scale=100)
 
 
 def _daily_cents_sql(day: str, col: str) -> str:
@@ -1719,9 +1713,9 @@ def gini_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gini_coefficient(orders, "o_totalprice", scale=100)
 
 
-def _acf_oracle(max_lag: int = 7) -> str:
+def _acf_oracle() -> str:
     lead_cols = ",\n                   ".join(
-        f"lead(x, {k}) OVER (ORDER BY t) AS x{k}" for k in range(1, max_lag + 1)
+        f"lead(x, {k}) OVER (ORDER BY t) AS x{k}" for k in range(1, 8)
     )
     per_lag_stats = ",\n                   ".join(
         f"SUM(CAST(x AS HUGEINT) * x{k}) AS sk{k},\n"
@@ -1730,7 +1724,7 @@ def _acf_oracle(max_lag: int = 7) -> str:
         f"                   SUM(CAST(x{k} AS HUGEINT)) AS tk{k},\n"
         f"                   CAST(SUM(CASE WHEN x{k} IS NOT NULL"
         f" THEN 1 ELSE 0 END) AS BIGINT) AS np{k}"
-        for k in range(1, max_lag + 1)
+        for k in range(1, 8)
     )
     rows = "\n        UNION ALL ".join(
         f"SELECT CAST({k} AS BIGINT) AS lag, np{k} AS n_pairs,"
@@ -1738,7 +1732,7 @@ def _acf_oracle(max_lag: int = 7) -> str:
         f" CAST(n * n * sk{k} - n * sx * (hk{k} + tk{k})"
         f" + (n - {k}) * sx * sx AS DOUBLE)"
         " / CAST(n * (n * sxx - sx * sx) AS DOUBLE) END AS acf FROM st"
-        for k in range(1, max_lag + 1)
+        for k in range(1, 8)
     )
     return f"""
         WITH {_daily_cents_sql("o_orderdate", "x")},
@@ -1770,14 +1764,14 @@ def _acf_oracle(max_lag: int = 7) -> str:
     description="autocorrelation of daily order revenue (cents) at "
     "lags 1-7: the seasonality screen run before curriculum/mixture "
     "scheduling on time-ordered corpora",
-    oracle=_acf_oracle(7),
+    oracle=_acf_oracle(),
 )
 def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.timeseries import autocorrelation
 
     (orders,) = load(spark, sf_dir, "orders")
     daily = _daily_cents(orders)
-    return autocorrelation(daily, "d", "x", max_lag=7)
+    return autocorrelation(daily, "d", max_lag=7)
 
 
 def _daily_cents(orders: DataFrame, *keys: Column) -> DataFrame:
@@ -1845,7 +1839,7 @@ def cusum_drift_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (orders,) = load(spark, sf_dir, "orders")
     daily = _daily_cents(orders)
-    return cusum_peak(daily, "d", "x", cents_scale=100)
+    return cusum_peak(daily, cents_scale=100)
 
 
 @register(
@@ -1905,9 +1899,7 @@ def cusum_drift_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (orders,) = load(spark, sf_dir, "orders")
     daily = _daily_cents(orders, F.col("o_orderpriority"))
-    return grouped_cusum_peak(
-        daily, "o_orderpriority", "d", "x", cents_scale=100
-    )
+    return grouped_cusum_peak(daily, "o_orderpriority", cents_scale=100)
 
 
 @register(
@@ -1972,8 +1964,7 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (orders,) = load(spark, sf_dir, "orders")
     return seasonal_naive_backtest(
-        orders, "o_orderdate", "o_totalprice", season=7,
-        split_date="1997-01-01",
+        orders, "o_orderdate", "o_totalprice", split_date="1997-01-01",
     )
 
 
@@ -2029,8 +2020,6 @@ def dow_revenue_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.where(F.col("o_totalprice").isNotNull()),
         time_col="o_orderdate",
         value_col="o_totalprice",
-        z_threshold=1.5,
-        cents_scale=100,
     )
 
 
@@ -2098,7 +2087,6 @@ def weekly_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.where(F.col("o_totalprice").isNotNull()),
         time_col="o_orderdate",
         value_col="o_totalprice",
-        cents_scale=100,
     )
 
 
@@ -2177,7 +2165,7 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (orders,) = load(spark, sf_dir, "orders")
     daily = _daily_cents(orders)
-    return theil_sen_trend(daily, "d", "x")
+    return theil_sen_trend(daily)
 
 
 @register(
@@ -2483,7 +2471,7 @@ def session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bootstrap_oracle(n_replicates: int, salt: str) -> str:
+def _bootstrap_oracle() -> str:
     from nhl_data_warehouse_spark.operators.sampling import (
         POISSON1_HEX_THRESHOLDS,
     )
@@ -2491,14 +2479,14 @@ def _bootstrap_oracle(n_replicates: int, salt: str) -> str:
     # 4 replicates per md5: replicate b reads 8-hex window b%4 of
     # md5(salt + b//4 | key) — mirrors poisson_bootstrap_weight
     case_chain = "\n                   + ".join(
-        f"CASE WHEN substr(md5('{salt}' || CAST(b // 4 AS VARCHAR) || '|'"
+        f"CASE WHEN substr(md5('boot' || CAST(b // 4 AS VARCHAR) || '|'"
         f" || CAST(o_orderkey AS VARCHAR)), 1 + 8 * (b % 4), 8) >= '{t}'"
         " THEN 1 ELSE 0 END"
         for t in POISSON1_HEX_THRESHOLDS
     )
     return f"""
         WITH reps AS (
-            SELECT CAST(unnest(generate_series(0, {n_replicates - 1}))
+            SELECT CAST(unnest(generate_series(0, 31))
                         AS BIGINT) AS b
         ),
         weighted AS (
@@ -2534,7 +2522,7 @@ def _bootstrap_oracle(n_replicates: int, salt: str) -> str:
     "(cents) for percentile confidence intervals — the error bar "
     "every corpus-level statistic needs at 100 TB, costed at one "
     "scan",
-    oracle=_bootstrap_oracle(32, "boot"),
+    oracle=_bootstrap_oracle(),
 )
 def bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.sampling import (
@@ -2841,7 +2829,7 @@ def bh_fdr_brand_price_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(part), lineitem["l_partkey"] == part["p_partkey"]
     )
     scr = mwu_screen_by_group(joined, "l_extendedprice", "p_brand")
-    sel = bh_fdr_select(scr, "z_value", "g", _BH_ZC)
+    sel = bh_fdr_select(scr, _BH_ZC)
     return sel.select(
         F.col("g").alias("p_brand"),
         F.col("n1").alias("n_brand"),
@@ -2910,4 +2898,4 @@ def selfjoin_cardinality_estimate(
     from nhl_data_warehouse_spark.operators.skew import join_size_estimate
 
     (events,) = load(spark, sf_dir, "events")
-    return join_size_estimate(events, "user_id", top_k=100)
+    return join_size_estimate(events, "user_id")

@@ -214,7 +214,7 @@ def dedup_against_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
+    sh = dedup.char_shingles_multiset(documents)
     return dedup.minhash_signatures(sh, n_hashes=N_HASHES)
 
 
@@ -231,7 +231,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
+    sh = dedup.char_shingles_multiset(documents)
     sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
     return dedup.minhash_band_candidates(sig, n_hashes=N_HASHES, band_size=BAND_SIZE)
 
@@ -276,7 +276,7 @@ def _lsh_verified_pairs(
     """The MinHash chain: multiset shingles -> signatures -> band
     candidates (``star_cap`` as in ``minhash_band_candidates``) ->
     exact Jaccard >= 0.5 verify."""
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
+    sh = dedup.char_shingles_multiset(documents)
     sh = pin(sh)  # feeds signatures AND the verify stage
     sig = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
     cand = dedup.minhash_band_candidates(
@@ -595,9 +595,7 @@ def partname_edit_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_hamming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return dedup.simhash_band_near_dups(
-        documents, bits=32, bands=4, max_hamming=3
-    )
+    return dedup.simhash_band_near_dups(documents, max_hamming=3)
 
 
 # ---------------------------------------------------------------------------
@@ -605,14 +603,14 @@ def simhash_hamming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
+def _query_vec(spark: SparkSession, sf_dir: str):
     (embeddings,) = load(spark, sf_dir, "embeddings")
-    row = embeddings.filter(F.col("vec_id") == vec_id).select("embedding").first()
+    row = embeddings.filter(F.col("vec_id") == 0).select("embedding").first()
     return F.array(*[F.lit(float(v)) for v in row.embedding])
 
 
-def _planes_sql_values(n_planes: int = 8, dim: int = 64) -> str:
-    planes = similarity.plane_signs(n_planes, dim)
+def _planes_sql_values() -> str:
+    planes = similarity.plane_signs(8, 64)
     rows = ", ".join(
         f"({p}, [{', '.join(str(s) for s in signs)}])" for p, signs in enumerate(planes)
     )
@@ -807,9 +805,7 @@ def hard_negative_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings,) = load(spark, sf_dir, "embeddings")
-    return similarity.ann_multiprobe_topk(
-        embeddings, _query_vec(spark, sf_dir), n_planes=8, dim=64, k=10, max_flips=1
-    )
+    return similarity.ann_multiprobe_topk(embeddings, _query_vec(spark, sf_dir), k=10)
 
 
 @register(
@@ -890,7 +886,7 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings,) = load(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
-        embeddings, _query_vec(spark, sf_dir), query_id=0, n_centroids=8, k=10
+        embeddings, _query_vec(spark, sf_dir), n_centroids=8, k=10
     )
 
 
@@ -924,7 +920,7 @@ def embedding_group_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled = embeddings.join(
         documents.select(F.col("doc_id").alias("vec_id"), "lang"), on="vec_id"
     )
-    return similarity.group_centroids(labeled, label_col="lang")
+    return similarity.group_centroids(labeled)
 
 
 @register(
@@ -1173,9 +1169,7 @@ def model_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hlq(documents: DataFrame) -> DataFrame:
     """The hashed-linear quality classifier every eval query scores."""
-    return text.hashed_linear_quality(
-        documents, n_buckets=256, bias=0.0, threshold=0.5, salt="hlq-v1"
-    )
+    return text.hashed_linear_quality(documents)
 
 
 def _hlq_eval(documents: DataFrame, *pred_cols: str) -> DataFrame:
@@ -1244,7 +1238,7 @@ def lang_id_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.fingerprint(documents, k=SHINGLE_K)
+    return text.fingerprint(documents)
 
 
 @register(
@@ -1373,7 +1367,7 @@ def media_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
     media = multimodal.as_media_table(documents)
-    frames = multimodal.frame_sample(media, every_n=4, frame_bytes=64)
+    frames = multimodal.frame_sample(media)
     return frames.select(
         "media_id",
         F.col("frame_index").cast("long").alias("frame_index"),
@@ -1428,8 +1422,8 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hll_sketch_agg per (event_type, day) -> hll_union_agg at query "
     "time — the materialize-partials-then-merge distinct pattern a "
     "100 TB pipeline stores daily sketches for; raw ids never cross "
-    "the wire past the first partial agg; no SQL oracle: sketch "
-    "estimates are engine-specific)",
+    "the wire past the first partial agg; sketch estimates are "
+    "engine-specific, so the oracle checks an error band)",
     description="distinct users per event type via per-day HLL "
     "sketches merged at query time (plus how many daily partials "
     "merged), emitted as an accuracy check: exact distinct plus a "
@@ -1558,7 +1552,6 @@ def event_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load(spark, sf_dir, "events")
     out = windowed_event_counts(
         events.withColumn("value", F.col("value").cast("decimal(18,2)")),
-        window_duration="1 hour",
     )
     # exact decimal sum inside; double in the final schema (driver W1)
     return out.withColumn("sum_value", F.col("sum_value").cast("double"))
@@ -1585,7 +1578,7 @@ from nhl_data_warehouse_spark.operators import sampling  # noqa: E402
 def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
     return sampling.hash_sample(
-        documents.select("doc_id", "lang"), ["doc_id"], rate=0.1, salt="corpus-v1"
+        documents.select("doc_id", "lang"), rate=0.1, salt="corpus-v1"
     )
 
 
@@ -1630,9 +1623,7 @@ def sample_group_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
     return sampling.group_cap(
         documents.select("doc_id", "source"),
-        "source",
         cap=20,
-        id_cols=["doc_id"],
         salt="cap-v1",
     )
 
@@ -1664,9 +1655,7 @@ def sample_rebalance_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
     return sampling.proportional_rebalance(
         documents.select("doc_id", "lang"),
-        "lang",
         {"en": 0.2, "de": 0.2, "es": 0.2, "fr": 0.2, "zh": 0.2},
-        id_cols=["doc_id"],
         salt="rb-v1",
     )
 
@@ -1688,7 +1677,7 @@ def event_sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.streaming.windows import sliding_event_counts
 
     (events,) = load(spark, sf_dir, "events")
-    return sliding_event_counts(events, "1 hour", "30 minutes")
+    return sliding_event_counts(events)
 
 
 @register(
@@ -1819,7 +1808,7 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def chi2_term_label_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.chi2_term_selection(documents, label_col="lang", k=3, min_df=5)
+    return text.chi2_term_selection(documents, min_df=5)
 
 
 @register(
@@ -1905,16 +1894,12 @@ def cdc_apply_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("seq"),
         F.lit("I").alias("op"),
     )
-    cdc.apply_changes(
-        spark, table, initial, keys=["o_orderkey"], seq_cols=["seq"], op_col="op"
-    )
+    cdc.apply_changes(spark, table, initial, keys=["o_orderkey"])
     cdc.apply_changes(
         spark,
         table,
         changes,
         keys=["o_orderkey"],
-        seq_cols=["seq"],
-        op_col="op",
     )
     return spark.table(table).select("o_orderkey", "o_orderstatus")
 
@@ -2103,9 +2088,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.contamination_check(
-        documents, n=5, benchmark_every=50, flag_pct=20
-    )
+    return text.contamination_check(documents, n=5, benchmark_every=50)
 
 
 def _long_doc_grams_sql(n: int) -> str:
@@ -2177,9 +2160,7 @@ def substring_span_contamination_50g(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.span_contamination(
-        documents, n=50, benchmark_mod=2, flag_pct=20
-    )
+    return text.span_contamination(documents)
 
 
 @register(
@@ -2240,9 +2221,7 @@ def bloom_13g_substring_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.bloom_span_dedup(
-        documents, n=13, history_mod=2, flag_pct=20, m_bits=1 << 20, k=3
-    )
+    return text.bloom_span_dedup(documents, m_bits=1 << 20, k=3)
 
 
 @register(
@@ -2396,7 +2375,7 @@ def source_lang_jsd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nhl_data_warehouse_spark.operators.stats import jsd_category_pairs
 
     (documents,) = load(spark, sf_dir, "documents")
-    return jsd_category_pairs(documents, slice_col="source", cat_col="lang")
+    return jsd_category_pairs(documents)
 
 
 @register(
@@ -2461,7 +2440,7 @@ def source_lang_jsd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.novelty_curve(documents, n=5, n_batches=8)
+    return text.novelty_curve(documents, n_batches=8)
 
 
 @register(
@@ -2482,7 +2461,7 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.inverted_index(documents, max_postings=20)
+    return text.inverted_index(documents)
 
 
 @register(
@@ -2670,7 +2649,6 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample_topk(
         documents.select("doc_id", "n_chars"),
         weight_col="n_chars",
-        key_cols=["doc_id"],
         k=20,
     )
 
@@ -2775,7 +2753,7 @@ def containment_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings,) = load(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
-        embeddings, _query_vec(spark, sf_dir), query_id=0, n_centroids=8,
+        embeddings, _query_vec(spark, sf_dir), n_centroids=8,
         k=10, nprobe=2,
     )
 
@@ -2905,7 +2883,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings,) = load(spark, sf_dir, "embeddings")
     return similarity.ivfpq_topk(
-        embeddings, query_id=0, n_centroids=8, dim=64, m=4, n_codes=8, k=10
+        embeddings, n_centroids=8, dim=64, m=4, n_codes=8, k=10
     )
 
 
@@ -3039,10 +3017,9 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     arm_a = text.bm25_scores(documents, list(_BM25_TERMS), k=50)
-    arm_b = text.tf_norm_scores(documents, list(_BM25_TERMS), k=50)
+    arm_b = text.tf_norm_scores(documents, list(_BM25_TERMS))
     return rrf_fuse(
-        arm_a, "bm25", arm_b, "tf_norm", id_col="doc_id",
-        k_rrf=60, top_n=20,
+        arm_a, "bm25", arm_b, "tf_norm", top_n=20,
     )
 
 
@@ -3129,7 +3106,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.repetition_signals(documents, n=5)
+    return text.repetition_signals(documents)
 
 
 @register(
@@ -3348,9 +3325,7 @@ def vocab_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = part.select(F.col("p_brand").alias("term")).unionByName(
         documents.select(F.col("source").alias("term"))
     )
-    return blocked_edit_distance_pairs(
-        vocab, "term", max_dist=1, prefix_len=1, length_band=1
-    )
+    return blocked_edit_distance_pairs(vocab, "term", prefix_len=1)
 
 
 _FUZZY_REF = ("src1", "src33", "srx4", "zzz9")
@@ -3380,9 +3355,7 @@ def fuzzy_source_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     ref = spark.createDataFrame([(v,) for v in _FUZZY_REF], "name string")
-    return fuzzy_semi_match(
-        documents.select("doc_id", "source"), ref, "source", "name", max_dist=1
-    )
+    return fuzzy_semi_match(documents.select("doc_id", "source"), ref, "source")
 
 
 @register(
@@ -3451,7 +3424,7 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     return deterministic_shuffle(
-        documents.select("doc_id"), key_cols=["doc_id"], salt="shuf-v1"
+        documents.select("doc_id"), salt="shuf-v1"
     ).select("doc_id", "shuffle_pos")
 
 
@@ -3522,9 +3495,7 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return dedup.cdc_dedup_stats(
-        documents, id_col="doc_id", text_col="text", window=8, divisor=16
-    )
+    return dedup.cdc_dedup_stats(documents)
 
 
 @register(
@@ -3859,7 +3830,7 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_jaccard_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
+    sh = dedup.char_shingles_multiset(documents)
     # read 3x (banding + both signature sides of the estimate join);
     # (doc, 8 slots) rows — tiny; release_cached reclaims it
     sigs = pin(dedup.minhash_signatures(sh, n_hashes=N_HASHES))
@@ -4054,7 +4025,7 @@ def curriculum_quality_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cross_lang_gram_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.cross_lang_gram_overlap(documents, n=4)
+    return text.cross_lang_gram_overlap(documents)
 
 
 @register(
@@ -4128,7 +4099,7 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return dedup.dedup_rate_by_group(documents, group_col="source")
+    return dedup.dedup_rate_by_group(documents)
 
 
 # exact least squares from integer sufficient statistics of (x, y)
@@ -4457,11 +4428,9 @@ def training_manifest_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_tokens"),
     )
     shuffled = sampling.deterministic_shuffle(
-        counted, key_cols=["doc_id"], salt="asm-v1"
+        counted, salt="asm-v1"
     ).select("doc_id", "n_tokens", "shuffle_pos")
-    spans = packing.token_spans(
-        shuffled, id_col="shuffle_pos", weight_col="n_tokens", block_size=512
-    )
+    spans = packing.token_spans(shuffled, id_col="shuffle_pos", block_size=512)
     return spans.select(
         "doc_id",
         F.col("shuffle_pos").cast("long").alias("shuffle_pos"),
@@ -4522,7 +4491,7 @@ def cross_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents.select("doc_id"), ["doc_id"], {"train": 0.8, "heldout": 0.2},
         salt="split-v1",
     )
-    sh = dedup.char_shingles_multiset(documents, k=SHINGLE_K)
+    sh = dedup.char_shingles_multiset(documents)
     sigs = dedup.minhash_signatures(sh, n_hashes=N_HASHES)
     cands = dedup.minhash_band_candidates(
         sigs, n_hashes=N_HASHES, band_size=BAND_SIZE
@@ -4643,10 +4612,7 @@ def stratified_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
     return sampling.stratified_kfold(
         documents.select("doc_id", "lang"),
-        "lang",
         k=5,
-        id_cols=["doc_id"],
-        salt="kfold-v1",
     ).select("doc_id", "lang", "fold")
 
 
@@ -4688,7 +4654,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "quality_decile", "n_tokens"
     )
     return sampling.budget_select(
-        scored, "quality_decile", "n_tokens", budget=20000, salt="tb-v1"
+        scored, "quality_decile", "n_tokens", budget=20000
     ).select("doc_id", "quality_decile", "n_tokens", "cum_weight")
 
 
@@ -4828,9 +4794,7 @@ def duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    return text.dsir_logratio_weights(
-        documents, target_pred=F.col("lang") == "en", n_buckets=256
-    )
+    return text.dsir_logratio_weights(documents, target_pred=F.col("lang") == "en")
 
 
 @register(
@@ -5241,9 +5205,7 @@ def classifier_ece_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     joined = _hlq_eval(documents)
-    return expected_calibration_error(
-        joined, "quality_score", "is_good", n_bins=10, scale=1_000_000
-    )
+    return expected_calibration_error(joined, "quality_score", "is_good")
 
 
 # classifier scores as 1e-6 cells (yj -> yh), cumulative TP/FP down
@@ -5302,9 +5264,7 @@ def youden_threshold_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     joined = _hlq_eval(documents)
-    return youden_j_threshold(
-        joined, "quality_score", F.col("is_good"), scale=1_000_000
-    )
+    return youden_j_threshold(joined, "quality_score", F.col("is_good"))
 
 
 @register(
@@ -5351,9 +5311,7 @@ def classifier_pr_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     joined = _hlq_eval(documents)
-    return average_precision(
-        joined, "quality_score", F.col("is_good"), scale=1_000_000
-    )
+    return average_precision(joined, "quality_score", F.col("is_good"))
 
 
 @register(
@@ -5421,7 +5379,6 @@ def classifier_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("is_good"),
         "source",
         weight_col="n_tokens",
-        scale=1_000_000,
     )
 
 
@@ -5474,9 +5431,7 @@ def brier_murphy_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     joined = _hlq_eval(documents)
-    return murphy_decomposition(
-        joined, "quality_score", "is_good", n_bins=10, scale=1_000_000
-    )
+    return murphy_decomposition(joined, "quality_score", "is_good")
 
 
 @register(
@@ -5542,9 +5497,7 @@ def isotonic_calibration_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = load(spark, sf_dir, "documents")
     joined = _hlq_eval(documents)
-    return isotonic_calibration_bins(
-        joined, "quality_score", "is_good", n_bins=10
-    )
+    return isotonic_calibration_bins(joined, "quality_score", "is_good")
 
 
 @register(
@@ -5618,9 +5571,7 @@ def isotonic_calibration_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = _hlq_eval(documents).join(
         documents.select("doc_id", "lang"), on="doc_id"
     )
-    return grouped_isotonic_calibration_bins(
-        joined, "lang", "quality_score", "is_good", n_bins=10
-    )
+    return grouped_isotonic_calibration_bins(joined, "lang", "quality_score", "is_good")
 
 
 @register(
@@ -5956,7 +5907,7 @@ def approx_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k_top = 10
     (documents,) = load(spark, sf_dir, "documents")
-    grams = documents.select(F.explode(_word_bigrams("text")).alias("gram"))
+    grams = documents.select(F.explode(_word_bigrams()).alias("gram"))
     grams = pin(grams)
     grams.count()  # materialize before the sketch/exact fan-out
     sketch = (
@@ -6230,7 +6181,7 @@ def approx_topk_sketch_production(spark: SparkSession, sf_dir: str) -> DataFrame
 
     k_top = 10
     (documents,) = load(spark, sf_dir, "documents")
-    grams = documents.select(F.explode(_word_bigrams("text")).alias("gram"))
+    grams = documents.select(F.explode(_word_bigrams()).alias("gram"))
     counts = (
         grams.agg(F.expr(f"approx_top_k(gram, {k_top}, 10000)").alias("tk"))
         .select(F.explode("tk").alias("e"))
@@ -6292,9 +6243,7 @@ def auc_by_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = _hlq_eval(documents).join(
         documents.select("doc_id", "lang"), on="doc_id"
     )
-    return grouped_rank_auc(
-        joined, "lang", "quality_score", F.col("is_good"), scale=1_000_000
-    )
+    return grouped_rank_auc(joined, "lang", "quality_score", F.col("is_good"))
 
 
 def _audio_oracle() -> str:
@@ -6708,9 +6657,7 @@ def perplexity_tertile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents.select("doc_id", "lang"), on="doc_id"
     )
     return (
-        stats.quantile_bucket_report(
-            labeled, "lang", "avg_nll", weight_col="n_tokens", n_buckets=3
-        )
+        stats.quantile_bucket_report(labeled, "lang", "avg_nll", weight_col="n_tokens")
         .withColumnRenamed("weight_total", "tokens_total")
     )
 

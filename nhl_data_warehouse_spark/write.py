@@ -63,14 +63,9 @@ def incremental_insert(
     return n
 
 
-def overwrite_table(df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-    """M3-style named table materialization with optional partitioning
-    (100TB stance: partition raw/staging by date/season so downstream
-    reads prune, SURVEY.md §7.4.7)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(table)
+def overwrite_table(df: DataFrame, table: str) -> None:
+    """M3-style named table materialization."""
+    df.write.mode("overwrite").saveAsTable(table)
 
 
 def merge_upsert(
@@ -174,27 +169,20 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_key: str,
-    n_buckets: int = 32,
 ) -> None:
-    """Persist a table hash-bucketed and sorted on its join key: two
-    tables bucketed the same way equi-join with NO shuffle on either
-    side — the pre-partitioning that turns the
-    nightly big-fact ⋈ big-fact join from a full reshuffle of both
-    inputs into a zip of co-located buckets. At 100TB this is the
+    """Persist a table hash-bucketed (8 buckets) and sorted on its join
+    key: two tables bucketed the same way equi-join with NO shuffle on
+    either side — the pre-partitioning that turns the nightly big-fact
+    ⋈ big-fact join from a full reshuffle of both inputs into a zip of
+    co-located buckets. At 100TB this is the
     difference between moving the table and moving nothing.
     """
     (
         df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_key)
+        .bucketBy(8, bucket_key)
         .sortBy(bucket_key)
         .saveAsTable(table)
     )
-
-
-def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    """U1 SQL ``UNION`` parity helper: positional-safe union by name,
-    then distinct (reference ``seasonal_metrics_agg.sql:47``)."""
-    return a.unionByName(b).distinct()
 
 
 def scd2_apply(
@@ -202,15 +190,12 @@ def scd2_apply(
     updates: DataFrame,
     keys: list[str],
     tracked: list[str],
-    effective_col: str = "effective_ts",
-    start_col: str = "valid_from",
-    end_col: str = "valid_to",
 ) -> DataFrame:
     """Type-2 slowly-changing dimension apply, as a pure transform.
 
     ``current`` is the versioned dimension: one open row per key
-    (``end_col`` IS NULL) plus closed history. ``updates`` carries
-    (keys + tracked attributes + ``effective_col``). Result:
+    (``valid_to`` IS NULL) plus closed history. ``updates`` carries
+    (keys + tracked attributes + ``effective_ts``). Result:
 
     - closed history rows pass through untouched;
     - open rows whose tracked attributes are unchanged pass through;
@@ -225,13 +210,13 @@ def scd2_apply(
     """
     from functools import reduce
 
-    closed = current.filter(F.col(end_col).isNotNull())
-    open_rows = current.filter(F.col(end_col).isNull())
+    closed = current.filter(F.col("valid_to").isNotNull())
+    open_rows = current.filter(F.col("valid_to").isNull())
 
     upd = updates.select(
         *[F.col(k).alias(f"_u_{k}") for k in keys],
         *[F.col(t).alias(f"_u_{t}") for t in tracked],
-        F.col(effective_col).alias("_u_eff"),
+        F.col("effective_ts").alias("_u_eff"),
     )
     key_cond = reduce(
         lambda a, b: a & b, [open_rows[k] == upd[f"_u_{k}"] for k in keys]
@@ -243,24 +228,24 @@ def scd2_apply(
         [F.col(t).eqNullSafe(F.col(f"_u_{t}")) for t in tracked],
     )
     matched_open = F.col(keys[0]).isNotNull() & F.col(f"_u_{keys[0]}").isNotNull()
-    out_cols = [*keys, *tracked, start_col, end_col]
+    out_cols = [*keys, *tracked, "valid_from", "valid_to"]
 
     unchanged = joined.filter(matched_open & same).select(*out_cols)
     closed_out = (
         joined.filter(matched_open & ~same)
-        .select(*keys, *tracked, F.col(start_col), F.col("_u_eff").alias(end_col))
+        .select(*keys, *tracked, F.col("valid_from"), F.col("_u_eff").alias("valid_to"))
     )
     new_versions = joined.filter(matched_open & ~same).select(
         *[F.col(f"_u_{k}").alias(k) for k in keys],
         *[F.col(f"_u_{t}").alias(t) for t in tracked],
-        F.col("_u_eff").alias(start_col),
-        F.lit(None).cast(current.schema[end_col].dataType).alias(end_col),
+        F.col("_u_eff").alias("valid_from"),
+        F.lit(None).cast(current.schema["valid_to"].dataType).alias("valid_to"),
     )
     brand_new = joined.filter(F.col(keys[0]).isNull()).select(
         *[F.col(f"_u_{k}").alias(k) for k in keys],
         *[F.col(f"_u_{t}").alias(t) for t in tracked],
-        F.col("_u_eff").alias(start_col),
-        F.lit(None).cast(current.schema[end_col].dataType).alias(end_col),
+        F.col("_u_eff").alias("valid_from"),
+        F.lit(None).cast(current.schema["valid_to"].dataType).alias("valid_to"),
     )
     untouched_open = joined.filter(F.col(f"_u_{keys[0]}").isNull()).select(*out_cols)
 

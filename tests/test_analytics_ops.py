@@ -62,7 +62,7 @@ class TestRollingDays:
         )
         out = {
             str(r.day): (float(r.rolling_7d_sum), r.rolling_7d_n)
-            for r in rolling_days(daily, "k", "day", "v", days=7).collect()
+            for r in rolling_days(daily, "k", "day", "v").collect()
         }
         assert out["2024-01-01"] == (1.0, 1)
         assert out["2024-01-05"] == (3.0, 2)  # 1st is within 6 days
@@ -159,7 +159,7 @@ class TestZOrder:
             [(i, i * 7 % 100, i * 13 % 100) for i in range(64)],
             "id long, x long, y long",
         )
-        out = zorder_file_assignment(df, "x", "y", "id", n_files=8).collect()
+        out = zorder_file_assignment(df, "id", n_files=8).collect()
         assert len(out) == 64
         per_file = {}
         for r in out:
@@ -179,9 +179,7 @@ class TestZOrder:
         )
         got = {
             r.id: r.file_id
-            for r in zorder_file_assignment(
-                df, "x", "y", "id", n_files=8
-            ).collect()
+            for r in zorder_file_assignment(df, "id", n_files=8).collect()
         }
         from nhl_data_warehouse_spark.operators.layout import z_value
 
@@ -251,8 +249,7 @@ class TestZOrder:
         out = {
             r.file_id: r
             for r in skipping_manifest(
-                df, "file_id", dims=["x", "y"],
-                pred_ranges={"x": (0, 9), "y": (0, 9)},
+                df, pred_ranges={"x": (0, 9), "y": (0, 9)},
             ).collect()
         }
         assert out[1].scanned and not out[2].scanned
@@ -268,7 +265,7 @@ class TestZOrder:
             [(1, 5, 50, 1), (2, 15, 60, 1)], "id long, x long, y long, file_id int"
         )
         (r,) = skipping_manifest(
-            df, "file_id", dims=["x", "y"], pred_ranges={"x": (10, 20), "y": (0, 100)}
+            df, pred_ranges={"x": (10, 20), "y": (0, 100)}
         ).collect()
         assert r.scanned
 
@@ -278,7 +275,7 @@ class TestZOrder:
         df = spark.createDataFrame(
             [(i, i, i) for i in range(5)], "id long, x long, y long"
         )
-        out = zorder_file_assignment(df, "x", "y", "id", n_files=8).collect()
+        out = zorder_file_assignment(df, "id", n_files=8).collect()
         assert sorted(r.file_id for r in out) == [1, 2, 3, 4, 5]
 
 
@@ -349,7 +346,7 @@ class TestPageRank:
         edges = [(1, 2, 1), (1, 3, 3), (2, 3, 1), (3, 1, 1)]  # 4 dangles
         ndf = spark.createDataFrame([(n,) for n in nodes], "node long")
         edf = spark.createDataFrame(edges, "src long, dst long, weight long")
-        got = {r.node: float(r.rank) for r in pagerank(ndf, edf, n_iter=3).collect()}
+        got = {r.node: float(r.rank) for r in pagerank(ndf, edf).collect()}
 
         # python reference with identical rounding discipline
         out_w = {1: 4, 2: 1, 3: 1}
@@ -389,14 +386,14 @@ class TestWeightedSample:
 
         rows = [(i, 1 if i < 900 else 1000) for i in range(1000)]
         df = spark.createDataFrame(rows, "doc_id long, w long")
-        a = weighted_sample_topk(df, "w", ["doc_id"], k=50).collect()
-        b = weighted_sample_topk(df, "w", ["doc_id"], k=50).collect()
+        a = weighted_sample_topk(df, "w", k=50).collect()
+        b = weighted_sample_topk(df, "w", k=50).collect()
         assert [r.doc_id for r in a] == [r.doc_id for r in b]  # reproducible
         # 100 heavy rows (w=1000) vs 900 light (w=1): heavy dominate top-50
         n_heavy = sum(1 for r in a if r.doc_id >= 900)
         assert n_heavy >= 40
         # different salt -> different (still deterministic) sample
-        c = weighted_sample_topk(df, "w", ["doc_id"], k=50, salt="other").collect()
+        c = weighted_sample_topk(df, "w", k=50, salt="other").collect()
         assert [r.doc_id for r in a] != [r.doc_id for r in c]
 
 

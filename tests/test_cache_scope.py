@@ -199,7 +199,7 @@ def _other(spark, fn):
             [(f"2025-01-{d:02d}", 3 * d + d % 4) for d in range(1, 21)],
             "d string, x long",
         ).withColumn("d", F.col("d").cast("date"))
-        return theil_sen_trend(days, "d", "x")
+        return theil_sen_trend(days)
     raise KeyError(fn)
 
 
@@ -279,7 +279,7 @@ CASES = {
 }
 # private cores are exercised through their public wrappers
 VIA = {
-    "graph._canonical_deg_tri": (
+    "graph._deg_tri": (
         "graph.triangle_counts",
         "graph.clustering_coefficients",
     ),

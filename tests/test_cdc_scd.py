@@ -41,7 +41,7 @@ class TestApplyChanges:
             [(1, 1, "I", "free"), (2, 1, "I", "free"), (3, 1, "I", "pro")],
             CHANGE_SCHEMA,
         )
-        cdc.apply_changes(spark, t, batch1, ["user_id"], ["seq"], op_col="op")
+        cdc.apply_changes(spark, t, batch1, ["user_id"])
         assert spark.table(t).count() == 3
 
         batch2 = spark.createDataFrame(
@@ -53,11 +53,11 @@ class TestApplyChanges:
             ],
             CHANGE_SCHEMA,
         )
-        cdc.apply_changes(spark, t, batch2, ["user_id"], ["seq"], op_col="op")
+        cdc.apply_changes(spark, t, batch2, ["user_id"])
         state = {r.user_id: r.plan for r in spark.table(t).collect()}
         assert state == {1: "free", 2: "enterprise", 4: "free"}
 
-        cdc.apply_changes(spark, t, batch2, ["user_id"], ["seq"], op_col="op")
+        cdc.apply_changes(spark, t, batch2, ["user_id"])
         assert {r.user_id: r.plan for r in spark.table(t).collect()} == state
         spark.sql(f"DROP TABLE {t}")
 

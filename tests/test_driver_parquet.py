@@ -37,7 +37,7 @@ def test_range_join_pairs_runs_on_driver_parquet(spark):
     from nhl_data_warehouse_spark.suite.registry import load
 
     (events,) = load(spark, SF_DIR, "events")
-    out = range_join_pairs(events, key="user_id", gap_minutes=5)
+    out = range_join_pairs(events)
     assert out.columns == ["user_id", "a_id", "b_id", "gap_seconds"]
     assert out.count() >= 0  # forces full execution
 
@@ -65,17 +65,29 @@ def test_registry_size_pinned():
 def test_every_registered_query_builds_a_plan(spark):
     """Analysis-time smoke over the full registry at sf0.001: building
     the DataFrame catches schema/type errors (the class of failure the
-    driver hit) without paying full execution for all 122 queries."""
+    driver hit) without paying full execution for every query.
+
+    The same pass pins the W1 regression: the driver floats oracle
+    DECIMAL/HUGEINT cells, so any DecimalType column in a final query
+    schema can never hash-match. Keep decimals internal, double/bigint
+    at the edge."""
+    from pyspark.sql.types import DecimalType
+
     from nhl_data_warehouse_spark.suite import REGISTRY
 
     failures = {}
+    decimals = {}
     for name, spec in REGISTRY.items():
         try:
-            df = spec.fn(spark, SF_DIR)
-            df.schema  # forces analysis
+            schema = spec.fn(spark, SF_DIR).schema  # forces analysis
         except Exception as e:  # noqa: BLE001
             failures[name] = f"{type(e).__name__}: {e}"
+            continue
+        bad = [f.name for f in schema.fields if isinstance(f.dataType, DecimalType)]
+        if bad:
+            decimals[name] = bad
     assert not failures, failures
+    assert not decimals, decimals
 
 
 def test_driver_window_composition():
@@ -181,52 +193,6 @@ def test_priority_rotates_when_next_driver_artifact_lands(tmp_path):
     assert not (set(rotated[:50]) & set(rotated11))
 
 
-def test_no_toplevel_array_or_map_in_oracle_less_schemas(spark):
-    """Driver-harness insurance (VERDICT r3 item 6): the driver's
-    pandas canonicalization sorts cells through ``Categorical``, which
-    cannot hash list/dict cells — a top-level ArrayType/MapType column
-    in an ORACLE-LESS query crashes even the rows-only check
-    (CORRECTNESS_r03's approx_value_percentiles err). Oracle-bearing
-    queries are exercised hash-strict by tools/check_oracle.py, so any
-    array column that survives there is one the driver's text-form
-    normalization handles; the rows-only queries get no such cover and
-    must stay scalar at the edge."""
-    from pyspark.sql.types import ArrayType, MapType
-
-    from nhl_data_warehouse_spark.suite import REGISTRY
-
-    offenders = {}
-    for name, spec in REGISTRY.items():
-        if spec.oracle is not None:
-            continue
-        df = spec.fn(spark, SF_DIR)
-        bad = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType))
-        ]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, offenders
-
-
-def test_no_decimal_in_final_schemas(spark):
-    """W1 regression: the driver floats oracle DECIMAL/HUGEINT cells,
-    so any DecimalType column in a final query schema can never
-    hash-match. Keep decimals internal, double/bigint at the edge."""
-    from pyspark.sql.types import DecimalType
-
-    from nhl_data_warehouse_spark.suite import REGISTRY
-
-    offenders = {}
-    for name, spec in REGISTRY.items():
-        df = spec.fn(spark, SF_DIR)
-        bad = [f.name for f in df.schema.fields if isinstance(f.dataType, DecimalType)]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, offenders
-
-
 def test_load_normalizes_round1_nanos_long_format(spark, tmp_path):
     """Round 1 shipped events.ts as TIMESTAMP(NANOS), which Spark reads
     as a ns long under nanosAsLong; the loader must keep handling that
@@ -256,7 +222,7 @@ def test_load_normalizes_round1_nanos_long_format(spark, tmp_path):
     # ns truncates to µs exactly; gap between consecutive events is 61s
     from nhl_data_warehouse_spark.operators.rangejoin import range_join_pairs
 
-    pairs = range_join_pairs(events, key="user_id", gap_minutes=5).collect()
+    pairs = range_join_pairs(events).collect()
     # within each user: 3 events 61s apart -> pairs (0,1),(1,2),(0,2)
     assert len(pairs) == 6
     assert all(abs(r.gap_seconds) <= 300 for r in pairs)

@@ -27,8 +27,8 @@ def test_sampling_ops_accept_empty(spark):
     from nhl_data_warehouse_spark.operators import sampling
 
     df = _empty(spark, "doc_id long, lang string, score long, w long")
-    assert sampling.hash_sample(df, ["doc_id"], 0.5).count() == 0
-    assert sampling.stratified_kfold(df, "lang", 5, ["doc_id"]).count() == 0
+    assert sampling.hash_sample(df, 0.5).count() == 0
+    assert sampling.stratified_kfold(df, 5).count() == 0
     assert (
         sampling.budget_select(df, "score", "w", budget=10, max_score=2).count()
         == 0
@@ -93,7 +93,7 @@ def test_round5_ops_accept_empty(spark):
     rng = _empty(spark, "label string, lo double, hi double")
     assert interval_lookup_join(pts, rng, value_col="v", cell_width=10.0).count() == 0
     assert cusum_positive(
-        _empty(spark, "t long, x long, k long"), "t", "x", k_col="k"
+        _empty(spark, "t long, x long, k long"), "t", "x"
     ).count() == 0
     assert fim_split(_empty(spark, "doc_id long, text string")).count() == 0
     assert length_bucket_padding_stats(
@@ -101,9 +101,7 @@ def test_round5_ops_accept_empty(spark):
     ).count() == 0
     # welch on empty: the single global-agg row survives with NULL
     # stats (counts 0) — the SQL aggregate convention, documented here
-    r = welch_ab_stats(
-        _empty(spark, "variant string, value double"), "variant", "value"
-    ).collect()[0]
+    r = welch_ab_stats(_empty(spark, "variant string, value double")).collect()[0]
     assert r.n_a == 0 and r.n_b == 0 and r.z_score is None
 
 
@@ -132,7 +130,7 @@ def test_round6_ops_accept_empty(spark):
     assert pareto_frontier_2d(pts, "cost", "gain").count() == 0
 
     ev = _empty(spark, "user_id long, ts timestamp")
-    ret = day_bitmask_retention(ev, "user_id", "ts", n_days=5).collect()
+    ret = day_bitmask_retention(ev, n_days=5).collect()
     # no users -> the day spine itself is empty (explode over no rows)
     assert ret == []
 

@@ -16,7 +16,7 @@ def test_pairs_within_block_and_distance(spark):
     )
     got = {
         (r.a, r.b): r.dist
-        for r in blocked_edit_distance_pairs(df, "v", max_dist=1).collect()
+        for r in blocked_edit_distance_pairs(df, "v").collect()
     }
     # colour<->color: dist 1, same block 'c'; colr<->color: dist 1.
     # kolor is 1 edit from color but blocked out (prefix 'k' != 'c').
@@ -30,7 +30,7 @@ def test_pairs_within_block_and_distance(spark):
 
 def test_prefix_zero_disables_blocking(spark):
     df = spark.createDataFrame([("color",), ("kolor",)], "v string")
-    got = blocked_edit_distance_pairs(df, "v", max_dist=1, prefix_len=0).collect()
+    got = blocked_edit_distance_pairs(df, "v", prefix_len=0).collect()
     assert [(r.a, r.b, r.dist) for r in got] == [("color", "kolor", 1)]
 
 
@@ -42,9 +42,7 @@ def test_fuzzy_semi_match_lookup(spark):
     ref = spark.createDataFrame([("paris",), ("tokio",)], "name string")
     got = sorted(
         r.id
-        for r in fuzzy_semi_match(
-            corpus, ref, "city", "name", max_dist=1
-        ).collect()
+        for r in fuzzy_semi_match(corpus, ref, "city").collect()
     )
     # paris exact, pariss 1 edit; tokyo vs tokio is 1 edit same block
     assert got == [1, 2, 4]

@@ -800,7 +800,7 @@ def test_round14_multiset_shingles_codegen_shape(spark, registry):
     df = spark.createDataFrame(
         [(1, "abcdefghijklmnop"), (2, "qrs")], "doc_id long, text string"
     )
-    plan = plan_of(dedup.char_shingles_multiset(df, k=12))
+    plan = plan_of(dedup.char_shingles_multiset(df))
     assert "lambdafunction" not in plan.lower()
     assert "Generate explode(sequence" in plan
     # identical distinct shingle SETS as the reference implementation
@@ -810,6 +810,6 @@ def test_round14_multiset_shingles_codegen_shape(spark, registry):
     }
     got = {
         (r.doc_id, r.shingle)
-        for r in dedup.char_shingles_multiset(df, k=12).collect()
+        for r in dedup.char_shingles_multiset(df).collect()
     }
     assert got == ref

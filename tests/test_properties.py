@@ -71,7 +71,7 @@ def test_range_join_matches_naive_quadratic(spark, rows):
     )
     got = sorted(
         (r.a_id, r.b_id)
-        for r in range_join_pairs(df, gap_minutes=5).collect()
+        for r in range_join_pairs(df).collect()
     )
     gap = datetime.timedelta(minutes=5)
     expected = sorted(
@@ -456,7 +456,7 @@ def test_fuzzy_pairs_sound_and_complete_within_block(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     got = {
         (r.a, r.b): r.dist
-        for r in blocked_edit_distance_pairs(df, "v", max_dist=1).collect()
+        for r in blocked_edit_distance_pairs(df, "v").collect()
     }
     uniq = sorted(set(vals))
     expected = {}
@@ -670,9 +670,7 @@ def test_budget_select_matches_naive_prefix(spark, rows, budget):
     df = spark.createDataFrame(data, "doc_id long, score long, w long")
     got = {
         r.doc_id: r.cum_weight
-        for r in budget_select(
-            df, "score", "w", budget=budget, max_score=2, salt="tb-v1"
-        ).collect()
+        for r in budget_select(df, "score", "w", budget=budget, max_score=2).collect()
     }
     # naive: sort by (score desc, md5('tb-v1|'+id), id), prefix-sum, cut
     order = sorted(data, key=lambda t: (-t[1], _md5(f"tb-v1|{t[0]}"), t[0]))
@@ -741,7 +739,7 @@ def test_kfold_matches_naive_rank(spark, rows, k):
     df = spark.createDataFrame(data, "doc_id long, lang string")
     got = {
         r.doc_id: r.fold
-        for r in stratified_kfold(df, "lang", k, ["doc_id"], salt="kfold-v1").collect()
+        for r in stratified_kfold(df, k).collect()
     }
     by = {}
     for i, lang in data:
@@ -835,7 +833,7 @@ def test_cusum_closed_form_matches_recursion(spark, xs, k):
         [(i, x, k) for i, x in enumerate(xs)], "t long, x long, k long"
     )
     got = {
-        r.t: r.cusum for r in cusum_positive(df, "t", "x", k_col="k").collect()
+        r.t: r.cusum for r in cusum_positive(df, "t", "x").collect()
     }
     s = 0
     for i, x in enumerate(xs):
@@ -935,7 +933,7 @@ def test_welch_matches_closed_form(spark, a, b):
     b = [float(x) for x in b]
     rows = [("A", v) for v in a] + [("B", v) for v in b]
     df = spark.createDataFrame(rows, "variant string, value double")
-    r = welch_ab_stats(df, "variant", "value").collect()[0]
+    r = welch_ab_stats(df).collect()[0]
     na, nb = len(a), len(b)
     # closed form in the exact cents domain, same op order
     ca = [round(v * 100) for v in a]
@@ -1029,7 +1027,7 @@ def test_spearman_matches_naive(spark, pairs):
     df = spark.createDataFrame(
         [(x, float(y)) for x, y in pairs], "x long, y double"
     )
-    got = spearman_rho(df, "x", "y", x_scale=1, y_scale=1).first().rho
+    got = spearman_rho(df, "x", "y", y_scale=1).first().rho
     rx, ry = _midrank_map(xs), _midrank_map(ys)
     ax = [rx[v] for v in xs]
     ay = [ry[v] for v in ys]
@@ -1057,7 +1055,7 @@ def test_kendall_tau_b_matches_naive(spark, pairs):
     df = spark.createDataFrame(
         [(x, float(y)) for x, y in pairs], "x long, y double"
     )
-    got = kendall_tau_b(df, "x", "y", x_scale=1, y_scale=1).first().tau_b
+    got = kendall_tau_b(df, "x", "y", y_scale=1).first().tau_b
     n = len(xs)
     nc = nd = 0
     for i in range(n):

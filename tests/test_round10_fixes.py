@@ -155,7 +155,7 @@ class TestGroupedCusumNoForcedBroadcast:
         ]
         df = spark.createDataFrame(rows, "g string, d date, x long")
         analyzed = (
-            grouped_cusum_peak(df, "g", "d", "x")
+            grouped_cusum_peak(df, "g")
             ._jdf.queryExecution()
             .analyzed()
             .toString()

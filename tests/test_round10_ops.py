@@ -141,7 +141,6 @@ class TestDowSeasonalAnomalies:
             df.select(F.col("ts").cast("timestamp").alias("ts"), "val"),
             "ts",
             "val",
-            z_threshold=1.5,
         ).collect()
         days = {r["d"] for r in out}
         assert d0 + datetime.timedelta(weeks=3) in days
@@ -520,7 +519,7 @@ class TestCrossLangGramOverlap:
         )
         rows = {
             (r["lang_a"], r["lang_b"]): r
-            for r in cross_lang_gram_overlap(df, n=4).collect()
+            for r in cross_lang_gram_overlap(df).collect()
         }
         r = rows[("de", "en")]
         assert r["n_shared"] == 1  # 'a b c d'
@@ -551,7 +550,7 @@ class TestSeasonalDecompose:
             F.col("ts").cast("timestamp").alias("ts"), "val"
         )
         out = {r["d"]: r for r in
-               seasonal_decompose_daily(df, "ts", "val", cents_scale=100).collect()}
+               seasonal_decompose_daily(df, "ts", "val").collect()}
         assert len(out) == 42
         # edges: first/last 3 days have NULL trend and resid
         for i in (0, 1, 2, 39, 40, 41):

@@ -172,9 +172,7 @@ class TestSimhashBandNearDups:
                     want.add((a, b, h))
         got = {
             (r["id_a"], r["id_b"], r["hamming"])
-            for r in simhash_band_near_dups(
-                df, bits=32, bands=4, max_hamming=3
-            ).collect()
+            for r in simhash_band_near_dups(df, max_hamming=3).collect()
         }
         assert got == want
         assert want, "fixture should produce at least one near-dup pair"
@@ -186,7 +184,7 @@ class TestSimhashBandNearDups:
 
         df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
         with pytest.raises(AssertionError):
-            simhash_band_near_dups(df, bits=32, bands=4, max_hamming=4)
+            simhash_band_near_dups(df, max_hamming=4)
 
 
 class TestWassersteinTwoSample:
@@ -235,7 +233,7 @@ class TestJsdCategoryPairs:
         df = spark.createDataFrame(rows, "source string, lang string")
         out = {
             (r["source_a"], r["source_b"]): r["jsd"]
-            for r in jsd_category_pairs(df, "source", "lang").collect()
+            for r in jsd_category_pairs(df).collect()
         }
         assert out[("s1", "s2")] == 0.0
         assert abs(out[("s1", "s3")] - math.log(2)) < 1e-5
@@ -262,7 +260,7 @@ class TestSeasonalNaiveBacktest:
             rows.append((d0 + datetime.timedelta(days=7 + i), v + dv))
         df = spark.createDataFrame(rows, "d date, v double")
         out = seasonal_naive_backtest(
-            df, "d", "v", season=7, split_date="2025-01-08", scale=100
+            df, "d", "v", split_date="2025-01-08"
         ).collect()[0]
         # all 7 eval days have a d-7 ancestor; train days have none
         assert out["n_train"] == 0 and out["n_eval"] == 7
@@ -285,7 +283,7 @@ class TestSeasonalNaiveBacktest:
         ]
         df = spark.createDataFrame(rows, "d date, v double")
         out = seasonal_naive_backtest(
-            df, "d", "v", season=7, split_date="2025-01-15", scale=100
+            df, "d", "v", split_date="2025-01-15"
         ).collect()[0]
         assert out["smape"] == 0.0
         assert out["mase"] is None  # train naive error is exactly 0
@@ -301,9 +299,7 @@ class TestSplitConformalCoverage:
 
         rows = [(i, float(i % 10)) for i in range(2000)]
         df = spark.createDataFrame(rows, "id long, v double")
-        out = split_conformal_coverage(
-            df, "id", "v", alpha_num=1, alpha_den=10
-        ).collect()[0]
+        out = split_conformal_coverage(df, "id", "v").collect()[0]
         # independent reference
         cal = [v for i, v in rows
                if hashlib.md5(str(i).encode()).hexdigest()[0] in "01234567"]
@@ -341,7 +337,7 @@ class TestDegreeAssortativity:
                 rows += [(g, 0), (g, leaf)]
                 g += 1
         df = spark.createDataFrame(rows, "grp long, item long")
-        out = degree_assortativity(df, "grp", "item", min_shared=2).collect()[0]
+        out = degree_assortativity(df, "grp", "item").collect()[0]
         assert out["n_nodes"] == 6 and out["n_edges"] == 5
         assert abs(out["assortativity"] - (-1.0)) < 1e-12
 
@@ -358,7 +354,7 @@ class TestDegreeAssortativity:
                 rows += [(g, a), (g, b)]
                 g += 1
         df = spark.createDataFrame(rows, "grp long, item long")
-        out = degree_assortativity(df, "grp", "item", min_shared=2).collect()[0]
+        out = degree_assortativity(df, "grp", "item").collect()[0]
         assert out["n_edges"] == 3
         assert out["assortativity"] is None
 
@@ -395,7 +391,7 @@ class TestRrfFuse:
         )
         rows = {
             r["doc_id"]: r
-            for r in rrf_fuse(a, "s", b, "s2", k_rrf=60, top_n=10).collect()
+            for r in rrf_fuse(a, "s", b, "s2", top_n=10).collect()
         }
         assert rows[3]["rank_a"] == 3 and rows[3]["rank_b"] == 1
         assert abs(rows[3]["rrf_score"] - (1 / 63 + 1 / 61)) < 1e-12
@@ -495,9 +491,7 @@ class TestLabelPropagation:
         df = spark.createDataFrame(rows, "grp long, item long")
         out = {
             r["item"]: r["community"]
-            for r in label_propagation(
-                df, "grp", "item", min_shared=2, rounds=3
-            ).collect()
+            for r in label_propagation(df, "grp", "item").collect()
         }
         assert {out[1], out[2], out[3]} == {1}
         assert {out[11], out[12], out[13]} == {10}
@@ -537,9 +531,7 @@ class TestCupedAdjustedAb:
             rows.append((u, pre_t, float(u % 13)))
             rows.append((u, post_t, float((u % 13) * 2 + u % 3)))
         df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        out = cuped_adjusted_ab(
-            df, "user_id", "value", "ts", "2024-01-16 00:00:00"
-        ).collect()[0]
+        out = cuped_adjusted_ab(df).collect()[0]
         xs, ys, ia = {}, {}, {}
         for u in range(200):
             xs[u] = int(round((u % 13) * 100))
@@ -569,9 +561,7 @@ class TestCupedAdjustedAb:
         post_t = datetime.datetime(2024, 1, 20)
         rows = [(u, post_t, float(u)) for u in range(50)]  # no pre events
         df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        out = cuped_adjusted_ab(
-            df, "user_id", "value", "ts", "2024-01-16 00:00:00"
-        ).collect()[0]
+        out = cuped_adjusted_ab(df).collect()[0]
         assert out["theta"] is None
         assert out["adj_mean_a"] is None and out["adj_diff"] is None
         assert out["mean_post_a"] is not None  # raw means survive
@@ -594,7 +584,7 @@ class TestHoltLinear:
             (r["k"], r["month"].month): (
                 r["holt_level"], r["holt_trend"], r["holt_forecast"]
             )
-            for r in holt_linear(df, "k", "month", "v").collect()
+            for r in holt_linear(df, "k", "v").collect()
         }
         for k, vs in series.items():
             l, b = vs[0], 0.0
@@ -612,7 +602,7 @@ class TestHoltLinear:
 
         rows = [(1, datetime.date(2025, 1 + i, 1), 9.0) for i in range(6)]
         df = spark.createDataFrame(rows, "k long, month date, v double")
-        for r in holt_linear(df, "k", "month", "v").collect():
+        for r in holt_linear(df, "k", "v").collect():
             assert r["holt_level"] == 9.0 and r["holt_trend"] == 0.0
 
 
@@ -635,7 +625,7 @@ class TestIvmJoinView:
             r["nation"]: r["revenue"]
             for r in join_view_delta(
                 base, delta, dim, "custkey", "c", "nation",
-                F.col("amount"), "revenue",
+                F.col("amount"),
             ).collect()
         }
         full = {

@@ -14,7 +14,7 @@
    ``id_col`` parameter.
 4. ``triangle_counts`` / ``clustering_coefficients``: a library
    caller releases the two persisted relations of
-   ``_canonical_deg_tri`` with ``cache_scope`` instead of stranding
+   ``_deg_tri`` with ``cache_scope`` instead of stranding
    them.
 """
 

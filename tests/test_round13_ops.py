@@ -82,7 +82,7 @@ class TestCanonicalUrl:
         )
         got = {
             r.i: r.c
-            for r in df.select("i", canonical_url("url").alias("c")).collect()
+            for r in df.select("i", canonical_url().alias("c")).collect()
         }
         for i, u in enumerate(ADVERSARIAL_URLS):
             assert got[i] == _ref_canonical(u), repr(u)
@@ -255,9 +255,7 @@ class TestQuantileBucketReport:
         df = spark.createDataFrame(rows, "lang string, s double, w long")
         got = {
             (r.lang, r.bucket): (r.n_docs, r.weight_total)
-            for r in quantile_bucket_report(
-                df, "lang", "s", weight_col="w", n_buckets=3
-            ).collect()
+            for r in quantile_bucket_report(df, "lang", "s", weight_col="w").collect()
         }
         assert got == _bucket_ref(rows)
 
@@ -272,9 +270,7 @@ class TestQuantileBucketReport:
         df = spark.createDataFrame(rows, "g string, s double, w long")
         got = {
             r.bucket: r.n_docs
-            for r in quantile_bucket_report(
-                df, "g", "s", weight_col="w", n_buckets=3
-            ).collect()
+            for r in quantile_bucket_report(df, "g", "s", weight_col="w").collect()
         }
         assert got == {1: 4, 3: 2}  # bucket 2 empty: value-grain cut
 
@@ -285,7 +281,7 @@ class TestQuantileBucketReport:
 
         rows = [("g", float(i), 99) for i in range(9)]
         df = spark.createDataFrame(rows, "g string, s double, w long")
-        for r in quantile_bucket_report(df, "g", "s", n_buckets=3).collect():
+        for r in quantile_bucket_report(df, "g", "s").collect():
             assert r.weight_total == r.n_docs == 3
 
     def test_single_cell_group_all_bucket_one(self, spark):
@@ -296,7 +292,7 @@ class TestQuantileBucketReport:
         df = spark.createDataFrame(
             [("g", 2.5, 1)] * 5, "g string, s double, w long"
         )
-        got = quantile_bucket_report(df, "g", "s", n_buckets=3).collect()
+        got = quantile_bucket_report(df, "g", "s").collect()
         assert len(got) == 1 and got[0].bucket == 1 and got[0].n_docs == 5
 
     def test_window_runs_over_bounded_cell_grain(self, spark):
@@ -313,7 +309,7 @@ class TestQuantileBucketReport:
             "g string, s double, w long",
         )
         plan = (
-            quantile_bucket_report(df, "g", "s", n_buckets=3)
+            quantile_bucket_report(df, "g", "s")
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -420,7 +416,7 @@ class TestSiteKeyAndConcentration:
             (5, "nonsense"),
         ]
         df = spark.createDataFrame(rows, "i long, url string")
-        got = {r.i: r.s for r in df.select("i", site_key("url").alias("s")).collect()}
+        got = {r.i: r.s for r in df.select("i", site_key().alias("s")).collect()}
         assert got[1] == got[2] == got[3] == "site1.example.org"
         assert got[4] == "wwwx.example.org"
         assert got[5] is None

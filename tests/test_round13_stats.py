@@ -291,9 +291,7 @@ def test_bh_screen_vs_reference(spark):
     scr = mwu_screen_by_group(df, "v", "g")
     out = {
         r["g"]: r
-        for r in bh_fdr_select(
-            scr, "z_value", "g", bh_z_thresholds(m, alpha)
-        ).collect()
+        for r in bh_fdr_select(scr, bh_z_thresholds(m, alpha)).collect()
     }
     zs = {}
     for g in shift:
@@ -324,9 +322,7 @@ def test_bh_screen_tiny_alpha_rejects_nothing(spark):
         [(g, c / 100.0) for g, c in pairs], "g string, v double"
     )
     scr = mwu_screen_by_group(df, "v", "g")
-    out = bh_fdr_select(
-        scr, "z_value", "g", bh_z_thresholds(3, 1e-12)
-    ).collect()
+    out = bh_fdr_select(scr, bh_z_thresholds(3, 1e-12)).collect()
     assert not any(r["rejected"] for r in out)
 
 
@@ -374,7 +370,7 @@ def test_logrank_vs_reference(spark):
     df = spark.createDataFrame(
         spells, "duration long, observed int, g1 int"
     )
-    row = logrank_two_sample(df, "duration", "observed", "g1").collect()[0]
+    row = logrank_two_sample(df).collect()[0]
     o1, e1, v = _logrank_ref(spells)
     assert row["o1"] == o1
     assert row["d_total"] == sum(o for _, o, _ in spells)
@@ -396,7 +392,7 @@ def test_logrank_null_when_groups_identical(spark):
     df = spark.createDataFrame(
         spells, "duration long, observed int, g1 int"
     )
-    row = logrank_two_sample(df, "duration", "observed", "g1").collect()[0]
+    row = logrank_two_sample(df).collect()[0]
     o1, e1, v = _logrank_ref(spells)
     assert math.isclose(
         row["z_value"], (o1 - e1) / math.sqrt(v), rel_tol=0, abs_tol=1e-3
@@ -417,7 +413,7 @@ def test_join_size_estimate_vs_reference(spark):
     # the heavy-hitter correction must recover it
     keys = [0] * 3000 + [rng.randint(1, 900) for _ in range(3000)]
     df = spark.createDataFrame([(k,) for k in keys], "k long")
-    row = join_size_estimate(df, "k", top_k=100).collect()[0]
+    row = join_size_estimate(df, "k").collect()[0]
     cnt = Counter(keys)
     exact = sum(c * c for c in cnt.values())
     n, d = len(keys), len(cnt)
@@ -443,7 +439,7 @@ def test_join_size_estimate_topk_covers_all_keys(spark):
     rng = random.Random(43)
     keys = [rng.randint(1, 40) for _ in range(2000)]  # 40 keys < top_k
     df = spark.createDataFrame([(k,) for k in keys], "k long")
-    row = join_size_estimate(df, "k", top_k=100).collect()[0]
+    row = join_size_estimate(df, "k").collect()[0]
     cnt = Counter(keys)
     exact = float(sum(c * c for c in cnt.values()))
     # every key is in the exact head: the corrected estimate IS exact

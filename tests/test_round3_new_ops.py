@@ -198,7 +198,7 @@ class TestCurriculumOrder:
         df = spark.createDataFrame(
             [(1, 2), (2, 10), (3, 2), (4, 7)], "doc_id long, q int"
         )
-        rows = curriculum_order(df, "q", max_score=10).orderBy("curriculum_pos").collect()
+        rows = curriculum_order(df, "q").orderBy("curriculum_pos").collect()
         # positions are a dense 1..n permutation, scores non-increasing
         assert [r.curriculum_pos for r in rows] == [1, 2, 3, 4]
         scores = [r.q for r in rows]
@@ -227,10 +227,10 @@ class TestCurriculumOrder:
         for bad in [[(1, 11)], [(1, -1)], [(1, None)]]:
             df = spark.createDataFrame(bad, "doc_id long, q int")
             with pytest.raises(Exception, match="curriculum_order"):
-                curriculum_order(df, "q", max_score=10).collect()
+                curriculum_order(df, "q").collect()
         frac = spark.createDataFrame([(1, 2.5)], "doc_id long, q double")
         with pytest.raises(Exception, match="curriculum_order"):
-            curriculum_order(frac, "q", max_score=10).collect()
+            curriculum_order(frac, "q").collect()
 
     def test_valid_boundary_scores_pass(self, spark):
         from nhl_data_warehouse_spark.operators.sampling import curriculum_order
@@ -238,7 +238,7 @@ class TestCurriculumOrder:
         df = spark.createDataFrame(
             [(1, 0.0), (2, 10.0), (3, 5.0)], "doc_id long, q double"
         )
-        rows = curriculum_order(df, "q", max_score=10).collect()
+        rows = curriculum_order(df, "q").collect()
         assert sorted(r.curriculum_pos for r in rows) == [1, 2, 3]
 
 
@@ -600,9 +600,7 @@ class TestWindowFunnel:
         ).withColumn("ts", F.col("ts").cast("timestamp"))
         got = {
             r.user_id: r.funnel_level
-            for r in window_funnel(
-                df, ["view", "click", "purchase"], window_seconds=3600
-            ).collect()
+            for r in window_funnel(df, window_seconds=3600).collect()
         }
         assert got == {1: 3, 2: 2, 3: 1, 4: 1, 5: 3}
 

@@ -19,7 +19,7 @@ class TestStratifiedKfold:
             [(i, "en" if i % 3 else "de") for i in range(100)],
             "doc_id long, lang string",
         )
-        got = stratified_kfold(df, "lang", k=5, id_cols=["doc_id"]).collect()
+        got = stratified_kfold(df, k=5).collect()
         assert len(got) == 100
         by = {}
         for r in got:
@@ -34,12 +34,10 @@ class TestStratifiedKfold:
         df = spark.createDataFrame(
             [(i, "en") for i in range(40)], "doc_id long, lang string"
         )
-        a = {r.doc_id: r.fold for r in stratified_kfold(df, "lang", 4, ["doc_id"]).collect()}
+        a = {r.doc_id: r.fold for r in stratified_kfold(df, 4).collect()}
         b = {
             r.doc_id: r.fold
-            for r in stratified_kfold(
-                df.repartition(7), "lang", 4, ["doc_id"]
-            ).collect()
+            for r in stratified_kfold(df.repartition(7), 4).collect()
         }
         assert a == b  # stable under repartitioning
 
@@ -153,9 +151,7 @@ class TestEwma:
         df = spark.createDataFrame(
             [(1, t, x) for t, x in enumerate(xs)], "k long, t long, x double"
         )
-        got = sorted(
-            ewma(df, "k", "t", "x", alpha=0.5).collect(), key=lambda r: r.t
-        )
+        got = sorted(ewma(df, "k", "t", "x").collect(), key=lambda r: r.t)
         acc, want = None, []
         for x in xs:
             acc = x if acc is None else 0.5 * x + 0.5 * acc
@@ -169,7 +165,7 @@ class TestEwma:
             [(1, 0, 10.0), (2, 0, 99.0), (1, 1, 20.0)],
             "k long, t long, x double",
         )
-        got = {(r.k, r.t): r.ewma for r in ewma(df, "k", "t", "x", 0.5).collect()}
+        got = {(r.k, r.t): r.ewma for r in ewma(df, "k", "t", "x").collect()}
         assert got[(1, 0)] == 10.0 and got[(2, 0)] == 99.0
         assert got[(1, 1)] == 15.0
 

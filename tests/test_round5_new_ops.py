@@ -100,7 +100,7 @@ class TestWelchAbStats:
         b = [9.0, 8.5, 9.5]
         rows = [("A", v) for v in a] + [("B", v) for v in b]
         df = spark.createDataFrame(rows, "variant string, value double")
-        r = welch_ab_stats(df, "variant", "value").collect()[0]
+        r = welch_ab_stats(df).collect()[0]
         assert r.n_a == 4 and r.n_b == 3
         assert r.mean_a == sum(a) / 4
         assert r.mean_b == sum(b) / 3
@@ -113,7 +113,7 @@ class TestWelchAbStats:
     def test_rejects_bad_scale(self, spark):
         df = spark.createDataFrame([("A", 1.0)], "variant string, value double")
         with pytest.raises(ValueError):
-            welch_ab_stats(df, "variant", "value", scale_factor=7)
+            welch_ab_stats(df, scale_factor=7)
 
 
 class TestFimSplit:
@@ -174,7 +174,7 @@ class TestCusum:
 
         got = {
             r.t: r.cusum
-            for r in cusum_positive(df, "t", "x", k_col="k").collect()
+            for r in cusum_positive(df, "t", "x").collect()
         }
         s = 0
         for i, x in enumerate(xs):

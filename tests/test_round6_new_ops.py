@@ -137,7 +137,7 @@ class TestDayBitmaskRetention:
         df = spark.createDataFrame(rows, "user_id long, ts timestamp")
         got = {
             r.day_of_month: (r.n_active, r.n_retained, r.retention)
-            for r in day_bitmask_retention(df, "user_id", "ts", 29).collect()
+            for r in day_bitmask_retention(df, 29).collect()
         }
         active = {d: set() for d in range(1, 31)}
         for uid, days in [(1, [1, 2, 3]), (2, [2, 4]), (3, [29, 30])]:
@@ -158,7 +158,7 @@ class TestDayBitmaskRetention:
         )
         got = {
             r.day_of_month: r.n_active
-            for r in day_bitmask_retention(df, "user_id", "ts", 10).collect()
+            for r in day_bitmask_retention(df, 10).collect()
         }
         assert got[5] == 1 and got[4] == 0
 

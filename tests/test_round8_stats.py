@@ -46,7 +46,7 @@ class TestSpearman:
         xs = [1, 2, 2, 3, 5, 5, 5, 8, 9, 1]
         ys = [2.0, 1.5, 1.5, 3.0, 4.0, 4.5, 4.0, 9.0, 0.5, 2.5]
         df = spark.createDataFrame(list(zip(xs, ys)), "x long, y double")
-        row = spearman_rho(df, "x", "y", x_scale=1, y_scale=100).first()
+        row = spearman_rho(df, "x", "y", y_scale=100).first()
         assert row.n == 10
         assert abs(row.rho - self._brute(xs, ys)) < 1e-12
 
@@ -107,7 +107,7 @@ class TestKendallTauB:
         xs = [1, 2, 2, 3, 3, 3, 4, 5, 5, 1]
         ys = [0.01, 0.02, 0.02, 0.05, 0.03, 0.05, 0.08, 0.1, 0.0, 0.04]
         df = spark.createDataFrame(list(zip(xs, ys)), "x long, y double")
-        row = kendall_tau_b(df, "x", "y", x_scale=1, y_scale=100).first()
+        row = kendall_tau_b(df, "x", "y", y_scale=100).first()
         assert row.n == 10
         assert abs(row.tau_b - self._brute(xs, ys)) < 1e-12
 
@@ -157,7 +157,7 @@ class TestAutocorrelation:
         )
         out = {
             r.lag: (r.n_pairs, r.acf)
-            for r in autocorrelation(df, "t", "x", max_lag=3).collect()
+            for r in autocorrelation(df, "t", max_lag=3).collect()
         }
         n = len(xs)
         m = sum(xs) / n
@@ -176,7 +176,7 @@ class TestAutocorrelation:
         df = spark.createDataFrame(
             [(i, 7) for i in range(10)], "t long, x long"
         )
-        rows = autocorrelation(df, "t", "x", max_lag=2).collect()
+        rows = autocorrelation(df, "t", max_lag=2).collect()
         assert all(r.acf is None for r in rows)
 
     def test_alternating_series_lag1_negative(self, spark):
@@ -185,7 +185,7 @@ class TestAutocorrelation:
         df = spark.createDataFrame(
             [(i, 10 if i % 2 else 0) for i in range(20)], "t long, x long"
         )
-        rows = {r.lag: r.acf for r in autocorrelation(df, "t", "x", 2).collect()}
+        rows = {r.lag: r.acf for r in autocorrelation(df, "t", 2).collect()}
         assert rows[1] < -0.9 and rows[2] > 0.8
 
 

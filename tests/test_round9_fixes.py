@@ -24,7 +24,7 @@ class TestKendallDegenerate:
         df = spark.createDataFrame(
             [(5, 0.1), (5, 0.3), (5, 0.7)], "x int, y double"
         )
-        row = kendall_tau_b(df, "x", "y", x_scale=1, y_scale=100).first()
+        row = kendall_tau_b(df, "x", "y", y_scale=100).first()
         assert row["nc"] == 0
         assert row["nd"] == 0
         assert row["tau_b"] is None  # all x tied -> denominator zero
@@ -35,7 +35,7 @@ class TestKendallDegenerate:
         df = spark.createDataFrame(
             [(1, 0.5), (2, 0.5), (3, 0.5)], "x int, y double"
         )
-        row = kendall_tau_b(df, "x", "y", x_scale=1, y_scale=100).first()
+        row = kendall_tau_b(df, "x", "y", y_scale=100).first()
         assert row["nc"] == 0 and row["nd"] == 0
         assert row["tau_b"] is None
 
@@ -54,7 +54,7 @@ class TestCacheReclamation:
         df = spark.createDataFrame(
             [(i % 7, float(i % 11)) for i in range(200)], "x int, y double"
         )
-        spearman_rho(df, "x", "y", x_scale=1, y_scale=100).collect()
+        spearman_rho(df, "x", "y", y_scale=100).collect()
         jsc = spark.sparkContext._jsc
         assert jsc.getPersistentRDDs().size() > 0, (
             "expected the joint histogram to be pinned after the action"
@@ -253,7 +253,7 @@ class TestExpectedCalibrationError:
             [(0.25, True), (0.21, False), (0.95, True), (0.95, True)],
             "p double, y boolean",
         )
-        row = expected_calibration_error(df, "p", "y", n_bins=10).first()
+        row = expected_calibration_error(df, "p", "y").first()
         # bin 2: acc 1/2, conf (0.25+0.21)/2=0.23, dev 0.27, w 0.5
         # bin 9: acc 1.0, conf 0.95, dev 0.05, w 0.5
         assert row["n_docs"] == 4
@@ -335,7 +335,7 @@ class TestCusumPeak:
             for i in range(40)
         ]
         df = spark.createDataFrame(rows, "d date, x long")
-        row = cusum_peak(df, "d", "x", cents_scale=1).first()
+        row = cusum_peak(df, cents_scale=1).first()
         assert row["n_days"] == 40
         assert row["peak_day"] == d0 + datetime.timedelta(days=19)
         # C_20 = 20*100 - 20*150 = -1000
@@ -362,17 +362,15 @@ class TestCusumPeak:
         df = spark.createDataFrame(rows, "g string, d date, x long")
         got = {
             r["g"]: r
-            for r in grouped_cusum_peak(df, "g", "d", "x", cents_scale=1).collect()
+            for r in grouped_cusum_peak(df, "g", cents_scale=1).collect()
         }
         for g in ("a", "b"):
-            ref = cusum_peak(
-                df.where(F.col("g") == g), "d", "x", cents_scale=1
-            ).first()
+            ref = cusum_peak(df.where(F.col("g") == g), cents_scale=1).first()
             assert got[g]["peak_day"] == ref["peak_day"]
             assert got[g]["peak_cusum"] == ref["peak_cusum"]
             assert got[g]["mean_daily"] == ref["mean_daily"]
         plan = (
-            grouped_cusum_peak(df, "g", "d", "x")
+            grouped_cusum_peak(df, "g")
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -388,7 +386,7 @@ class TestCusumPeak:
         d0 = datetime.date(2025, 1, 1)
         rows = [(d0 + datetime.timedelta(days=i), 7) for i in range(5)]
         df = spark.createDataFrame(rows, "d date, x long")
-        row = cusum_peak(df, "d", "x", cents_scale=1).first()
+        row = cusum_peak(df, cents_scale=1).first()
         assert row["peak_cusum"] == 0.0
         assert row["peak_day"] == d0  # all-tied -> earliest day
 
@@ -410,7 +408,7 @@ class TestNoveltyCurve:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {
             r["batch"]: r
-            for r in novelty_curve(df, n=5, n_batches=3).collect()
+            for r in novelty_curve(df, n_batches=3).collect()
         }
         assert [got[b]["n_docs"] for b in (0, 1, 2)] == [10, 10, 10]
         # t_a has 8 tokens -> 4 distinct 5-grams; same for t_b
@@ -440,7 +438,7 @@ class TestTheilSen:
         # shift values so intercept at epoch-day 0 is well-defined:
         # x = 100 + 5*(de - base) = (100 - 5*base) + 5*de
         df = spark.createDataFrame(rows, "d date, x long")
-        row = theil_sen_trend(df, "d", "x").first()
+        row = theil_sen_trend(df).first()
         assert row["n_days"] == 31
         assert row["n_pairs"] == 31 * 30 // 2
         assert abs(row["slope_per_day"] - 5.0) < 1e-6
@@ -546,7 +544,7 @@ class TestSpanContamination:
         )
         rows = {
             r["doc_id"]: r
-            for r in span_contamination(df, n=50, benchmark_mod=2).collect()
+            for r in span_contamination(df).collect()
         }
         assert set(rows) == {1, 3}
         r1 = rows[1]

@@ -19,8 +19,8 @@ def ids(df):
 class TestHashSample:
     def test_deterministic_and_near_rate(self, spark):
         df = spark.range(10_000).withColumnRenamed("id", "doc_id")
-        s1 = ids(sampling.hash_sample(df, ["doc_id"], 0.2, salt="s"))
-        s2 = ids(sampling.hash_sample(df, ["doc_id"], 0.2, salt="s"))
+        s1 = ids(sampling.hash_sample(df, 0.2, salt="s"))
+        s2 = ids(sampling.hash_sample(df, 0.2, salt="s"))
         assert s1 == s2
         assert 0.17 < len(s1) / 10_000 < 0.23
 
@@ -29,22 +29,22 @@ class TestHashSample:
         # changes which existing rows survive (incremental corpus builds)
         a = spark.range(0, 5_000).withColumnRenamed("id", "doc_id")
         b = spark.range(5_000, 10_000).withColumnRenamed("id", "doc_id")
-        both = ids(sampling.hash_sample(a.union(b), ["doc_id"], 0.3, salt="x"))
-        parts = ids(sampling.hash_sample(a, ["doc_id"], 0.3, salt="x")) | ids(
-            sampling.hash_sample(b, ["doc_id"], 0.3, salt="x")
+        both = ids(sampling.hash_sample(a.union(b), 0.3, salt="x"))
+        parts = ids(sampling.hash_sample(a, 0.3, salt="x")) | ids(
+            sampling.hash_sample(b, 0.3, salt="x")
         )
         assert both == parts
 
     def test_salts_give_different_samples(self, spark):
         df = spark.range(10_000).withColumnRenamed("id", "doc_id")
-        s1 = ids(sampling.hash_sample(df, ["doc_id"], 0.2, salt="a"))
-        s2 = ids(sampling.hash_sample(df, ["doc_id"], 0.2, salt="b"))
+        s1 = ids(sampling.hash_sample(df, 0.2, salt="a"))
+        s2 = ids(sampling.hash_sample(df, 0.2, salt="b"))
         overlap = len(s1 & s2) / max(len(s1), 1)
         assert 0.1 < overlap < 0.35  # ~rate, i.e. independent draws
 
     def test_rate_one_keeps_all(self, spark):
         df = spark.range(100).withColumnRenamed("id", "doc_id")
-        assert sampling.hash_sample(df, ["doc_id"], 1.0).count() == 100
+        assert sampling.hash_sample(df, 1.0).count() == 100
 
 
 class TestHashSplit:
@@ -74,7 +74,7 @@ class TestGroupCap:
     def test_caps_only_oversized_groups(self, spark):
         rows = [(i, "big") for i in range(100)] + [(1000 + i, "small") for i in range(5)]
         df = spark.createDataFrame(rows, "doc_id long, source string")
-        out = sampling.group_cap(df, "source", cap=10, id_cols=["doc_id"])
+        out = sampling.group_cap(df, cap=10)
         by_src = {
             r["source"]: r["n"]
             for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()
@@ -85,8 +85,8 @@ class TestGroupCap:
         df = spark.createDataFrame(
             [(i, "s") for i in range(50)], "doc_id long, source string"
         )
-        a = ids(sampling.group_cap(df, "source", 7, ["doc_id"], salt="c"))
-        b = ids(sampling.group_cap(df, "source", 7, ["doc_id"], salt="c"))
+        a = ids(sampling.group_cap(df, 7, salt="c"))
+        b = ids(sampling.group_cap(df, 7, salt="c"))
         assert a == b and len(a) == 7
 
 
@@ -100,7 +100,7 @@ class TestProportionalRebalance:
         )
         df = spark.createDataFrame(rows, "doc_id long, lang string")
         out = sampling.proportional_rebalance(
-            df, "lang", {"en": 1 / 3, "de": 1 / 3, "fr": 1 / 3}, id_cols=["doc_id"]
+            df, {"en": 1 / 3, "de": 1 / 3, "fr": 1 / 3}
         )
         counts = {
             r["lang"]: r["n"]
@@ -115,9 +115,7 @@ class TestProportionalRebalance:
         df = spark.createDataFrame(
             [(1, "en"), (2, "xx")], "doc_id long, lang string"
         )
-        out = sampling.proportional_rebalance(
-            df, "lang", {"en": 1.0}, id_cols=["doc_id"]
-        )
+        out = sampling.proportional_rebalance(df, {"en": 1.0})
         assert [r["lang"] for r in out.collect()] == ["en"]
 
 
@@ -157,7 +155,7 @@ class TestDeterministicShuffle:
         df = spark.createDataFrame([(i,) for i in range(97)], "doc_id long")
         out = {
             r.doc_id: r.shuffle_pos
-            for r in deterministic_shuffle(df, ["doc_id"]).collect()
+            for r in deterministic_shuffle(df).collect()
         }
         # dense 1..n, every row placed exactly once
         assert sorted(out.values()) == list(range(1, 98))
@@ -166,7 +164,7 @@ class TestDeterministicShuffle:
         # content-addressed: partitioning must not change the order
         again = {
             r.doc_id: r.shuffle_pos
-            for r in deterministic_shuffle(df.repartition(7), ["doc_id"]).collect()
+            for r in deterministic_shuffle(df.repartition(7)).collect()
         }
         assert again == out
 
@@ -181,7 +179,7 @@ class TestDeterministicShuffle:
         df = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
         got = {
             r.doc_id: r.shuffle_pos
-            for r in deterministic_shuffle(df, ["doc_id"], salt="s2").collect()
+            for r in deterministic_shuffle(df, salt="s2").collect()
         }
         h = F.md5(F.concat_ws("|", F.lit("s2"), F.col("doc_id").cast("string")))
         w = Window.orderBy(h, "doc_id")

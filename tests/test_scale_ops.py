@@ -58,7 +58,7 @@ def test_salted_join_matches_plain_join(spark, skewed):
     )
     salted = sorted(
         (r.k, r.label)
-        for r in salted_join(skewed, dim, key="k", n_salts=4)
+        for r in salted_join(skewed, dim, n_salts=4)
         .select("k", "label")
         .collect()
     )
@@ -76,8 +76,8 @@ class TestBucketedJoin:
         dim = spark.range(100).select(
             F.col("id").alias("k"), F.concat(F.lit("n"), F.col("id")).alias("name")
         )
-        write.write_bucketed(facts, "bkt_facts", "k", n_buckets=8)
-        write.write_bucketed(dim, "bkt_dim", "k", n_buckets=8)
+        write.write_bucketed(facts, "bkt_facts", "k")
+        write.write_bucketed(dim, "bkt_dim", "k")
 
         # disable broadcast so the co-location (not dim size) is what
         # eliminates the exchanges
@@ -98,7 +98,7 @@ class TestBucketedJoin:
 
 class TestPartitionedWrites:
     def test_partition_pruning_reaches_scan(self, spark, tmp_path):
-        """overwrite_table(partition_by=...) + a partition-key filter:
+        """A partitioned parquet write + a partition-key filter:
         the scan must list only the matching partition directories
         (PartitionFilters), not read-then-filter — at 100TB this is
         the difference between one partition and the whole table."""

@@ -71,7 +71,7 @@ def test_group_centroids_exact_means(spark):
     )
     out = {
         (r.lang, r.pos): (r.centroid, r.n_vectors)
-        for r in similarity.group_centroids(df, "lang").collect()
+        for r in similarity.group_centroids(df).collect()
     }
     assert out[("a", 0)] == (2.0, 2) and out[("a", 1)] == (4.0, 2)
     assert out[("b", 0)] == (10.0, 1) and out[("b", 1)] == (0.0, 1)
@@ -119,7 +119,7 @@ def test_ivf_assignment_deterministic_and_self(spark):
 
 
 def test_ivf_topk_prunes_to_query_cell(spark):
-    out = similarity.ivf_topk(_vecs(spark), _qv(), query_id=0, n_centroids=2, k=10)
+    out = similarity.ivf_topk(_vecs(spark), _qv(), n_centroids=2, k=10)
     got = [r.vec_id for r in out.collect()]
     # cell 0 holds the query and its near-copy; the orthogonal centroid
     # vector 1 and the opposite vector 3 (closer to cell 1's 0-cosine
@@ -192,7 +192,7 @@ class TestPQEncode:
         rng = random.Random(3)
         rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        out = ivfpq_topk(df, query_id=0, n_centroids=4, dim=8, m=2, n_codes=4, k=5).collect()
+        out = ivfpq_topk(df, n_centroids=4, dim=8, m=2, n_codes=4, k=5).collect()
         # vec 0 is a codebook seed: its codes reconstruct it exactly, so
         # its asymmetric distance to itself is 0 and it ranks first
         assert out[0].vec_id == 0 and float(out[0].adc_dist) == 0.0
@@ -275,7 +275,7 @@ class TestRecallDials:
         single = {r.vec_id for r in ann_bucketed_topk(df, q, k=40, dim=64).collect()}
         multi = {
             r.vec_id
-            for r in ann_multiprobe_topk(df, q, k=40, dim=64, max_flips=1).collect()
+            for r in ann_multiprobe_topk(df, q, k=40).collect()
         }
         # multi-probe candidates are a superset: every single-bucket hit
         # plus the 1-bit-flip buckets' vectors

@@ -64,7 +64,7 @@ class TestWindowedAggs:
     def test_tumbling_window_counts(self, events):
         out = {
             (r.window_start.isoformat(), r.event_type): (r.n_events, r.sum_value)
-            for r in windowed_event_counts(events, "1 hour").collect()
+            for r in windowed_event_counts(events).collect()
         }
         assert out[("2024-01-01T10:00:00", "click")] == (2, 3.0)
         assert out[("2024-01-01T11:00:00", "view")] == (1, 4.0)
@@ -83,7 +83,7 @@ class TestWindowedAggs:
         # watermark hasn't closed yet — the right mode for a finite
         # availableNow run compared against batch
         (
-            windowed_event_counts(stream, "1 hour", watermark="2 hours", streaming=True)
+            windowed_event_counts(stream, watermark="2 hours", streaming=True)
             .writeStream.format("memory")
             .queryName("win_counts")
             .outputMode("complete")
@@ -97,12 +97,12 @@ class TestWindowedAggs:
         }
         batch = {
             (r.window_start.isoformat(), r.event_type): (r.n_events, r.sum_value)
-            for r in windowed_event_counts(events, "1 hour").collect()
+            for r in windowed_event_counts(events).collect()
         }
         assert streamed == batch
 
     def test_sessionize_gap_merging(self, events):
-        out = sessionize(events, gap="30 minutes").collect()
+        out = sessionize(events).collect()
         by_user = {}
         for r in out:
             by_user.setdefault(r.user_id, []).append(r)
@@ -230,10 +230,8 @@ class TestWatermarkLateData:
         def run_batch():
             stream = spark.readStream.schema(schema).parquet(str(src))
             (
-                windowed_event_counts(stream, "1 hour", watermark="1 hour", streaming=True)
-                .writeStream.foreachBatch(
-                    lambda df, _id: emitted.extend(df.collect())
-                )
+                windowed_event_counts(stream, watermark="1 hour", streaming=True)
+                .writeStream.foreachBatch(lambda df, _id: emitted.extend(df.collect()))
                 .outputMode("append")
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
@@ -291,7 +289,7 @@ class TestStreamingDedup:
         def run_batch():
             stream = spark.readStream.schema(schema).parquet(str(src))
             (
-                dedup_events_stream(stream, keys=["event_id"], watermark="1 hour")
+                dedup_events_stream(stream, watermark="1 hour")
                 .writeStream.foreachBatch(lambda df, _id: emitted.extend(df.collect()))
                 .outputMode("append")
                 .option("checkpointLocation", ckpt)
@@ -362,7 +360,6 @@ class TestStreamingJoins:
             spark.readStream.schema(impressions.schema).parquet(left_dir),
             spark.readStream.schema(clicks.schema).parquet(right_dir),
             upper="15 minutes",
-            watermark="30 minutes",
         )
         (
             joined.writeStream.format("memory")
@@ -386,7 +383,7 @@ class TestStreamingJoins:
         impressions.write.parquet(src)
         stream = spark.readStream.schema(impressions.schema).parquet(src)
         (
-            enrich_stream(stream, dim, on="user_id")
+            enrich_stream(stream, dim)
             .writeStream.format("memory")
             .queryName("enriched")
             .outputMode("append")
@@ -411,7 +408,7 @@ class TestSlidingWindows:
         ).withColumn("ts", F.to_timestamp("ts"))
         batch = {
             (r.window_start.isoformat(), r.event_type): r.n_events
-            for r in sliding_event_counts(events, "1 hour", "30 minutes").collect()
+            for r in sliding_event_counts(events).collect()
         }
         # each event lands in 2 overlapping windows; 10:05 and 10:40
         # share only the [10:00, 11:00) window
@@ -422,7 +419,7 @@ class TestSlidingWindows:
         events.write.parquet(src)
         stream = spark.readStream.schema(events.schema).parquet(src)
         (
-            sliding_event_counts(stream, "1 hour", "30 minutes", streaming=True)
+            sliding_event_counts(stream, streaming=True)
             .writeStream.format("memory")
             .queryName("sliding")
             .outputMode("complete")

@@ -152,7 +152,7 @@ class TestHeavyHitterExactnessRegime:
         from nhl_data_warehouse_spark.suite.core import load
 
         (documents,) = load(spark, SF_DIR, "documents")
-        grams = documents.select(F.explode(_word_bigrams("text")).alias("gram"))
+        grams = documents.select(F.explode(_word_bigrams()).alias("gram"))
         exact = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("c")).persist()
         exact.count()
         top = exact.orderBy(F.col("c").desc(), F.col("gram")).limit(10)

@@ -49,8 +49,6 @@ def test_all_oracles_parse_and_run():
         )
     bad = []
     for name, spec in REGISTRY.items():
-        if spec.oracle is None:
-            continue
         try:
             con.execute(f"EXPLAIN {spec.oracle}")
         except Exception as e:  # pragma: no cover - diagnostic path

@@ -379,9 +379,7 @@ class TestText:
         rows = [doc(i, "fr", "bonjour") for i in range(6)]
         rows += [doc(10 + i, "en", "hello") for i in range(6)]
         df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-        collected = text.chi2_term_selection(
-            df, label_col="lang", k=3, min_df=2
-        ).collect()
+        collected = text.chi2_term_selection(df, min_df=2).collect()
         top = {r.lang: r.term for r in collected if r.rank == 1}
         assert top["fr"] == "bonjour" and top["en"] == "hello"
         assert not any(r.term == "filler" for r in collected)
@@ -535,7 +533,7 @@ class TestRepetitionSignals:
             (3, "x y"),                    # shorter than n: excluded
         ]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {r.doc_id: r for r in repetition_signals(df, n=5).collect()}
+        got = {r.doc_id: r for r in repetition_signals(df).collect()}
         assert 3 not in got
         assert got[1].n_grams == 11 and got[1].n_distinct_grams == 5
         assert abs(got[1].dup_ngram_frac - 6 / 11) < 1e-12

@@ -12,8 +12,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # §2 operator id -> (implementation, tests / driver queries). Driver
-# queries are named as registered in the suite; every named query has
-# a DuckDB oracle unless marked rows-only.
+# queries are named as registered in the suite; every query has a
+# DuckDB oracle.
 SECTION2 = {
     "S1 HTML table scrape": (
         "sources/extract.py:scrape_season_tables (+stdlib first-table parser)",
@@ -72,7 +72,7 @@ SECTION2 = {
     "J3 anti-join incremental dedup": ("write.py:incremental_insert (left_anti)", "query anti_join_incremental; idempotency tests"),
     "J4 lateral flatten -> explode": ("staging.py:teams", "query explode_tokens"),
     "J5 implicit lateral comma-join": ("subsumed by explode (per-row lateral)", "—"),
-    "U1 UNION distinct": ("mart.py + write.py:union_distinct", "query union_distinct_branches"),
+    "U1 UNION distinct": ("mart.py:seasonal_metrics_agg (unionByName + distinct)", "query union_distinct_branches"),
     "A1 null-count quality gate": ("plans/quality.py:null_check", "query null_count_quality; drive tests"),
     "A2 seasonal aggregate (implied)": ("mart.py:seasonal_team_rollup", "queries pricing_summary, monthly_order_stats"),
     "M1 view materialization": ("write.py:as_view; runner materializations", "tests/test_nhl_pipeline.py; query view_materialization_sql"),
@@ -184,9 +184,8 @@ def main() -> None:
         f"## Driver query registry ({len(REGISTRY)} queries)",
         "",
         "Every query is a `(spark, sf_dir) -> DataFrame` over the driver's",
-        "parquet tables; *oracle* means an exact DuckDB hash-match at sf0.01",
-        "(`tools/check_oracle.py`); rows-only entries are engine-specific",
-        "sketches/Python semantics the driver checks more weakly.",
+        "parquet tables, checked by an exact DuckDB hash-match at sf0.01",
+        "(`tools/check_oracle.py`).",
         "",
         "Driver-verdict history: the external driver checks the first ~50",
         "registered queries per round (`suite/__init__.py` `_PRIORITY`",
@@ -225,20 +224,17 @@ def main() -> None:
         for n in never_checked
     ] + [
         "",
-        "| Query | §2 / capability | Oracle | "
+        "| Query | §2 / capability | "
         + " | ".join(f"r{r}" for r in rounds)
         + f" | r{next_round} window |",
-        "|---|---|---|" + "---|" * (len(rounds) + 1),
+        "|---|---|" + "---|" * (len(rounds) + 1),
     ]
     for name, spec in REGISTRY.items():
-        oracle = "exact" if spec.oracle else "rows-only"
         verdicts = " | ".join(
             history.get(name, {}).get(r, "") for r in rounds
         )
         in_window = "yes" if name in window else ""
-        lines.append(
-            f"| `{name}` | {spec.op_ids} | {oracle} | {verdicts} | {in_window} |"
-        )
+        lines.append(f"| `{name}` | {spec.op_ids} | {verdicts} | {in_window} |")
     lines.append("")
 
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md")
